@@ -11,6 +11,10 @@ decimal sums are Tungsten-native (no UDF), and partial aggregation
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import Any
+
+from pyspark import InheritableThread
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -84,3 +88,35 @@ def ensure_checkpoint_dir(spark) -> None:
         d = tempfile.mkdtemp(prefix="quty_ckpt_")
         atexit.register(shutil.rmtree, d, ignore_errors=True)
         spark.sparkContext.setCheckpointDir(d)
+
+
+def overlap(*legs: Callable[[], Any]) -> list[Any]:
+    """Run independent legs concurrently and return their results in leg
+    order. ``legs[0]`` runs on the calling thread, every other leg on a
+    :class:`pyspark.InheritableThread`, so the caller's job group and
+    local properties reach the jobs a leg submits. Every leg is joined
+    before this returns or raises. If any leg fails, the first failure
+    in leg order is raised, with the later ones attached as notes."""
+    results: list[Any] = [None] * len(legs)
+    errors: list[BaseException | None] = [None] * len(legs)
+
+    def run(i: int) -> None:
+        try:
+            results[i] = legs[i]()
+        except BaseException as e:  # re-raised below, after every join
+            errors[i] = e
+
+    threads = [
+        InheritableThread(run, args=(i,)) for i in range(1, len(legs))
+    ]
+    for t in threads:
+        t.start()
+    run(0)
+    for t in threads:
+        t.join()
+    failed = [e for e in errors if e is not None]
+    if failed:
+        for other in failed[1:]:
+            failed[0].add_note(f"concurrent leg also failed: {other!r}")
+        raise failed[0]
+    return results

@@ -33,6 +33,7 @@ from quty_server_spark.functions.hashing import (
 from quty_server_spark.operators._helpers import (
     ensure_checkpoint_dir,
     load_table,
+    overlap,
 )
 from quty_server_spark.plans.registry import registry
 from quty_server_spark.session import session_tmp_dir
@@ -2550,7 +2551,9 @@ def _incremental_cluster_graph(
     return _cluster_graph_for_bands(
         spark,
         shard_bands,
-        lake_signature_artifact(spark, sf_dir, staged=staged),
+        spark.read.parquet(
+            lake_signature_artifact(spark, sf_dir, staged=staged)
+        ),
         labels_path
         if labels_path is not None
         else lake_cluster_labels_artifact(spark, sf_dir, staged=staged),
@@ -2559,21 +2562,18 @@ def _incremental_cluster_graph(
 
 
 def _cluster_graph_for_bands(
-    spark: SparkSession, shard_bands: DataFrame, sig_path: str,
+    spark: SparkSession, shard_bands: DataFrame, sig: DataFrame,
     labels_path: str, materialize: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """:func:`_incremental_cluster_graph` with the three inputs explicit
-    — tonight's banded signatures plus the two standing-artifact paths —
-    so a per-micro-batch caller (the continuous clustering maintenance
+    — tonight's banded signatures, the standing signature rows the gate
+    pairs them against, and the standing label-artifact path — so a
+    per-micro-batch caller (the continuous clustering maintenance
     stream) can build the contracted graph for an arbitrary batch
-    against arbitrary (mutable-copy) artifact state."""
-    # Gate pairs (shard vs lake) off the signature artifact — the
+    against arbitrary artifact state."""
+    # Gate pairs (shard vs lake) off the signature rows — the
     # aggregation-free nightly join of dedup_incremental_simhash_artifact.
-    lake_sig = (
-        spark.read.parquet(sig_path)
-        .select("doc_id", "sig", "band_id", "band_val")
-        .alias("o")
-    )
+    lake_sig = sig.select("doc_id", "sig", "band_id", "band_val").alias("o")
     gate = (
         shard_bands.alias("n")
         .join(
@@ -3007,8 +3007,7 @@ def _apply_maintenance_for_state(
     # so a standing label that is a prior shard doc's id still queues.
     # Built LAZY here; _run_cluster_label_maintenance materializes it
     # (|queued clusters| rows) before any write, so no write can race a
-    # concurrent read of the artifact it came from — and the
-    # materialization overlaps the append-set build there (guide §2.6).
+    # concurrent read of the artifact it came from.
     queue = (
         labels.join(
             F.broadcast(standing),
@@ -3045,28 +3044,19 @@ def _run_cluster_label_maintenance(
     (see :func:`apply_cluster_label_maintenance` for the contract):
     rewrite, append, and the sidecar update.
 
-    r18 restructure (guide §2.6 overlap + §1.2 skip-empty-work; rows
-    written are byte-identical — only job scheduling changed):
-
-    - The APPEND set's build + idempotence anti-join run in a worker
-      thread CONCURRENTLY with the rewrite chain. Legal because the
-      anti-join's existence check depends only on stored *node ids*,
-      which the rewrite never changes (it remaps lbl values; rows keep
-      their node and home bucket), so reading the artifact before vs
-      after the rewrite sees the same node set — and the append write
-      itself still waits for the rewrite (a dynamic partition overwrite
-      replaces whole bucket directories; an append racing it could be
-      dropped with the old directory).
-    - When the queue is EMPTY (no standing cluster moved — the common
-      epoch case for the continuous maintenance streams), the rewrite
-      chain is skipped outright: `touched` would be empty and the
-      dynamic overwrite would match zero partitions, so the skip is
-      exactly a no-op removed. The emptiness test is one take(1) on the
-      already-materialized queue checkpoint.
-    - The sidecar rewrite overlaps the append write (disjoint paths:
-      `_label_homes` vs the bucket directories; both inputs are
-      checkpointed before either write starts)."""
-    from concurrent.futures import ThreadPoolExecutor
+    The APPEND set's build + idempotence anti-join overlap the rewrite's
+    read side. Legal because the anti-join's existence check depends
+    only on stored *node ids*, which the rewrite never changes (it
+    remaps lbl values; rows keep their node and home bucket). Every
+    write waits for both legs: a dynamic partition overwrite replaces
+    whole bucket directories, so an append racing it could be dropped
+    with the old directory. When the queue is EMPTY (no standing
+    cluster moved — the common epoch case for the continuous
+    maintenance streams) the rewrite is skipped outright: it would
+    match zero partitions. The sidecar is rewritten only after the
+    bucket append commits, so a failed append can never leave sidecar
+    entries (phantom standing labels) for rows that were never
+    stored."""
 
     # -- tonight's append set (read-only on the artifact) ----------------
     # Tonight's shard = % 10 == 0 BSP nodes MINUS standing labels (from
@@ -3091,13 +3081,13 @@ def _run_cluster_label_maintenance(
             )
             # The two branches are disjoint on the FIRST night (singles
             # are lake docs, % 10 != 0) but not across epochs: the
-            # streaming maintenance appends prior epochs' shard bands to
-            # its private signature copy, so a gate-touched null-label
-            # doc can itself be a % 10 == 0 prior-epoch doc and land in
-            # BOTH branches. Rows are identical (min_label_components
-            # emits one row per node), so a distinct on tonight's tiny
-            # label set restores the maintained == rebuilt contract for
-            # the cross-epoch merge case.
+            # streaming maintenance gates against prior epochs' shard
+            # bands too, so a gate-touched null-label doc can itself be
+            # a % 10 == 0 prior-epoch doc and land in BOTH branches.
+            # Rows are identical (min_label_components emits one row per
+            # node), so a distinct on tonight's tiny label set restores
+            # the maintained == rebuilt contract for the cross-epoch
+            # merge case.
             .distinct()
             .withColumn(
                 "lbl_bucket",
@@ -3126,73 +3116,57 @@ def _run_cluster_label_maintenance(
             existing, "node", "left_anti"
         ).localCheckpoint(eager=True)
 
-    with ThreadPoolExecutor(max_workers=1) as nn_pool:
-        new_nodes_f = nn_pool.submit(_build_new_nodes)
-        # Materialize the queue in the main thread WHILE the worker
-        # builds the append set (both are read-only on the artifact);
-        # every write below starts only after both are checkpointed.
-        queue = queue.localCheckpoint(eager=True)
-        have_queue = not queue.isEmpty()
-        if have_queue:
-            # -- 1. rewrite queued clusters in their home buckets --------
-            # The queued labels' CURRENT bucket sets come from the
-            # sidecar — after round 1 a label's rows span every absorbed
-            # cluster's home bucket, so pmod(old_lbl) alone would
-            # under-read.
-            affected = (
-                homes.join(
-                    F.broadcast(queue.select("old_lbl")),
-                    homes.lbl == F.col("old_lbl"),
-                    "leftsemi",
-                )
-                .select("lbl_bucket")
-                .distinct()
-                # Semantically vacuous (pmod is never negative) but
-                # load-bearing: Spark inserts the DPP subquery on the
-                # partitioned scan only when the build side carries a
-                # selective Filter — the checkpointed queue leaf has
-                # none, so without this the rewrite read degrades to
-                # scanning every bucket directory.
-                .filter(F.col("lbl_bucket") >= 0)
+    # -- the rewrite's read side: (queue, touched rows or None) ----------
+    def _read_queued() -> tuple[DataFrame, DataFrame | None]:
+        q = queue.localCheckpoint(eager=True)
+        if q.isEmpty():
+            return q, None
+        # The queued labels' CURRENT bucket sets come from the sidecar —
+        # after round 1 a label's rows span every absorbed cluster's
+        # home bucket, so pmod(old_lbl) alone would under-read.
+        affected = (
+            homes.join(
+                F.broadcast(q.select("old_lbl")),
+                homes.lbl == F.col("old_lbl"),
+                "leftsemi",
             )
-            # Materialize BEFORE overwriting: Spark (correctly) refuses
-            # a plan that overwrites a path it is also reading; the
-            # eager checkpoint bounds this to the affected buckets' rows.
-            touched = _maintenance_touched_rows(
-                spark, path, affected
-            ).localCheckpoint(eager=True)
-            rewritten = touched.alias("t").join(
-                F.broadcast(queue).alias("q"),
-                F.col("t.lbl") == F.col("q.old_lbl"),
-                "left",
-            ).select(
-                F.col("t.node").alias("node"),
-                F.coalesce(F.col("q.new_lbl"), F.col("t.lbl")).alias("lbl"),
-                F.col("t.lbl_bucket").alias("lbl_bucket"),
-            )
-            # The append set is checkpointed (materialized) before the
-            # overwrite below commits: fetch the future FIRST.
-            new_nodes = new_nodes_f.result()
-            (
-                rewritten.sortWithinPartitions("lbl_bucket", "node")
-                .write.option("partitionOverwriteMode", "dynamic")
-                .partitionBy("lbl_bucket")
-                .mode("overwrite")
-                .parquet(path)
-            )
-        else:
-            # No standing cluster moved: `touched` would be empty and
-            # the dynamic overwrite would match zero partitions — the
-            # whole rewrite chain is a no-op, skipped (guide §1.2).
-            new_nodes = new_nodes_f.result()
-    # -- 2. append tonight's new labels / 3. sidecar update --------------
-    # Queued labels' home buckets now hold the NEW label's rows; the
-    # appends add their own (lbl, home-bucket) rows. Cluster-count-
-    # sized; checkpointed before the overwrite (it reads the old
-    # sidecar), then rewritten whole — concurrently with the data-bucket
-    # append (disjoint directories, all inputs already materialized).
+            .select("lbl_bucket")
+            .distinct()
+            # Semantically vacuous (pmod is never negative) but
+            # load-bearing: Spark inserts the DPP subquery on the
+            # partitioned scan only when the build side carries a
+            # selective Filter — the checkpointed queue leaf has none,
+            # so without this the rewrite read degrades to scanning
+            # every bucket directory.
+            .filter(F.col("lbl_bucket") >= 0)
+        )
+        # Materialize BEFORE overwriting: Spark (correctly) refuses a
+        # plan that overwrites a path it is also reading; the eager
+        # checkpoint bounds this to the affected buckets' rows.
+        return q, _maintenance_touched_rows(
+            spark, path, affected
+        ).localCheckpoint(eager=True)
+
+    (queue, touched), new_nodes = overlap(_read_queued, _build_new_nodes)
     remapped = homes
-    if have_queue:
+    if touched is not None:
+        # -- 1. rewrite queued clusters in their home buckets ------------
+        rewritten = touched.alias("t").join(
+            F.broadcast(queue).alias("q"),
+            F.col("t.lbl") == F.col("q.old_lbl"),
+            "left",
+        ).select(
+            F.col("t.node").alias("node"),
+            F.coalesce(F.col("q.new_lbl"), F.col("t.lbl")).alias("lbl"),
+            F.col("t.lbl_bucket").alias("lbl_bucket"),
+        )
+        (
+            rewritten.sortWithinPartitions("lbl_bucket", "node")
+            .write.option("partitionOverwriteMode", "dynamic")
+            .partitionBy("lbl_bucket")
+            .mode("overwrite")
+            .parquet(path)
+        )
         remapped = (
             homes.alias("h")
             .join(
@@ -3205,26 +3179,32 @@ def _run_cluster_label_maintenance(
                 F.col("h.lbl_bucket").alias("lbl_bucket"),
             )
         )
-    new_homes = (
-        remapped.unionByName(new_nodes.select("lbl", "lbl_bucket"))
+    # -- 2. append tonight's new labels / 3. sidecar update --------------
+    # Queued labels' home buckets now hold the NEW label's rows; the
+    # appends add their own (lbl, home-bucket) rows. Cluster-count-
+    # sized; checkpointed (alongside the append) before the overwrite,
+    # which must not read the sidecar it replaces, and written whole
+    # only after the append commits.
+    new_homes, _ = overlap(
+        lambda: remapped.unionByName(new_nodes.select("lbl", "lbl_bucket"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=True),
+        lambda: _append_label_rows(new_nodes, path),
+    )
+    new_homes.write.mode("overwrite").parquet(
+        os.path.join(path, "_label_homes")
     )
 
-    def _write_sidecar() -> None:
-        new_homes.write.mode("overwrite").parquet(
-            os.path.join(path, "_label_homes")
-        )
 
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        sidecar_f = pool.submit(_write_sidecar)
-        (
-            new_nodes.sortWithinPartitions("lbl_bucket", "node")
-            .write.partitionBy("lbl_bucket")
-            .mode("append")
-            .parquet(path)
-        )
-        sidecar_f.result()
+def _append_label_rows(rows: DataFrame, path: str) -> None:
+    """Append ``(node, lbl, lbl_bucket)`` rows into their home buckets
+    of the maintained label artifact at ``path``."""
+    (
+        rows.sortWithinPartitions("lbl_bucket", "node")
+        .write.partitionBy("lbl_bucket")
+        .mode("append")
+        .parquet(path)
+    )
 
 
 # Full-corpus component summary over a pluggable simhash CTE ({sim}) —

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from quty_server_spark.operators._helpers import load_table
+from quty_server_spark.operators._helpers import load_table, overlap
 from quty_server_spark.plans.registry import registry
 
 # Regexes shared by the Spark path and the DuckDB twin (Java regex and
@@ -1196,25 +1196,16 @@ def corpus_training_snapshot_mm(spark: SparkSession, sf_dir: str) -> DataFrame:
         percep_media_universe,
     )
 
-    # r17 (guide §2.6): the text snapshot and the media keeper election
-    # are independent until the final doc-keyed join, so the snapshot
-    # materializes in a worker thread while the media pair mining + BSP
-    # run — its tasks back-fill the BSP supersteps' idle capacity. The
-    # two sides ride DIFFERENT memo families (full-corpus text labels
-    # vs nothing), so the fork is race-free; rows unchanged
-    # (gate-verified).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        snap_fut = pool.submit(
-            lambda: corpus_training_snapshot(spark, sf_dir).localCheckpoint(
-                eager=True
-            )
-        )
-        uni = percep_media_universe(spark, sf_dir)
-        pairs = mm_payload_neardup(spark, sf_dir)
-        labels, _ = min_label_components(spark, pairs)
-        snap = snap_fut.result()
+    # The text snapshot and the media keeper election are independent
+    # until the final doc-keyed join and ride DIFFERENT memo families
+    # (full-corpus text labels vs nothing), so they overlap race-free.
+    (labels, _), snap = overlap(
+        lambda: min_label_components(spark, mm_payload_neardup(spark, sf_dir)),
+        lambda: corpus_training_snapshot(spark, sf_dir).localCheckpoint(
+            eager=True
+        ),
+    )
+    uni = percep_media_universe(spark, sf_dir)
     lab = labels.select(F.col("node").alias("doc_id"), F.col("lbl"))
     audit = (
         uni.join(lab, "doc_id")
@@ -1517,27 +1508,16 @@ def _build_appended_training_shards(
     compactor can stage its OWN private copy of the appended layout
     instead of mutating the memoized one other consumers hold.
 
-    r17 optimization, two legs, output rows unchanged (gate-verified):
-
-    1. The base (lake-scoped) snapshot rides the STANDING lake
-       cluster-label artifact
-       (:func:`~quty_server_spark.operators.dedup.lake_cluster_labels_artifact`)
-       instead of re-mining + re-BSP-ing the lake on every build —
-       guide §2.4 (the BSP was ~6-7 s of the ~10 s build at sf0.1, and
-       its result is byte-equal to the artifact the incremental tier
-       already consumes; in production "yesterday's shards" are
-       likewise built NEXT TO the standing label table, never by
-       re-clustering the lake).
-    2. Tonight's incremental snapshot is materialized in a driver-side
-       worker thread WHILE the base build writes (guide §2.6 — the two
-       jobs are independent until the append, and Spark's FIFO
-       scheduler back-fills the base write's straggler tail with the
-       incremental plan's tasks). The shared upstream artifacts are
-       materialized serially FIRST so the two threads never race to
-       build the same memoized artifact path.
+    The base (lake-scoped) snapshot rides the STANDING lake
+    cluster-label artifact
+    (:func:`~quty_server_spark.operators.dedup.lake_cluster_labels_artifact`)
+    instead of re-mining + re-BSP-ing the lake on every build: its
+    result is byte-equal to the artifact the incremental tier already
+    consumes, and in production "yesterday's shards" are likewise built
+    NEXT TO the standing label table. Tonight's incremental snapshot is
+    independent of the base write until the append, so the two overlap.
     """
     import shutil
-    from concurrent.futures import ThreadPoolExecutor
 
     from quty_server_spark.operators.dedup import (
         lake_cluster_labels_artifact,
@@ -1556,16 +1536,14 @@ def _build_appended_training_shards(
     lab = spark.read.parquet(lake_cluster_labels_artifact(spark, sf_dir))
     lake_signature_artifact(spark, sf_dir)
     lake_passage_artifact(spark, sf_dir)
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        incr_fut = pool.submit(
-            lambda: corpus_training_snapshot_incremental(
-                spark, sf_dir
-            ).localCheckpoint(eager=True)
-        )
-        _write_training_shards(
+    _, incr = overlap(
+        lambda: _write_training_shards(
             scoped_training_snapshot(spark, lake_docs, labels=lab), path
-        )
-        incr = incr_fut.result()
+        ),
+        lambda: corpus_training_snapshot_incremental(
+            spark, sf_dir
+        ).localCheckpoint(eager=True),
+    )
     _write_training_shards(incr, path, mode="append")
 
 
@@ -1810,26 +1788,19 @@ def sink_training_shards_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost is the diff (snapshot-sized, label-memo-warm) plus a rewrite
     of only the shards holding a stale row.
 
-    r17 optimization (guide §2.6): the fresh full-corpus snapshot the
-    diff needs is independent of the staged standing-state build, so it
-    is materialized in a worker thread WHILE the staging build runs —
-    its tasks back-fill the build's straggler tail. The full-corpus
-    label memo it rides (:func:`simhash_component_labels`) and the
-    staging build's lake-scoped artifacts are DIFFERENT memo families,
-    so the fork is race-free; rows are unchanged (gate-verified)."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    The fresh full-corpus snapshot the diff needs is independent of the
+    staged standing-state build and rides a DIFFERENT memo family (the
+    full-corpus labels of :func:`simhash_component_labels`, not the
+    lake-scoped artifacts), so the two overlap race-free."""
     from quty_server_spark.session import session_tmp_dir
 
     path = session_tmp_dir(spark, "quty_train_shards_cmp", sf_dir)
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fresh_fut = pool.submit(
-            lambda: corpus_training_snapshot(spark, sf_dir)
-            .select(*SNAPSHOT_COLS)
-            .localCheckpoint(eager=True)
-        )
-        _build_appended_training_shards(spark, sf_dir, path)
-        fresh = fresh_fut.result()
+    _, fresh = overlap(
+        lambda: _build_appended_training_shards(spark, sf_dir, path),
+        lambda: corpus_training_snapshot(spark, sf_dir)
+        .select(*SNAPSHOT_COLS)
+        .localCheckpoint(eager=True),
+    )
     compact_training_shards_inplace(spark, sf_dir, path, fresh=fresh)
     return _shard_summary(spark.read.parquet(path))
 

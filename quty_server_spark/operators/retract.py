@@ -58,12 +58,13 @@ from __future__ import annotations
 
 import os
 import shutil
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from quty_server_spark.operators._helpers import load_table
+from quty_server_spark.operators._helpers import load_table, overlap
 from quty_server_spark.operators.dedup import (
     _BRIDGE_FILL,
     _BRIDGE_WA,
@@ -224,36 +225,24 @@ def retracted_artifact_paths(
     set physically retracted from each — memoized per (session,
     sf_dir) like every artifact builder.
 
-    ``post`` (r17 continuation, guide §2.6): an optional
-    ``(family, path) -> None`` callback applied INSIDE each family's
-    worker thread right after its rewrite lands — the retract sink
-    passes its per-family summary materializer here so the early
-    families' read-back + summary aggregation overlaps the IVF
-    straggler's rewrite instead of waiting for the whole pool. The
+    The four family retractions share NOTHING but the victim frame
+    (checkpointed up front), so they run as four concurrent legs; the
+    four BASE artifacts are materialized serially FIRST so the legs
+    never race to first-build a shared memoized path.
+
+    ``post`` is an optional ``(family, path) -> None`` callback applied
+    inside each family's leg right after its rewrite lands — the
+    retract sink passes its per-family summary materializer here so the
+    early families' summaries overlap the slowest family's rewrite. The
     callback's effects are per-call (the memo stores paths only); on a
     memo hit without a rebuild the callback runs serially over the
-    cached paths.
-
-    r17 optimization (guide §2.6 — overlap independent jobs): the four
-    family retractions share NOTHING but the victim frame (checkpointed
-    up front), so they run in a 4-thread pool instead of sequentially —
-    each thread's copy + DPP-scoped read + anti-join + dynamic
-    overwrite back-fills the others' straggler tails, and the
-    driver-side ``copytree`` staging overlaps the other families' Spark
-    jobs. The four BASE artifacts are materialized serially FIRST so
-    the threads never race to first-build a shared memoized path. Rows
-    are unchanged (each family's jobs are untouched — only their
-    scheduling overlaps); at cluster scale the same structure holds:
-    four independent partition-scoped rewrite jobs back-fill each
-    other's tails under FIFO scheduling."""
+    cached paths."""
     cache = getattr(spark, "_quty_retract_artifacts", None)
     if cache is None:
         cache = {}
         spark._quty_retract_artifacts = cache
     paths = cache.get(sf_dir)
     if paths is None or rebuild:
-        from concurrent.futures import ThreadPoolExecutor
-
         vic = _doc_victims(spark, sf_dir).localCheckpoint(eager=True)
         vdocs = load_table(spark, sf_dir, "documents").join(
             broadcast(vic), "doc_id", "leftsemi"
@@ -333,15 +322,15 @@ def retracted_artifact_paths(
             "passage": _do_passage,
             "ivf": _do_ivf,
         }
+
         def _run(fam: str, fn) -> str:
             p = fn()
             if post is not None:
                 post(fam, p)
             return p
 
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            futs = {k: pool.submit(_run, k, fn) for k, fn in tasks.items()}
-            paths = {k: f.result() for k, f in futs.items()}
+        legs = [partial(_run, k, fn) for k, fn in tasks.items()]
+        paths = dict(zip(tasks, overlap(*legs)))
         cache[sf_dir] = paths
     elif post is not None:
         for fam, p in paths.items():
@@ -433,13 +422,10 @@ def sink_lake_artifacts_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite of any unaffected passage prefix or IVF cell directory
     (untouched files byte-identical, pinned).
 
-    r17 continuation (guide §2.6): each family's read-back + summary
-    aggregation is materialized INSIDE that family's rebuild thread
-    (the ``post`` hook), so the three early families' summaries run
-    while the IVF straggler is still rewriting — previously all four
-    summaries waited for the whole pool (~1.4 s of serialized read-back
-    after a ~2.5 s rebuild). Rows identical: the same per-family
-    summaries, in the same fixed union order."""
+    Each family's read-back + summary aggregation is materialized
+    inside that family's rebuild leg (the ``post`` hook), so the early
+    families' summaries run while the slowest family is still
+    rewriting; the union order stays fixed."""
     summaries: dict[str, DataFrame] = {}
 
     def _post(fam: str, p: str) -> None:
@@ -459,7 +445,7 @@ def _tagged_family_summary(fam: str, frame: DataFrame) -> DataFrame:
     """ONE family's per-partition summary in the unified tagged shape —
     the per-family unit of :func:`_tagged_retract_summary`, factored out
     so the physical retract sink can materialize each family's summary
-    inside that family's rebuild thread (guide §2.6)."""
+    inside that family's rebuild leg."""
     nul = F.lit(None).cast("bigint")
     if fam == "sig":
         return _sig_artifact_summary(frame).select(

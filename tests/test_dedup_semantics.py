@@ -8,6 +8,8 @@ where it does.
 
 from __future__ import annotations
 
+import pytest
+
 from quty_server_spark.operators import dedup as D
 
 
@@ -771,3 +773,43 @@ def test_maintenance_cross_epoch_shard_singleton_no_duplicate_append(
         for r in spark.read.parquet(path).select("node", "lbl").collect()
     )
     assert got == [(1, 1), (20, 1)]
+
+
+def test_maintenance_failed_append_leaves_sidecar_unchanged(
+    spark, tmp_path, monkeypatch
+):
+    """The ``_label_homes`` sidecar commits only after the bucket
+    append: when the append raises, the sidecar (and the data) still
+    describe the pre-night state, and re-running the night repairs the
+    artifact to exactly the successful result."""
+    base = spark.createDataFrame([(1, 1)], "node long, lbl long")
+    path = str(tmp_path / "labels")
+    D._write_home_bucket_layout(base, path)
+    # Tonight: a NEW cluster {20, 30} — its label needs a sidecar row.
+    labels = spark.createDataFrame(
+        [(1, 1), (20, 20), (30, 20)], "node long, lbl long"
+    )
+    singles = spark.createDataFrame([], "lake_doc_id long")
+
+    def content(sub=""):
+        return sorted(
+            tuple(r) for r in spark.read.parquet(path + sub).collect()
+        )
+
+    homes0, data0 = content("/_label_homes"), content()
+
+    def failing_append(rows, p):
+        raise RuntimeError("injected append failure")
+
+    with monkeypatch.context() as m:
+        m.setattr(D, "_append_label_rows", failing_append)
+        with pytest.raises(RuntimeError, match="injected append failure"):
+            D._apply_maintenance_for_state(spark, path, labels, singles)
+    assert content("/_label_homes") == homes0
+    assert content() == data0
+    D._apply_maintenance_for_state(spark, path, labels, singles)
+    assert sorted(
+        (r.node, r.lbl)
+        for r in spark.read.parquet(path).select("node", "lbl").collect()
+    ) == [(1, 1), (20, 20), (30, 20)]
+    assert content("/_label_homes") != homes0

@@ -7,6 +7,10 @@ set through the driver. ``first()`` is the same materialization as
 invariant over every non-test engine module, so a future operator can't
 quietly regress it. ``localCheckpoint``/``cache`` are allowed
 (cluster-side materialization).
+
+The same walk pins the package's one concurrency primitive: threads are
+started only by ``operators/_helpers.overlap``, which joins every leg,
+re-raises worker failures and propagates Spark local properties.
 """
 
 from __future__ import annotations
@@ -121,3 +125,31 @@ def test_exemptions_still_exist():
             ):
                 found.add((rel, _enclosing_function(tree, node.lineno), node.func.attr))
     assert EXEMPT <= found, f"stale exemptions: {EXEMPT - found}"
+
+
+# Thread constructors only operators/_helpers.overlap may use.
+THREAD_NAMES = {"ThreadPoolExecutor", "InheritableThread", "Thread"}
+THREAD_HOME = "quty_server_spark/operators/_helpers.py"
+
+
+def test_threads_only_in_overlap_helper():
+    hits = []
+    for path in sorted(ROOT.rglob("*.py")):
+        rel = str(path.relative_to(ROOT.parent))
+        if rel == THREAD_HOME:
+            continue
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                name = node.id
+            elif isinstance(node, ast.Attribute):
+                name = node.attr
+            elif isinstance(node, ast.alias):
+                name = node.name.rsplit(".", 1)[-1]
+            else:
+                continue
+            if name in THREAD_NAMES:
+                hits.append(f"{rel}:{getattr(node, 'lineno', '?')} {name}")
+    assert not hits, (
+        "threads outside operators/_helpers.overlap:\n" + "\n".join(hits)
+    )

@@ -360,6 +360,63 @@ def test_stream_cluster_maintenance_state_equals_full_recompute(spark):
     assert len(epochs) >= 2
 
 
+def test_stream_cluster_maintenance_replay_after_apply_failure(
+    spark, monkeypatch
+):
+    # Failure injection: the label apply raises once, at epoch 1, after
+    # that epoch's concurrent band write has committed. Restarting on
+    # the same checkpoint replays epoch 1; the labels and the gate's
+    # signature rows must then equal a fresh build (sorted LISTS, so a
+    # band row committed twice fails).
+    import pytest
+
+    from quty_server_spark.operators import dedup as D
+    from quty_server_spark.session import session_tmp_dir
+
+    base = session_tmp_dir(spark, "quty_stream_clabels", SF_DIR)
+
+    def label_rows():
+        return sorted(
+            (r.node, r.lbl)
+            for r in spark.read.parquet(os.path.join(base, "labels"))
+            .select("node", "lbl")
+            .collect()
+        )
+
+    def gate_rows():
+        lake = spark.read.parquet(D.lake_signature_artifact(spark, SF_DIR))
+        sig = ops._gate_signatures(
+            spark, lake, os.path.join(base, "bands"), 1 << 30
+        )
+        return sorted(tuple(r) for r in sig.collect())
+
+    ops.stream_cluster_maintenance(spark, SF_DIR).collect()
+    fresh_labels, fresh_gate = label_rows(), gate_rows()
+
+    apply = D._apply_maintenance_for_state
+    calls = []
+
+    def apply_failing_at_epoch_1(*args):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("injected apply failure at epoch 1")
+        return apply(*args)
+
+    monkeypatch.setattr(D, "_apply_maintenance_for_state",
+                        apply_failing_at_epoch_1)
+    with pytest.raises(Exception, match="injected apply failure"):
+        ops.stream_cluster_maintenance(spark, SF_DIR)
+    assert os.path.isdir(os.path.join(base, "bands", "epoch=1"))
+    schema = spark.read.parquet(os.path.join(base, "in")).schema
+    ops._maintain_labels(spark, SF_DIR, base, schema)  # restart
+    assert len(calls) > 2
+    assert label_rows() == fresh_labels
+    assert gate_rows() == fresh_gate
+    # The gate rows after every epoch are the full corpus's bands.
+    full = D.simhash_bands(D.simhash_sigs(spark, SF_DIR))
+    assert fresh_gate == sorted(tuple(r) for r in full.collect())
+
+
 def test_stream_corpus_snapshot_equals_incremental_batch(spark):
     # The continuous product's close-state equals the nightly batch
     # twin exactly (sorted LISTS — duplicates must fail), the stream
