@@ -19,7 +19,6 @@ UDFs — so whole-stage codegen applies end-to-end.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -36,7 +35,7 @@ from quty_server_spark.operators._helpers import (
     overlap,
 )
 from quty_server_spark.plans.registry import registry
-from quty_server_spark.session import session_tmp_dir
+from quty_server_spark.session import session_artifact, session_memo
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -840,101 +839,37 @@ def min_label_components(
 
 
 def simhash_component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SimHash near-dup component label table ``(node, lbl)``,
-    memoized per (session, sf_dir) — the single most expensive job in
-    the repo (banded pair mining + the BSP loop), shared by
-    ``dedup_cluster``, ``dedup_keep_canonical`` and
-    ``dedup_cluster_stats`` so a composed pipeline (or the headline
-    bench) labels the corpus ONCE instead of once per consumer. Same
-    memoization device as ``_quty_bloom_child``
-    (relational.py): state rides on the SparkSession object, so a fresh
-    driver session rebuilds from scratch (correctness never depends on
-    the cache) while any session that asks twice — bench loops,
-    corpus_qa_report, the stats query after the cluster query — pays
-    zero. The returned frame is eagerly localCheckpointed: consumers get
-    materialized executor-local blocks, not a lineage that would re-run
-    the supersteps; on executor loss the entry is simply rebuilt (the
-    BSP loop's own reliable-checkpoint cadence bounds that replay). The
-    cache is keyed by sf_dir, holds one ~16-byte/row label table per
-    dataset, and is O(near-dup nodes) — negligible next to the corpus."""
-    cache = getattr(spark, "_quty_cluster_labels", None)
-    if cache is None:
-        cache = {}
-        spark._quty_cluster_labels = cache
-    labels = cache.get(sf_dir)
-    if labels is None:
-        # Round 10: mine and label at SIGNATURE grain, then expand back
-        # to documents — the standard production pre-collapse (an exact
-        # 48-bit-signature group is a hamming-0 clique; boilerplate-heavy
-        # corpora have MANY docs per signature). Exactness: both bucket
-        # membership and hamming are functions of the signature alone,
-        # so the doc-grain near-pair graph is precisely (same-sig
-        # cliques) ∪ (the complete bipartite expansion of every
-        # qualifying distinct-sig pair) — its components are the rep
-        # graph's components with each sig group substituted in, and
-        # min-doc-id labels agree because each group's rep IS its min
-        # doc_id. Measured at sf0.1: the band self-join shrinks from
-        # 4.98 M to 0.88 M rows (5,000 docs, 3,445 distinct sigs) and
-        # the BSP node set shrinks the same way — interleaved A/B vs the
-        # pre-change checkout: dedup_cluster 0.632x (7.93 -> 5.01 s),
-        # warm consumers and unrelated miners in the noise band. On a
-        # real corpus the collapse factor is the exact-duplicate rate,
-        # which is exactly the mass a doc-grain miner pays C(n,2) for.
-        # Equivalence to the doc-grain path is pinned in
-        # tests/test_dedup_semantics.py and by the unchanged
-        # recursive-CTE oracles of all three consumers.
+    """The SimHash near-dup component label table ``(node, lbl)`` — the
+    single most expensive job in the repo (banded pair mining + the BSP
+    loop), shared by ``dedup_cluster``, ``dedup_keep_canonical`` and
+    ``dedup_cluster_stats`` through a :func:`session_memo`, so a
+    composed pipeline (or the headline bench) labels the corpus ONCE
+    instead of once per consumer. The returned frame is eagerly
+    localCheckpointed: consumers get materialized executor-local
+    blocks, not a lineage that would re-run the supersteps; on executor
+    loss the entry is simply rebuilt (the BSP loop's own
+    reliable-checkpoint cadence bounds that replay). The memo holds one
+    ~16-byte/row label table per dataset, O(near-dup nodes).
+
+    Mining and labeling run at SIGNATURE grain, then expand back to
+    documents (:func:`_labels_from_sigs`) — the standard production
+    pre-collapse (an exact 48-bit-signature group is a hamming-0
+    clique; boilerplate-heavy corpora have MANY docs per signature).
+    Exactness: both bucket membership and hamming are functions of the
+    signature alone, so the doc-grain near-pair graph is precisely
+    (same-sig cliques) ∪ (the complete bipartite expansion of every
+    qualifying distinct-sig pair) — its components are the rep graph's
+    components with each sig group substituted in, and min-doc-id
+    labels agree because each group's rep IS its min doc_id. At sf0.1
+    the band self-join shrinks from 4.98 M to 0.88 M rows. Equivalence
+    to the doc-grain path is pinned in tests/test_dedup_semantics.py
+    and by the recursive-CTE oracles of all three consumers."""
+
+    def _build() -> DataFrame:
         sigs = simhash_sigs(spark, sf_dir).localCheckpoint(eager=False)
-        grp = sigs.groupBy("sig").agg(
-            F.min("doc_id").alias("rep"), F.count("*").alias("gsz")
-        )
-        ub = simhash_bands(grp.select(F.col("rep").alias("doc_id"), "sig"))
-        a, b = ub.alias("a"), ub.alias("b")
-        rep_pairs = (
-            a.join(
-                b,
-                (F.col("a.band_id") == F.col("b.band_id"))
-                & (F.col("a.band_val") == F.col("b.band_val"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-                F.bit_count(
-                    F.col("a.sig").bitwiseXOR(F.col("b.sig"))
-                ).alias("hamming"),
-            )
-            .filter(F.col("hamming") <= HAMMING_MAX)
-            .select("doc_a", "doc_b")
-            .distinct()
-        )
-        rep_lbl, _ = min_label_components(spark, rep_pairs)
-        rl = rep_lbl.select(
-            F.col("node").alias("rep"), F.col("lbl").alias("rlbl")
-        )
-        # Same broadcast gate as the BSP loop: label tables are 16
-        # bytes/row, but at billions of near-dup reps the shuffle join
-        # must engage instead (rep_lbl is already materialized by the
-        # loop's final action, so the count is a cheap metadata-ish job).
-        if rep_lbl.count() <= BROADCAST_NODES_MAX:
-            rl = F.broadcast(rl)
-        # Expand: every doc of a labeled rep's group joins that
-        # component; a group with >= 2 docs whose rep has no cross-sig
-        # edge is its own component labeled by the rep (the clique's min
-        # doc_id). Groups of one with no edge are not near-dup nodes.
-        labels = (
-            sigs.join(grp, "sig")
-            .join(rl, "rep", "left")
-            .filter(F.col("rlbl").isNotNull() | (F.col("gsz") >= 2))
-            .select(
-                F.col("doc_id").alias("node"),
-                F.coalesce(F.col("rlbl"), F.col("rep")).alias("lbl"),
-            )
-        )
-        # Materialized pin: the cached handle is independent of the
-        # loop's temporaries and of the lazy sigs checkpoint.
-        labels = labels.localCheckpoint(eager=True)
-        cache[sf_dir] = labels
-    return labels
+        return _labels_from_sigs(spark, sigs).localCheckpoint(eager=True)
+
+    return session_memo(spark, "cluster_labels", sf_dir, _build)
 
 
 def simhash_bands(sigs: DataFrame) -> DataFrame:
@@ -1747,17 +1682,9 @@ def lake_minhash_artifact(
     and sorted by ``sig`` within files, so a point probe prunes
     directories at planning time and row groups via min/max stats —
     the same layout contract as the SimHash artifact, pinned in
-    tests/test_scale_plans.py. Memoized per (session, sf_dir); path
-    keyed by the Spark application id (session_tmp_dir) so concurrent
-    sessions never clobber each other's files."""
-    cache = getattr(spark, "_quty_lake_minhash_artifact", None)
-    if cache is None:
-        cache = {}
-        spark._quty_lake_minhash_artifact = cache
-    path = cache.get(sf_dir)
-    if path is None or rebuild:
-        path = session_tmp_dir(spark, "quty_lake_minhash", sf_dir)
-        shutil.rmtree(path, ignore_errors=True)
+    tests/test_scale_plans.py. A :func:`session_artifact`."""
+
+    def _write(path: str) -> None:
         sh_lake = doc_shingles(spark, sf_dir).filter(
             F.col("doc_id") % 10 != 0
         ).localCheckpoint(eager=False)
@@ -1768,8 +1695,10 @@ def lake_minhash_artifact(
         ).sortWithinPartitions("band_id", "sig").write.partitionBy(
             "band_id"
         ).parquet(path)
-        cache[sf_dir] = path
-    return path
+
+    return session_artifact(
+        spark, "quty_lake_minhash", sf_dir, _write, rebuild
+    )
 
 
 # Per-band summary of the lake MinHash-band artifact's full contract
@@ -1909,25 +1838,11 @@ def lake_signature_artifact(
     gate's join key prefix: a probe that only needs band 2 (e.g. a
     debugging re-check) prunes 3/4 of the files at planning time, and
     the nightly append of newly-admitted docs goes to 4 directories
-    with no read-modify-write of existing files. Memoized per
-    (session, sf_dir) like ``simhash_component_labels`` so a composed
-    pipeline (writer query, gate query, bench loop) writes once per
-    session; a fresh driver session rebuilds from scratch, so
-    correctness never depends on leftover /tmp state (the build rmtree's
-    any stale directory first). The path is keyed by the Spark
-    application id (session_tmp_dir) so a concurrent session's forced
-    rebuild can never rmtree files under this session's memoized
-    reader (r10 ADVICE)."""
-    cache = getattr(spark, "_quty_lake_sig_artifact", None)
-    if cache is None:
-        cache = {}
-        spark._quty_lake_sig_artifact = cache
-    key = (sf_dir, staged)
-    path = cache.get(key)
-    if path is None or rebuild:
-        kind = "quty_lake_sig_stg" if staged else "quty_lake_sig"
-        path = session_tmp_dir(spark, kind, sf_dir)
-        shutil.rmtree(path, ignore_errors=True)
+    with no read-modify-write of existing files. A
+    :func:`session_artifact`, so a composed pipeline (writer query,
+    gate query, bench loop) writes once per session."""
+
+    def _write(path: str) -> None:
         lake = simhash_bands(simhash_sigs(spark, sf_dir, staged=staged)).filter(
             F.col("doc_id") % 10 != 0
         )
@@ -1941,8 +1856,9 @@ def lake_signature_artifact(
         lake.sortWithinPartitions("band_id", "band_val").write.partitionBy(
             "band_id"
         ).parquet(path)
-        cache[key] = path
-    return path
+
+    kind = "quty_lake_sig_stg" if staged else "quty_lake_sig"
+    return session_artifact(spark, kind, sf_dir, _write, rebuild)
 
 
 # Per-band summary of the banded lake-signature artifact. Shared
@@ -2124,14 +2040,8 @@ def appended_signature_artifact(
     by the registered append sink and the gate-equality tests. The
     resulting artifact's content equals a fresh full-lake build's, by
     construction verified through the shared oracle SQL."""
-    cache = getattr(spark, "_quty_lake_sig_app", None)
-    if cache is None:
-        cache = {}
-        spark._quty_lake_sig_app = cache
-    path = cache.get(sf_dir)
-    if path is None or rebuild:
-        path = session_tmp_dir(spark, "quty_lake_sig_app", sf_dir)
-        shutil.rmtree(path, ignore_errors=True)
+
+    def _write(path: str) -> None:
         base = simhash_bands(simhash_sigs(spark, sf_dir)).filter(
             (F.col("doc_id") % 10 != 0)
             & (F.col("doc_id") % 10 != APPEND_BATCH_MOD)
@@ -2142,8 +2052,10 @@ def appended_signature_artifact(
         append_to_band_artifact(
             admitted_simhash_bands(spark, sf_dir), path, "band_val"
         )
-        cache[sf_dir] = path
-    return path
+
+    return session_artifact(
+        spark, "quty_lake_sig_app", sf_dir, _write, rebuild
+    )
 
 
 def appended_minhash_artifact(
@@ -2157,14 +2069,8 @@ def appended_minhash_artifact(
     too (paired with the convention-free
     :func:`lake_shingles_for_verify`, this closes the r11 ADVICE
     false-negative finding end to end)."""
-    cache = getattr(spark, "_quty_lake_minhash_app", None)
-    if cache is None:
-        cache = {}
-        spark._quty_lake_minhash_app = cache
-    path = cache.get(sf_dir)
-    if path is None or rebuild:
-        path = session_tmp_dir(spark, "quty_lake_minhash_app", sf_dir)
-        shutil.rmtree(path, ignore_errors=True)
+
+    def _write(path: str) -> None:
         sh_base = doc_shingles(spark, sf_dir).filter(
             (F.col("doc_id") % 10 != 0)
             & (F.col("doc_id") % 10 != APPEND_BATCH_MOD)
@@ -2179,8 +2085,10 @@ def appended_minhash_artifact(
         append_to_band_artifact(
             admitted_minhash_bands(spark, sf_dir), path, "sig"
         )
-        cache[sf_dir] = path
-    return path
+
+    return session_artifact(
+        spark, "quty_lake_minhash_app", sf_dir, _write, rebuild
+    )
 
 
 @registry.query(
@@ -2271,8 +2179,15 @@ def _labels_from_sigs(spark: SparkSession, sigs: DataFrame) -> DataFrame:
     rl = rep_lbl.select(
         F.col("node").alias("rep"), F.col("lbl").alias("rlbl")
     )
+    # Same broadcast gate as the BSP loop: label tables are 16 bytes/row,
+    # but at billions of near-dup reps the shuffle join must engage
+    # instead (rep_lbl is already materialized by the loop's final
+    # action, so the count is a cheap job).
     if rep_lbl.count() <= BROADCAST_NODES_MAX:
         rl = F.broadcast(rl)
+    # Expand: every doc of a labeled rep's group joins that component; a
+    # group with >= 2 docs whose rep has no cross-sig edge is its own
+    # component labeled by the rep (the clique's min doc_id).
     return (
         sigs.join(grp, "sig")
         .join(rl, "rep", "left")
@@ -2299,16 +2214,8 @@ def lake_cluster_labels_artifact(
     symmetric job that must NOT run nightly, so it lives here, in the
     amortized half. Sorted by ``node`` so the nightly join's point
     lookups prune row groups via min/max stats."""
-    cache = getattr(spark, "_quty_lake_cluster_labels", None)
-    if cache is None:
-        cache = {}
-        spark._quty_lake_cluster_labels = cache
-    key = (sf_dir, staged)
-    path = cache.get(key)
-    if path is None or rebuild:
-        kind = "quty_lake_clabels_stg" if staged else "quty_lake_clabels"
-        path = session_tmp_dir(spark, kind, sf_dir)
-        shutil.rmtree(path, ignore_errors=True)
+
+    def _write(path: str) -> None:
         sigs = (
             simhash_sigs(spark, sf_dir, staged=staged)
             .filter(F.col("doc_id") % 10 != 0)
@@ -2316,8 +2223,9 @@ def lake_cluster_labels_artifact(
         )
         labels = _labels_from_sigs(spark, sigs)
         labels.sortWithinPartitions("node").write.parquet(path)
-        cache[key] = path
-    return path
+
+    kind = "quty_lake_clabels_stg" if staged else "quty_lake_clabels"
+    return session_artifact(spark, kind, sf_dir, _write, rebuild)
 
 
 @registry.query(
@@ -2469,10 +2377,7 @@ def _incremental_cluster_labels(
     :func:`dedup_cluster_incremental` (reads the shard-node side) and
     :func:`dedup_cluster_relabel_queue` (reads the lake-label-node
     side), so a composed nightly run (or the driver head, which runs
-    both) pays the shard signing + gate join + BSP once, not twice
-    (r12 review). Same memo device as
-    :func:`simhash_component_labels`; a fresh session rebuilds, so
-    correctness never depends on the cache."""
+    both) pays the shard signing + gate join + BSP once, not twice."""
     return _incremental_cluster_state(
         spark, sf_dir, staged=staged, labels_path=labels_path
     )[0]
@@ -2489,27 +2394,24 @@ def _incremental_cluster_state(
     component for the first time). The relabel APPLY needs it to know
     which lake-side rows to APPEND (a rewrite can't reach a row that was
     never stored); it is shard-bounded by construction (a subset of the
-    gate join's lake side). Both frames are checkpointed under one memo
-    so every consumer pays the signing + gate + BSP once."""
-    cache = getattr(spark, "_quty_incremental_cluster_labels", None)
-    if cache is None:
-        cache = {}
-        spark._quty_incremental_cluster_labels = cache
-    key = (sf_dir, staged, labels_path)
-    state = cache.get(key)
-    if state is None:
+    gate join's lake side). Both frames are checkpointed under one
+    :func:`session_memo` entry so every consumer pays the signing +
+    gate + BSP once."""
+
+    def _build() -> tuple[DataFrame, DataFrame]:
         pairs, singles = _incremental_cluster_graph(
             spark, sf_dir, staged=staged, labels_path=labels_path
         )
         labels, _ = min_label_components(spark, pairs)
-        state = (
+        return (
             labels.localCheckpoint(eager=True),
             # Lazy: only the maintenance APPLY reads the singles frame —
             # the assignment/queue consumers must not pay its action.
             singles.localCheckpoint(eager=False),
         )
-        cache[key] = state
-    return state
+
+    key = (sf_dir, staged, labels_path)
+    return session_memo(spark, "incremental_cluster_labels", key, _build)
 
 
 def _incremental_cluster_pairs(
@@ -2902,16 +2804,8 @@ def maintained_cluster_labels_artifact(
     clusters, append tonight's new labels). Content equals a fresh
     full-corpus recompute's — the contract the relabel sink's oracle
     verifies end to end."""
-    cache = getattr(spark, "_quty_maint_clabels", None)
-    if cache is None:
-        cache = {}
-        spark._quty_maint_clabels = cache
-    key = (sf_dir, staged)
-    path = cache.get(key)
-    if path is None or rebuild:
-        kind = "quty_maint_clabels_stg" if staged else "quty_maint_clabels"
-        path = session_tmp_dir(spark, kind, sf_dir)
-        shutil.rmtree(path, ignore_errors=True)
+
+    def _write(path: str) -> None:
         _write_home_bucket_layout(
             spark.read.parquet(
                 lake_cluster_labels_artifact(spark, sf_dir, staged=staged)
@@ -2919,8 +2813,9 @@ def maintained_cluster_labels_artifact(
             path,
         )
         apply_cluster_label_maintenance(spark, sf_dir, path, staged=staged)
-        cache[key] = path
-    return path
+
+    kind = "quty_maint_clabels_stg" if staged else "quty_maint_clabels"
+    return session_artifact(spark, kind, sf_dir, _write, rebuild)
 
 
 def _write_home_bucket_layout(labels: DataFrame, path: str) -> None:
@@ -3392,14 +3287,8 @@ def lake_passage_artifact(
     night's shard probes digest membership instead of re-windowing the
     lake (reference analog: the r12 corpus-level ops re-derive all
     windows per run — fine for a report, wrong as a nightly gate)."""
-    cache = getattr(spark, "_quty_lake_passages", None)
-    if cache is None:
-        cache = {}
-        spark._quty_lake_passages = cache
-    path = cache.get(sf_dir)
-    if path is None or rebuild:
-        path = session_tmp_dir(spark, "quty_lake_passages", sf_dir)
-        shutil.rmtree(path, ignore_errors=True)
+
+    def _write(path: str) -> None:
         d = load_table(spark, sf_dir, "documents").filter(
             F.col("doc_id") % 10 != 0
         )
@@ -3407,8 +3296,10 @@ def lake_passage_artifact(
         w.sortWithinPartitions("pfx", "passage_md5").write.partitionBy(
             "pfx"
         ).parquet(path)
-        cache[sf_dir] = path
-    return path
+
+    return session_artifact(
+        spark, "quty_lake_passages", sf_dir, _write, rebuild
+    )
 
 
 # Per-prefix summary of the lake passage artifact — shared byte-for-byte
@@ -3455,14 +3346,8 @@ def appended_passage_artifact(
     with the batch's window rows APPENDED — computed from the batch
     alone, never re-windowing the lake; the passage twin of
     :func:`appended_signature_artifact`."""
-    cache = getattr(spark, "_quty_lake_passages_app", None)
-    if cache is None:
-        cache = {}
-        spark._quty_lake_passages_app = cache
-    path = cache.get(sf_dir)
-    if path is None or rebuild:
-        path = session_tmp_dir(spark, "quty_lake_passages_app", sf_dir)
-        shutil.rmtree(path, ignore_errors=True)
+
+    def _write(path: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
         base = _passage_windows(
             docs.filter(
@@ -3479,8 +3364,10 @@ def appended_passage_artifact(
         batch.sortWithinPartitions("pfx", "passage_md5").write.partitionBy(
             "pfx"
         ).mode("append").parquet(path)
-        cache[sf_dir] = path
-    return path
+
+    return session_artifact(
+        spark, "quty_lake_passages_app", sf_dir, _write, rebuild
+    )
 
 
 @registry.query(

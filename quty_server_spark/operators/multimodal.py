@@ -754,19 +754,10 @@ def media_signature_artifact(
     joins the shard's fresh signatures against this artifact instead of
     re-decoding the lake (for real media the signing pass is the
     expensive decode — amortizing it is the whole artifact story).
-    Memoized per (session, sf_dir); path keyed by application id."""
-    import shutil
+    A :func:`~quty_server_spark.session.session_artifact`."""
+    from quty_server_spark.session import session_artifact
 
-    from quty_server_spark.session import session_tmp_dir
-
-    cache = getattr(spark, "_quty_media_sig_artifact", None)
-    if cache is None:
-        cache = {}
-        spark._quty_media_sig_artifact = cache
-    path = cache.get(sf_dir)
-    if path is None or rebuild:
-        path = session_tmp_dir(spark, "quty_media_sig", sf_dir)
-        shutil.rmtree(path, ignore_errors=True)
+    def _write(path: str) -> None:
         lake_uni = percep_media_universe(spark, sf_dir).filter(
             F.col("doc_id") % 10 != 0
         )
@@ -774,8 +765,8 @@ def media_signature_artifact(
         bands.sortWithinPartitions("band_id", "band_val").write.partitionBy(
             "band_id"
         ).parquet(path)
-        cache[sf_dir] = path
-    return path
+
+    return session_artifact(spark, "quty_media_sig", sf_dir, _write, rebuild)
 
 
 def appended_media_signature_artifact(
@@ -791,19 +782,9 @@ def appended_media_signature_artifact(
         APPEND_BATCH_MOD,
         append_to_band_artifact,
     )
+    from quty_server_spark.session import session_artifact
 
-    import shutil
-
-    from quty_server_spark.session import session_tmp_dir
-
-    cache = getattr(spark, "_quty_media_sig_app", None)
-    if cache is None:
-        cache = {}
-        spark._quty_media_sig_app = cache
-    path = cache.get(sf_dir)
-    if path is None or rebuild:
-        path = session_tmp_dir(spark, "quty_media_sig_app", sf_dir)
-        shutil.rmtree(path, ignore_errors=True)
+    def _write(path: str) -> None:
         uni = percep_media_universe(spark, sf_dir)
         base_uni = uni.filter(
             (F.col("doc_id") % 10 != 0)
@@ -817,8 +798,10 @@ def appended_media_signature_artifact(
         append_to_band_artifact(
             media_sig_bands(spark, sf_dir, docs=batch_uni), path, "band_val"
         )
-        cache[sf_dir] = path
-    return path
+
+    return session_artifact(
+        spark, "quty_media_sig_app", sf_dir, _write, rebuild
+    )
 
 
 def _media_sig_summary_oracle() -> str:

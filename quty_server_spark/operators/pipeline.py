@@ -1479,23 +1479,19 @@ def appended_training_shards(
     additions (:func:`corpus_training_snapshot_incremental`'s output)
     APPENDED: a partitioned parquet ``mode("append")``, so new files
     land inside the standing ``shard=N`` directories with ZERO
-    read-modify-write of existing files. Memoized per (session,
-    sf_dir), shared by the registered append sink and the
-    append ≡ rebuild / byte-identity tests."""
-    import shutil
+    read-modify-write of existing files. A
+    :func:`~quty_server_spark.session.session_artifact`, shared by the
+    registered append sink and the append ≡ rebuild / byte-identity
+    tests."""
+    from quty_server_spark.session import session_artifact
 
-    from quty_server_spark.session import session_tmp_dir
-
-    cache = getattr(spark, "_quty_train_shards_app", None)
-    if cache is None:
-        cache = {}
-        spark._quty_train_shards_app = cache
-    path = cache.get(sf_dir)
-    if path is None or rebuild:
-        path = session_tmp_dir(spark, "quty_train_shards_app", sf_dir)
-        _build_appended_training_shards(spark, sf_dir, path)
-        cache[sf_dir] = path
-    return path
+    return session_artifact(
+        spark,
+        "quty_train_shards_app",
+        sf_dir,
+        lambda path: _build_appended_training_shards(spark, sf_dir, path),
+        rebuild,
+    )
 
 
 def _build_appended_training_shards(

@@ -95,7 +95,11 @@ from quty_server_spark.operators.similarity import (
     SQL_IVF_CENT,
 )
 from quty_server_spark.plans.registry import registry
-from quty_server_spark.session import session_tmp_dir
+from quty_server_spark.session import (
+    session_artifact,
+    session_memo,
+    session_tmp_dir,
+)
 
 # The deterministic victim set: lake docs / vectors with id % 10 == 3.
 # Disjoint from tonight's shard (% 10 == 0) and yesterday's append batch
@@ -222,8 +226,7 @@ def retracted_artifact_paths(
     post: "callable | None" = None,
 ) -> dict[str, str]:
     """Private copies of the four standing artifacts with the victim
-    set physically retracted from each — memoized per (session,
-    sf_dir) like every artifact builder.
+    set physically retracted from each, in a :func:`session_memo`.
 
     The four family retractions share NOTHING but the victim frame
     (checkpointed up front), so they run as four concurrent legs; the
@@ -237,12 +240,11 @@ def retracted_artifact_paths(
     callback's effects are per-call (the memo stores paths only); on a
     memo hit without a rebuild the callback runs serially over the
     cached paths."""
-    cache = getattr(spark, "_quty_retract_artifacts", None)
-    if cache is None:
-        cache = {}
-        spark._quty_retract_artifacts = cache
-    paths = cache.get(sf_dir)
-    if paths is None or rebuild:
+    built = False
+
+    def _build() -> dict[str, str]:
+        nonlocal built
+        built = True
         vic = _doc_victims(spark, sf_dir).localCheckpoint(eager=True)
         vdocs = load_table(spark, sf_dir, "documents").join(
             broadcast(vic), "doc_id", "leftsemi"
@@ -330,9 +332,10 @@ def retracted_artifact_paths(
             return p
 
         legs = [partial(_run, k, fn) for k, fn in tasks.items()]
-        paths = dict(zip(tasks, overlap(*legs)))
-        cache[sf_dir] = paths
-    elif post is not None:
+        return dict(zip(tasks, overlap(*legs)))
+
+    paths = session_memo(spark, "retract_artifacts", sf_dir, _build, rebuild)
+    if not built and post is not None:
         for fam, p in paths.items():
             post(fam, p)
     return paths
@@ -599,13 +602,9 @@ def tombstoned_artifact_paths(
 ) -> dict[str, str]:
     """Private copies of the four standing artifacts with the victim
     set TOMBSTONED (sidecar only — every data file byte-identical to
-    the base build's). Memoized per (session, sf_dir)."""
-    cache = getattr(spark, "_quty_tombstone_artifacts", None)
-    if cache is None:
-        cache = {}
-        spark._quty_tombstone_artifacts = cache
-    paths = cache.get(sf_dir)
-    if paths is None or rebuild:
+    the base build's), in a :func:`session_memo`."""
+
+    def _build() -> dict[str, str]:
         vic = _doc_victims(spark, sf_dir).localCheckpoint(eager=True)
         vvic = (
             _corpus(spark, sf_dir)
@@ -627,8 +626,9 @@ def tombstoned_artifact_paths(
                 spark, p, vvic if fam == "ivf" else vic
             )
             paths[fam] = p
-        cache[sf_dir] = paths
-    return paths
+        return paths
+
+    return session_memo(spark, "tombstone_artifacts", sf_dir, _build, rebuild)
 
 
 @registry.query(
@@ -814,14 +814,8 @@ def retracted_cluster_labels_artifact(
     through one retraction night. Content equals a fresh lake-only
     labeling of the survivors — the contract the retract sink's oracle
     verifies end to end."""
-    cache = getattr(spark, "_quty_retract_clabels", None)
-    if cache is None:
-        cache = {}
-        spark._quty_retract_clabels = cache
-    path = cache.get(sf_dir)
-    if path is None or rebuild:
-        path = session_tmp_dir(spark, "quty_retract_clabels", sf_dir)
-        shutil.rmtree(path, ignore_errors=True)
+
+    def _write(path: str) -> None:
         docs = retract_staged_documents(spark, sf_dir)
         sigs = (
             simhash_sigs_docs(docs)
@@ -833,8 +827,10 @@ def retracted_cluster_labels_artifact(
             F.col("doc_id") % 10 == RETRACT_MOD
         ).select("doc_id").localCheckpoint(eager=True)
         apply_cluster_label_retraction(spark, path, victims, docs)
-        cache[sf_dir] = path
-    return path
+
+    return session_artifact(
+        spark, "quty_retract_clabels", sf_dir, _write, rebuild
+    )
 
 
 SQL_DOCS_RSTAGED = (

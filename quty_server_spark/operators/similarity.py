@@ -22,7 +22,6 @@ from __future__ import annotations
 
 import os
 import random
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -37,7 +36,7 @@ from quty_server_spark.functions.vectors import (
 )
 from quty_server_spark.operators._helpers import load_table
 from quty_server_spark.plans.registry import registry
-from quty_server_spark.session import session_tmp_dir
+from quty_server_spark.session import session_artifact
 
 DIM = 64
 N_PLANES = 8
@@ -1225,21 +1224,10 @@ def ivf_postings_artifact(
     index itself: a probe that needs cells {3, 57} reads two
     directories and prunes the rest at planning time (the artifact
     probe's scan carries a dynamic-partition-pruning filter on
-    ``cell`` — pinned in tests/test_scale_plans.py). Memoized per
-    (session, sf_dir) like the lake-signature artifact; a fresh driver
-    session rebuilds, so correctness never depends on leftover /tmp
-    state. The path is keyed by the Spark application id
-    (session_tmp_dir) so a concurrent session's forced rebuild can
-    never rmtree row groups under this session's memoized probe (r10
-    ADVICE)."""
-    cache = getattr(spark, "_quty_ivf_postings_artifact", None)
-    if cache is None:
-        cache = {}
-        spark._quty_ivf_postings_artifact = cache
-    path = cache.get(sf_dir)
-    if path is None or rebuild:
-        path = session_tmp_dir(spark, "quty_ivf_postings", sf_dir)
-        shutil.rmtree(path, ignore_errors=True)
+    ``cell`` — pinned in tests/test_scale_plans.py). A
+    :func:`session_artifact`, like the lake-signature artifact."""
+
+    def _write(path: str) -> None:
         c = _corpus(spark, sf_dir)
         # Sorted by vec_id within each cell so row-group min/max stats
         # answer "is vec X in this posting list?" membership probes
@@ -1256,8 +1244,10 @@ def ivf_postings_artifact(
         # against THIS tiny table instead of re-deriving the stride
         # sample from a lake-sized posting scan (r11 review finding).
         _ivf_centroids(c).write.parquet(os.path.join(path, "_centroids"))
-        cache[sf_dir] = path
-    return path
+
+    return session_artifact(
+        spark, "quty_ivf_postings", sf_dir, _write, rebuild
+    )
 
 
 # Per-cell summary of the IVF posting-list artifact. Shared byte-for-
@@ -1571,16 +1561,10 @@ def appended_ivf_artifact(
     Content equals a fresh :func:`ivf_postings_artifact` build's
     because the quantizer is identical (see IVF_APPEND_BATCH_MOD note);
     verified through the shared oracle SQL and the set-equality tests.
-    Memoized per (session, sf_dir) on its own path — the write-once
+    A :func:`session_artifact` on its own path — the write-once
     artifact's memo stays untouched."""
-    cache = getattr(spark, "_quty_ivf_postings_app", None)
-    if cache is None:
-        cache = {}
-        spark._quty_ivf_postings_app = cache
-    path = cache.get(sf_dir)
-    if path is None or rebuild:
-        path = session_tmp_dir(spark, "quty_ivf_postings_app", sf_dir)
-        shutil.rmtree(path, ignore_errors=True)
+
+    def _write(path: str) -> None:
         base = _corpus(spark, sf_dir).filter(
             F.col("vec_id") % 10 != IVF_APPEND_BATCH_MOD
         )
@@ -1593,8 +1577,10 @@ def appended_ivf_artifact(
         admitted_ivf_postings(spark, sf_dir, sidecar).sortWithinPartitions(
             "cell", "vec_id"
         ).write.partitionBy("cell").mode("append").parquet(path)
-        cache[sf_dir] = path
-    return path
+
+    return session_artifact(
+        spark, "quty_ivf_postings_app", sf_dir, _write, rebuild
+    )
 
 
 @registry.query(
@@ -1713,16 +1699,10 @@ def reclustered_ivf_artifact(
     the ARTIFACT, not the embeddings table — a production re-cluster
     job runs off the index it is repairing (the lake table may have
     moved on); its old cell assignments are dropped on read, since
-    reassignment under the new quantizer is the whole point. Memoized
-    per (session, sf_dir) on its own path, standard ``rebuild`` escape."""
-    cache = getattr(spark, "_quty_ivf_postings_recl", None)
-    if cache is None:
-        cache = {}
-        spark._quty_ivf_postings_recl = cache
-    path = cache.get(sf_dir)
-    if path is None or rebuild:
-        path = session_tmp_dir(spark, "quty_ivf_postings_recl", sf_dir)
-        shutil.rmtree(path, ignore_errors=True)
+    reassignment under the new quantizer is the whole point. A
+    :func:`session_artifact` on its own path."""
+
+    def _write(path: str) -> None:
         standing = spark.read.parquet(
             appended_ivf_artifact(spark, sf_dir)
         ).select("vec_id", "v")
@@ -1731,8 +1711,10 @@ def reclustered_ivf_artifact(
             "cell", "vec_id"
         ).write.partitionBy("cell").parquet(path)
         cent.write.parquet(os.path.join(path, "_centroids"))
-        cache[sf_dir] = path
-    return path
+
+    return session_artifact(
+        spark, "quty_ivf_postings_recl", sf_dir, _write, rebuild
+    )
 
 
 @registry.query(

@@ -18,7 +18,7 @@ from pyspark.sql.functions import broadcast
 from quty_server_spark.functions.hashing import hash28, sql_hash28
 from quty_server_spark.operators._helpers import load_table
 from quty_server_spark.plans.registry import registry
-from quty_server_spark.session import session_tmp_dir
+from quty_server_spark.session import session_artifact, session_memo
 
 STOPWORDS = {
     "en": ["the", "a", "of", "and", "is"],
@@ -850,13 +850,14 @@ def _bpe_train_state(
     argmax row to a sink) instead of unioning N frames at the close —
     the r15 judge's standing note, recorded here so whoever grows
     BPE_TRAIN_MERGES sees it."""
-    cache = getattr(spark, "_quty_bpe_state", None)
-    if cache is None:
-        cache = {}
-        spark._quty_bpe_state = cache
-    hit = cache.get(sf_dir)
-    if hit is not None:
-        return hit
+    return session_memo(
+        spark, "bpe_state", sf_dir, lambda: _bpe_train_loop(spark, sf_dir)
+    )
+
+
+def _bpe_train_loop(
+    spark: SparkSession, sf_dir: str
+) -> tuple[list[DataFrame], list[DataFrame]]:
     d = load_table(spark, sf_dir, "documents")
     words = (
         d.select(
@@ -887,7 +888,6 @@ def _bpe_train_state(
             .localCheckpoint(eager=False)
         )
         vocabs.append(vocab)
-    cache[sf_dir] = (vocabs, tops)
     return vocabs, tops
 
 
@@ -1143,21 +1143,14 @@ def bpe_merges_artifact(
     lake object, decoupled from the training session: consumers
     (:func:`text_bpe_encode_artifact`, a production loader) read N
     merge rows from parquet instead of holding N per-round frames on a
-    live trainer's driver. Memoized per (session, sf_dir) with the
-    standard rebuild escape; keyed by the Spark application id
-    (session_tmp_dir) so a concurrent session's forced rebuild never
-    rmtrees under this session's memoized readers (the r10 ADVICE
-    convention every artifact family follows)."""
-    cache = getattr(spark, "_quty_bpe_merges_artifact", None)
-    if cache is None:
-        cache = {}
-        spark._quty_bpe_merges_artifact = cache
-    path = cache.get(sf_dir)
-    if path is None or rebuild:
-        path = session_tmp_dir(spark, "quty_bpe_merges", sf_dir)
-        _write_bpe_merges(spark, sf_dir, path)
-        cache[sf_dir] = path
-    return path
+    live trainer's driver. A :func:`session_artifact`."""
+    return session_artifact(
+        spark,
+        "quty_bpe_merges",
+        sf_dir,
+        lambda path: _write_bpe_merges(spark, sf_dir, path),
+        rebuild,
+    )
 
 
 @registry.query("sink_bpe_merges_artifact", oracle=_bpe_train_oracle())

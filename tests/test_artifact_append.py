@@ -179,10 +179,10 @@ def test_append_adds_files_never_rewrites(spark):
         APPEND_BATCH_MOD,
         admitted_simhash_bands,
         append_to_band_artifact,
-        session_tmp_dir,
         simhash_bands,
         simhash_sigs,
     )
+    from quty_server_spark.session import session_tmp_dir
     from pyspark.sql import functions as F
 
     path = session_tmp_dir(spark, "quty_append_file_test", SF_DIR)

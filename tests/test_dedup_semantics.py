@@ -8,9 +8,12 @@ where it does.
 
 from __future__ import annotations
 
+import pathlib
+
 import pytest
 
 from quty_server_spark.operators import dedup as D
+from quty_server_spark.session import reset_memos, session_memo
 
 
 def test_jaccard_df_cap_drops_stop_shingles(spark):
@@ -167,14 +170,42 @@ def test_component_labels_memoized_per_session_and_sf(spark):
     # entries, and a fresh session starts cold (driver sessions rebuild —
     # correctness never depends on the cache).
     sf = "/root/testdata/sf0.001"
-    spark._quty_cluster_labels = {}  # start cold regardless of test order
+    reset_memos(spark, "cluster_labels")  # start cold regardless of test order
     first = D.simhash_component_labels(spark, sf)
     second = D.simhash_component_labels(spark, sf)
     assert second is first
-    assert set(spark._quty_cluster_labels) == {sf}
+
+    def _no_build():
+        raise AssertionError("memo miss")
+
+    assert session_memo(spark, "cluster_labels", sf, _no_build) is first
+    other = object()  # a distinct sf_dir key is a distinct entry
+    assert session_memo(spark, "cluster_labels", sf + "/", lambda: other) is other
     # The cached frame is materialized (localCheckpoint) — consuming it
     # twice must not re-run the BSP supersteps; cheap sanity: same rows.
     assert first.count() == second.count()
+
+    # A fresh session starts cold: the memo rides on the session object.
+    fresh = spark.newSession()
+    rebuilt = D.simhash_component_labels(fresh, sf)
+    assert rebuilt is not first
+    assert D.simhash_component_labels(fresh, sf) is rebuilt
+    assert D.simhash_component_labels(spark, sf) is first
+    # bench.py's cold-timing reset replaces the dict; the next call rebuilds.
+    spark._quty_cluster_labels = {}
+    assert D.simhash_component_labels(spark, sf) is not first
+
+    # An artifact's rebuild rewrites the same session path in place.
+    def _files(path):
+        return sorted(str(p) for p in pathlib.Path(path).rglob("*.parquet"))
+
+    path = D.lake_passage_artifact(spark, sf)
+    before = _files(path)
+    assert D.lake_passage_artifact(spark, sf) == path
+    assert _files(path) == before
+    assert D.lake_passage_artifact(spark, sf, rebuild=True) == path
+    after = _files(path)
+    assert after and not set(after) & set(before)
 
 
 def test_incremental_simhash_equals_restricted_full_pairs(spark):
@@ -220,7 +251,7 @@ def test_sig_grain_labeling_equals_doc_grain(spark):
     # back. Pin exact equivalence against the direct doc-grain path:
     # components over dedup_simhash's full pair list, min-label each.
     sf = "/root/testdata/sf0.001"
-    spark._quty_cluster_labels = {}  # force a cold sig-grain build
+    reset_memos(spark, "cluster_labels")  # force a cold sig-grain build
     fast = {
         (r.node, r.lbl)
         for r in D.simhash_component_labels(spark, sf).collect()

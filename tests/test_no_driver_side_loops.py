@@ -10,7 +10,10 @@ quietly regress it. ``localCheckpoint``/``cache`` are allowed
 
 The same walk pins the package's one concurrency primitive: threads are
 started only by ``operators/_helpers.overlap``, which joins every leg,
-re-raises worker failures and propagates Spark local properties.
+re-raises worker failures and propagates Spark local properties. It also
+pins the one session-memo primitive: ``spark._quty_*`` state is touched
+only by ``session.py`` (``session_memo`` / ``session_artifact`` /
+``reset_memos``).
 """
 
 from __future__ import annotations
@@ -152,4 +155,30 @@ def test_threads_only_in_overlap_helper():
                 hits.append(f"{rel}:{getattr(node, 'lineno', '?')} {name}")
     assert not hits, (
         "threads outside operators/_helpers.overlap:\n" + "\n".join(hits)
+    )
+
+
+# The session-memo helpers own every ``spark._quty_<family>`` attribute.
+MEMO_HOME = "quty_server_spark/session.py"
+
+
+def test_session_memo_state_only_in_session_helper():
+    hits = []
+    for path in sorted(ROOT.rglob("*.py")):
+        rel = str(path.relative_to(ROOT.parent))
+        if rel == MEMO_HOME:
+            continue
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute):
+                text = node.attr
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                text = node.value
+            else:
+                continue
+            if "_quty_" in text:
+                hits.append(f"{rel}:{node.lineno} {text[:60]!r}")
+    assert not hits, (
+        "session memo state outside quty_server_spark/session.py:\n"
+        + "\n".join(hits)
     )

@@ -355,7 +355,7 @@ def test_compacted_sink_clears_every_family_sidecar(spark):
     # plain read equal to the tombstone-aware live view (which is then
     # a plain read by definition).
     R.sink_lake_artifacts_retract_compacted(spark, SF_DIR).collect()
-    paths = spark._quty_tombstone_artifacts[SF_DIR]
+    paths = R.tombstoned_artifact_paths(spark, SF_DIR)  # memo hit
     for fam, p in paths.items():
         assert not os.path.isdir(os.path.join(p, R._TOMBSTONES)), fam
         def _norm(rows):

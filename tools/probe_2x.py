@@ -57,7 +57,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 import __spark_entry__ as se  # noqa: E402
-from quty_server_spark.session import get_spark  # noqa: E402
+from quty_server_spark.session import get_spark, reset_memos  # noqa: E402
 
 SF01 = "/root/testdata/sf0.1"
 OUT = "/tmp/quty_sf0.2_probe"
@@ -97,7 +97,7 @@ def time_query(spark, fn, sf_dir: str) -> tuple[float, int]:
     fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
     best = float("inf")
     for _ in range(3):
-        getattr(spark, "_quty_cluster_labels", {}).clear()  # cold labeling
+        reset_memos(spark, "cluster_labels")  # cold labeling
         t0 = time.time()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         best = min(best, time.time() - t0)

@@ -29,7 +29,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as se  # noqa: E402
-from quty_server_spark.session import get_spark  # noqa: E402
+from quty_server_spark.session import get_spark, reset_memos  # noqa: E402
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 
@@ -83,7 +83,7 @@ def main() -> None:
                 # memo would otherwise serve cached labels from run 2 on
                 # and the ladder would measure the histogram, not the
                 # labeling it exists to probe.
-                getattr(spark, "_quty_cluster_labels", {}).clear()
+                reset_memos(spark, "cluster_labels")
                 t0 = time.perf_counter()
                 qs[name](spark, sf).write.format("noop").mode("overwrite").save()
                 best = min(best, time.perf_counter() - t0)
