@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from quty_server_spark.functions.hashing import (
@@ -1248,6 +1248,33 @@ SQL_INCREMENTAL_GATE = f"""
     """
 
 
+def simhash_gate_pairs(
+    shard_bands: DataFrame, lake_bands: DataFrame
+) -> DataFrame:
+    """The SimHash gate's one join: ``(incoming_doc_id, lake_doc_id,
+    hamming)`` for every shard/lake band row pair sharing a (band_id,
+    band_val) bucket, kept at ``hamming <= HAMMING_MAX``. Both inputs
+    carry (doc_id, sig, band_id, band_val). NOT distinct — a pair
+    sharing k buckets appears k times — so each caller applies its own
+    ``.distinct()`` after choosing its columns."""
+    n, o = shard_bands.alias("n"), lake_bands.alias("o")
+    return (
+        n.join(
+            o,
+            (F.col("n.band_id") == F.col("o.band_id"))
+            & (F.col("n.band_val") == F.col("o.band_val")),
+        )
+        .select(
+            F.col("n.doc_id").alias("incoming_doc_id"),
+            F.col("o.doc_id").alias("lake_doc_id"),
+            F.bit_count(F.col("n.sig").bitwiseXOR(F.col("o.sig"))).alias(
+                "hamming"
+            ),
+        )
+        .filter(F.col("hamming") <= HAMMING_MAX)
+    )
+
+
 @registry.query(
     "dedup_incremental_simhash",
     oracle=SQL_INCREMENTAL_GATE,
@@ -1274,26 +1301,11 @@ def dedup_incremental_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     boilerplate-dense corpus compose with the SIMHASH_BUCKET_CAP device
     of :func:`dedup_simhash_capped` — the cap applies to the lake-side
     buckets unchanged."""
-    sigs = simhash_sigs(spark, sf_dir)
-    bands = simhash_bands(sigs)
-    new = bands.filter(F.col("doc_id") % 10 == 0).alias("n")
-    lake = bands.filter(F.col("doc_id") % 10 != 0).alias("o")
-    return (
-        new.join(
-            lake,
-            (F.col("n.band_id") == F.col("o.band_id"))
-            & (F.col("n.band_val") == F.col("o.band_val")),
-        )
-        .select(
-            F.col("n.doc_id").alias("incoming_doc_id"),
-            F.col("o.doc_id").alias("lake_doc_id"),
-            F.bit_count(F.col("n.sig").bitwiseXOR(F.col("o.sig"))).alias(
-                "hamming"
-            ),
-        )
-        .filter(F.col("hamming") <= HAMMING_MAX)
-        .distinct()
-    )
+    bands = simhash_bands(simhash_sigs(spark, sf_dir))
+    return simhash_gate_pairs(
+        bands.filter(F.col("doc_id") % 10 == 0),
+        bands.filter(F.col("doc_id") % 10 != 0),
+    ).distinct()
 
 
 @registry.query(
@@ -1342,22 +1354,32 @@ def dedup_incremental_simhash_capped(spark: SparkSession, sf_dir: str) -> DataFr
         "bsz",
         F.count("*").over(Window.partitionBy("band_id", "band_val")),
     ).filter(F.col("bsz") <= SIMHASH_BUCKET_CAP)
-    new = bands.filter(F.col("doc_id") % 10 == 0).alias("n")
-    lake = bands.filter(F.col("doc_id") % 10 != 0).alias("o")
+    return simhash_gate_pairs(
+        bands.filter(F.col("doc_id") % 10 == 0),
+        bands.filter(F.col("doc_id") % 10 != 0),
+    ).distinct()
+
+
+def minhash_gate_candidates(
+    shard_bands: DataFrame, lake_bands: DataFrame, *carry: Column
+) -> DataFrame:
+    """The MinHash gate's one join: distinct ``(incoming_doc_id,
+    lake_doc_id[, *carry])`` for every shard/lake band row pair equal on
+    (band_id, sig). Both inputs carry (doc_id, band_id, sig); ``carry``
+    columns read the lake side as ``o.`` (the artifact gates carry
+    ``F.col("o.n_sh").alias("nb")`` into :func:`_minhash_gate_verify_nb`)."""
+    n, o = shard_bands.alias("n"), lake_bands.alias("o")
     return (
-        new.join(
-            lake,
+        n.join(
+            o,
             (F.col("n.band_id") == F.col("o.band_id"))
-            & (F.col("n.band_val") == F.col("o.band_val")),
+            & (F.col("n.sig") == F.col("o.sig")),
         )
         .select(
             F.col("n.doc_id").alias("incoming_doc_id"),
             F.col("o.doc_id").alias("lake_doc_id"),
-            F.bit_count(F.col("n.sig").bitwiseXOR(F.col("o.sig"))).alias(
-                "hamming"
-            ),
+            *carry,
         )
-        .filter(F.col("hamming") <= HAMMING_MAX)
         .distinct()
     )
 
@@ -1416,8 +1438,7 @@ def _minhash_gate_verify_nb(
     side's (doc_id, shingle) table, ``lake_sh`` the lake documents'
     (lake_doc_id2, shingle_b) scan+explode. Shared by
     :func:`dedup_incremental_minhash_artifact` and the streaming twin
-    so the threshold/denominator contract lives in exactly one place
-    (r11 review finding)."""
+    so the threshold/denominator contract lives in exactly one place."""
     sa = sh_shard.select(F.col("doc_id").alias("incoming_doc_id"), "shingle")
     inter = (
         cand.join(sa, "incoming_doc_id")
@@ -1534,19 +1555,9 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`dedup_incremental_minhash_artifact`."""
     sh = doc_shingles(spark, sf_dir).localCheckpoint(eager=False)
     bands = minhash_bands(minhash_sigs(sh))
-    new = bands.filter(F.col("doc_id") % 10 == 0).alias("n")
-    lake = bands.filter(F.col("doc_id") % 10 != 0).alias("o")
-    cand = (
-        new.join(
-            lake,
-            (F.col("n.band_id") == F.col("o.band_id"))
-            & (F.col("n.sig") == F.col("o.sig")),
-        )
-        .select(
-            F.col("n.doc_id").alias("incoming_doc_id"),
-            F.col("o.doc_id").alias("lake_doc_id"),
-        )
-        .distinct()
+    cand = minhash_gate_candidates(
+        bands.filter(F.col("doc_id") % 10 == 0),
+        bands.filter(F.col("doc_id") % 10 != 0),
     )
     return _minhash_gate_verify(cand, sh)
 
@@ -1606,8 +1617,7 @@ def dedup_incremental_minhash_capped(
     """The MinHash gate's 100 TB candidate-generation contract — the
     QUALIFY-mirrored bucket-cap device of
     :func:`dedup_incremental_simhash_capped` applied to the (band_id,
-    sig) buckets, closing the one scale claim the r10 VERDICT found
-    resting on assertion: the uncapped MinHash gate's diverse-corpus
+    sig) buckets. The uncapped MinHash gate's diverse-corpus
     step ratios are ~3.5x/doubling when the shard scales with the
     corpus (SPARSITY.json ``incremental_minhash_step``), i.e. the join
     grows as the product of both sides. Buckets larger than
@@ -1623,8 +1633,8 @@ def dedup_incremental_minhash_capped(
     NOT the flat-falling SimHash shape: MinHash's (band_id, sig)
     bucket space is enormous, so collisions spread across many small
     buckets the cap never touches instead of saturating a fixed
-    pigeonhole space; the r12 400k doubling settled the r11 watch
-    item — this column does not flatten, and does not need to).
+    pigeonhole space — this column does not flatten, and does not
+    need to).
     THE CONTRACT for this family is therefore the WORST-CASE BOUND:
     |shard bands| x CAP = 320k per run (measured 311 — three orders
     of magnitude of headroom), absolute density 0.25 candidates per
@@ -1639,19 +1649,9 @@ def dedup_incremental_minhash_capped(
     bands = bands.withColumn(
         "bsz", F.count("*").over(Window.partitionBy("band_id", "sig"))
     ).filter(F.col("bsz") <= MINHASH_BUCKET_CAP)
-    new = bands.filter(F.col("doc_id") % 10 == 0).alias("n")
-    lake = bands.filter(F.col("doc_id") % 10 != 0).alias("o")
-    cand = (
-        new.join(
-            lake,
-            (F.col("n.band_id") == F.col("o.band_id"))
-            & (F.col("n.sig") == F.col("o.sig")),
-        )
-        .select(
-            F.col("n.doc_id").alias("incoming_doc_id"),
-            F.col("o.doc_id").alias("lake_doc_id"),
-        )
-        .distinct()
+    cand = minhash_gate_candidates(
+        bands.filter(F.col("doc_id") % 10 == 0),
+        bands.filter(F.col("doc_id") % 10 != 0),
     )
     return _minhash_gate_verify(cand, sh)
 
@@ -1788,29 +1788,16 @@ def dedup_incremental_minhash_artifact(
     the registered query always reads the session-memoized build."""
     if path is None:
         path = lake_minhash_artifact(spark, sf_dir)
-    lake = (
-        spark.read.parquet(path)
-        .select("doc_id", "sig", "n_sh", "band_id")
-        .alias("o")
-    )
+    lake = spark.read.parquet(path).select("doc_id", "sig", "n_sh", "band_id")
     sh_shard = (
         doc_shingles(spark, sf_dir)
         .filter(F.col("doc_id") % 10 == 0)
         .localCheckpoint(eager=False)
     )
-    shard = minhash_bands(minhash_sigs(sh_shard)).alias("n")
-    cand = (
-        shard.join(
-            lake,
-            (F.col("n.band_id") == F.col("o.band_id"))
-            & (F.col("n.sig") == F.col("o.sig")),
-        )
-        .select(
-            F.col("n.doc_id").alias("incoming_doc_id"),
-            F.col("o.doc_id").alias("lake_doc_id"),
-            F.col("o.n_sh").alias("nb"),
-        )
-        .distinct()
+    cand = minhash_gate_candidates(
+        minhash_bands(minhash_sigs(sh_shard)),
+        lake,
+        F.col("o.n_sh").alias("nb"),
     )
     return _minhash_gate_verify_nb(
         cand, sh_shard, lake_shingles_for_verify(spark, sf_dir)
@@ -1941,32 +1928,13 @@ def dedup_incremental_simhash_artifact(
     the registered query always reads the session-memoized build."""
     if path is None:
         path = lake_signature_artifact(spark, sf_dir)
-    lake = (
-        spark.read.parquet(path)
-        .select("doc_id", "sig", "band_id", "band_val")
-        .alias("o")
+    lake = spark.read.parquet(path).select(
+        "doc_id", "sig", "band_id", "band_val"
     )
-    shard = (
-        simhash_bands(simhash_sigs(spark, sf_dir))
-        .filter(F.col("doc_id") % 10 == 0)
-        .alias("n")
+    shard = simhash_bands(simhash_sigs(spark, sf_dir)).filter(
+        F.col("doc_id") % 10 == 0
     )
-    return (
-        shard.join(
-            lake,
-            (F.col("n.band_id") == F.col("o.band_id"))
-            & (F.col("n.band_val") == F.col("o.band_val")),
-        )
-        .select(
-            F.col("n.doc_id").alias("incoming_doc_id"),
-            F.col("o.doc_id").alias("lake_doc_id"),
-            F.bit_count(F.col("n.sig").bitwiseXOR(F.col("o.sig"))).alias(
-                "hamming"
-            ),
-        )
-        .filter(F.col("hamming") <= HAMMING_MAX)
-        .distinct()
-    )
+    return simhash_gate_pairs(shard, lake).distinct()
 
 
 # ---------------------------------------------------------------------------
@@ -2475,22 +2443,11 @@ def _cluster_graph_for_bands(
     against arbitrary artifact state."""
     # Gate pairs (shard vs lake) off the signature rows — the
     # aggregation-free nightly join of dedup_incremental_simhash_artifact.
-    lake_sig = sig.select("doc_id", "sig", "band_id", "band_val").alias("o")
     gate = (
-        shard_bands.alias("n")
-        .join(
-            lake_sig,
-            (F.col("n.band_id") == F.col("o.band_id"))
-            & (F.col("n.band_val") == F.col("o.band_val")),
+        simhash_gate_pairs(
+            shard_bands, sig.select("doc_id", "sig", "band_id", "band_val")
         )
-        .filter(
-            F.bit_count(F.col("n.sig").bitwiseXOR(F.col("o.sig")))
-            <= HAMMING_MAX
-        )
-        .select(
-            F.col("n.doc_id").alias("incoming_doc_id"),
-            F.col("o.doc_id").alias("lake_doc_id"),
-        )
+        .select("incoming_doc_id", "lake_doc_id")
         .distinct()
     )
     # Shard-internal near pairs: band self-join over the shard only.
@@ -3411,6 +3368,39 @@ SQL_PASSAGE_GATE = f"""
     """
 
 
+def passage_scrub(windows: DataFrame, art: DataFrame) -> DataFrame:
+    """The passage gate's one probe: per doc of ``windows`` (doc_id,
+    passage_md5, pfx), ``(doc_id, n_windows, n_lake_dup_windows,
+    dup_ppm)`` — total windows, windows whose (pfx, digest) is in the
+    lake passage artifact ``art``, and their ratio in ppm. Lake
+    multiplicity is absorbed by a LEFT SEMI join (no DISTINCT, no
+    lake-side aggregation); the (pfx, digest) key prefix matches the
+    artifact's partitioning, so a sparse probe prunes prefix
+    directories. ``windows`` is read twice: callers checkpoint it."""
+    art = art.select("pfx", "passage_md5")
+    hits = (
+        windows.join(art, ["pfx", "passage_md5"], "leftsemi")
+        .groupBy("doc_id")
+        .agg(F.count("*").alias("n_lake_dup_windows"))
+    )
+    return (
+        windows.groupBy("doc_id")
+        .agg(F.count("*").alias("n_windows"))
+        .join(hits, "doc_id", "left")
+        .select(
+            "doc_id",
+            "n_windows",
+            F.coalesce("n_lake_dup_windows", F.lit(0)).alias(
+                "n_lake_dup_windows"
+            ),
+        )
+        .withColumn(
+            "dup_ppm",
+            F.expr("(1000000 * n_lake_dup_windows) DIV n_windows"),
+        )
+    )
+
+
 @registry.query(
     "dedup_incremental_passages",
     oracle=SQL_PASSAGE_GATE,
@@ -3431,13 +3421,8 @@ def dedup_incremental_passages(
 
     Plan shape (pinned in tests/test_scale_plans.py): the shard's
     windows come from a batch-filtered documents scan ("% 10 = 0"
-    pushed to the reader); lake multiplicity is absorbed by a LEFT
-    SEMI join against the artifact (no DISTINCT, no lake-side
-    aggregation — semi-join short-circuits on first match per key);
-    the (pfx, digest) join key prefix matches the artifact's
-    partitioning, so a sparse shard's probe prunes unprobed prefix
-    directories at runtime. The only aggregation is the final
-    shard-keyed rollup."""
+    pushed to the reader) into :func:`passage_scrub`; the only
+    aggregation is its shard-keyed rollup."""
     w = _passage_windows(
         load_table(spark, sf_dir, "documents").filter(
             F.col("doc_id") % 10 == 0
@@ -3448,28 +3433,11 @@ def dedup_incremental_passages(
     # materialize_shard=False to keep the shard predicate visible).
     if materialize_shard:
         w = w.localCheckpoint(eager=False)
-    art = spark.read.parquet(
-        path if path is not None else lake_passage_artifact(spark, sf_dir)
-    ).select("pfx", "passage_md5")
-    hits = (
-        w.join(art, ["pfx", "passage_md5"], "leftsemi")
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_lake_dup_windows"))
-    )
-    totals = w.groupBy("doc_id").agg(F.count("*").alias("n_windows"))
-    return (
-        totals.join(hits, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_windows",
-            F.coalesce("n_lake_dup_windows", F.lit(0)).alias(
-                "n_lake_dup_windows"
-            ),
-        )
-        .withColumn(
-            "dup_ppm",
-            F.expr("(1000000 * n_lake_dup_windows) DIV n_windows"),
-        )
+    return passage_scrub(
+        w,
+        spark.read.parquet(
+            path if path is not None else lake_passage_artifact(spark, sf_dir)
+        ),
     )
 
 

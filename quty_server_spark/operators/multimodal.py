@@ -913,31 +913,17 @@ def mm_neardup_incremental_artifact(
     boilerplate-dense media corpus, compose with the
     SIMHASH_BUCKET_CAP device exactly as mm_payload_neardup does — the
     cap applies to the lake buckets unchanged."""
-    from quty_server_spark.operators.dedup import HAMMING_MAX
+    from quty_server_spark.operators.dedup import simhash_gate_pairs
 
     if art_path is None:
         art_path = media_signature_artifact(spark, sf_dir)
     shard_uni = percep_media_universe(spark, sf_dir).filter(
         F.col("doc_id") % 10 == 0
     )
-    new = media_sig_bands(spark, sf_dir, docs=shard_uni).alias("n")
-    lake = spark.read.parquet(art_path).alias("o")
-    return (
-        new.join(
-            lake,
-            (F.col("n.band_id") == F.col("o.band_id"))
-            & (F.col("n.band_val") == F.col("o.band_val")),
-        )
-        .select(
-            F.col("n.doc_id").alias("incoming_doc_id"),
-            F.col("o.doc_id").alias("lake_doc_id"),
-            F.bit_count(F.col("n.sig").bitwiseXOR(F.col("o.sig"))).alias(
-                "hamming"
-            ),
-        )
-        .filter(F.col("hamming") <= HAMMING_MAX)
-        .distinct()
-    )
+    return simhash_gate_pairs(
+        media_sig_bands(spark, sf_dir, docs=shard_uni),
+        spark.read.parquet(art_path),
+    ).distinct()
 
 
 def _media_sig_survivor_summary_oracle() -> str:

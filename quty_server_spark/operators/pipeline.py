@@ -1053,6 +1053,7 @@ def corpus_training_snapshot_incremental(
         _passage_pfx,
         _passage_windows,
         lake_passage_artifact,
+        passage_scrub,
     )
 
     d = load_table(spark, sf_dir, "documents").filter(
@@ -1071,23 +1072,9 @@ def corpus_training_snapshot_incremental(
     w = _passage_windows(d).select(
         "doc_id", "passage_md5", _passage_pfx()
     ).localCheckpoint(eager=False)
-    art = spark.read.parquet(lake_passage_artifact(spark, sf_dir)).select(
-        "pfx", "passage_md5"
-    )
-    hits = (
-        w.join(art, ["pfx", "passage_md5"], "leftsemi")
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("nh"))
-    )
-    scrub = (
-        w.groupBy("doc_id")
-        .agg(F.count("*").alias("nw"))
-        .join(hits, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.expr("(1000000 * coalesce(nh, 0)) DIV nw").alias("dup_ppm"),
-        )
-    )
+    scrub = passage_scrub(
+        w, spark.read.parquet(lake_passage_artifact(spark, sf_dir))
+    ).select("doc_id", "dup_ppm")
     return (
         d.filter(quality_keep)
         .select("doc_id", "lang", "source", n_tok.alias("n_tokens"))

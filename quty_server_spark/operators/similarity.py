@@ -1387,6 +1387,50 @@ SQL_EMB_GATE = f"""
     """
 
 
+def embedding_gate_lake(
+    spark: SparkSession, path: str
+) -> tuple[DataFrame, DataFrame]:
+    """(lake postings ``(vec_id, v, cell, vn)``, K-row centroid sidecar)
+    of the IVF postings artifact at ``path`` — the two static inputs of
+    :func:`embedding_gate_pairs`. ``vn`` is the precomputed norm
+    :func:`cosine_norms` reads (bit-identical to :func:`cosine`)."""
+    lake = (
+        spark.read.parquet(path)
+        .select("vec_id", "v", F.col("cell").cast("bigint").alias("cell"))
+        .filter(F.col("vec_id") % 10 != 0)
+        .withColumn("vn", norm(F.col("v")))
+    )
+    return lake, spark.read.parquet(os.path.join(path, "_centroids"))
+
+
+def embedding_gate_pairs(
+    shard: DataFrame, lake: DataFrame, cent: DataFrame
+) -> DataFrame:
+    """The embedding gate's one probe: ``shard`` vectors ``(vec_id, v)``
+    are assigned to IVF cells against ``cent`` and joined cell-vs-cell
+    to the ``lake`` postings of :func:`embedding_gate_lake`; returns
+    ``(incoming_vec_id, lake_vec_id, cos_sim)`` at cos_sim >=
+    EMB_GATE_COS. The assigned shard is broadcast, so its cells drive
+    partition pruning of the cell-partitioned artifact."""
+    n = _ivf_cells_plan(shard, cent).withColumn("vn", norm(F.col("v")))
+    return (
+        lake.alias("o")
+        .join(broadcast(n.alias("n")), F.col("n.cell") == F.col("o.cell"))
+        .withColumn(
+            "cos_sim",
+            cosine_norms(
+                F.col("n.v"), F.col("o.v"), F.col("n.vn"), F.col("o.vn")
+            ),
+        )
+        .filter(F.col("cos_sim") >= EMB_GATE_COS)
+        .select(
+            F.col("n.vec_id").alias("incoming_vec_id"),
+            F.col("o.vec_id").alias("lake_vec_id"),
+            "cos_sim",
+        )
+    )
+
+
 @registry.query(
     "dedup_incremental_embedding_artifact",
     oracle=SQL_EMB_GATE,
@@ -1424,38 +1468,9 @@ def dedup_incremental_embedding_artifact(
     appended one (tests/test_artifact_append.py)."""
     if path is None:
         path = ivf_postings_artifact(spark, sf_dir)
-    art = spark.read.parquet(path).select(
-        "vec_id", "v", F.col("cell").cast("bigint").alias("cell")
-    )
-    # r17: per-side precomputed norms (cosine_norms — bit-identical).
-    lake = (
-        art.filter(F.col("vec_id") % 10 != 0)
-        .withColumn("vn", norm(F.col("v")))
-        .alias("o")
-    )
-    cent = spark.read.parquet(os.path.join(path, "_centroids"))
-    shard = _corpus(spark, sf_dir).filter(F.col("vec_id") % 10 == 0)
-    assigned = (
-        _ivf_cells_plan(shard, cent)
-        .withColumn("vn", norm(F.col("v")))
-        .alias("n")
-    )
-    return (
-        lake.join(
-            broadcast(assigned), F.col("n.cell") == F.col("o.cell")
-        )
-        .withColumn(
-            "cos_sim",
-            cosine_norms(
-                F.col("n.v"), F.col("o.v"), F.col("n.vn"), F.col("o.vn")
-            ),
-        )
-        .filter(F.col("cos_sim") >= EMB_GATE_COS)
-        .select(
-            F.col("n.vec_id").alias("incoming_vec_id"),
-            F.col("o.vec_id").alias("lake_vec_id"),
-            "cos_sim",
-        )
+    lake, cent = embedding_gate_lake(spark, path)
+    return embedding_gate_pairs(
+        _corpus(spark, sf_dir).filter(F.col("vec_id") % 10 == 0), lake, cent
     )
 
 

@@ -26,8 +26,7 @@ from __future__ import annotations
 import datetime as dt
 import os
 import shutil
-import tempfile
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
@@ -563,11 +562,7 @@ def stream_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_deliveries",
         )
     )
-    outdir = os.path.join(
-        tempfile.gettempdir(),
-        "quty_stream_e2e",
-        os.path.basename(sf_dir.rstrip("/")),
-    )
+    outdir = session_tmp_dir(spark, "quty_stream_e2e", sf_dir)
     shutil.rmtree(outdir, ignore_errors=True)
     os.makedirs(outdir)
     q = (
@@ -577,9 +572,7 @@ def stream_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    upd = spark.read.option("basePath", outdir).parquet(
-        os.path.join(outdir, "epoch=*")
-    )
+    upd = _read_epochs(spark, outdir)
     return upd.groupBy("hour_start", "channel", "member_id").agg(
         F.max_by("n_deliveries", "epoch").alias("n_deliveries")
     )
@@ -1043,6 +1036,19 @@ def _epoch_writer(outdir: str):
     return write_epoch
 
 
+def _read_epochs(spark: SparkSession, outdir: str) -> DataFrame:
+    """Every epoch the :func:`_epoch_writer` sink at ``outdir``
+    committed, with its ``epoch`` partition column, eagerly
+    ``localCheckpoint``-ed: ``outdir`` is a session_tmp_dir that the
+    next call for the same sf_dir rmtree's, and the returned frame must
+    survive that."""
+    return (
+        spark.read.option("basePath", outdir)
+        .parquet(os.path.join(outdir, "epoch=*"))
+        .localCheckpoint(eager=True)
+    )
+
+
 @registry.query(
     "stream_watermark_late_drop",
     oracle="""
@@ -1076,9 +1082,7 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     late_cut = lo + dt.timedelta(hours=1)
     spacer_cut = hi - dt.timedelta(hours=2)
     hold_cut = hi - dt.timedelta(hours=1)
-    workdir = os.path.join(
-        tempfile.gettempdir(), "quty_stream_late", os.path.basename(sf_dir.rstrip("/"))
-    )
+    workdir = session_tmp_dir(spark, "quty_stream_late", sf_dir)
     shutil.rmtree(workdir, ignore_errors=True)
     indir = os.path.join(workdir, "in")
     outdir = os.path.join(workdir, "out")
@@ -1123,7 +1127,7 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    upd = spark.read.option("basePath", outdir).parquet(os.path.join(outdir, "epoch=*"))
+    upd = _read_epochs(spark, outdir)
     return upd.groupBy("hour_start").agg(F.max_by("n", "epoch").alias("n"))
 
 
@@ -1152,9 +1156,7 @@ def checkpoint_recovery_run(spark: SparkSession, sf_dir: str) -> dict:
     ev = load_table(spark, sf_dir, "events")
     lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
     cut = lo + (hi - lo) / 2
-    workdir = os.path.join(
-        tempfile.gettempdir(), "quty_stream_ckpt", os.path.basename(sf_dir.rstrip("/"))
-    )
+    workdir = session_tmp_dir(spark, "quty_stream_ckpt", sf_dir)
     shutil.rmtree(workdir, ignore_errors=True)
     indir = os.path.join(workdir, "in")
     outdir = os.path.join(workdir, "out")
@@ -1191,11 +1193,7 @@ def checkpoint_recovery_run(spark: SparkSession, sf_dir: str) -> dict:
     epochs_phase1 = run_once()  # consume file 1, commit offsets, stop
     shutil.copy(f2, os.path.join(indir, "file1.parquet"))
     epochs_all = run_once()  # NEW query, same checkpoint: resumes
-    result = (
-        spark.read.option("basePath", outdir)
-        .parquet(os.path.join(outdir, "epoch=*"))
-        .select("event_id", "user_id", "value")
-    )
+    result = _read_epochs(spark, outdir).select("event_id", "user_id", "value")
     return {
         "result": result,
         "epochs_phase1": epochs_phase1,
@@ -1234,24 +1232,18 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet, then read back. This is the pattern that replaces the
     reference's per-socket delivery loop with exactly-once batch writes."""
     configure(spark)
-    outdir = os.path.join(
-        tempfile.gettempdir(), "quty_feb_sink", os.path.basename(sf_dir.rstrip("/"))
-    )
+    outdir = session_tmp_dir(spark, "quty_feb_sink", sf_dir)
     shutil.rmtree(outdir, ignore_errors=True)
     s = events_stream(spark, sf_dir).filter(F.col("event_type") == "purchase").select(
         "event_id", "event_type", "value"
     )
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(os.path.join(outdir, f"epoch={epoch_id}"))
-
     q = (
-        s.writeStream.foreachBatch(write_batch)
+        s.writeStream.foreachBatch(_epoch_writer(outdir))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(os.path.join(outdir, "epoch=*")).select(
+    return _read_epochs(spark, outdir).select(
         "event_id", "event_type", "value"
     )
 
@@ -1364,9 +1356,7 @@ def kafka_replay_run(spark: SparkSession, sf_dir: str) -> dict:
         f"phase empty even at the median cut; regenerate fixtures or "
         f"adjust the cut strategy"
     )
-    workdir = os.path.join(
-        tempfile.gettempdir(), "quty_kafka_replay", os.path.basename(sf_dir.rstrip("/"))
-    )
+    workdir = session_tmp_dir(spark, "quty_kafka_replay", sf_dir)
     shutil.rmtree(workdir, ignore_errors=True)
     indir = os.path.join(workdir, "in")
     outdir = os.path.join(workdir, "out")
@@ -1402,11 +1392,7 @@ def kafka_replay_run(spark: SparkSession, sf_dir: str) -> dict:
     epochs_phase1 = run_once()  # consume file 1, commit offsets, stop
     shutil.copy(f2, os.path.join(indir, "file1.parquet"))
     epochs_all = run_once()  # NEW query, same checkpoint: resume, file 2 only
-    result = (
-        spark.read.option("basePath", outdir)
-        .parquet(os.path.join(outdir, "epoch=*"))
-        .select(*cols, "epoch")
-    )
+    result = _read_epochs(spark, outdir).select(*cols, "epoch")
     return {
         "result": result,
         "epochs_phase1": epochs_phase1,
@@ -1682,11 +1668,7 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure(spark)
     register_synth_stream_source(spark)
     n_docs = 500
-    workdir = os.path.join(
-        tempfile.gettempdir(),
-        "quty_synth_stream",
-        os.path.basename(sf_dir.rstrip("/")),
-    )
+    workdir = session_tmp_dir(spark, "quty_synth_stream", sf_dir)
     shutil.rmtree(workdir, ignore_errors=True)
     outdir = os.path.join(workdir, "out")
     ckpt = os.path.join(workdir, "ckpt")
@@ -1710,10 +1692,7 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             if got >= n_docs:
                 break
-    rows = spark.read.option("basePath", outdir).parquet(
-        os.path.join(outdir, "epoch=*")
-    )
-    return rows.groupBy("shard").agg(
+    return _read_epochs(spark, outdir).groupBy("shard").agg(
         F.count("*").cast("bigint").alias("n_docs"),
         F.min("doc_id").cast("bigint").alias("min_doc"),
         F.max("doc_id").cast("bigint").alias("max_doc"),
@@ -1753,47 +1732,51 @@ def _run_ingest_gate_stream(
     spark: SparkSession,
     sf_dir: str,
     kind: str,
-    gate_batch_of,
-    out_cols: list[str],
-    table: str = "documents",
-    id_col: str = "doc_id",
-    docs: DataFrame | None = None,
+    shard: DataFrame,
+    id_col: str,
+    probe: Callable[[DataFrame], DataFrame],
 ) -> DataFrame:
-    """Shared runner for the continuous ingest gates: stage the shard
-    (``<id_col> % 10 == 0`` of ``table``, or a caller-staged ``docs``
-    frame for families whose shard universe is derived rather than a
-    raw table — the media gate's staged perceptual universe) as 4
-    hash-partitioned files, stream them one-file-per-trigger, apply the
-    family's per-batch gate inside ``foreachBatch`` with an epoch-keyed
-    idempotent parquet sink, and return the union of all epochs.
-    Scratch dirs are session-keyed (session_tmp_dir) and the returned
-    frame is eagerly ``localCheckpoint``-ed, so a later call for the
-    same sf_dir — which rmtree's and restages — can never invalidate a
-    frame this call already handed out (r10 ADVICE)."""
-    from quty_server_spark.session import session_tmp_dir
+    """Shared runner for the continuous ingest gates: stage ``shard`` as
+    4 files hash-partitioned on ``id_col`` (batch composition is
+    deterministic in content, not in arrival order), drain them one
+    file per micro-batch, write ``probe(batch_df)`` to the epoch-keyed
+    idempotent sink (:func:`_epoch_writer`), and return the union of
+    all epochs.
 
-    configure(spark)
+    Each gate's ``probe`` is its batch twin's own probe function, so
+    the epoch union equals the one-shot batch gate exactly: every shard
+    row lands in exactly one micro-batch, a row's probe output depends
+    only on that row and on static lake state (the standing artifact),
+    and a probe's ``distinct`` only collapses a row's own repeated
+    pairs. Nothing crosses epochs, so no cross-epoch state or dedup is
+    needed (set-equality tested in tests/test_streaming_recovery.py).
+
+    The ``epoch=*`` read-back has no ``basePath``, so it carries exactly
+    the probe's columns (no ``epoch`` partition column). Scratch dirs
+    are session-keyed (session_tmp_dir) and the returned frame is
+    eagerly ``localCheckpoint``-ed, so a later call for the same sf_dir
+    — which rmtree's and restages — can never invalidate a frame this
+    call already handed out."""
     base = session_tmp_dir(spark, kind, sf_dir)
     indir = os.path.join(base, "in")
     outdir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
     shutil.rmtree(base, ignore_errors=True)
-
-    # Stage the incoming shard as 4 files -> 4 micro-batches under
-    # maxFilesPerTrigger=1 (hash-partitioned on the id, so batch
-    # composition is deterministic in content, not in arrival order).
-    if docs is None:
-        docs = load_table(spark, sf_dir, table).filter(
-            F.col(id_col) % 10 == 0
-        )
-    docs.repartition(4, id_col).write.parquet(indir)
-
-    _drain(spark, docs.schema, indir, ckpt, gate_batch_of(outdir))
-    return (
-        spark.read.parquet(os.path.join(outdir, "epoch=*"))
-        .select(*out_cols)
-        .localCheckpoint(eager=True)
+    shard.repartition(4, id_col).write.parquet(indir)
+    write = _epoch_writer(outdir)
+    _drain(
+        spark, shard.schema, indir, os.path.join(base, "ckpt"),
+        lambda batch_df, epoch_id: write(probe(batch_df), epoch_id),
     )
+    return spark.read.parquet(os.path.join(outdir, "epoch=*")).localCheckpoint(
+        eager=True
+    )
+
+
+def _shard(
+    spark: SparkSession, sf_dir: str, table: str, id_col: str
+) -> DataFrame:
+    """Tonight's incoming shard of ``table``: ``id_col % 10 == 0``."""
+    return load_table(spark, sf_dir, table).filter(F.col(id_col) % 10 == 0)
 
 
 @registry.query(
@@ -1801,71 +1784,38 @@ def _run_ingest_gate_stream(
     oracle=SQL_INCREMENTAL_GATE,
 )
 def stream_ingest_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The incremental dedup gate run CONTINUOUSLY: incoming documents
-    arrive as a file stream in micro-batches, and each batch is signed,
-    banded, and joined against the precomputed lake-signature artifact
-    inside ``foreachBatch`` — the streaming twin of
+    """The SimHash ingest gate run continuously: incoming documents
+    arrive as a file stream and each micro-batch is signed, banded and
+    probed against the lake-signature artifact with
+    :func:`~quty_server_spark.operators.dedup.simhash_gate_pairs` — the
+    streaming twin of
     :func:`~quty_server_spark.operators.dedup.dedup_incremental_simhash_artifact`,
-    sharing its oracle SQL byte-for-byte. The union of all epochs'
-    outputs must equal the one-shot batch gate exactly: every shard doc
-    lands in exactly one micro-batch (file-partitioned), each doc's
-    signature is computed over its complete row, and the within-batch
-    ``distinct`` collapses multi-band collisions just as the batch gate
-    does, so no cross-epoch dedup is needed.
+    sharing its oracle SQL byte-for-byte (:func:`_run_ingest_gate_stream`).
 
-    Scale: this is the shape of a production ingest tier that cannot
-    wait for a nightly window — per micro-batch cost is sign(batch) +
-    one band-equality join against the artifact scan (batch side
-    broadcast), and the epoch-keyed overwrite sink makes replays
-    idempotent (same exactly-once convention as
-    :func:`stream_foreach_batch_sink`). The lake-sized signing job is
-    amortized into the artifact on both the nightly AND the continuous
-    path."""
+    Scale: per micro-batch cost is sign(batch) + one band-equality join
+    against the artifact scan (batch side broadcast). The lake-sized
+    signing job is amortized into the artifact on both the nightly and
+    the continuous path."""
     from quty_server_spark.operators.dedup import (
-        HAMMING_MAX,
         lake_signature_artifact,
         simhash_bands,
+        simhash_gate_pairs,
         simhash_sigs_docs,
     )
 
     configure(spark)
-    lake = (
-        spark.read.parquet(lake_signature_artifact(spark, sf_dir))
-        .select("doc_id", "sig", "band_id", "band_val")
-        .alias("o")
+    lake = spark.read.parquet(lake_signature_artifact(spark, sf_dir)).select(
+        "doc_id", "sig", "band_id", "band_val"
     )
-
-    def gate_batch_of(outdir: str):
-        def gate_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            shard = simhash_bands(simhash_sigs_docs(batch_df)).alias("n")
-            res = (
-                shard.join(
-                    lake,
-                    (F.col("n.band_id") == F.col("o.band_id"))
-                    & (F.col("n.band_val") == F.col("o.band_val")),
-                )
-                .select(
-                    F.col("n.doc_id").alias("incoming_doc_id"),
-                    F.col("o.doc_id").alias("lake_doc_id"),
-                    F.bit_count(
-                        F.col("n.sig").bitwiseXOR(F.col("o.sig"))
-                    ).alias("hamming"),
-                )
-                .filter(F.col("hamming") <= HAMMING_MAX)
-                .distinct()
-            )
-            res.write.mode("overwrite").parquet(
-                os.path.join(outdir, f"epoch={epoch_id}")
-            )
-
-        return gate_batch
-
     return _run_ingest_gate_stream(
         spark,
         sf_dir,
         "quty_stream_gate",
-        gate_batch_of,
-        ["incoming_doc_id", "lake_doc_id", "hamming"],
+        _shard(spark, sf_dir, "documents", "doc_id"),
+        "doc_id",
+        lambda b: simhash_gate_pairs(
+            simhash_bands(simhash_sigs_docs(b)), lake
+        ).distinct(),
     )
 
 
@@ -1876,38 +1826,33 @@ def stream_ingest_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_ingest_dedup_gate_minhash(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The MinHash-family continuous ingest gate — the streaming twin
-    of :func:`~quty_server_spark.operators.dedup.dedup_incremental_minhash_artifact`,
+    """The MinHash ingest gate run continuously — the streaming twin of
+    :func:`~quty_server_spark.operators.dedup.dedup_incremental_minhash_artifact`,
     sharing its oracle SQL byte-for-byte: each micro-batch is shingled,
-    min-hashed, and banded, candidates come from an equality join
-    against the precomputed lake MinHash-band artifact (which carries
-    the lake's per-doc shingle counts, so no lake-side aggregation runs
-    per batch), and the exact-Jaccard verify joins only the batch's own
-    shingles against the lake documents scan restricted to candidate
-    pairs. Epoch union equals the one-shot batch gate exactly: each doc
-    lands in one micro-batch and its candidates/verify are computed
-    from its complete row plus static lake state — nothing crosses
-    epochs.
+    min-hashed and banded, candidates come from
+    :func:`~quty_server_spark.operators.dedup.minhash_gate_candidates`
+    against the lake MinHash-band artifact (which carries the lake's
+    per-doc shingle counts, so no lake-side aggregation runs per batch),
+    and the exact-Jaccard verify joins only the batch's own shingles
+    against the lake documents scan restricted to candidate pairs.
 
     Scale: per micro-batch cost is shingle+sign(batch) + one band join
     against the artifact scan + a candidate-restricted verify; the
     lake-sized signature and size aggregations are amortized into the
-    write-once artifact on the continuous path just as on the nightly
-    one."""
+    write-once artifact."""
     from quty_server_spark.operators.dedup import (
         _minhash_gate_verify_nb,
         doc_shingles_docs,
         lake_minhash_artifact,
         lake_shingles_for_verify,
         minhash_bands,
+        minhash_gate_candidates,
         minhash_sigs,
     )
 
     configure(spark)
-    lake = (
-        spark.read.parquet(lake_minhash_artifact(spark, sf_dir))
-        .select("doc_id", "sig", "n_sh", "band_id")
-        .alias("o")
+    lake = spark.read.parquet(lake_minhash_artifact(spark, sf_dir)).select(
+        "doc_id", "sig", "n_sh", "band_id"
     )
     # Lazy-checkpointed once: every micro-batch's verify joins the lake
     # shingles, and without the checkpoint each batch would re-run the
@@ -1917,36 +1862,20 @@ def stream_ingest_dedup_gate_minhash(
         eager=False
     )
 
-    def gate_batch_of(outdir: str):
-        def gate_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            sh = doc_shingles_docs(batch_df).localCheckpoint(eager=False)
-            shard = minhash_bands(minhash_sigs(sh)).alias("n")
-            cand = (
-                shard.join(
-                    lake,
-                    (F.col("n.band_id") == F.col("o.band_id"))
-                    & (F.col("n.sig") == F.col("o.sig")),
-                )
-                .select(
-                    F.col("n.doc_id").alias("incoming_doc_id"),
-                    F.col("o.doc_id").alias("lake_doc_id"),
-                    F.col("o.n_sh").alias("nb"),
-                )
-                .distinct()
-            )
-            res = _minhash_gate_verify_nb(cand, sh, lake_sh)
-            res.write.mode("overwrite").parquet(
-                os.path.join(outdir, f"epoch={epoch_id}")
-            )
-
-        return gate_batch
+    def probe(batch_df: DataFrame) -> DataFrame:
+        sh = doc_shingles_docs(batch_df).localCheckpoint(eager=False)
+        cand = minhash_gate_candidates(
+            minhash_bands(minhash_sigs(sh)), lake, F.col("o.n_sh").alias("nb")
+        )
+        return _minhash_gate_verify_nb(cand, sh, lake_sh)
 
     return _run_ingest_gate_stream(
         spark,
         sf_dir,
         "quty_stream_gate_minhash",
-        gate_batch_of,
-        ["incoming_doc_id", "lake_doc_id", "jaccard"],
+        _shard(spark, sf_dir, "documents", "doc_id"),
+        "doc_id",
+        probe,
     )
 
 
@@ -1957,100 +1886,42 @@ def stream_ingest_dedup_gate_minhash(
 def stream_ingest_dedup_gate_embedding(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The EMBEDDING-family continuous ingest gate — the streaming twin
+    """The embedding ingest gate run continuously — the streaming twin
     of :func:`~quty_server_spark.operators.similarity.dedup_incremental_embedding_artifact`,
-    completing the continuous tier for ALL THREE signature families
-    (SimHash ``stream_ingest_dedup_gate``, MinHash
-    ``stream_ingest_dedup_gate_minhash``, and now semantic near-dup):
-    incoming vectors arrive as a file stream in micro-batches; each
-    batch is assigned to IVF cells against the artifact's K-row
-    centroid sidecar and probed cell-vs-cell against the artifact's
-    lake postings inside ``foreachBatch``, with the epoch-keyed
-    idempotent parquet sink. Shares the batch gate's oracle SQL
-    byte-for-byte; epoch union equals the one-shot gate exactly (each
-    vector lands in one micro-batch, its cell assignment is a pure
-    function of its own row and the static centroids, and candidates
-    come only from static lake state — nothing crosses epochs;
-    set-equality tested in tests/test_streaming_recovery.py).
+    sharing its oracle SQL byte-for-byte: each micro-batch of incoming
+    vectors is probed with
+    :func:`~quty_server_spark.operators.similarity.embedding_gate_pairs`
+    (IVF cell assignment against the artifact's K-row centroid sidecar,
+    then a cell-vs-cell join against the artifact's lake postings).
 
     Scale: per micro-batch cost is |batch| × K broadcast assignment
     (map-side combined) + a same-cell equality join against the
     cell-partitioned artifact — the batch's assigned cells drive
     partition pruning, so each trigger reads only the cell directories
     its vectors land in. The corpus-sized assignment is amortized into
-    the write-once artifact on the continuous path just as on the
-    nightly one."""
-    from pyspark.sql.functions import broadcast
-
-    from quty_server_spark.functions.vectors import (
-        as_double,
-        cosine_norms,
-        norm,
-    )
+    the write-once artifact."""
+    from quty_server_spark.functions.vectors import as_double
     from quty_server_spark.operators.similarity import (
-        EMB_GATE_COS,
-        _ivf_cells_plan,
+        embedding_gate_lake,
+        embedding_gate_pairs,
         ivf_postings_artifact,
     )
 
     configure(spark)
-    path = ivf_postings_artifact(spark, sf_dir)
-    art = spark.read.parquet(path).select(
-        "vec_id", "v", F.col("cell").cast("bigint").alias("cell")
+    lake, cent = embedding_gate_lake(
+        spark, ivf_postings_artifact(spark, sf_dir)
     )
-    # r17: per-side precomputed norms (cosine_norms — bit-identical),
-    # the batch twin's form mirrored on the continuous path.
-    lake = (
-        art.filter(F.col("vec_id") % 10 != 0)
-        .withColumn("vn", norm(F.col("v")))
-        .alias("o")
-    )
-    cent = spark.read.parquet(os.path.join(path, "_centroids"))
-
-    def gate_batch_of(outdir: str):
-        def gate_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            shard = batch_df.select(
-                "vec_id", as_double(F.col("embedding")).alias("v")
-            )
-            assigned = (
-                _ivf_cells_plan(shard, cent)
-                .withColumn("vn", norm(F.col("v")))
-                .alias("n")
-            )
-            res = (
-                lake.join(
-                    broadcast(assigned), F.col("n.cell") == F.col("o.cell")
-                )
-                .withColumn(
-                    "cos_sim",
-                    cosine_norms(
-                        F.col("n.v"),
-                        F.col("o.v"),
-                        F.col("n.vn"),
-                        F.col("o.vn"),
-                    ),
-                )
-                .filter(F.col("cos_sim") >= EMB_GATE_COS)
-                .select(
-                    F.col("n.vec_id").alias("incoming_vec_id"),
-                    F.col("o.vec_id").alias("lake_vec_id"),
-                    "cos_sim",
-                )
-            )
-            res.write.mode("overwrite").parquet(
-                os.path.join(outdir, f"epoch={epoch_id}")
-            )
-
-        return gate_batch
-
     return _run_ingest_gate_stream(
         spark,
         sf_dir,
         "quty_stream_gate_embedding",
-        gate_batch_of,
-        ["incoming_vec_id", "lake_vec_id", "cos_sim"],
-        table="embeddings",
-        id_col="vec_id",
+        _shard(spark, sf_dir, "embeddings", "vec_id"),
+        "vec_id",
+        lambda b: embedding_gate_pairs(
+            b.select("vec_id", as_double(F.col("embedding")).alias("v")),
+            lake,
+            cent,
+        ),
     )
 
 
@@ -2059,73 +1930,39 @@ def stream_ingest_dedup_gate_embedding(
     oracle=SQL_PASSAGE_GATE,
 )
 def stream_ingest_passage_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PASSAGE-family continuous ingest gate — the streaming twin of
+    """The passage ingest gate run continuously — the streaming twin of
     :func:`~quty_server_spark.operators.dedup.dedup_incremental_passages`,
-    extending the continuous tier to the fourth artifact family:
-    incoming documents arrive as a file stream in micro-batches; each
-    batch is windowed (16-token windows at stride 8) and its digests
-    LEFT-SEMI probed against the write-once lake passage artifact
-    inside ``foreachBatch``, reporting per-doc window totals, lake-dup
-    hits, and the scrub ratio, with the epoch-keyed idempotent parquet
-    sink. Shares the batch gate's oracle SQL byte-for-byte; epoch union
-    equals the one-shot gate exactly (each doc lands in one micro-batch,
-    its windows are a pure function of its own text, and hits come only
-    from static lake state — nothing crosses epochs; set-equality
-    tested in tests/test_streaming_recovery.py).
+    sharing its oracle SQL byte-for-byte: each micro-batch is windowed
+    (16-token windows at stride 8) and scrubbed against the write-once
+    lake passage artifact with
+    :func:`~quty_server_spark.operators.dedup.passage_scrub`.
 
     Scale: per micro-batch cost is window(batch) + one (pfx, digest)
-    semi-join against the prefix-partitioned artifact — no lake-side
-    aggregation (multiplicity absorbed by the semi join), no
-    re-windowing of the lake on any trigger."""
+    semi-join against the prefix-partitioned artifact — no re-windowing
+    of the lake on any trigger."""
     from quty_server_spark.operators.dedup import (
         _passage_pfx,
         _passage_windows,
         lake_passage_artifact,
+        passage_scrub,
     )
 
     configure(spark)
-    art = spark.read.parquet(lake_passage_artifact(spark, sf_dir)).select(
-        "pfx", "passage_md5"
-    )
+    art = spark.read.parquet(lake_passage_artifact(spark, sf_dir))
 
-    def gate_batch_of(outdir: str):
-        def gate_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            w = _passage_windows(batch_df).select(
-                "doc_id", "passage_md5", _passage_pfx()
-            ).localCheckpoint(eager=False)
-            hits = (
-                w.join(art, ["pfx", "passage_md5"], "leftsemi")
-                .groupBy("doc_id")
-                .agg(F.count("*").alias("n_lake_dup_windows"))
-            )
-            res = (
-                w.groupBy("doc_id")
-                .agg(F.count("*").alias("n_windows"))
-                .join(hits, "doc_id", "left")
-                .select(
-                    "doc_id",
-                    "n_windows",
-                    F.coalesce("n_lake_dup_windows", F.lit(0)).alias(
-                        "n_lake_dup_windows"
-                    ),
-                )
-                .withColumn(
-                    "dup_ppm",
-                    F.expr("(1000000 * n_lake_dup_windows) DIV n_windows"),
-                )
-            )
-            res.write.mode("overwrite").parquet(
-                os.path.join(outdir, f"epoch={epoch_id}")
-            )
-
-        return gate_batch
+    def probe(batch_df: DataFrame) -> DataFrame:
+        w = _passage_windows(batch_df).select(
+            "doc_id", "passage_md5", _passage_pfx()
+        ).localCheckpoint(eager=False)
+        return passage_scrub(w, art)
 
     return _run_ingest_gate_stream(
         spark,
         sf_dir,
         "quty_stream_gate_passages",
-        gate_batch_of,
-        ["doc_id", "n_windows", "n_lake_dup_windows", "dup_ppm"],
+        _shard(spark, sf_dir, "documents", "doc_id"),
+        "doc_id",
+        probe,
     )
 
 
@@ -2141,31 +1978,22 @@ def _media_gate_oracle() -> str:
 
 @registry.query("stream_ingest_media_gate", oracle=_media_gate_oracle())
 def stream_ingest_media_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The MEDIA-family continuous ingest gate — the streaming twin of
+    """The media ingest gate run continuously — the streaming twin of
     :func:`~quty_server_spark.operators.multimodal.mm_neardup_incremental_artifact`,
-    closing the r15 verdict's named gap: every other artifact family's
-    nightly gate already had a foreachBatch twin; the perceptual
-    media gate was batch-only. Tonight's media shard (``doc_id % 10 ==
-    0`` of the staged perceptual universe — twins cross the shard/lake
-    boundary by the ``_NEARDUP_TWIN_BASE ≡ 7 (mod 10)`` device, so
-    every epoch set sees staged pairs) arrives as a file stream in
-    micro-batches; each batch's payloads are signed through the REAL
-    Arrow-batch decode seam inside ``foreachBatch`` (payload bytes
-    never reach the driver) and its bands join the standing write-once
-    perceptual-signature artifact asymmetrically (incoming × lake,
-    never lake × lake), with the epoch-keyed idempotent parquet sink.
-    Shares the batch gate's oracle SQL byte-for-byte; the epoch union
-    equals the one-shot gate exactly — each media item lands in one
-    micro-batch, its signature is a pure function of its own payload,
-    and matches come only from static lake state, so nothing crosses
-    epochs (set-equality pinned in tests/test_streaming_recovery.py).
+    sharing its oracle SQL byte-for-byte. The shard is ``doc_id % 10 ==
+    0`` of the staged perceptual universe; twins cross the shard/lake
+    boundary by the ``_NEARDUP_TWIN_BASE ≡ 7 (mod 10)`` device, so every
+    epoch set sees staged pairs. Each micro-batch's payloads are signed
+    through the Arrow-batch decode seam (payload bytes never reach the
+    driver) and its bands are probed against the perceptual-signature
+    artifact with :func:`~quty_server_spark.operators.dedup.simhash_gate_pairs`
+    (incoming × lake, never lake × lake).
 
-    Scale: per micro-batch cost is one O(bytes) cumulative-sum signing
-    pass over the batch's payloads + one band-equality join against the
-    band_id-partitioned artifact (directory-pruned to the probe's own
-    bands); the lake-side decode never runs on any trigger — the
-    artifact amortizes it exactly as on the nightly path."""
-    from quty_server_spark.operators.dedup import HAMMING_MAX
+    Scale: per micro-batch cost is one O(bytes) signing pass over the
+    batch's payloads + one band-equality join against the
+    band_id-partitioned artifact; the lake-side decode never runs on any
+    trigger."""
+    from quty_server_spark.operators.dedup import simhash_gate_pairs
     from quty_server_spark.operators.multimodal import (
         media_sig_bands,
         media_signature_artifact,
@@ -2173,47 +2001,21 @@ def stream_ingest_media_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     configure(spark)
-    lake = (
-        spark.read.parquet(media_signature_artifact(spark, sf_dir))
-        .select("doc_id", "sig", "band_id", "band_val")
-        .alias("o")
+    lake = spark.read.parquet(media_signature_artifact(spark, sf_dir)).select(
+        "doc_id", "sig", "band_id", "band_val"
     )
-
-    def gate_batch_of(outdir: str):
-        def gate_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            shard = media_sig_bands(spark, sf_dir, docs=batch_df).alias("n")
-            res = (
-                shard.join(
-                    lake,
-                    (F.col("n.band_id") == F.col("o.band_id"))
-                    & (F.col("n.band_val") == F.col("o.band_val")),
-                )
-                .select(
-                    F.col("n.doc_id").alias("incoming_doc_id"),
-                    F.col("o.doc_id").alias("lake_doc_id"),
-                    F.bit_count(
-                        F.col("n.sig").bitwiseXOR(F.col("o.sig"))
-                    ).alias("hamming"),
-                )
-                .filter(F.col("hamming") <= HAMMING_MAX)
-                .distinct()
-            )
-            res.write.mode("overwrite").parquet(
-                os.path.join(outdir, f"epoch={epoch_id}")
-            )
-
-        return gate_batch
-
-    shard_uni = percep_media_universe(spark, sf_dir).filter(
+    shard = percep_media_universe(spark, sf_dir).filter(
         F.col("doc_id") % 10 == 0
     ).select("doc_id", "payload")
     return _run_ingest_gate_stream(
         spark,
         sf_dir,
         "quty_stream_gate_media",
-        gate_batch_of,
-        ["incoming_doc_id", "lake_doc_id", "hamming"],
-        docs=shard_uni,
+        shard,
+        "doc_id",
+        lambda b: simhash_gate_pairs(
+            media_sig_bands(spark, sf_dir, docs=b), lake
+        ).distinct(),
     )
 
 
@@ -2280,6 +2082,7 @@ def _maintain_labels(
     lake_sig = spark.read.parquet(lake_signature_artifact(spark, sf_dir))
     lbl_path = os.path.join(base, "labels")
     bands_dir = os.path.join(base, "bands")
+    write_bands = _epoch_writer(bands_dir)
 
     def epoch(batch_df: DataFrame, epoch_id: int) -> None:
         if admit is not None:  # two legs read the batch: scan it once
@@ -2301,12 +2104,7 @@ def _maintain_labels(
                 singles.localCheckpoint(eager=False),
             )
 
-        legs = [
-            apply_labels,
-            lambda: bands.write.mode("overwrite").parquet(
-                os.path.join(bands_dir, f"epoch={epoch_id}")
-            ),
-        ]
+        legs = [apply_labels, lambda: write_bands(bands, epoch_id)]
         if admit is not None:
             legs.append(lambda: admit(batch_df, epoch_id))
         overlap(*legs)
@@ -2371,11 +2169,11 @@ def stream_cluster_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch-sized band write. The label artifact is a session-private
     copy (built from the memoized lake labels), so concurrent consumers
     of the standing artifacts never observe this stream's mutations."""
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % 10 == 0
-    )
     lbl_path = _label_maintenance_stream(
-        spark, sf_dir, "quty_stream_clabels", docs
+        spark,
+        sf_dir,
+        "quty_stream_clabels",
+        _shard(spark, sf_dir, "documents", "doc_id"),
     )
     return (
         spark.read.parquet(lbl_path)
@@ -2409,9 +2207,10 @@ def stream_corpus_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     1. QUALITY gate — the family's shared predicate
        (pipeline.snapshot_quality_keep), per-doc, order-independent.
-    2. PASSAGE scrub — the epoch's windows LEFT-SEMI probed against the
-       write-once lake digest artifact (static lake state, per-doc,
-       order-independent); dup_ppm computed per doc.
+    2. PASSAGE scrub — the batch passage gate's probe
+       (:func:`~quty_server_spark.operators.dedup.passage_scrub`) against
+       the write-once lake digest artifact (static lake state, per-doc,
+       order-independent).
     3. LABEL lifecycle — the :func:`stream_cluster_maintenance`
        composition (:func:`_label_maintenance_stream`), whose
        close-state ≡ full-recompute contract is what makes step 4
@@ -2426,8 +2225,7 @@ def stream_corpus_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     smaller-id member of an earlier doc's cluster and evict it (a
     production stream would emit a tombstone; the snapshot semantics
     here are "admit provisionally, settle at snapshot close"). The
-    oracle is
-    the batch twin's SQL byte-for-byte, and the epoch-union +
+    oracle is the batch twin's SQL byte-for-byte, and the epoch-union +
     final-equality pins live in tests/test_streaming_recovery.py.
 
     Scale: per-trigger cost = quality(epoch) + window(epoch) + pruned
@@ -2438,17 +2236,17 @@ def stream_corpus_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         _passage_pfx,
         _passage_windows,
         lake_passage_artifact,
+        passage_scrub,
     )
     from quty_server_spark.operators.pipeline import snapshot_quality_keep
 
     kind = "quty_stream_snapshot"
     outdir = os.path.join(session_tmp_dir(spark, kind, sf_dir), "out")
-    pw_art = spark.read.parquet(lake_passage_artifact(spark, sf_dir)).select(
-        "pfx", "passage_md5"
-    )
-    docs = load_table(spark, sf_dir, "documents").select(
+    write = _epoch_writer(outdir)
+    pw_art = spark.read.parquet(lake_passage_artifact(spark, sf_dir))
+    docs = _shard(spark, sf_dir, "documents", "doc_id").select(
         "doc_id", "text", "lang", "source"
-    ).filter(F.col("doc_id") % 10 == 0)
+    )
 
     # Provisional admission: quality + lake-passage scrub. Reads the
     # epoch checkpoint + the STATIC lake digest artifact and writes the
@@ -2457,22 +2255,7 @@ def stream_corpus_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         w = _passage_windows(batch_df).select(
             "doc_id", "passage_md5", _passage_pfx()
         ).localCheckpoint(eager=False)
-        hits = (
-            w.join(pw_art, ["pfx", "passage_md5"], "leftsemi")
-            .groupBy("doc_id")
-            .agg(F.count("*").alias("nh"))
-        )
-        scrub = (
-            w.groupBy("doc_id")
-            .agg(F.count("*").alias("nw"))
-            .join(hits, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.expr("(1000000 * coalesce(nh, 0)) DIV nw").alias(
-                    "dup_ppm"
-                ),
-            )
-        )
+        scrub = passage_scrub(w, pw_art).select("doc_id", "dup_ppm")
         n_tok = F.size(F.split("text", " "))
         res = (
             batch_df.filter(snapshot_quality_keep())
@@ -2487,9 +2270,7 @@ def stream_corpus_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .filter(F.col("dup_ppm") < 500000)
         )
-        res.write.mode("overwrite").parquet(
-            os.path.join(outdir, f"epoch={epoch_id}")
-        )
+        write(res, epoch_id)
 
     lbl_path = _label_maintenance_stream(
         spark, sf_dir, kind, docs, admit=_admit_epoch

@@ -13,7 +13,10 @@ started only by ``operators/_helpers.overlap``, which joins every leg,
 re-raises worker failures and propagates Spark local properties. It also
 pins the one session-memo primitive: ``spark._quty_*`` state is touched
 only by ``session.py`` (``session_memo`` / ``session_artifact`` /
-``reset_memos``).
+``reset_memos``). And it pins the streams' scratch policy: every
+``epoch=<id>`` sink path is built by ``streaming/ops._epoch_writer``, and
+no stream takes a fixed ``tempfile.gettempdir()`` dir (``session_tmp_dir``
+instead).
 """
 
 from __future__ import annotations
@@ -180,5 +183,59 @@ def test_session_memo_state_only_in_session_helper():
                 hits.append(f"{rel}:{node.lineno} {text[:60]!r}")
     assert not hits, (
         "session memo state outside quty_server_spark/session.py:\n"
+        + "\n".join(hits)
+    )
+
+
+# The one epoch-keyed sink: every f-string path with ``epoch=`` lives in it.
+EPOCH_HOME = ("quty_server_spark/streaming/ops.py", "_epoch_writer")
+
+
+def test_epoch_paths_only_in_epoch_writer():
+    hits = []
+    for path in sorted(ROOT.rglob("*.py")):
+        rel = str(path.relative_to(ROOT.parent))
+        tree = ast.parse(path.read_text(), filename=str(path))
+        home = [
+            (n.lineno, n.end_lineno)
+            for n in ast.walk(tree)
+            if isinstance(n, ast.FunctionDef)
+            and (rel, n.name) == EPOCH_HOME
+        ]
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.JoinedStr):
+                continue
+            if not any(
+                isinstance(v, ast.Constant) and "epoch=" in v.value
+                for v in node.values
+            ):
+                continue
+            if not any(a <= node.lineno <= b for a, b in home):
+                fn = _enclosing_function(tree, node.lineno)
+                hits.append(f"{rel}:{node.lineno} in {fn}()")
+    assert not hits, (
+        "epoch-keyed paths outside streaming/ops._epoch_writer:\n"
+        + "\n".join(hits)
+    )
+
+
+def test_no_fixed_tmp_dirs_in_streaming():
+    hits = []
+    for path in sorted((ROOT / "streaming").rglob("*.py")):
+        rel = str(path.relative_to(ROOT.parent))
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute):
+                name = node.attr
+            elif isinstance(node, ast.Name):
+                name = node.id
+            elif isinstance(node, ast.alias):
+                name = node.name
+            else:
+                continue
+            if name == "gettempdir":
+                hits.append(f"{rel}:{getattr(node, 'lineno', '?')}")
+    assert not hits, (
+        "tempfile.gettempdir under streaming/ (use session_tmp_dir):\n"
         + "\n".join(hits)
     )

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from quty_server_spark.operators._helpers import load_table
@@ -169,89 +170,116 @@ def test_epoch_sink_idempotent_on_retry(spark):
     assert back.count() == 100
 
 
-def test_stream_ingest_gate_matches_batch_gate(spark):
-    # The continuous gate is the batch gate chopped into micro-batches:
-    # the union of per-epoch outputs must equal the one-shot artifact
-    # gate row-for-row, and the run must actually have been multi-batch
-    # (file-partitioned shard + maxFilesPerTrigger=1 -> >= 2 epochs).
-    from quty_server_spark.operators.dedup import (
-        dedup_incremental_simhash_artifact,
-    )
-    from quty_server_spark.session import session_tmp_dir
-    from quty_server_spark.streaming.ops import stream_ingest_dedup_gate
-
-    streamed = {
-        tuple(r) for r in stream_ingest_dedup_gate(spark, SF_DIR).collect()
-    }
-    batch = {
-        tuple(r)
-        for r in dedup_incremental_simhash_artifact(spark, SF_DIR).collect()
-    }
-    assert streamed == batch
-    assert len(streamed) > 0
-    outdir = os.path.join(
-        session_tmp_dir(spark, "quty_stream_gate", SF_DIR), "out"
-    )
-    epochs = [d for d in os.listdir(outdir) if d.startswith("epoch=")]
-    assert len(epochs) >= 2
-
-
-def test_stream_ingest_gate_minhash_matches_batch_gate(spark):
-    # The MinHash-family continuous gate: epoch union == the one-shot
-    # artifact-backed gate (pairs AND exact Jaccard), run multi-batch.
+def _gate_twins():
     from quty_server_spark.operators.dedup import (
         dedup_incremental_minhash_artifact,
+        dedup_incremental_passages,
+        dedup_incremental_simhash_artifact,
     )
-    from quty_server_spark.session import session_tmp_dir
-    from quty_server_spark.streaming.ops import (
-        stream_ingest_dedup_gate_minhash,
+    from quty_server_spark.operators.multimodal import (
+        mm_neardup_incremental_artifact,
     )
-
-    streamed = {
-        (r.incoming_doc_id, r.lake_doc_id, round(r.jaccard, 9))
-        for r in stream_ingest_dedup_gate_minhash(spark, SF_DIR).collect()
-    }
-    batch = {
-        (r.incoming_doc_id, r.lake_doc_id, round(r.jaccard, 9))
-        for r in dedup_incremental_minhash_artifact(spark, SF_DIR).collect()
-    }
-    assert streamed == batch
-    assert len(streamed) > 0
-    outdir = os.path.join(
-        session_tmp_dir(spark, "quty_stream_gate_minhash", SF_DIR), "out"
-    )
-    epochs = [d for d in os.listdir(outdir) if d.startswith("epoch=")]
-    assert len(epochs) >= 2
-
-
-def test_stream_ingest_gate_embedding_matches_batch_gate(spark):
-    # The embedding-family continuous gate (round 12, completing the
-    # continuous tier for all three signature families): epoch union ==
-    # the one-shot artifact-backed gate (pairs AND cosine), run
-    # multi-batch.
     from quty_server_spark.operators.similarity import (
         dedup_incremental_embedding_artifact,
     )
-    from quty_server_spark.session import session_tmp_dir
-    from quty_server_spark.streaming.ops import (
-        stream_ingest_dedup_gate_embedding,
-    )
 
-    streamed = {
-        (r.incoming_vec_id, r.lake_vec_id, round(r.cos_sim, 9))
-        for r in stream_ingest_dedup_gate_embedding(spark, SF_DIR).collect()
-    }
-    batch = {
-        (r.incoming_vec_id, r.lake_vec_id, round(r.cos_sim, 9))
-        for r in dedup_incremental_embedding_artifact(spark, SF_DIR).collect()
-    }
+    return [
+        pytest.param(
+            ops.stream_ingest_dedup_gate,
+            dedup_incremental_simhash_artifact,
+            "quty_stream_gate",
+            tuple,
+            id="simhash",
+        ),
+        pytest.param(
+            ops.stream_ingest_dedup_gate_minhash,
+            dedup_incremental_minhash_artifact,
+            "quty_stream_gate_minhash",
+            lambda r: (r.incoming_doc_id, r.lake_doc_id, round(r.jaccard, 9)),
+            id="minhash",
+        ),
+        pytest.param(
+            ops.stream_ingest_dedup_gate_embedding,
+            dedup_incremental_embedding_artifact,
+            "quty_stream_gate_embedding",
+            lambda r: (r.incoming_vec_id, r.lake_vec_id, round(r.cos_sim, 9)),
+            id="embedding",
+        ),
+        pytest.param(
+            ops.stream_ingest_passage_gate,
+            dedup_incremental_passages,
+            "quty_stream_gate_passages",
+            lambda r: (r.doc_id, r.n_windows, r.n_lake_dup_windows, r.dup_ppm),
+            id="passage",
+        ),
+        pytest.param(
+            ops.stream_ingest_media_gate,
+            mm_neardup_incremental_artifact,
+            "quty_stream_gate_media",
+            tuple,
+            id="media",
+        ),
+    ]
+
+
+@pytest.mark.parametrize("stream_q, batch_q, kind, key", _gate_twins())
+def test_stream_ingest_gate_matches_batch_gate(
+    spark, stream_q, batch_q, kind, key
+):
+    # Each continuous gate is its batch twin chopped into micro-batches:
+    # the union of per-epoch outputs must equal the one-shot artifact
+    # gate row-for-row (Jaccard and cosine rounded to 9 places), with the
+    # same columns (the epoch read-back adds no partition column), and
+    # the run must actually have been multi-batch (file-partitioned
+    # shard + maxFilesPerTrigger=1 -> >= 2 epochs).
+    from quty_server_spark.session import session_tmp_dir
+
+    streamed_df, batch_df = stream_q(spark, SF_DIR), batch_q(spark, SF_DIR)
+    assert streamed_df.columns == batch_df.columns
+    streamed = {key(r) for r in streamed_df.collect()}
+    batch = {key(r) for r in batch_df.collect()}
     assert streamed == batch
     assert len(streamed) > 0
-    outdir = os.path.join(
-        session_tmp_dir(spark, "quty_stream_gate_embedding", SF_DIR), "out"
-    )
+    if kind == "quty_stream_gate_media":
+        # Staged cross-boundary twin pairs (hamming == 0 at offset
+        # _NEARDUP_TWIN_BASE) must be present — a 0-row green media
+        # gate would be vacuous.
+        from quty_server_spark.operators.multimodal import _NEARDUP_TWIN_BASE
+
+        assert any(
+            abs(a - b) == _NEARDUP_TWIN_BASE and h == 0
+            for a, b, h in streamed
+        ), "no staged twin pair crossed the shard/lake boundary in the stream"
+    outdir = os.path.join(session_tmp_dir(spark, kind, SF_DIR), "out")
     epochs = [d for d in os.listdir(outdir) if d.startswith("epoch=")]
     assert len(epochs) >= 2
+
+
+@pytest.mark.parametrize(
+    "query",
+    [
+        ops.stream_pipeline_end_to_end,
+        ops.stream_watermark_late_drop,
+        lambda s, sf: ops.checkpoint_recovery_run(s, sf)["result"],
+        ops.stream_foreach_batch_sink,
+        lambda s, sf: ops.kafka_replay_run(s, sf)["result"],
+        ops.stream_python_datasource,
+    ],
+    ids=[
+        "pipeline_end_to_end",
+        "watermark_late_drop",
+        "checkpoint_recovery",
+        "foreach_batch_sink",
+        "kafka_replay",
+        "python_datasource",
+    ],
+)
+def test_stream_readback_survives_a_second_call(spark, query):
+    # A second call for the same sf_dir empties and rewrites the stream's
+    # scratch dir; a frame the first call returned must still read.
+    first = query(spark, SF_DIR)
+    second = query(spark, SF_DIR)
+    assert first.count() == second.count() > 0
 
 
 def test_sequential_gate_rejects_cross_epoch_duplicates(spark):
@@ -298,31 +326,6 @@ def test_sequential_gate_rejects_cross_epoch_duplicates(spark):
     # Within-batch path: same-epoch pairs keep the min doc_id.
     for d in same:
         assert d in admitted and d + 1000000 not in admitted
-
-
-def test_stream_ingest_passage_gate_matches_batch_gate(spark):
-    # The passage-family continuous gate (round 13, the fourth family):
-    # epoch union == the one-shot artifact-backed gate (per-doc window
-    # totals, lake hits, AND ppm), run multi-batch.
-    from quty_server_spark.operators.dedup import dedup_incremental_passages
-    from quty_server_spark.session import session_tmp_dir
-    from quty_server_spark.streaming.ops import stream_ingest_passage_gate
-
-    streamed = {
-        (r.doc_id, r.n_windows, r.n_lake_dup_windows, r.dup_ppm)
-        for r in stream_ingest_passage_gate(spark, SF_DIR).collect()
-    }
-    batch = {
-        (r.doc_id, r.n_windows, r.n_lake_dup_windows, r.dup_ppm)
-        for r in dedup_incremental_passages(spark, SF_DIR).collect()
-    }
-    assert streamed == batch
-    assert len(streamed) > 0
-    outdir = os.path.join(
-        session_tmp_dir(spark, "quty_stream_gate_passages", SF_DIR), "out"
-    )
-    epochs = [d for d in os.listdir(outdir) if d.startswith("epoch=")]
-    assert len(epochs) >= 2
 
 
 def test_stream_cluster_maintenance_state_equals_full_recompute(spark):
@@ -532,37 +535,3 @@ def test_stream_training_shards_close_equals_one_shot_append(spark):
         for r in _shard_summary(spark.read.parquet(app)).collect()
     )
     assert got == want
-
-
-def test_stream_ingest_media_gate_matches_batch_gate(spark):
-    # The MEDIA-family continuous gate (r15 VERDICT "Next round" #3):
-    # per-epoch Arrow-batch signing + asymmetric band join against the
-    # standing perceptual-signature artifact; the epoch union must
-    # equal the one-shot batch gate row-for-row, the run must actually
-    # have been multi-batch, and the staged cross-boundary twin pairs
-    # (hamming == 0 at offset _NEARDUP_TWIN_BASE) must be present — a
-    # 0-row green gate here would be the r12 vacuity failure mode.
-    from quty_server_spark.operators.multimodal import (
-        _NEARDUP_TWIN_BASE,
-        mm_neardup_incremental_artifact,
-    )
-    from quty_server_spark.session import session_tmp_dir
-    from quty_server_spark.streaming.ops import stream_ingest_media_gate
-
-    streamed = {
-        tuple(r) for r in stream_ingest_media_gate(spark, SF_DIR).collect()
-    }
-    batch = {
-        tuple(r)
-        for r in mm_neardup_incremental_artifact(spark, SF_DIR).collect()
-    }
-    assert streamed == batch
-    assert len(streamed) > 0
-    assert any(
-        abs(a - b) == _NEARDUP_TWIN_BASE and h == 0 for a, b, h in streamed
-    ), "no staged twin pair crossed the shard/lake boundary in the stream"
-    outdir = os.path.join(
-        session_tmp_dir(spark, "quty_stream_gate_media", SF_DIR), "out"
-    )
-    epochs = [d for d in os.listdir(outdir) if d.startswith("epoch=")]
-    assert len(epochs) >= 2
