@@ -54,7 +54,8 @@ from pyspark.sql import functions as F  # noqa: E402
 
 import quty_server_spark.operators  # noqa: F401,E402  (registers queries)
 from quty_server_spark.operators.dedup import (  # noqa: E402
-    append_to_band_artifact,
+    MINHASH,
+    SIG,
     doc_shingles,
     lake_minhash_artifact,
     lake_signature_artifact,
@@ -98,7 +99,7 @@ def main() -> None:
           f"(nightly cost {time.time() - t0:.1f}s — shard-signing + one "
           f"band join against the artifact scan)")
 
-    # 2b. second-opinion gate on the MinHash family (round 11): content
+    # 2b. second-opinion gate on the MinHash family: content
     # overlap at exact Jaccard >= 0.5 catches rewrites the 48-bit layout
     # fingerprint misses. Same write-once/read-nightly pattern — the
     # band artifact embeds per-doc shingle counts, so this gate also
@@ -124,7 +125,7 @@ def main() -> None:
           f"within-shard canonicalization keeps {n_final} "
           f"({n_adm - n_final} shard-internal near-dups dropped)")
 
-    # 4b. cluster ASSIGNMENT for the admitted docs (round 12): final
+    # 4b. cluster ASSIGNMENT for the admitted docs: final
     # full-corpus-equivalent cluster labels from the contracted
     # shard-sized graph — the standing lake label artifact + the gate
     # pairs; no lake-vs-lake mining tonight. These labels are what the
@@ -136,7 +137,7 @@ def main() -> None:
           f"or shard-internal clusters ({time.time() - t0:.1f}s — "
           f"contracted-graph BSP, cost follows the shard)")
 
-    # 4c. passage gate (round 13): which admitted docs are mostly
+    # 4c. passage gate: which admitted docs are mostly
     # boilerplate already in the lake — the substring-level question the
     # whole-doc gates above cannot ask. Probes the write-once passage-
     # digest artifact with a LEFT SEMI join (no lake re-windowing, no
@@ -149,7 +150,7 @@ def main() -> None:
           f"already in the lake ({time.time() - t0:.1f}s incl. the "
           f"amortized digest-artifact build — scrub-or-drop input)")
 
-    # 4d. label-artifact maintenance (round 13): APPLY the relabel
+    # 4d. label-artifact maintenance: APPLY the relabel
     # queue — rewrite the standing clusters tonight's merges invalidate
     # (their home buckets only, found via the _label_homes sidecar) and
     # append tonight's labels, so tomorrow's contraction folds against
@@ -188,8 +189,8 @@ def main() -> None:
           f"{p.fill_ppm / 1e4:.1f}%")
 
     # 6. append the admitted docs' signatures so tomorrow's gate sees
-    # tonight's admissions — partitioned append via the same package
-    # callable the oracle-verified append sinks use
+    # tonight's admissions — partitioned append through the same
+    # artifact layout (SIG, MINHASH) the oracle-verified append sinks use
     # (sink_lake_signature_artifact_append /
     # sink_lake_minhash_artifact_append prove append ≡ rebuild through
     # shared oracle SQL; tests/test_artifact_append.py pins
@@ -200,7 +201,7 @@ def main() -> None:
     adm_sigs = simhash_bands(simhash_sigs(spark, sf_dir)).join(
         F.broadcast(final), "doc_id", "left_semi"
     )
-    append_to_band_artifact(adm_sigs, path, "band_val")
+    SIG.write(adm_sigs, path, "append")
     after = spark.read.parquet(path).count()
     print(f"artifact append: {before} -> {after} banded rows "
           f"(+{after - before} = 4 bands x {n_final} admitted docs)")
@@ -210,7 +211,7 @@ def main() -> None:
     # shingle side (lake_shingles_for_verify) carries no lake-
     # membership convention — the candidate join restricts it to the
     # candidates' own doc_ids, whatever convention admitted them
-    # (r11 ADVICE fix, pinned in
+    # (pinned in
     # tests/test_artifact_append.py::test_appended_minhash_gate_verifies_appended_docs).
     mh_before = spark.read.parquet(mh_path).count()
     adm_sh = doc_shingles(spark, sf_dir).join(
@@ -220,12 +221,12 @@ def main() -> None:
     adm_bands = minhash_bands(minhash_sigs(adm_sh)).join(
         adm_sizes, "doc_id"
     ).select("doc_id", "sig", "n_sh", "band_id")
-    append_to_band_artifact(adm_bands, mh_path, "sig")
+    MINHASH.write(adm_bands, mh_path, "append")
     mh_after = spark.read.parquet(mh_path).count()
     print(f"minhash artifact append: {mh_before} -> {mh_after} band rows "
           f"(8 bands per admitted doc with >= 3 tokens)")
 
-    # 7. a takedown arrives (round 14): the victim set must leave the
+    # 7. a takedown arrives: the victim set must leave the
     # artifact tier NOW. The tombstone tier writes an O(victims) sidecar
     # — zero artifact files touched — and every consumer reads through
     # the live view; scheduled compaction later applies the delete
@@ -234,7 +235,7 @@ def main() -> None:
     # sink_lake_artifacts_retract_compacted prove live-view ≡ compacted
     # ≡ rebuilt-on-survivors through one shared oracle).
     from quty_server_spark.operators.retract import (
-        ARTIFACT_LAYOUTS,
+        ARTIFACT_FAMILIES,
         compact_tombstones,
         read_artifact_live,
         tombstoned_artifact_paths,
@@ -250,15 +251,14 @@ def main() -> None:
           f"live view {live} of {full} rows — effective immediately")
     t0 = time.time()
     for fam, p in tpaths.items():
-        part_col, id_col, sort_key = ARTIFACT_LAYOUTS[fam]
-        compact_tombstones(spark, p, part_col, id_col, sort_key)
+        compact_tombstones(spark, p, ARTIFACT_FAMILIES[fam].layout)
     compacted = spark.read.parquet(sig_p).count()
     assert compacted == live, (compacted, live)
     print(f"scheduled compaction: applied + sidecars cleared in "
           f"{time.time() - t0:.1f}s; sig family now physically {compacted} "
           f"rows (== the live view it replaces)")
 
-    # 8. the trainer handoff (round 14): the snapshot the gates above
+    # 8. the trainer handoff: the snapshot the gates above
     # protect, hashed into content-keyed shards and written
     # partitioned-by-shard — the read-back audit a training run gates
     # on (sink_training_shards proves the layout holds exactly the

@@ -11,8 +11,10 @@ decimal sums are Tungsten-native (no UDF), and partial aggregation
 
 from __future__ import annotations
 
-from collections.abc import Callable
-from typing import Any
+import os
+import shutil
+from collections.abc import Callable, Iterable
+from typing import Any, NamedTuple
 
 from pyspark import InheritableThread
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -82,7 +84,6 @@ def ensure_checkpoint_dir(spark) -> None:
     PySpark getter)."""
     if not spark.sparkContext._jsc.sc().getCheckpointDir().isDefined():
         import atexit
-        import shutil
         import tempfile
 
         d = tempfile.mkdtemp(prefix="quty_ckpt_")
@@ -120,3 +121,69 @@ def overlap(*legs: Callable[[], Any]) -> list[Any]:
             failed[0].add_note(f"concurrent leg also failed: {other!r}")
         raise failed[0]
     return results
+
+
+class Layout(NamedTuple):
+    """The on-disk layout of a standing, partitioned parquet artifact:
+    one directory per ``part`` value, files sorted by ``sort_key``
+    within each directory (row-group min/max stats then answer point
+    probes), rows identified by ``id_col`` (what a retraction or a
+    tombstone removes). Every write, append, rewrite and retraction of
+    a standing artifact goes through one of these, so each artifact
+    states its layout once.
+
+    Each family has a write-once build, an append twin and a retraction,
+    and all of them share one rows function that takes the id predicate
+    that selects the rows. The append twin writes yesterday's rows
+    (lake minus the admitted batch), then appends the batch's rows
+    computed from the batch alone; because base ∪ batch is the lake
+    exactly, the append sink reports under the write-once sink's oracle
+    SQL byte-for-byte, so a green row proves append ≡ rebuild. The
+    retraction sinks reuse that oracle scoped to the survivors."""
+
+    part: str
+    id_col: str
+    sort_key: str
+
+    def _sorted(self, rows: DataFrame) -> DataFrame:
+        return rows.sortWithinPartitions(self.part, self.sort_key)
+
+    def write(
+        self, rows: DataFrame, path: str, mode: str = "errorifexists"
+    ) -> None:
+        """The sorted, partitioned parquet write; ``mode`` is passed
+        through (``append`` adds files to the partitions the rows
+        belong to and never rewrites an existing file)."""
+        self._sorted(rows).write.partitionBy(self.part).mode(mode).parquet(
+            path
+        )
+
+    def replace(
+        self, rows: DataFrame, path: str,
+        affected: DataFrame | Iterable | None = None,
+    ) -> None:
+        """Overwrite in place exactly the partitions ``rows`` populate
+        (dynamic partition overwrite: every other directory keeps its
+        files). A dynamic overwrite cannot delete a partition absent
+        from its input, so each ``affected`` partition value (a list,
+        or a one-column frame of them) that ``rows`` no longer
+        populates is removed explicitly — a driver loop over distinct
+        partition values, bounded by the artifact's partition count,
+        never by rows."""
+        (
+            self._sorted(rows)
+            .write.option("partitionOverwriteMode", "dynamic")
+            .partitionBy(self.part)
+            .mode("overwrite")
+            .parquet(path)
+        )
+        if affected is None:
+            return
+        kept = {r[0] for r in rows.select(self.part).distinct().collect()}
+        if isinstance(affected, DataFrame):
+            affected = [r[0] for r in affected.collect()]
+        for v in affected:
+            if v not in kept:
+                shutil.rmtree(
+                    os.path.join(path, f"{self.part}={v}"), ignore_errors=True
+                )

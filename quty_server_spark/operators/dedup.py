@@ -30,6 +30,7 @@ from quty_server_spark.functions.hashing import (
     sql_hash60,
 )
 from quty_server_spark.operators._helpers import (
+    Layout,
     ensure_checkpoint_dir,
     load_table,
     overlap,
@@ -458,6 +459,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 SIMHASH_BITS = 48
+SIMHASH_BANDS = 4  # 12-bit bands: a pair at Hamming <= 3 shares one
 HAMMING_MAX = 3
 
 _SQL_SIM_BITS = " + ".join(
@@ -565,7 +567,7 @@ def simhash_sigs_docs(d: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Staged bridge corpus (round 13): driver-fixture non-vacuity for the
+# Staged bridge corpus: driver-fixture non-vacuity for the
 # relabel lifecycle
 # ---------------------------------------------------------------------------
 
@@ -873,8 +875,8 @@ def simhash_component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def simhash_bands(sigs: DataFrame) -> DataFrame:
-    """Explode 48-bit signatures into 4 x 12-bit pigeonhole bands,
-    carrying ``sig`` through so the verify stage never re-joins the
+    """Explode 48-bit signatures into SIMHASH_BANDS x 12-bit pigeonhole
+    bands, carrying ``sig`` through so the verify stage never re-joins the
     signature aggregation (see dedup_simhash plan note)."""
     return sigs.select(
         "doc_id",
@@ -888,7 +890,7 @@ def simhash_bands(sigs: DataFrame) -> DataFrame:
                         .bitwiseAND(4095)
                         .alias("band_val"),
                     )
-                    for b in range(4)
+                    for b in range(SIMHASH_BANDS)
                 ]
             )
         ).alias("band"),
@@ -1661,17 +1663,40 @@ def dedup_incremental_minhash_capped(
 # ---------------------------------------------------------------------------
 
 
+MINHASH = Layout("band_id", "doc_id", "sig")
+
+
+def minhash_artifact_rows(
+    spark: SparkSession, sf_dir: str, keep: Column, checkpoint: bool = False
+) -> DataFrame:
+    """``(doc_id, sig, n_sh, band_id)`` MinHash band rows of the docs
+    ``keep`` selects — the rows of every MinHash artifact build. The
+    ``keep`` predicate is on the shingles' doc_id, so a batch-only
+    caller shingles and signs only the batch. ``checkpoint`` pins the
+    shingles (consumed by the signature AND the size aggregate) for
+    the lake-sized builds; the admitted batch stays lazy so its filter
+    stays visible on every documents scan (the append plan pin)."""
+    sh = doc_shingles(spark, sf_dir).filter(keep)
+    if checkpoint:
+        sh = sh.localCheckpoint(eager=False)
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+    return (
+        minhash_bands(minhash_sigs(sh))
+        .join(sizes, "doc_id")
+        .select("doc_id", "sig", "n_sh", "band_id")
+    )
+
+
 def lake_minhash_artifact(
     spark: SparkSession, sf_dir: str, rebuild: bool = False
 ) -> str:
     """Materialize the lake side's MinHash band table
     ``(doc_id, sig, n_sh, band_id)`` as an on-disk parquet artifact
-    partitioned by ``band_id`` and return its path — the MinHash-family
-    twin of :func:`lake_signature_artifact` (the pair the r10 round
-    explicitly deferred, SURVEY.md §7). A 100 TB lake shingles and
-    min-hashes its documents ONCE; each night's gate joins the shard's
-    fresh bands against this artifact instead of re-aggregating the
-    lake's 16-way signature min per run.
+    laid out as :data:`MINHASH` and return its path — the MinHash-family
+    twin of :func:`lake_signature_artifact` (SURVEY.md §7). A 100 TB
+    lake shingles and min-hashes its documents ONCE; each night's gate
+    joins the shard's fresh bands against this artifact instead of
+    re-aggregating the lake's 16-way signature min per run.
 
     Each band row carries the doc's shingle count ``n_sh`` so the
     gate's Jaccard denominator needs NO lake-side size aggregation
@@ -1685,16 +1710,10 @@ def lake_minhash_artifact(
     tests/test_scale_plans.py. A :func:`session_artifact`."""
 
     def _write(path: str) -> None:
-        sh_lake = doc_shingles(spark, sf_dir).filter(
-            F.col("doc_id") % 10 != 0
-        ).localCheckpoint(eager=False)
-        sizes = sh_lake.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-        bands = minhash_bands(minhash_sigs(sh_lake)).join(sizes, "doc_id")
-        bands.select(
-            "doc_id", "sig", "n_sh", "band_id"
-        ).sortWithinPartitions("band_id", "sig").write.partitionBy(
-            "band_id"
-        ).parquet(path)
+        MINHASH.write(
+            minhash_artifact_rows(spark, sf_dir, _lake(), checkpoint=True),
+            path,
+        )
 
     return session_artifact(
         spark, "quty_lake_minhash", sf_dir, _write, rebuild
@@ -1702,10 +1721,8 @@ def lake_minhash_artifact(
 
 
 # Per-band summary of the lake MinHash-band artifact's full contract
-# (band rows AND the embedded Jaccard-denominator sizes). Shared
-# byte-for-byte by the write-once sink and the append sink: the append
-# twin's green row IS the proof that append ≡ rebuild — both artifacts
-# must summarize to exactly this recomputation from the documents table.
+# (band rows AND the embedded Jaccard-denominator sizes), shared by the
+# write-once and append sinks (see :class:`Layout`).
 SQL_MINHASH_ARTIFACT_SUMMARY = f"""
     WITH {SQL_SHINGLES}, {SQL_MINHASH}
     SELECT CAST(b.band_id AS BIGINT) AS band_id,
@@ -1809,13 +1826,30 @@ def dedup_incremental_minhash_artifact(
 # ---------------------------------------------------------------------------
 
 
+# Also the media signature artifact's layout.
+SIG = Layout("band_id", "doc_id", "band_val")
+
+
+def sig_artifact_rows(
+    spark: SparkSession, sf_dir: str, keep: Column, staged: bool = False
+) -> DataFrame:
+    """``(doc_id, sig, band_id, band_val)`` SimHash band rows of the
+    docs ``keep`` selects — the rows of every signature artifact build.
+    The predicate is on the signature aggregation's grouping key
+    (doc_id), so Catalyst pushes it onto the documents scan: a
+    batch-only caller signs only the batch (plan-pinned)."""
+    return simhash_bands(simhash_sigs(spark, sf_dir, staged=staged)).filter(
+        keep
+    )
+
+
 def lake_signature_artifact(
     spark: SparkSession, sf_dir: str, rebuild: bool = False,
     staged: bool = False,
 ) -> str:
     """Materialize the lake side's banded SimHash signatures
-    ``(doc_id, sig, band_val)`` as an on-disk parquet artifact
-    partitioned by ``band_id``, and return its path. This is the
+    ``(doc_id, sig, band_val)`` as an on-disk parquet artifact laid out
+    as :data:`SIG`, and return its path. This is the
     write-once half of the production ingest gate: a 100 TB lake signs
     its documents ONCE (amortized over every nightly shard), and each
     night's gate joins the shard's fresh bands against this artifact
@@ -1830,27 +1864,20 @@ def lake_signature_artifact(
     gate query, bench loop) writes once per session."""
 
     def _write(path: str) -> None:
-        lake = simhash_bands(simhash_sigs(spark, sf_dir, staged=staged)).filter(
-            F.col("doc_id") % 10 != 0
-        )
         # Sorting within partitions by the probe key gives every parquet
         # row group a tight band_val min/max: at real scale a point
         # probe ("which lake docs sit in bucket X of band 2?") prunes
         # first directories (partition column) then row groups
         # (statistics) before touching a page. Cost at write time is one
-        # local per-task sort — no extra shuffle (partitionBy splits
-        # files per task without one).
-        lake.sortWithinPartitions("band_id", "band_val").write.partitionBy(
-            "band_id"
-        ).parquet(path)
+        # local per-task sort — no extra shuffle.
+        SIG.write(sig_artifact_rows(spark, sf_dir, _lake(), staged), path)
 
     kind = "quty_lake_sig_stg" if staged else "quty_lake_sig"
     return session_artifact(spark, kind, sf_dir, _write, rebuild)
 
 
-# Per-band summary of the banded lake-signature artifact. Shared
-# byte-for-byte by the write-once sink and the append sink (same
-# append ≡ rebuild device as SQL_MINHASH_ARTIFACT_SUMMARY).
+# Per-band summary of the banded lake-signature artifact, shared by the
+# write-once and append sinks (see :class:`Layout`).
 SQL_SIG_ARTIFACT_SUMMARY = f"""
     WITH {SQL_SIMHASH},
     bands AS (
@@ -1869,7 +1896,8 @@ SQL_SIG_ARTIFACT_SUMMARY = f"""
 
 def _sig_artifact_summary(art: DataFrame) -> DataFrame:
     """Per-band row/bucket/doc summary of a banded-signature artifact
-    read-back — shared by the write-once and append sinks."""
+    read-back (text or media) — shared by the write-once, append and
+    retraction sinks."""
     return art.groupBy(
         F.col("band_id").cast("bigint").alias("band_id")
     ).agg(
@@ -1938,65 +1966,42 @@ def dedup_incremental_simhash_artifact(
 
 
 # ---------------------------------------------------------------------------
-# Oracle-verified artifact APPEND (closing the nightly lifecycle, round 12)
+# Artifact APPEND (closing the nightly lifecycle)
 # ---------------------------------------------------------------------------
 
 # Fixture convention for the append exercise: yesterday's ADMITTED batch
 # is doc_id % 10 == APPEND_BATCH_MOD — disjoint from tonight's shard
-# (% 10 == 0) and inside the canonical lake (% 10 != 0). The append
-# sinks build the artifact from the lake MINUS this batch ("yesterday's
-# lake"), append the batch's rows computed batch-only (the append job
-# never re-reads the lake — plan-pinned in tests/test_scale_plans.py),
-# and summarize the read-back. Because base ∪ batch == the canonical
-# lake EXACTLY, the append sinks share the write-once sinks' oracle SQL
-# byte-for-byte: a green CORRECTNESS row is itself the proof that
-# append ≡ rebuild — the r11 VERDICT's one unverified lifecycle step.
+# (% 10 == 0) and inside the canonical lake (% 10 != 0). The append job
+# never re-reads the lake (plan-pinned in tests/test_scale_plans.py).
 APPEND_BATCH_MOD = 5
+
+
+def _lake() -> Column:
+    """The standing lake: every doc outside tonight's shard."""
+    return F.col("doc_id") % 10 != 0
+
+
+def _yesterday() -> Column:
+    """The lake before the admitted batch was appended."""
+    return _lake() & (F.col("doc_id") % 10 != APPEND_BATCH_MOD)
+
+
+def _admitted() -> Column:
+    """Yesterday's admitted batch."""
+    return F.col("doc_id") % 10 == APPEND_BATCH_MOD
 
 
 def admitted_simhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Band rows for the admitted batch — the SimHash append job's
-    ENTIRE read set. The batch predicate is on the signature
-    aggregation's grouping key (doc_id), so Catalyst pushes it below
-    the aggregate onto the documents scan: the append job signs
-    |batch| docs, never the lake (plan-pinned)."""
-    return simhash_bands(simhash_sigs(spark, sf_dir)).filter(
-        F.col("doc_id") % 10 == APPEND_BATCH_MOD
-    )
+    ENTIRE read set: it signs |batch| docs, never the lake."""
+    return sig_artifact_rows(spark, sf_dir, _admitted())
 
 
 def admitted_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sig, n_sh, band_id) rows for the admitted batch — the
-    MinHash append job's entire read set. Deliberately NOT
-    checkpointed (unlike the base build): the batch is small by
-    construction, and keeping the plan lazy keeps the batch filter
-    visible on every documents scan for the append-scans-only-the-
-    batch plan pin."""
-    sh = doc_shingles(spark, sf_dir).filter(
-        F.col("doc_id") % 10 == APPEND_BATCH_MOD
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    return (
-        minhash_bands(minhash_sigs(sh))
-        .join(sizes, "doc_id")
-        .select("doc_id", "sig", "n_sh", "band_id")
-    )
-
-
-def append_to_band_artifact(
-    bands: DataFrame, path: str, sort_key: str
-) -> None:
-    """APPEND band rows to an existing band-partitioned artifact:
-    a partitioned parquet append — new files land in the ≤|bands|
-    band_id directories the rows belong to, with ZERO read-modify-write
-    of existing files, and the same within-file ``sort_key`` ordering
-    as the base build so row-group min/max pruning works on appended
-    files too. This is the whole nightly write: the lake-sized signing
-    job never runs again — the artifact grows by exactly each night's
-    admitted batch."""
-    bands.sortWithinPartitions("band_id", sort_key).write.partitionBy(
-        "band_id"
-    ).mode("append").parquet(path)
+    MinHash append job's entire read set, kept lazy (see
+    :func:`minhash_artifact_rows`)."""
+    return minhash_artifact_rows(spark, sf_dir, _admitted())
 
 
 def appended_signature_artifact(
@@ -2010,16 +2015,8 @@ def appended_signature_artifact(
     construction verified through the shared oracle SQL."""
 
     def _write(path: str) -> None:
-        base = simhash_bands(simhash_sigs(spark, sf_dir)).filter(
-            (F.col("doc_id") % 10 != 0)
-            & (F.col("doc_id") % 10 != APPEND_BATCH_MOD)
-        )
-        base.sortWithinPartitions("band_id", "band_val").write.partitionBy(
-            "band_id"
-        ).parquet(path)
-        append_to_band_artifact(
-            admitted_simhash_bands(spark, sf_dir), path, "band_val"
-        )
+        SIG.write(sig_artifact_rows(spark, sf_dir, _yesterday()), path)
+        SIG.write(admitted_simhash_bands(spark, sf_dir), path, "append")
 
     return session_artifact(
         spark, "quty_lake_sig_app", sf_dir, _write, rebuild
@@ -2035,24 +2032,17 @@ def appended_minhash_artifact(
     build's — including the embedded per-doc shingle counts, so
     tomorrow's gate Jaccard denominators are correct for appended docs
     too (paired with the convention-free
-    :func:`lake_shingles_for_verify`, this closes the r11 ADVICE
-    false-negative finding end to end)."""
+    :func:`lake_shingles_for_verify`, appended docs are verifiable by
+    tomorrow's exact-Jaccard stage)."""
 
     def _write(path: str) -> None:
-        sh_base = doc_shingles(spark, sf_dir).filter(
-            (F.col("doc_id") % 10 != 0)
-            & (F.col("doc_id") % 10 != APPEND_BATCH_MOD)
-        ).localCheckpoint(eager=False)
-        sizes = sh_base.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-        bands = minhash_bands(minhash_sigs(sh_base)).join(sizes, "doc_id")
-        bands.select(
-            "doc_id", "sig", "n_sh", "band_id"
-        ).sortWithinPartitions("band_id", "sig").write.partitionBy(
-            "band_id"
-        ).parquet(path)
-        append_to_band_artifact(
-            admitted_minhash_bands(spark, sf_dir), path, "sig"
+        MINHASH.write(
+            minhash_artifact_rows(
+                spark, sf_dir, _yesterday(), checkpoint=True
+            ),
+            path,
         )
+        MINHASH.write(admitted_minhash_bands(spark, sf_dir), path, "append")
 
     return session_artifact(
         spark, "quty_lake_minhash_app", sf_dir, _write, rebuild
@@ -2106,7 +2096,7 @@ def sink_lake_minhash_artifact_append(
 
 
 # ---------------------------------------------------------------------------
-# Incremental connected components (round 12): nightly cluster assignment
+# Incremental connected components: nightly cluster assignment
 # against a precomputed lake label artifact
 # ---------------------------------------------------------------------------
 
@@ -2502,7 +2492,7 @@ def _cluster_graph_for_bands(
 
 
 # ---------------------------------------------------------------------------
-# Repeated-passage detection (round 12): substring-level dedup
+# Repeated-passage detection: substring-level dedup
 # ---------------------------------------------------------------------------
 
 # 16-token windows at stride 8: every 16-token run is covered by at
@@ -2748,6 +2738,7 @@ def dedup_cluster_relabel_queue_staged(
 # so each bucket holds O(artifact/N) rows — the constant changes, the
 # plan shape doesn't.
 LABEL_HOME_BUCKETS = 32
+LABELS = Layout("lbl_bucket", "node", "node")
 
 
 def maintained_cluster_labels_artifact(
@@ -2788,11 +2779,7 @@ def _write_home_bucket_layout(labels: DataFrame, path: str) -> None:
         "lbl_bucket",
         F.pmod(F.col("lbl"), F.lit(LABEL_HOME_BUCKETS)).cast("int"),
     )
-    (
-        art0.sortWithinPartitions("lbl_bucket", "node")
-        .write.partitionBy("lbl_bucket")
-        .parquet(path)
-    )
+    LABELS.write(art0, path)
     art0.select("lbl", "lbl_bucket").distinct().write.parquet(
         os.path.join(path, "_label_homes")
     )
@@ -2802,16 +2789,16 @@ def apply_cluster_label_maintenance(
     spark: SparkSession, sf_dir: str, path: str, staged: bool = False,
 ) -> None:
     """ONE night of label-artifact maintenance — the APPLY the relabel
-    queue is the work list for (r12 VERDICT "Next round" #2), acting on
-    a home-bucket-partitioned label artifact at ``path``:
+    queue is the work list for, acting on a home-bucket-partitioned
+    label artifact at ``path``:
 
     1. REWRITE the queued stale clusters: read ONLY the home buckets of
        queued old labels (a broadcast join on the partition column —
        dynamic partition pruning keeps every other directory unread),
        map ``old_lbl -> new_lbl``, and overwrite those partitions in
-       place (``partitionOverwriteMode=dynamic``; rows keep their home
-       bucket, so every read bucket reappears in the output and no
-       directory can be emptied-and-orphaned).
+       place (:meth:`Layout.replace`; rows keep their home bucket, so
+       every read bucket reappears in the output and no directory can
+       be emptied-and-orphaned).
     2. APPEND tonight's new labels: the shard docs that joined
        components, plus the gate-touched lake SINGLETONS joining a
        component for the first time (a rewrite can't reach rows that
@@ -3012,13 +2999,9 @@ def _run_cluster_label_maintenance(
             F.coalesce(F.col("q.new_lbl"), F.col("t.lbl")).alias("lbl"),
             F.col("t.lbl_bucket").alias("lbl_bucket"),
         )
-        (
-            rewritten.sortWithinPartitions("lbl_bucket", "node")
-            .write.option("partitionOverwriteMode", "dynamic")
-            .partitionBy("lbl_bucket")
-            .mode("overwrite")
-            .parquet(path)
-        )
+        # Rows keep their home bucket, so no bucket can empty: no
+        # cleanup of emptied partitions is needed.
+        LABELS.replace(rewritten, path)
         remapped = (
             homes.alias("h")
             .join(
@@ -3051,12 +3034,7 @@ def _run_cluster_label_maintenance(
 def _append_label_rows(rows: DataFrame, path: str) -> None:
     """Append ``(node, lbl, lbl_bucket)`` rows into their home buckets
     of the maintained label artifact at ``path``."""
-    (
-        rows.sortWithinPartitions("lbl_bucket", "node")
-        .write.partitionBy("lbl_bucket")
-        .mode("append")
-        .parquet(path)
-    )
+    LABELS.write(rows, path, "append")
 
 
 # Full-corpus component summary over a pluggable simhash CTE ({sim}) —
@@ -3122,7 +3100,7 @@ def sink_lake_cluster_labels_artifact_relabel(
     report the per-cluster summary. The oracle recomputes the FULL
     corpus's components from scratch over the same (bridge-staged)
     corpus, so a green row proves maintained ≡ rebuilt — the lifecycle
-    step above the r12 append sinks, one level up: not just "the grown
+    step above the append sinks, one level up: not just "the grown
     artifact equals a rebuild" but "the REWRITTEN artifact equals a
     rebuild".
 
@@ -3217,7 +3195,7 @@ def doc_passage_dup_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Passage family, incremental tier (round 13): the nightly question the
+# Passage family, incremental tier: the nightly question the
 # corpus-level ops can't answer — which of TONIGHT'S docs repeat passages
 # already in the lake?
 # ---------------------------------------------------------------------------
@@ -3232,36 +3210,43 @@ def _passage_pfx(col: str = "passage_md5"):
     return F.substring(F.col(col), 1, 1).alias("pfx")
 
 
+PASSAGE = Layout("pfx", "doc_id", "passage_md5")
+
+
+def passage_artifact_rows(
+    spark: SparkSession, sf_dir: str, keep: Column
+) -> DataFrame:
+    """``(doc_id, passage_md5, pfx)`` window rows of the documents
+    ``keep`` selects — the rows of every passage artifact build."""
+    docs = load_table(spark, sf_dir, "documents").filter(keep)
+    return _passage_windows(docs).select(
+        "doc_id", "passage_md5", _passage_pfx()
+    )
+
+
 def lake_passage_artifact(
     spark: SparkSession, sf_dir: str, rebuild: bool = False
 ) -> str:
     """The write-once PASSAGE-DIGEST artifact: every PASSAGE_W-token
-    window digest of every lake document, as parquet partitioned by
-    digest prefix and sorted by digest within files — the fourth
+    window digest of every lake document, laid out as :data:`PASSAGE`
+    (digest-prefix directories, digest-sorted files) — the fourth
     standing artifact family (after SimHash bands, MinHash bands, IVF
     postings), giving the repeated-passage ops the same write-once /
     gate-nightly lifecycle. A 100 TB lake windows its text ONCE; each
     night's shard probes digest membership instead of re-windowing the
-    lake (reference analog: the r12 corpus-level ops re-derive all
-    windows per run — fine for a report, wrong as a nightly gate)."""
+    lake (the corpus-level ops re-derive all windows per run — fine for
+    a report, wrong as a nightly gate)."""
 
     def _write(path: str) -> None:
-        d = load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 10 != 0
-        )
-        w = _passage_windows(d).select("doc_id", "passage_md5", _passage_pfx())
-        w.sortWithinPartitions("pfx", "passage_md5").write.partitionBy(
-            "pfx"
-        ).parquet(path)
+        PASSAGE.write(passage_artifact_rows(spark, sf_dir, _lake()), path)
 
     return session_artifact(
         spark, "quty_lake_passages", sf_dir, _write, rebuild
     )
 
 
-# Per-prefix summary of the lake passage artifact — shared byte-for-byte
-# by the write-once sink and the append sink (append ≡ rebuild through a
-# common oracle, the r12 device).
+# Per-prefix summary of the lake passage artifact, shared by the
+# write-once and append sinks (see :class:`Layout`).
 SQL_PASSAGE_ARTIFACT_SUMMARY = f"""
     WITH {SQL_PASSAGE_WINDOWS}
     SELECT substring(passage_md5, 1, 1) AS pfx,
@@ -3305,22 +3290,10 @@ def appended_passage_artifact(
     :func:`appended_signature_artifact`."""
 
     def _write(path: str) -> None:
-        docs = load_table(spark, sf_dir, "documents")
-        base = _passage_windows(
-            docs.filter(
-                (F.col("doc_id") % 10 != 0)
-                & (F.col("doc_id") % 10 != APPEND_BATCH_MOD)
-            )
-        ).select("doc_id", "passage_md5", _passage_pfx())
-        base.sortWithinPartitions("pfx", "passage_md5").write.partitionBy(
-            "pfx"
-        ).parquet(path)
-        batch = _passage_windows(
-            docs.filter(F.col("doc_id") % 10 == APPEND_BATCH_MOD)
-        ).select("doc_id", "passage_md5", _passage_pfx())
-        batch.sortWithinPartitions("pfx", "passage_md5").write.partitionBy(
-            "pfx"
-        ).mode("append").parquet(path)
+        PASSAGE.write(passage_artifact_rows(spark, sf_dir, _yesterday()), path)
+        PASSAGE.write(
+            passage_artifact_rows(spark, sf_dir, _admitted()), path, "append"
+        )
 
     return session_artifact(
         spark, "quty_lake_passages_app", sf_dir, _write, rebuild

@@ -25,7 +25,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -37,6 +37,13 @@ from pyspark.sql.types import (
 )
 
 from quty_server_spark.operators._helpers import load_table
+from quty_server_spark.operators.dedup import (
+    SIG,
+    _admitted,
+    _lake,
+    _sig_artifact_summary,
+    _yesterday,
+)
 from quty_server_spark.plans.registry import registry
 
 MODALITIES = ["image", "audio", "video"]
@@ -719,8 +726,8 @@ def mm_payload_neardup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Media signature artifact tier — round 15 (parity with the text
-# families' write-once / append / probe-nightly lifecycle)
+# Media signature artifact tier (parity with the text families'
+# write-once / append / probe-nightly lifecycle)
 # ---------------------------------------------------------------------------
 
 
@@ -743,12 +750,24 @@ def media_sig_bands(
     return simhash_bands(sigs)
 
 
+def media_artifact_rows(
+    spark: SparkSession, sf_dir: str, keep: Column
+) -> DataFrame:
+    """Banded perceptual-signature rows of the media ``keep`` selects
+    from the staged universe — the rows of every media artifact build.
+    The predicate filters the UNIVERSE, so only those items are signed."""
+    return media_sig_bands(
+        spark, sf_dir, docs=percep_media_universe(spark, sf_dir).filter(keep)
+    )
+
+
 def media_signature_artifact(
     spark: SparkSession, sf_dir: str, rebuild: bool = False
 ) -> str:
     """Write-once banded perceptual-signature artifact over the LAKE
-    media (``doc_id % 10 <> 0`` of the staged universe), partitioned by
-    ``band_id`` with ``band_val``-sorted row groups — the media twin of
+    media (``doc_id % 10 <> 0`` of the staged universe), laid out as
+    the text family's :data:`~quty_server_spark.operators.dedup.SIG`
+    (band_id directories, band_val-sorted row groups) — the media twin of
     :func:`~quty_server_spark.operators.dedup.lake_signature_artifact`:
     a 100 TB media lake decodes and signs ONCE, and each night's gate
     joins the shard's fresh signatures against this artifact instead of
@@ -758,13 +777,7 @@ def media_signature_artifact(
     from quty_server_spark.session import session_artifact
 
     def _write(path: str) -> None:
-        lake_uni = percep_media_universe(spark, sf_dir).filter(
-            F.col("doc_id") % 10 != 0
-        )
-        bands = media_sig_bands(spark, sf_dir, docs=lake_uni)
-        bands.sortWithinPartitions("band_id", "band_val").write.partitionBy(
-            "band_id"
-        ).parquet(path)
+        SIG.write(media_artifact_rows(spark, sf_dir, _lake()), path)
 
     return session_artifact(spark, "quty_media_sig", sf_dir, _write, rebuild)
 
@@ -778,25 +791,12 @@ def appended_media_signature_artifact(
     (re-decoding) the lake. Content equals a fresh full-lake build's,
     verified through the shared summary oracle and pinned set-equal in
     tests/test_artifact_append.py."""
-    from quty_server_spark.operators.dedup import (
-        APPEND_BATCH_MOD,
-        append_to_band_artifact,
-    )
     from quty_server_spark.session import session_artifact
 
     def _write(path: str) -> None:
-        uni = percep_media_universe(spark, sf_dir)
-        base_uni = uni.filter(
-            (F.col("doc_id") % 10 != 0)
-            & (F.col("doc_id") % 10 != APPEND_BATCH_MOD)
-        )
-        base = media_sig_bands(spark, sf_dir, docs=base_uni)
-        base.sortWithinPartitions("band_id", "band_val").write.partitionBy(
-            "band_id"
-        ).parquet(path)
-        batch_uni = uni.filter(F.col("doc_id") % 10 == APPEND_BATCH_MOD)
-        append_to_band_artifact(
-            media_sig_bands(spark, sf_dir, docs=batch_uni), path, "band_val"
+        SIG.write(media_artifact_rows(spark, sf_dir, _yesterday()), path)
+        SIG.write(
+            media_artifact_rows(spark, sf_dir, _admitted()), path, "append"
         )
 
     return session_artifact(
@@ -805,9 +805,9 @@ def appended_media_signature_artifact(
 
 
 def _media_sig_summary_oracle() -> str:
-    """Per-band summary over the lake slice of the staged universe —
-    shared byte-for-byte by the write-once and append sinks (the same
-    append ≡ rebuild device as the text families')."""
+    """Per-band summary over the lake slice of the staged universe,
+    shared by the write-once and append sinks (see
+    :class:`~quty_server_spark.operators._helpers.Layout`)."""
     return f"""
     WITH {_percep_sig_ctes()},
     bands AS (
@@ -827,16 +827,6 @@ def _media_sig_summary_oracle() -> str:
 _SQL_MEDIA_SIG_SUMMARY = _media_sig_summary_oracle()
 
 
-def _media_sig_artifact_summary(art: DataFrame) -> DataFrame:
-    return art.groupBy(
-        F.col("band_id").cast("bigint").alias("band_id")
-    ).agg(
-        F.count("*").alias("n_rows"),
-        F.count_distinct("band_val").alias("n_buckets"),
-        F.count_distinct("doc_id").alias("n_docs"),
-    )
-
-
 @registry.query(
     "sink_media_signature_artifact", oracle=_SQL_MEDIA_SIG_SUMMARY
 )
@@ -850,7 +840,7 @@ def sink_media_signature_artifact(
     join-key prefix (band_id directories, band_val-sorted row groups) so
     probes prune directories then row groups before touching a page."""
     path = media_signature_artifact(spark, sf_dir, rebuild=True)
-    return _media_sig_artifact_summary(spark.read.parquet(path))
+    return _sig_artifact_summary(spark.read.parquet(path))
 
 
 @registry.query(
@@ -867,7 +857,7 @@ def sink_media_signature_artifact_append(
     proves append ≡ rebuild. Untouched-file byte-identity and content
     set-equality are pinned in tests/test_artifact_append.py."""
     path = appended_media_signature_artifact(spark, sf_dir, rebuild=True)
-    return _media_sig_artifact_summary(spark.read.parquet(path))
+    return _sig_artifact_summary(spark.read.parquet(path))
 
 
 def _mm_incremental_gate_oracle() -> str:
@@ -943,6 +933,26 @@ def _media_sig_survivor_summary_oracle() -> str:
     return scoped
 
 
+def _tombstoned_media_copy(spark: SparkSession, sf_dir: str, kind: str) -> str:
+    """A private copy of the media signature artifact with the victims
+    (``doc_id % 10 == RETRACT_MOD`` of the staged universe) tombstoned."""
+    from quty_server_spark.operators.retract import (
+        RETRACT_MOD,
+        tombstoned_copy,
+    )
+    from quty_server_spark.session import session_tmp_dir
+
+    victims = percep_media_universe(spark, sf_dir).filter(
+        F.col("doc_id") % 10 == RETRACT_MOD
+    ).select("doc_id")
+    return tombstoned_copy(
+        spark,
+        media_signature_artifact(spark, sf_dir),
+        session_tmp_dir(spark, kind, sf_dir),
+        victims,
+    )
+
+
 @registry.query(
     "sink_media_signature_artifact_retract",
     oracle=_media_sig_survivor_summary_oracle(),
@@ -951,7 +961,7 @@ def sink_media_signature_artifact_retract(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """The RETRACTION verb for the media-signature artifact — the new
-    family joins the r14 lifecycle the four text/vector families
+    family joins the lifecycle the four text/vector families
     already complete (write-once → append → retract): victims
     (``doc_id % 10 == RETRACT_MOD`` of the staged universe — lake
     originals AND lake-resident twins) are tombstoned into the standing
@@ -969,26 +979,11 @@ def sink_media_signature_artifact_retract(
     pay one broadcast anti-join until scheduled compaction folds it —
     for media this is the difference between a takedown that re-decodes
     nothing and one that re-signs a lake."""
-    import shutil
+    from quty_server_spark.operators.retract import read_artifact_live
 
-    from quty_server_spark.operators.retract import (
-        RETRACT_MOD,
-        _copy_artifact,
-        _write_tombstones,
-        read_artifact_live,
-    )
-    from quty_server_spark.session import session_tmp_dir
-
-    src_path = media_signature_artifact(spark, sf_dir)
-    priv = session_tmp_dir(spark, "quty_media_sig_rt", sf_dir)
-    shutil.rmtree(priv, ignore_errors=True)
-    _copy_artifact(src_path, priv)
-    victims = percep_media_universe(spark, sf_dir).filter(
-        F.col("doc_id") % 10 == RETRACT_MOD
-    ).select("doc_id")
-    _write_tombstones(spark, priv, victims)
-    return _media_sig_artifact_summary(
-        read_artifact_live(spark, priv, "doc_id")
+    priv = _tombstoned_media_copy(spark, sf_dir, "quty_media_sig_rt")
+    return _sig_artifact_summary(
+        read_artifact_live(spark, priv, SIG.id_col)
     )
 
 
@@ -1019,23 +1014,8 @@ def sink_media_signature_artifact_retract_compacted(
     them with the DPP-scoped dynamic overwrite; for media the stake is
     the same as the gate's — nothing is ever re-decoded, the takedown's
     cost follows the victims, not the lake."""
-    import shutil
+    from quty_server_spark.operators.retract import compact_tombstones
 
-    from quty_server_spark.operators.retract import (
-        RETRACT_MOD,
-        _copy_artifact,
-        _write_tombstones,
-        compact_tombstones,
-    )
-    from quty_server_spark.session import session_tmp_dir
-
-    src_path = media_signature_artifact(spark, sf_dir)
-    priv = session_tmp_dir(spark, "quty_media_sig_rtc", sf_dir)
-    shutil.rmtree(priv, ignore_errors=True)
-    _copy_artifact(src_path, priv)
-    victims = percep_media_universe(spark, sf_dir).filter(
-        F.col("doc_id") % 10 == RETRACT_MOD
-    ).select("doc_id")
-    _write_tombstones(spark, priv, victims)
-    compact_tombstones(spark, priv, "band_id", "doc_id", "band_val")
-    return _media_sig_artifact_summary(spark.read.parquet(priv))
+    priv = _tombstoned_media_copy(spark, sf_dir, "quty_media_sig_rtc")
+    compact_tombstones(spark, priv, SIG)
+    return _sig_artifact_summary(spark.read.parquet(priv))

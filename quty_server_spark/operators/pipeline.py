@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from quty_server_spark.operators._helpers import load_table, overlap
+from quty_server_spark.operators._helpers import Layout, load_table, overlap
 from quty_server_spark.plans.registry import registry
 
 # Regexes shared by the Spark path and the DuckDB twin (Java regex and
@@ -1353,6 +1353,26 @@ def scoped_training_snapshot(
 N_TRAIN_SHARDS = 8
 
 
+class _SpreadLayout(Layout):
+    """A :class:`Layout` whose writes first hash rows over
+    ``4 * N_TRAIN_SHARDS`` tasks by (partition, id), not by partition
+    alone: one task per shard would cap write parallelism at
+    N_TRAIN_SHARDS regardless of cluster size. Every task lands its
+    files in the right ``shard=N`` directory, so the layout is
+    identical and the write scales with the cluster, not the shard
+    count."""
+
+    __slots__ = ()
+
+    def _sorted(self, rows: DataFrame) -> DataFrame:
+        return super()._sorted(
+            rows.repartition(4 * N_TRAIN_SHARDS, self.part, self.id_col)
+        )
+
+
+TRAIN_SHARDS = _SpreadLayout("shard", "doc_id", "doc_id")
+
+
 def _shard_summary_oracle(snap_sql: str) -> str:
     """Per-shard read-back summary over any snapshot SQL — the SELECT
     block shared byte-for-byte by the write-once shard sink and its
@@ -1429,21 +1449,9 @@ def _shard_col():
 
 
 def _write_training_shards(snap: DataFrame, out: str, mode: str = "errorifexists") -> None:
-    """The shard write both sinks use. Repartition by (shard, doc_id),
-    not shard alone: one task per shard caps write parallelism at
-    N_TRAIN_SHARDS regardless of cluster size. Hashing the id alongside
-    spreads each shard's rows across many writers — every task lands
-    its files in the right shard=N directory via partitionBy, so the
-    layout is identical and the write scales with the cluster, not the
-    shard count."""
-    (
-        snap.withColumn("shard", _shard_col())
-        .repartition(4 * N_TRAIN_SHARDS, "shard", "doc_id")
-        .sortWithinPartitions("shard", "doc_id")
-        .write.partitionBy("shard")
-        .mode(mode)
-        .parquet(out)
-    )
+    """The shard write every sink uses: ``snap``'s rows in their
+    content-keyed shards, laid out as :data:`TRAIN_SHARDS`."""
+    TRAIN_SHARDS.write(snap.withColumn("shard", _shard_col()), out, mode)
 
 
 def _shard_summary(back: DataFrame) -> DataFrame:
@@ -1692,8 +1700,8 @@ def compact_training_shards_inplace(
     fresh :func:`corpus_training_snapshot`, map the differing docs to
     their content-keyed shards, and dynamically overwrite ONLY those
     ``shard=N`` directories with the fresh truth's rows for those
-    shards — the same partition-scoped rewrite device as
-    :func:`~quty_server_spark.operators.retract._retract_rows`.
+    shards (:meth:`Layout.replace`, the partition-scoped rewrite device
+    of :func:`~quty_server_spark.operators.retract._retract_rows`).
     Shards with no differing doc are never read for the rewrite and
     their files are untouched (byte-identity pinned in
     tests/test_artifact_append.py). Returns the affected shard list.
@@ -1713,9 +1721,6 @@ def compact_training_shards_inplace(
     the fresh snapshot) and writes only affected directories, keeping
     write parallelism decoupled from shard count via the shared
     (shard, doc_id) repartition."""
-    import os
-    import shutil
-
     if fresh is None:
         fresh = corpus_training_snapshot(spark, sf_dir).select(
             *SNAPSHOT_COLS
@@ -1731,21 +1736,8 @@ def compact_training_shards_inplace(
     repl = fresh.withColumn("shard", _shard_col()).filter(
         F.col("shard").isin(affected)
     )
-    (
-        repl.repartition(4 * N_TRAIN_SHARDS, "shard", "doc_id")
-        .sortWithinPartitions("shard", "doc_id")
-        .write.option("partitionOverwriteMode", "dynamic")
-        .partitionBy("shard")
-        .mode("overwrite")
-        .parquet(path)
-    )
-    # Dynamic overwrite cannot delete a partition absent from its
-    # input: an affected shard left with ZERO fresh rows is removed
-    # explicitly (same metadata-grain loop as the retraction device).
-    kept = {r[0] for r in repl.select("shard").distinct().collect()}
-    for s in affected:
-        if s not in kept:
-            shutil.rmtree(os.path.join(path, f"shard={s}"), ignore_errors=True)
+    # An affected shard left with ZERO fresh rows is removed.
+    TRAIN_SHARDS.replace(repl, path, affected)
     return affected
 
 
@@ -1753,13 +1745,13 @@ def compact_training_shards_inplace(
     "sink_training_shards_compact", oracle=_training_shards_oracle()
 )
 def sink_training_shards_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The COMPACTION step of the trainer-handoff lifecycle — the last
-    unbuilt edge the r15 verdict named: stage the appended standing
-    state (yesterday's lake-scoped shards + tonight's additions, the
-    shared fixture device, built in a compactor-private directory so
-    the memoized appended layout other consumers hold is never mutated),
-    run :func:`compact_training_shards_inplace`, read the layout back,
-    and summarize per shard under the full-corpus WRITE-ONCE oracle —
+    """The COMPACTION step of the trainer-handoff lifecycle: stage the
+    appended standing state (yesterday's lake-scoped shards + tonight's
+    additions, the shared fixture device, built in a compactor-private
+    directory so the memoized appended layout other consumers hold is
+    never mutated), run :func:`compact_training_shards_inplace`, read
+    the layout back, and summarize per shard under the full-corpus
+    WRITE-ONCE oracle —
     byte-for-byte the same SQL as :func:`sink_training_shards`. A green
     row therefore proves the closing of the lifecycle triangle: the
     compacted layout ≡ a fresh write-once build, i.e. the append

@@ -1,20 +1,17 @@
 """Retraction: oracle-verified DELETE propagation through the artifact
-tier — the lifecycle verb the r13 verdict named as the standing-lake
-story's last gap ("What's missing" #3). A document REMOVED from the
-lake (takedown, license revocation, PII purge) must not keep poisoning
-the nightly gates through its leftover band rows, minhash rows, IVF
-postings, and passage digests, and the clusters it bridged must be
-re-labeled (a removal can SPLIT a component).
+tier. A document REMOVED from the lake (takedown, license revocation,
+PII purge) must not keep poisoning the nightly gates through its
+leftover band rows, minhash rows, IVF postings, and passage digests,
+and the clusters it bridged must be re-labeled (a removal can SPLIT a
+component).
 
 Physical device: the home-bucket/DPP rewrite the relabel APPLY proved
 (operators/dedup.py apply_cluster_label_maintenance) — read ONLY the
 partitions holding victim rows (a broadcast join on the partition
 column, dynamic partition pruning keeps every other directory unread),
 drop the victims with a broadcast anti-join, and overwrite those
-partitions in place (``partitionOverwriteMode=dynamic``). Partitions
-whose every row was a victim are removed explicitly (a driver-side
-loop bounded by the artifact's PARTITION count — metadata grain, never
-rows).
+partitions in place (``Layout.replace`` from operators/_helpers.py,
+which also removes the partitions whose every row was a victim).
 
 Cost follows the victim set, not the lake, wherever the partition key
 can be derived from the victims themselves: the PASSAGE artifact's
@@ -58,13 +55,15 @@ from __future__ import annotations
 
 import os
 import shutil
-from functools import partial
+from collections.abc import Callable
+from functools import partial, reduce
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from quty_server_spark.operators._helpers import load_table, overlap
+from quty_server_spark.operators._helpers import Layout, load_table, overlap
 from quty_server_spark.operators.dedup import (
     _BRIDGE_FILL,
     _BRIDGE_WA,
@@ -76,9 +75,15 @@ from quty_server_spark.operators.dedup import (
     _sig_artifact_summary,
     _minhash_artifact_summary,
     _write_home_bucket_layout,
+    LABELS,
     lake_minhash_artifact,
     lake_passage_artifact,
     lake_signature_artifact,
+    MINHASH,
+    N_BANDS,
+    PASSAGE,
+    SIG,
+    SIMHASH_BANDS,
     simhash_sigs_docs,
     SQL_MINHASH,
     SQL_PASSAGE_WINDOWS,
@@ -90,6 +95,7 @@ from quty_server_spark.operators.similarity import (
     _corpus,
     _ivf_artifact_summary,
     _ivf_cells_plan,
+    IVF,
     ivf_postings_artifact,
     SQL_CORPUS,
     SQL_IVF_CENT,
@@ -114,8 +120,7 @@ RETRACT_MOD = 3
 # distance 3 from each — all five stored in the standing label artifact
 # as ONE cluster. The bridge's id is ≡ RETRACT_MOD (mod 10), so the
 # retraction removes exactly the articulation point and the cluster must
-# SPLIT into {C}, {D} — the case the verdict named, guaranteed on any
-# fixture corpus.
+# SPLIT into {C}, {D} — guaranteed on any fixture corpus.
 RETRACT_STAGED_ROWS: list[tuple[int, str]] = [
     (9003001, " ".join([_BRIDGE_WA] * 10)),  # cluster C
     (9003011, " ".join([_BRIDGE_WA] * 10)),
@@ -147,53 +152,45 @@ def _doc_victims(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _victims(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """The checkpointed victim ids of each victim kind: ``doc`` ids for
+    the doc-keyed families, ``vec`` ids for IVF."""
+    vvec = _corpus(spark, sf_dir).filter(F.col("vec_id") % 10 == RETRACT_MOD)
+    return {
+        "doc": _doc_victims(spark, sf_dir).localCheckpoint(eager=True),
+        "vec": vvec.select("vec_id").localCheckpoint(eager=True),
+    }
+
+
 def _retract_rows(
     spark: SparkSession,
     path: str,
-    part_col: str,
+    layout: Layout,
     affected: DataFrame,
     victims: DataFrame,
-    id_col: str,
-    sort_key: str,
 ) -> None:
     """The shared physical DELETE: read ONLY the affected partitions
     (broadcast join on the partition column — DPP keeps every other
     directory unread, plan-pinned in tests/test_scale_plans.py), drop
-    victim rows (broadcast anti-join), and dynamically overwrite those
-    partitions, preserving the within-file sort contract. Partitions
-    left with zero rows are removed explicitly — dynamic overwrite
-    cannot delete a partition absent from its input — via a driver
-    loop over the (metadata-grain) affected-partition list."""
+    victim rows (broadcast anti-join), and rewrite those partitions in
+    place through :meth:`Layout.replace`, which keeps the within-file
+    sort contract and removes the partitions left with zero rows."""
+    part, id_col = layout.part, layout.id_col
+    part_type = dict(spark.read.parquet(path).dtypes)[part]
     affected = affected.select(
-        F.col(part_col)
-        .cast(dict(spark.read.parquet(path).dtypes)[part_col])
-        .alias(part_col)
+        F.col(part).cast(part_type).alias(part)
     ).distinct()
     # Materialize BEFORE overwriting: Spark (correctly) refuses a plan
     # that overwrites a path it is also reading. ONE eager checkpoint of
     # the post-anti-join survivors suffices (the anti-join is a map-side
-    # broadcast probe, so folding it into the same pass adds no shuffle)
-    # — checkpointing the touched rows separately first was a second
-    # full materialization of nearly the same bytes.
-    touched = _retract_touched_rows(spark, path, part_col, affected)
+    # broadcast probe, so folding it into the same pass adds no shuffle).
+    touched = _retract_touched_rows(spark, path, part, affected)
     kept = touched.join(
         broadcast(victims.withColumnRenamed(victims.columns[0], id_col)),
         id_col,
         "left_anti",
     ).localCheckpoint(eager=True)
-    (
-        kept.sortWithinPartitions(part_col, sort_key)
-        .write.option("partitionOverwriteMode", "dynamic")
-        .partitionBy(part_col)
-        .mode("overwrite")
-        .parquet(path)
-    )
-    kept_parts = {r[0] for r in kept.select(part_col).distinct().collect()}
-    for r in affected.collect():
-        if r[0] not in kept_parts:
-            shutil.rmtree(
-                os.path.join(path, f"{part_col}={r[0]}"), ignore_errors=True
-            )
+    layout.replace(kept, path, affected)
 
 
 def _retract_touched_rows(
@@ -208,6 +205,94 @@ def _retract_touched_rows(
     this builder — the same convention as
     dedup._maintenance_touched_rows."""
     return spark.read.parquet(path).join(broadcast(affected), part_col)
+
+
+def _every_band(
+    n_bands: int, spark: SparkSession, sf_dir: str, path: str,
+    victims: DataFrame,
+) -> DataFrame:
+    """A band artifact's affected partitions: band_id is content-keyed,
+    so any victim has a row in every one of the ``n_bands`` partitions."""
+    return spark.range(n_bands).select(
+        F.col("id").cast("int").alias("band_id")
+    )
+
+
+def _victim_prefixes(
+    spark: SparkSession, sf_dir: str, path: str, victims: DataFrame
+) -> DataFrame:
+    """The passage artifact's affected partitions: the digest prefixes
+    of the victims' OWN windows (|victims| work), so the other
+    directories are never read. The selective filter makes Spark insert
+    the DPP subquery (same device as the maintenance rewrite)."""
+    vdocs = load_table(spark, sf_dir, "documents").join(
+        broadcast(victims), "doc_id", "leftsemi"
+    )
+    return (
+        _passage_windows(vdocs)
+        .select(_passage_pfx())
+        .distinct()
+        .filter(F.col("pfx") >= "0")
+    )
+
+
+def _victim_cells(
+    spark: SparkSession, sf_dir: str, path: str, victims: DataFrame
+) -> DataFrame:
+    """The IVF artifact's affected partitions: the victims' vectors
+    assigned against the artifact's K-row centroid SIDECAR (never a
+    posting scan); the quantizer itself is NOT retrained."""
+    vvec = _corpus(spark, sf_dir).filter(F.col("vec_id") % 10 == RETRACT_MOD)
+    cent = spark.read.parquet(os.path.join(path, "_centroids"))
+    return (
+        _ivf_cells_plan(vvec, cent)
+        .select("cell")
+        .distinct()
+        .filter(F.col("cell") >= 0)
+    )
+
+
+class ArtifactFamily(NamedTuple):
+    """One standing artifact family, as the retraction tier sees it."""
+
+    layout: Layout
+    # (spark, sf_dir) -> path of the memoized write-once build.
+    build: Callable[[SparkSession, str], str]
+    # Which victim ids the family holds: "doc" or "vec".
+    victim: str
+    # (spark, sf_dir, path, victims) -> the partitions a retraction
+    # must read and rewrite.
+    affected: Callable[..., DataFrame]
+    # The write-once sink's per-partition summary of a read-back ...
+    summary: Callable[[DataFrame], DataFrame]
+    # ... and its columns feeding the tagged shape's (part_key, n_rows,
+    # n_keys, n_docs, extra); None means a NULL extra.
+    tags: tuple[str, str, str, str, str | None]
+
+
+# The four standing families, in the tagged summary's union order.
+ARTIFACT_FAMILIES: dict[str, ArtifactFamily] = {
+    "sig": ArtifactFamily(
+        SIG, lake_signature_artifact, "doc",
+        partial(_every_band, SIMHASH_BANDS), _sig_artifact_summary,
+        ("band_id", "n_rows", "n_buckets", "n_docs", None),
+    ),
+    "minhash": ArtifactFamily(
+        MINHASH, lake_minhash_artifact, "doc",
+        partial(_every_band, N_BANDS), _minhash_artifact_summary,
+        ("band_id", "n_rows", "n_buckets", "n_docs", "sum_nsh"),
+    ),
+    "passage": ArtifactFamily(
+        PASSAGE, lake_passage_artifact, "doc",
+        _victim_prefixes, _passage_artifact_summary,
+        ("pfx", "n_rows", "n_digests", "n_docs", None),
+    ),
+    "ivf": ArtifactFamily(
+        IVF, ivf_postings_artifact, "vec",
+        _victim_cells, _ivf_artifact_summary,
+        ("cell", "n_vecs", "n_vecs", "n_vecs", "n_queries"),
+    ),
+}
 
 
 def _copy_artifact(src: str, dst: str) -> None:
@@ -228,7 +313,7 @@ def retracted_artifact_paths(
     """Private copies of the four standing artifacts with the victim
     set physically retracted from each, in a :func:`session_memo`.
 
-    The four family retractions share NOTHING but the victim frame
+    The four family retractions share NOTHING but the victim frames
     (checkpointed up front), so they run as four concurrent legs; the
     four BASE artifacts are materialized serially FIRST so the legs
     never race to first-build a shared memoized path.
@@ -245,94 +330,28 @@ def retracted_artifact_paths(
     def _build() -> dict[str, str]:
         nonlocal built
         built = True
-        vic = _doc_victims(spark, sf_dir).localCheckpoint(eager=True)
-        vdocs = load_table(spark, sf_dir, "documents").join(
-            broadcast(vic), "doc_id", "leftsemi"
-        )
+        victims = _victims(spark, sf_dir)
         # Base-artifact pre-warm (serial): memoized builders are not
         # safe to FIRST-build from two threads.
         base = {
-            "sig": lake_signature_artifact(spark, sf_dir),
-            "minhash": lake_minhash_artifact(spark, sf_dir),
-            "passage": lake_passage_artifact(spark, sf_dir),
-            "ivf": ivf_postings_artifact(spark, sf_dir),
+            fam: f.build(spark, sf_dir)
+            for fam, f in ARTIFACT_FAMILIES.items()
         }
 
-        # -- SimHash band artifact: band_id is content-keyed, so any
-        # victim touches all 4 dirs; affected = every band partition.
-        def _do_sig() -> str:
-            p = session_tmp_dir(spark, "quty_retract_sig", sf_dir)
-            _copy_artifact(base["sig"], p)
-            bands4 = spark.range(4).select(
-                F.col("id").cast("int").alias("band_id")
-            )
+        def _leg(fam: str) -> str:
+            f = ARTIFACT_FAMILIES[fam]
+            vic = victims[f.victim]
+            p = session_tmp_dir(spark, f"quty_retract_{fam}", sf_dir)
+            _copy_artifact(base[fam], p)
             _retract_rows(
-                spark, p, "band_id", bands4, vic, "doc_id", "band_val"
+                spark, p, f.layout, f.affected(spark, sf_dir, p, vic), vic
             )
-            return p
-
-        # -- MinHash band artifact: same content-keyed layout, 8 dirs.
-        def _do_minhash() -> str:
-            p = session_tmp_dir(spark, "quty_retract_minhash", sf_dir)
-            _copy_artifact(base["minhash"], p)
-            bands8 = spark.range(8).select(
-                F.col("id").cast("int").alias("band_id")
-            )
-            _retract_rows(spark, p, "band_id", bands8, vic, "doc_id", "sig")
-            return p
-
-        # -- Passage-digest artifact: affected prefixes derive from the
-        # victims' OWN windows (|victims| work); the other 15/16-ish of
-        # the lake's directories are never read. The selective filter
-        # makes Spark insert the DPP subquery (same device as the
-        # maintenance rewrite).
-        def _do_passage() -> str:
-            p = session_tmp_dir(spark, "quty_retract_passages", sf_dir)
-            _copy_artifact(base["passage"], p)
-            pfx = (
-                _passage_windows(vdocs)
-                .select(_passage_pfx())
-                .distinct()
-                .filter(F.col("pfx") >= "0")
-            )
-            _retract_rows(spark, p, "pfx", pfx, vic, "doc_id", "passage_md5")
-            return p
-
-        # -- IVF posting lists: affected cells derive from assigning the
-        # victims' vectors against the K-row centroid SIDECAR (never a
-        # posting scan); the quantizer itself is NOT retrained.
-        def _do_ivf() -> str:
-            p = session_tmp_dir(spark, "quty_retract_ivf", sf_dir)
-            _copy_artifact(base["ivf"], p)
-            vvec = _corpus(spark, sf_dir).filter(
-                F.col("vec_id") % 10 == RETRACT_MOD
-            )
-            cent = spark.read.parquet(os.path.join(p, "_centroids"))
-            cells = (
-                _ivf_cells_plan(vvec, cent)
-                .select("cell")
-                .distinct()
-                .filter(F.col("cell") >= 0)
-            )
-            vvic = vvec.select("vec_id").localCheckpoint(eager=True)
-            _retract_rows(spark, p, "cell", cells, vvic, "vec_id", "vec_id")
-            return p
-
-        tasks = {
-            "sig": _do_sig,
-            "minhash": _do_minhash,
-            "passage": _do_passage,
-            "ivf": _do_ivf,
-        }
-
-        def _run(fam: str, fn) -> str:
-            p = fn()
             if post is not None:
                 post(fam, p)
             return p
 
-        legs = [partial(_run, k, fn) for k, fn in tasks.items()]
-        return dict(zip(tasks, overlap(*legs)))
+        legs = [partial(_leg, fam) for fam in ARTIFACT_FAMILIES]
+        return dict(zip(ARTIFACT_FAMILIES, overlap(*legs)))
 
     paths = session_memo(spark, "retract_artifacts", sf_dir, _build, rebuild)
     if not built and post is not None:
@@ -437,11 +456,9 @@ def sink_lake_artifacts_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint(eager=True)
 
     retracted_artifact_paths(spark, sf_dir, rebuild=True, post=_post)
-    out = None
-    for fam in _RETRACT_FAMILY_ORDER:
-        part = summaries[fam]
-        out = part if out is None else out.unionByName(part)
-    return out
+    return reduce(
+        DataFrame.unionByName, (summaries[fam] for fam in ARTIFACT_FAMILIES)
+    )
 
 
 def _tagged_family_summary(fam: str, frame: DataFrame) -> DataFrame:
@@ -449,46 +466,16 @@ def _tagged_family_summary(fam: str, frame: DataFrame) -> DataFrame:
     the per-family unit of :func:`_tagged_retract_summary`, factored out
     so the physical retract sink can materialize each family's summary
     inside that family's rebuild leg."""
-    nul = F.lit(None).cast("bigint")
-    if fam == "sig":
-        return _sig_artifact_summary(frame).select(
-            F.lit("sig").alias("family"),
-            F.col("band_id").cast("string").alias("part_key"),
-            F.col("n_rows").cast("bigint").alias("n_rows"),
-            F.col("n_buckets").cast("bigint").alias("n_keys"),
-            F.col("n_docs").cast("bigint").alias("n_docs"),
-            nul.alias("extra"),
-        )
-    if fam == "minhash":
-        return _minhash_artifact_summary(frame).select(
-            F.lit("minhash").alias("family"),
-            F.col("band_id").cast("string").alias("part_key"),
-            F.col("n_rows").cast("bigint").alias("n_rows"),
-            F.col("n_buckets").cast("bigint").alias("n_keys"),
-            F.col("n_docs").cast("bigint").alias("n_docs"),
-            F.col("sum_nsh").cast("bigint").alias("extra"),
-        )
-    if fam == "passage":
-        return _passage_artifact_summary(frame).select(
-            F.lit("passage").alias("family"),
-            F.col("pfx").alias("part_key"),
-            F.col("n_rows").cast("bigint").alias("n_rows"),
-            F.col("n_digests").cast("bigint").alias("n_keys"),
-            F.col("n_docs").cast("bigint").alias("n_docs"),
-            nul.alias("extra"),
-        )
-    assert fam == "ivf", fam
-    return _ivf_artifact_summary(frame).select(
-        F.lit("ivf").alias("family"),
-        F.col("cell").cast("string").alias("part_key"),
-        F.col("n_vecs").cast("bigint").alias("n_rows"),
-        F.col("n_vecs").cast("bigint").alias("n_keys"),
-        F.col("n_vecs").cast("bigint").alias("n_docs"),
-        F.col("n_queries").cast("bigint").alias("extra"),
+    f = ARTIFACT_FAMILIES[fam]
+    part, n_rows, n_keys, n_docs, extra = f.tags
+    return f.summary(frame).select(
+        F.lit(fam).alias("family"),
+        F.col(part).cast("string").alias("part_key"),
+        F.col(n_rows).cast("bigint").alias("n_rows"),
+        F.col(n_keys).cast("bigint").alias("n_keys"),
+        F.col(n_docs).cast("bigint").alias("n_docs"),
+        (F.col(extra) if extra else F.lit(None)).cast("bigint").alias("extra"),
     )
-
-
-_RETRACT_FAMILY_ORDER = ("sig", "minhash", "passage", "ivf")
 
 
 def _tagged_retract_summary(frames: dict[str, DataFrame]) -> DataFrame:
@@ -496,11 +483,10 @@ def _tagged_retract_summary(frames: dict[str, DataFrame]) -> DataFrame:
     frame — shared by the physical retract sink (plain artifact reads)
     and the tombstone sink (tombstone-aware live views), so both report
     under the identical oracle contract."""
-    out = None
-    for fam in _RETRACT_FAMILY_ORDER:
-        part = _tagged_family_summary(fam, frames[fam])
-        out = part if out is None else out.unionByName(part)
-    return out
+    return reduce(
+        DataFrame.unionByName,
+        (_tagged_family_summary(f, frames[f]) for f in ARTIFACT_FAMILIES),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -559,10 +545,21 @@ def _write_tombstones(
     new.write.parquet(tp)
 
 
-def compact_tombstones(
-    spark: SparkSession, path: str, part_col: str, id_col: str,
-    sort_key: str,
-) -> None:
+def tombstoned_copy(
+    spark: SparkSession, src: str, dst: str,
+    victims: DataFrame | None = None,
+) -> str:
+    """A private copy (:func:`_copy_artifact`) of the standing artifact
+    at ``src`` written to ``dst``, with ``victims`` tombstoned — or
+    none yet when omitted (the retraction stream tombstones per epoch).
+    Returns ``dst``."""
+    _copy_artifact(src, dst)
+    if victims is not None:
+        _write_tombstones(spark, dst, victims)
+    return dst
+
+
+def compact_tombstones(spark: SparkSession, path: str, layout: Layout) -> None:
     """Scheduled compaction: apply the standing tombstones physically
     (the exact :func:`_retract_rows` device) and clear the sidecar.
     The affected-partition set comes from one narrow columnar pass of
@@ -573,28 +570,17 @@ def compact_tombstones(
     if not os.path.isdir(tp):
         return
     tomb = spark.read.parquet(tp).localCheckpoint(eager=True)
-    vic = tomb.select(F.col("victim_id").alias(id_col))
+    vic = tomb.select(F.col("victim_id").alias(layout.id_col))
     affected = (
         spark.read.parquet(path)
-        .select(id_col, part_col)
-        .join(broadcast(vic), id_col, "leftsemi")
-        .select(part_col)
+        .select(layout.id_col, layout.part)
+        .join(broadcast(vic), layout.id_col, "leftsemi")
+        .select(layout.part)
         .distinct()
         .localCheckpoint(eager=True)
     )
-    _retract_rows(spark, path, part_col, affected, vic, id_col, sort_key)
+    _retract_rows(spark, path, layout, affected, vic)
     shutil.rmtree(tp, ignore_errors=True)
-
-
-# (family -> (partition column, id column, within-file sort key));
-# shared by the tombstone sink's compaction pin and any scheduled
-# compactor.
-ARTIFACT_LAYOUTS: dict[str, tuple[str, str, str]] = {
-    "sig": ("band_id", "doc_id", "band_val"),
-    "minhash": ("band_id", "doc_id", "sig"),
-    "passage": ("pfx", "doc_id", "passage_md5"),
-    "ivf": ("cell", "vec_id", "vec_id"),
-}
 
 
 def tombstoned_artifact_paths(
@@ -605,28 +591,16 @@ def tombstoned_artifact_paths(
     the base build's), in a :func:`session_memo`."""
 
     def _build() -> dict[str, str]:
-        vic = _doc_victims(spark, sf_dir).localCheckpoint(eager=True)
-        vvic = (
-            _corpus(spark, sf_dir)
-            .filter(F.col("vec_id") % 10 == RETRACT_MOD)
-            .select("vec_id")
-            .localCheckpoint(eager=True)
-        )
-        builders = {
-            "sig": lake_signature_artifact,
-            "minhash": lake_minhash_artifact,
-            "passage": lake_passage_artifact,
-            "ivf": ivf_postings_artifact,
-        }
-        paths = {}
-        for fam, build in builders.items():
-            p = session_tmp_dir(spark, f"quty_tomb_{fam}", sf_dir)
-            _copy_artifact(build(spark, sf_dir), p)
-            _write_tombstones(
-                spark, p, vvic if fam == "ivf" else vic
+        victims = _victims(spark, sf_dir)
+        return {
+            fam: tombstoned_copy(
+                spark,
+                f.build(spark, sf_dir),
+                session_tmp_dir(spark, f"quty_tomb_{fam}", sf_dir),
+                victims[f.victim],
             )
-            paths[fam] = p
-        return paths
+            for fam, f in ARTIFACT_FAMILIES.items()
+        }
 
     return session_memo(spark, "tombstone_artifacts", sf_dir, _build, rebuild)
 
@@ -658,7 +632,7 @@ def sink_lake_artifacts_retract_tombstone(
     return _tagged_retract_summary(
         {
             fam: read_artifact_live(
-                spark, p, ARTIFACT_LAYOUTS[fam][1]
+                spark, p, ARTIFACT_FAMILIES[fam].layout.id_col
             )
             for fam, p in paths.items()
         }
@@ -695,8 +669,7 @@ def sink_lake_artifacts_retract_compacted(
     one scheduled job whose cost follows the victims, not the lake."""
     paths = tombstoned_artifact_paths(spark, sf_dir, rebuild=True)
     for fam, p in paths.items():
-        part_col, id_col, sort_key = ARTIFACT_LAYOUTS[fam]
-        compact_tombstones(spark, p, part_col, id_col, sort_key)
+        compact_tombstones(spark, p, ARTIFACT_FAMILIES[fam].layout)
     return _tagged_retract_summary(
         {fam: spark.read.parquet(p) for fam, p in paths.items()}
     )
@@ -779,19 +752,7 @@ def apply_cluster_label_retraction(
         .unionByName(relabeled)
         .localCheckpoint(eager=True)
     )
-    (
-        out.sortWithinPartitions("lbl_bucket", "node")
-        .write.option("partitionOverwriteMode", "dynamic")
-        .partitionBy("lbl_bucket")
-        .mode("overwrite")
-        .parquet(path)
-    )
-    kept_buckets = {r[0] for r in out.select("lbl_bucket").distinct().collect()}
-    for r in aff_buckets.collect():
-        if r[0] not in kept_buckets:
-            shutil.rmtree(
-                os.path.join(path, f"lbl_bucket={r[0]}"), ignore_errors=True
-            )
+    LABELS.replace(out, path, aff_buckets)
     # Retired labels leave the sidecar; the relabeled survivors' (new
     # label, insert-time bucket) pairs enter it. keep_rows' labels are
     # unaffected and already recorded, and a new label can never
@@ -908,10 +869,10 @@ def sink_lake_cluster_labels_artifact_retract(
     affected clusters (:func:`apply_cluster_label_retraction`), read
     the result back and report the per-cluster summary. The oracle
     recomputes the survivors' components from scratch, so a green row
-    proves retracted ≡ rebuilt for exactly the SPLIT case the r13
-    verdict named: the staged C–bridge–D cluster must come back as two
-    clusters with their own min-node labels, and every fixture cluster
-    that lost a victim must shrink or dissolve.
+    proves retracted ≡ rebuilt for exactly the SPLIT case: the staged
+    C–bridge–D cluster must come back as two clusters with their own
+    min-node labels, and every fixture cluster that lost a victim must
+    shrink or dissolve.
 
     Scale: locate = one narrow columnar pass; scope = sidecar lookup +
     DPP-pruned bucket read; re-cluster = |affected clusters| signing +

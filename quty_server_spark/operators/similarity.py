@@ -34,7 +34,7 @@ from quty_server_spark.functions.vectors import (
     dot,
     norm,
 )
-from quty_server_spark.operators._helpers import load_table
+from quty_server_spark.operators._helpers import Layout, load_table
 from quty_server_spark.plans.registry import registry
 from quty_server_spark.session import session_artifact
 
@@ -1206,11 +1206,29 @@ def sim_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+# Sorted by vec_id within each cell so row-group min/max stats answer
+# "is vec X in this posting list?" membership probes without scanning
+# the cell; the DPP cell pruning is directory-level and unaffected.
+IVF = Layout("cell", "vec_id", "vec_id")
+
+
+def _write_ivf(points: DataFrame, cent: DataFrame, path: str) -> None:
+    """Write ``points`` assigned to their nearest centroid of ``cent`` as
+    IVF posting lists at ``path``, plus the centroid sidecar: the
+    coarse quantizer (K rows) under an underscore-prefixed name, which
+    parquet readers of the artifact root ignore (the _SUCCESS /
+    _metadata convention). A nightly probe or append assigns its batch
+    against THIS tiny table instead of re-deriving the stride sample
+    from a corpus-sized posting scan."""
+    IVF.write(_ivf_cells_plan(points, cent), path)
+    cent.write.parquet(os.path.join(path, "_centroids"))
+
+
 def ivf_postings_artifact(
     spark: SparkSession, sf_dir: str, rebuild: bool = False
 ) -> str:
     """Materialize the IVF posting lists ``(vec_id, v, cell)`` as an
-    on-disk parquet artifact partitioned by ``cell`` and return its
+    on-disk parquet artifact laid out as :data:`IVF` and return its
     path. This is the index build a production ANN service runs ONCE
     per corpus snapshot — every recomputing variant in this module
     (:func:`sim_ann_ivf`, :func:`sim_ann_ivf_nprobe2`,
@@ -1229,31 +1247,15 @@ def ivf_postings_artifact(
 
     def _write(path: str) -> None:
         c = _corpus(spark, sf_dir)
-        # Sorted by vec_id within each cell so row-group min/max stats
-        # answer "is vec X in this posting list?" membership probes
-        # without scanning the cell (same device as the lake-signature
-        # artifact's band_val sort); the DPP cell pruning is directory-
-        # level and unaffected.
-        _ivf_cells_plan(c, _ivf_centroids(c)).sortWithinPartitions(
-            "cell", "vec_id"
-        ).write.partitionBy("cell").parquet(path)
-        # Centroid sidecar: the coarse quantizer (K rows) written next
-        # to the postings under an underscore-prefixed name, which
-        # parquet readers of the artifact root ignore (the _SUCCESS /
-        # _metadata convention). A nightly probe assigns its shard
-        # against THIS tiny table instead of re-deriving the stride
-        # sample from a lake-sized posting scan (r11 review finding).
-        _ivf_centroids(c).write.parquet(os.path.join(path, "_centroids"))
+        _write_ivf(c, _ivf_centroids(c), path)
 
     return session_artifact(
         spark, "quty_ivf_postings", sf_dir, _write, rebuild
     )
 
 
-# Per-cell summary of the IVF posting-list artifact. Shared byte-for-
-# byte by the write-once sink and the append sink (round 12): the
-# appended artifact's content equals a fresh full build's — same
-# append ≡ rebuild device as the dedup families' artifact summaries.
+# Per-cell summary of the IVF posting-list artifact, shared by the
+# write-once, append and re-cluster sinks (see :class:`Layout`).
 SQL_IVF_ARTIFACT_SUMMARY = f"""
     WITH c AS {SQL_CORPUS},
     cent AS {SQL_IVF_CENT},
@@ -1540,7 +1542,7 @@ def dedup_decontaminate_embedding(
 
 
 # ---------------------------------------------------------------------------
-# Oracle-verified posting-list APPEND + growth drift guard (round 12)
+# Oracle-verified posting-list APPEND + growth drift guard
 # ---------------------------------------------------------------------------
 
 # IVF_APPEND_BATCH_MOD (defined with the quantizer constants at the top
@@ -1583,15 +1585,11 @@ def appended_ivf_artifact(
         base = _corpus(spark, sf_dir).filter(
             F.col("vec_id") % 10 != IVF_APPEND_BATCH_MOD
         )
-        cent = _ivf_centroids(base)
-        _ivf_cells_plan(base, cent).sortWithinPartitions(
-            "cell", "vec_id"
-        ).write.partitionBy("cell").parquet(path)
-        cent.write.parquet(os.path.join(path, "_centroids"))
+        _write_ivf(base, _ivf_centroids(base), path)
         sidecar = spark.read.parquet(os.path.join(path, "_centroids"))
-        admitted_ivf_postings(spark, sf_dir, sidecar).sortWithinPartitions(
-            "cell", "vec_id"
-        ).write.partitionBy("cell").mode("append").parquet(path)
+        IVF.write(
+            admitted_ivf_postings(spark, sf_dir, sidecar), path, "append"
+        )
 
     return session_artifact(
         spark, "quty_ivf_postings_app", sf_dir, _write, rebuild
@@ -1698,7 +1696,7 @@ def sim_ivf_cell_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# IVF RE-CLUSTER — the maintenance verb the drift reports feed (round 17)
+# IVF RE-CLUSTER — the maintenance verb the drift reports feed
 # ---------------------------------------------------------------------------
 
 
@@ -1721,11 +1719,7 @@ def reclustered_ivf_artifact(
         standing = spark.read.parquet(
             appended_ivf_artifact(spark, sf_dir)
         ).select("vec_id", "v")
-        cent = _ivf_centroids(standing)
-        _ivf_cells_plan(standing, cent).sortWithinPartitions(
-            "cell", "vec_id"
-        ).write.partitionBy("cell").parquet(path)
-        cent.write.parquet(os.path.join(path, "_centroids"))
+        _write_ivf(standing, _ivf_centroids(standing), path)
 
     return session_artifact(
         spark, "quty_ivf_postings_recl", sf_dir, _write, rebuild

@@ -2464,20 +2464,12 @@ def stream_lake_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     subscriptions per-event as leave messages arrive
     (lib/QutyCluster.js:518-578); this is that verb at lake scale."""
     from quty_server_spark.operators.retract import (
+        ARTIFACT_FAMILIES,
         RETRACT_MOD,
-        _copy_artifact,
-        _write_tombstones,
-        ARTIFACT_LAYOUTS,
-        read_artifact_live,
         _tagged_retract_summary,
-    )
-    from quty_server_spark.operators.dedup import (
-        lake_minhash_artifact,
-        lake_passage_artifact,
-        lake_signature_artifact,
-    )
-    from quty_server_spark.operators.similarity import (
-        ivf_postings_artifact,
+        _write_tombstones,
+        read_artifact_live,
+        tombstoned_copy,
     )
 
     configure(spark)
@@ -2486,21 +2478,17 @@ def stream_lake_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     indir = os.path.join(base, "in")
     ckpt = os.path.join(base, "ckpt")
 
-    builders = {
-        "sig": lake_signature_artifact,
-        "minhash": lake_minhash_artifact,
-        "passage": lake_passage_artifact,
-        "ivf": ivf_postings_artifact,
+    paths = {
+        fam: tombstoned_copy(
+            spark, f.build(spark, sf_dir), os.path.join(base, fam)
+        )
+        for fam, f in ARTIFACT_FAMILIES.items()
     }
-    paths = {}
-    for fam, build in builders.items():
-        p = os.path.join(base, fam)
-        _copy_artifact(build(spark, sf_dir), p)
-        paths[fam] = p
 
-    # The unified takedown feed: document victims (three doc-keyed
-    # families) + vector victims (IVF), staged as 4 hash-partitioned
-    # files -> 4 deterministic micro-batches under maxFilesPerTrigger=1.
+    # The unified takedown feed: (victim kind, id) rows — document
+    # victims for the three doc-keyed families, vector victims for IVF
+    # — staged as 4 hash-partitioned files -> 4 deterministic
+    # micro-batches under maxFilesPerTrigger=1.
     docs_v = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 10 == RETRACT_MOD)
@@ -2520,17 +2508,15 @@ def stream_lake_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
         # driver-side emptiness probe, and keeps the batch path free of
         # driver materialization (the repo-wide sweep).
         b = batch_df.localCheckpoint(eager=True)
-        doc_ids = b.filter(F.col("kind") == "doc").select("id")
-        vec_ids = b.filter(F.col("kind") == "vec").select("id")
-        for fam in ("sig", "minhash", "passage"):
-            _write_tombstones(spark, paths[fam], doc_ids)
-        _write_tombstones(spark, paths["ivf"], vec_ids)
+        for fam, f in ARTIFACT_FAMILIES.items():
+            ids = b.filter(F.col("kind") == f.victim).select("id")
+            _write_tombstones(spark, paths[fam], ids)
 
     _drain(spark, feed.schema, indir, ckpt, tombstone_batch)
     return _tagged_retract_summary(
         {
             fam: read_artifact_live(
-                spark, p, ARTIFACT_LAYOUTS[fam][1]
+                spark, p, ARTIFACT_FAMILIES[fam].layout.id_col
             )
             for fam, p in paths.items()
         }

@@ -177,8 +177,8 @@ def test_append_adds_files_never_rewrites(spark):
 
     from quty_server_spark.operators.dedup import (
         APPEND_BATCH_MOD,
+        SIG,
         admitted_simhash_bands,
-        append_to_band_artifact,
         simhash_bands,
         simhash_sigs,
     )
@@ -206,9 +206,7 @@ def test_append_adds_files_never_rewrites(spark):
         }
 
     before = snapshot()
-    append_to_band_artifact(
-        admitted_simhash_bands(spark, SF_DIR), path, "band_val"
-    )
+    SIG.write(admitted_simhash_bands(spark, SF_DIR), path, "append")
     after = snapshot()
     assert set(before) <= set(after), "append removed base files"
     for f, meta in before.items():

@@ -16,7 +16,9 @@ only by ``session.py`` (``session_memo`` / ``session_artifact`` /
 ``reset_memos``). And it pins the streams' scratch policy: every
 ``epoch=<id>`` sink path is built by ``streaming/ops._epoch_writer``, and
 no stream takes a fixed ``tempfile.gettempdir()`` dir (``session_tmp_dir``
-instead).
+instead). Finally, every partitioned artifact write (a writer's
+``.partitionBy(`` or a ``partitionOverwriteMode`` overwrite) under
+``operators/`` and ``streaming/`` goes through ``_helpers.Layout``.
 """
 
 from __future__ import annotations
@@ -59,21 +61,17 @@ EXEMPT: set[tuple[str, str, str]] = {
     # aggregate whose action also materializes the iteration's lazy
     # checkpoint; only that scalar crosses to the driver.
     ("quty_server_spark/operators/graph.py", "pagerank_converged", "first"),
-    # Retraction cleanup of partitions a dynamic overwrite cannot
-    # empty: both collects pull DISTINCT partition-key values of the
-    # AFFECTED partition set — bounded by the artifact's partition
+    # Cleanup of the partitions a dynamic overwrite cannot empty (the
+    # retraction, label retraction and shard compaction rewrites): both
+    # collects pull DISTINCT partition-key values of the kept and
+    # AFFECTED partition sets — bounded by the artifact's partition
     # count (metadata grain: <= 16 passage prefixes, <= IVF_K_MAX
-    # cells, <= LABEL_HOME_BUCKETS buckets), never row-scale.
-    ("quty_server_spark/operators/retract.py", "_retract_rows", "collect"),
-    (
-        "quty_server_spark/operators/retract.py",
-        "apply_cluster_label_retraction",
-        "collect",
-    ),
-    # Trainer-shard compaction (same partition-scoped-rewrite device):
-    # both collects pull DISTINCT content-keyed shard ids of the
-    # affected/kept set — bounded by N_TRAIN_SHARDS (metadata grain:
-    # 8 values), never row-scale.
+    # cells, <= LABEL_HOME_BUCKETS buckets, N_TRAIN_SHARDS shards),
+    # never row-scale.
+    ("quty_server_spark/operators/_helpers.py", "replace", "collect"),
+    # Trainer-shard compaction's affected list: DISTINCT content-keyed
+    # shard ids of the row diff — bounded by N_TRAIN_SHARDS (metadata
+    # grain: 8 values), never row-scale.
     (
         "quty_server_spark/operators/pipeline.py",
         "compact_training_shards_inplace",
@@ -237,5 +235,50 @@ def test_no_fixed_tmp_dirs_in_streaming():
                 hits.append(f"{rel}:{getattr(node, 'lineno', '?')}")
     assert not hits, (
         "tempfile.gettempdir under streaming/ (use session_tmp_dir):\n"
+        + "\n".join(hits)
+    )
+
+
+# The one partitioned-artifact writer: ``operators/_helpers.Layout``.
+LAYOUT_HOME = ("quty_server_spark/operators/_helpers.py", "Layout")
+# ``Window.partitionBy`` / ``W.partitionBy`` is a window spec, not a write.
+_WINDOW_NAMES = {"Window", "W"}
+
+
+def test_partitioned_writes_only_in_layout():
+    hits = []
+    for sub in ("operators", "streaming"):
+        for path in sorted((ROOT / sub).rglob("*.py")):
+            rel = str(path.relative_to(ROOT.parent))
+            tree = ast.parse(path.read_text(), filename=str(path))
+            home = [
+                (n.lineno, n.end_lineno)
+                for n in ast.walk(tree)
+                if isinstance(n, ast.ClassDef) and (rel, n.name) == LAYOUT_HOME
+            ]
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "partitionBy"
+                    and not (
+                        isinstance(node.func.value, ast.Name)
+                        and node.func.value.id in _WINDOW_NAMES
+                    )
+                ):
+                    what = ".partitionBy("
+                elif (
+                    isinstance(node, ast.Constant)
+                    and isinstance(node.value, str)
+                    and "partitionOverwriteMode" in node.value
+                ):
+                    what = "partitionOverwriteMode"
+                else:
+                    continue
+                if not any(a <= node.lineno <= b for a, b in home):
+                    fn = _enclosing_function(tree, node.lineno)
+                    hits.append(f"{rel}:{node.lineno} {what} in {fn}()")
+    assert not hits, (
+        "partitioned artifact writes outside operators/_helpers.Layout:\n"
         + "\n".join(hits)
     )

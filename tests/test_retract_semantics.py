@@ -13,6 +13,7 @@ import os
 from pyspark.sql import functions as F
 
 from quty_server_spark.operators import dedup as D
+from quty_server_spark.operators._helpers import Layout
 from quty_server_spark.operators import retract as R
 from quty_server_spark.operators import similarity as S
 
@@ -54,7 +55,9 @@ def test_retract_rows_scopes_preserves_and_cleans(spark, tmp_path):
     before = _file_md5s(path)
     affected = spark.createDataFrame([("a",), ("b",), ("d",)], "pfx string")
     victims = spark.createDataFrame([(3,), (13,), (23,)], "doc_id long")
-    R._retract_rows(spark, path, "pfx", affected, victims, "doc_id", "doc_id")
+    R._retract_rows(
+        spark, path, Layout("pfx", "doc_id", "doc_id"), affected, victims
+    )
     got = sorted(
         (r.doc_id, r.pfx) for r in spark.read.parquet(path).collect()
     )
@@ -306,7 +309,8 @@ def test_tombstone_live_view_equals_physical_retract(spark):
     # each family equals the physically retracted artifact row-for-row.
     tomb = R.tombstoned_artifact_paths(spark, SF_DIR)
     phys = R.retracted_artifact_paths(spark, SF_DIR)
-    for fam, (part, id_col, _) in R.ARTIFACT_LAYOUTS.items():
+    for fam, f in R.ARTIFACT_FAMILIES.items():
+        part, id_col, _ = f.layout
         got = sorted(
             tuple(r)
             for r in R.read_artifact_live(spark, tomb[fam], id_col)
@@ -332,18 +336,19 @@ def test_compaction_preserves_live_view_and_clears_sidecar(spark, tmp_path):
     src = R.tombstoned_artifact_paths(spark, SF_DIR)["passage"]
     p = str(tmp_path / "pw")
     sh.copytree(src, p)
-    part, id_col, sort_key = R.ARTIFACT_LAYOUTS["passage"]
+    layout = R.ARTIFACT_FAMILIES["passage"].layout
+    id_col = layout.id_col
     before = sorted(
         tuple(r)
         for r in R.read_artifact_live(spark, p, id_col).collect()
     )
-    R.compact_tombstones(spark, p, part, id_col, sort_key)
+    R.compact_tombstones(spark, p, layout)
     assert not os.path.isdir(os.path.join(p, "_tombstones"))
     after = sorted(
         tuple(r) for r in spark.read.parquet(p).collect()
     )
     assert after == before and after
-    R.compact_tombstones(spark, p, part, id_col, sort_key)  # no-op
+    R.compact_tombstones(spark, p, layout)  # no-op
     assert sorted(
         tuple(r) for r in spark.read.parquet(p).collect()
     ) == before
@@ -369,7 +374,7 @@ def test_compacted_sink_clears_every_family_sidecar(spark):
         plain = _norm(spark.read.parquet(p).collect())
         live = _norm(
             R.read_artifact_live(
-                spark, p, R.ARTIFACT_LAYOUTS[fam][1]
+                spark, p, R.ARTIFACT_FAMILIES[fam].layout.id_col
             ).collect()
         )
         assert plain == live, fam
@@ -444,7 +449,7 @@ def test_media_artifact_retraction_live_equals_compacted_equals_rebuilt(spark):
     )
     rebuilt = rows(media_sig_bands(spark, SF_DIR, docs=surv_uni))
     assert live == rebuilt and live
-    compact_tombstones(spark, priv, "band_id", "doc_id", "band_val")
+    compact_tombstones(spark, priv, D.SIG)
     compacted = rows(spark.read.parquet(priv))
     assert compacted == live
     shutil.rmtree(priv, ignore_errors=True)

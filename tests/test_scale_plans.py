@@ -1198,39 +1198,53 @@ def test_repeated_passages_single_digest_shuffle_no_join(spark):
 def test_artifact_files_sorted_by_probe_key(spark):
     # The artifacts' scale story includes row-group statistics pruning,
     # which only works if each written file is sorted by the probe key
-    # (band_val / vec_id). Pin the layout: every parquet data file in
-    # one partition directory of each artifact holds a non-decreasing
-    # key column.
+    # (the layout's sort key). Pin the layout for every standing
+    # artifact, its append twin, and the in-place rewrites (label
+    # maintenance, label and artifact retraction): every parquet data
+    # file in every partition directory holds a non-decreasing key.
     import glob as _glob
     import os as _os
 
     import pyarrow.parquet as _pq
 
-    from quty_server_spark.operators.dedup import (
-        lake_minhash_artifact,
-        lake_signature_artifact,
-    )
-    from quty_server_spark.operators.similarity import ivf_postings_artifact
+    from quty_server_spark.operators import dedup as D
+    from quty_server_spark.operators import multimodal as M
+    from quty_server_spark.operators import pipeline as P
+    from quty_server_spark.operators import retract as R
+    from quty_server_spark.operators import similarity as S
 
-    for path_fn, part_glob, key in (
-        (lake_signature_artifact, "band_id=0", "band_val"),
-        (lake_minhash_artifact, "band_id=0", "sig"),
-        (ivf_postings_artifact, "cell=*", "vec_id"),
-    ):
-        root = path_fn(spark, SF_DIR)
-        part_dirs = sorted(_glob.glob(_os.path.join(root, part_glob)))
+    retracted = R.retracted_artifact_paths(spark, SF_DIR)
+    cases = [
+        (D.lake_signature_artifact(spark, SF_DIR), D.SIG),
+        (D.appended_signature_artifact(spark, SF_DIR), D.SIG),
+        (D.lake_minhash_artifact(spark, SF_DIR), D.MINHASH),
+        (D.appended_minhash_artifact(spark, SF_DIR), D.MINHASH),
+        (D.lake_passage_artifact(spark, SF_DIR), D.PASSAGE),
+        (D.appended_passage_artifact(spark, SF_DIR), D.PASSAGE),
+        (S.ivf_postings_artifact(spark, SF_DIR), S.IVF),
+        (S.appended_ivf_artifact(spark, SF_DIR), S.IVF),
+        (M.media_signature_artifact(spark, SF_DIR), D.SIG),
+        (M.appended_media_signature_artifact(spark, SF_DIR), D.SIG),
+        (D.maintained_cluster_labels_artifact(spark, SF_DIR), D.LABELS),
+        (R.retracted_cluster_labels_artifact(spark, SF_DIR), D.LABELS),
+        (P.appended_training_shards(spark, SF_DIR), P.TRAIN_SHARDS),
+    ] + [
+        (retracted[fam], f.layout) for fam, f in R.ARTIFACT_FAMILIES.items()
+    ]
+    for root, layout in cases:
+        key = layout.sort_key
+        part_dirs = sorted(_glob.glob(_os.path.join(root, f"{layout.part}=*")))
         assert part_dirs, f"no partition dirs under {root}"
-        files = sorted(_glob.glob(_os.path.join(part_dirs[0], "*.parquet")))
-        assert files, f"no parquet files in {part_dirs[0]}"
         checked = 0
-        for f in files:
-            vals = _pq.read_table(f, columns=[key])[key].to_pylist()
-            if len(vals) > 1:
-                assert all(
-                    a <= b for a, b in zip(vals, vals[1:])
-                ), f"{f} not sorted by {key}"
-                checked += 1
-        assert checked >= 1, "no multi-row file to check sortedness on"
+        for d in part_dirs:
+            for f in sorted(_glob.glob(_os.path.join(d, "*.parquet"))):
+                vals = _pq.read_table(f, columns=[key])[key].to_pylist()
+                if len(vals) > 1:
+                    assert all(
+                        a <= b for a, b in zip(vals, vals[1:])
+                    ), f"{f} not sorted by {key}"
+                    checked += 1
+        assert checked >= 1, f"no multi-row file under {root}"
 
 
 def test_snapshot_label_broadcast_gated(spark, monkeypatch):
