@@ -74,21 +74,31 @@ def oavg(expr: str) -> str:
     return f"(CAST(SUM(CAST({expr} AS DECIMAL(38,6))) AS DOUBLE) / COUNT({expr}))"
 
 
-def ensure_checkpoint_dir(spark) -> None:
-    """Set a session-scoped reliable-checkpoint dir if none is configured,
-    removed at interpreter exit — shared by every BSP loop (dedup
-    components, pagerank) so whichever runs first claims ONE cleaned-up
-    dir instead of each module bootstrapping its own leak.
+# Sidecars: small tables stored under an underscore-prefixed directory
+# inside an artifact root, which parquet readers of the root skip (the
+# _SUCCESS / _metadata convention). Read and written only through
+# read_sidecar / write_sidecar.
+TOMBSTONES = "_tombstones"  # retracted ids not yet compacted away
+LABEL_HOMES = "_label_homes"  # label -> home buckets holding its rows
+CENTROIDS = "_centroids"  # the IVF coarse quantizer
 
-    checkpointDir is only readable via the JVM SparkContext (no public
-    PySpark getter)."""
-    if not spark.sparkContext._jsc.sc().getCheckpointDir().isDefined():
-        import atexit
-        import tempfile
 
-        d = tempfile.mkdtemp(prefix="quty_ckpt_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        spark.sparkContext.setCheckpointDir(d)
+def read_sidecar(spark: SparkSession, path: str, name: str) -> DataFrame:
+    """The ``name`` sidecar of the artifact at ``path``. Read as an
+    explicit list of its part files: a directory or glob read of an
+    underscore-prefixed path logs a false "All paths were ignored"
+    warning although it reads the rows."""
+    d = os.path.join(path, name)
+    return spark.read.parquet(
+        *sorted(os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet"))
+    )
+
+
+def write_sidecar(df: DataFrame, path: str, name: str) -> None:
+    """Write ``df`` whole as the ``name`` sidecar of the artifact at
+    ``path``, replacing any earlier one. ``df`` must not read the
+    sidecar it replaces (checkpoint it first)."""
+    df.write.mode("overwrite").parquet(os.path.join(path, name))
 
 
 def overlap(*legs: Callable[[], Any]) -> list[Any]:

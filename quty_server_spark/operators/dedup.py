@@ -18,8 +18,6 @@ UDFs — so whole-stage codegen applies end-to-end.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -30,13 +28,19 @@ from quty_server_spark.functions.hashing import (
     sql_hash60,
 )
 from quty_server_spark.operators._helpers import (
+    LABEL_HOMES,
     Layout,
-    ensure_checkpoint_dir,
     load_table,
     overlap,
+    read_sidecar,
+    write_sidecar,
 )
 from quty_server_spark.plans.registry import registry
-from quty_server_spark.session import session_artifact, session_memo
+from quty_server_spark.session import (
+    ensure_checkpoint_dir,
+    session_artifact,
+    session_memo,
+)
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -2780,9 +2784,7 @@ def _write_home_bucket_layout(labels: DataFrame, path: str) -> None:
         F.pmod(F.col("lbl"), F.lit(LABEL_HOME_BUCKETS)).cast("int"),
     )
     LABELS.write(art0, path)
-    art0.select("lbl", "lbl_bucket").distinct().write.parquet(
-        os.path.join(path, "_label_homes")
-    )
+    write_sidecar(art0.select("lbl", "lbl_bucket").distinct(), path, LABEL_HOMES)
 
 
 def apply_cluster_label_maintenance(
@@ -2839,7 +2841,7 @@ def _apply_maintenance_for_state(
     state — shared by the nightly apply (whose state comes from the
     session memo) and the continuous maintenance stream (whose state is
     per micro-batch)."""
-    homes = spark.read.parquet(os.path.join(path, "_label_homes"))
+    homes = read_sidecar(spark, path, LABEL_HOMES)
     standing = homes.select(F.col("lbl").alias("old_lbl")).distinct()
     # Queued = standing labels whose contracted-BSP label moved. Joined
     # by membership in the sidecar's label set — NOT by node % 10 —
@@ -3026,9 +3028,7 @@ def _run_cluster_label_maintenance(
         .localCheckpoint(eager=True),
         lambda: _append_label_rows(new_nodes, path),
     )
-    new_homes.write.mode("overwrite").parquet(
-        os.path.join(path, "_label_homes")
-    )
+    write_sidecar(new_homes, path, LABEL_HOMES)
 
 
 def _append_label_rows(rows: DataFrame, path: str) -> None:

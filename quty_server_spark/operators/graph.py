@@ -25,12 +25,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from quty_server_spark.operators._helpers import (
-    ensure_checkpoint_dir,
-    load_table,
-)
+from quty_server_spark.operators._helpers import load_table
 from quty_server_spark.operators.dedup import BROADCAST_NODES_MAX
 from quty_server_spark.plans.registry import registry
+from quty_server_spark.session import ensure_checkpoint_dir
 
 PPB = 1_000_000_000  # rank unit: parts-per-billion
 TELE = PPB - PPB * 85 // 100  # undamped teleport mass, precomputed (int32-safe)
@@ -270,13 +268,6 @@ PAGERANK_MAX_ROUNDS = 20
 PAGERANK_CKPT_EVERY = 5
 
 
-def _ensure_ckpt_dir(spark: SparkSession) -> None:
-    # Shared with dedup's BSP loop: one atexit-cleaned dir per session,
-    # whichever loop bootstraps first (_helpers.ensure_checkpoint_dir),
-    # so long-lived sessions don't accrete superseded rank vectors.
-    ensure_checkpoint_dir(spark)
-
-
 def pagerank_converged(
     spark: SparkSession,
     edges: DataFrame,
@@ -296,7 +287,7 @@ def pagerank_converged(
     single per-iteration action with the L1-delta aggregate (one job,
     one driver-side scalar per superstep); every PAGERANK_CKPT_EVERY-th
     iteration checkpoints reliably. Returns ``(ranks, iterations)``."""
-    _ensure_ckpt_dir(spark)
+    ensure_checkpoint_dir(spark)
     # Lazy preamble (r17, guide §1.2): one count materializes edges AND
     # nodes; outdeg and the initial rank vector materialize inside the
     # first superstep's single action — 1 preamble job instead of 5.

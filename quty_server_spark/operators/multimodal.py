@@ -940,7 +940,7 @@ def _tombstoned_media_copy(spark: SparkSession, sf_dir: str, kind: str) -> str:
         RETRACT_MOD,
         tombstoned_copy,
     )
-    from quty_server_spark.session import session_tmp_dir
+    from quty_server_spark.session import fresh_tmp_dir
 
     victims = percep_media_universe(spark, sf_dir).filter(
         F.col("doc_id") % 10 == RETRACT_MOD
@@ -948,7 +948,7 @@ def _tombstoned_media_copy(spark: SparkSession, sf_dir: str, kind: str) -> str:
     return tombstoned_copy(
         spark,
         media_signature_artifact(spark, sf_dir),
-        session_tmp_dir(spark, kind, sf_dir),
+        fresh_tmp_dir(spark, kind, sf_dir),
         victims,
     )
 

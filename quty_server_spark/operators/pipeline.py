@@ -1423,12 +1423,9 @@ def sink_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     here as an n_docs outlier — this audit is the check a training run
     gates on before it starts burning accelerator hours.
     """
-    import shutil
+    from quty_server_spark.session import fresh_tmp_dir
 
-    from quty_server_spark.session import session_tmp_dir
-
-    out = session_tmp_dir(spark, "quty_train_shards", sf_dir)
-    shutil.rmtree(out, ignore_errors=True)
+    out = fresh_tmp_dir(spark, "quty_train_shards", sf_dir)
     _write_training_shards(corpus_training_snapshot(spark, sf_dir), out)
     return _shard_summary(spark.read.parquet(out))
 
@@ -1656,13 +1653,10 @@ def sink_training_shards_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     0: a document admitted by the snapshot's whitespace-token gates but
     holding zero [a-z] words (no BPE symbols) stays in its shard with
     an explicit zero, on both engines."""
-    import shutil
-
     from quty_server_spark.operators.textops import text_bpe_encode_vocab
-    from quty_server_spark.session import session_tmp_dir
+    from quty_server_spark.session import fresh_tmp_dir
 
-    out = session_tmp_dir(spark, "quty_train_shards_bpe", sf_dir)
-    shutil.rmtree(out, ignore_errors=True)
+    out = fresh_tmp_dir(spark, "quty_train_shards_bpe", sf_dir)
     snap = corpus_training_snapshot(spark, sf_dir)
     bpe = text_bpe_encode_vocab(spark, sf_dir)
     snap_bpe = snap.join(bpe, "doc_id", "left").withColumn(

@@ -63,7 +63,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from quty_server_spark.operators._helpers import Layout, load_table, overlap
+from quty_server_spark.operators._helpers import (
+    CENTROIDS,
+    LABEL_HOMES,
+    TOMBSTONES,
+    Layout,
+    load_table,
+    overlap,
+    read_sidecar,
+    write_sidecar,
+)
 from quty_server_spark.operators.dedup import (
     _BRIDGE_FILL,
     _BRIDGE_WA,
@@ -102,9 +111,9 @@ from quty_server_spark.operators.similarity import (
 )
 from quty_server_spark.plans.registry import registry
 from quty_server_spark.session import (
+    fresh_tmp_dir,
     session_artifact,
     session_memo,
-    session_tmp_dir,
 )
 
 # The deterministic victim set: lake docs / vectors with id % 10 == 3.
@@ -243,7 +252,7 @@ def _victim_cells(
     assigned against the artifact's K-row centroid SIDECAR (never a
     posting scan); the quantizer itself is NOT retrained."""
     vvec = _corpus(spark, sf_dir).filter(F.col("vec_id") % 10 == RETRACT_MOD)
-    cent = spark.read.parquet(os.path.join(path, "_centroids"))
+    cent = read_sidecar(spark, path, CENTROIDS)
     return (
         _ivf_cells_plan(vvec, cent)
         .select("cell")
@@ -301,8 +310,7 @@ def _copy_artifact(src: str, dst: str) -> None:
     are shared by every other registered query — in production the
     retraction runs on the standing artifact in place; the copy keeps
     the untouched-files byte-identity pin meaningful (the unaffected
-    files ARE the original build's bytes)."""
-    shutil.rmtree(dst, ignore_errors=True)
+    files ARE the original build's bytes). ``dst`` must not exist."""
     shutil.copytree(src, dst)
 
 
@@ -341,7 +349,7 @@ def retracted_artifact_paths(
         def _leg(fam: str) -> str:
             f = ARTIFACT_FAMILIES[fam]
             vic = victims[f.victim]
-            p = session_tmp_dir(spark, f"quty_retract_{fam}", sf_dir)
+            p = fresh_tmp_dir(spark, f"quty_retract_{fam}", sf_dir)
             _copy_artifact(base[fam], p)
             _retract_rows(
                 spark, p, f.layout, f.affected(spark, sf_dir, p, vic), vic
@@ -506,9 +514,6 @@ def _tagged_retract_summary(frames: dict[str, DataFrame]) -> DataFrame:
 # in tests/test_retract_semantics.py); read cost: one broadcast hash
 # probe per row until compaction.
 
-_TOMBSTONES = "_tombstones"
-
-
 def read_artifact_live(
     spark: SparkSession, path: str, id_col: str
 ) -> DataFrame:
@@ -516,10 +521,9 @@ def read_artifact_live(
     not tombstoned. Plain read when no sidecar exists, so consumers can
     adopt this reader unconditionally."""
     art = spark.read.parquet(path)
-    tp = os.path.join(path, _TOMBSTONES)
-    if not os.path.isdir(tp):
+    if not os.path.isdir(os.path.join(path, TOMBSTONES)):
         return art
-    tomb = spark.read.parquet(tp).select(
+    tomb = read_sidecar(spark, path, TOMBSTONES).select(
         F.col("victim_id").alias(id_col)
     )
     return art.join(broadcast(tomb), id_col, "left_anti")
@@ -531,18 +535,16 @@ def _write_tombstones(
     """Idempotent O(victims) tombstone write: union with any standing
     sidecar, distinct, rewrite whole (the sidecar is victim-list-sized
     metadata, like _label_homes)."""
-    tp = os.path.join(path, _TOMBSTONES)
     new = victims.select(
         F.col(victims.columns[0]).cast("long").alias("victim_id")
     )
-    if os.path.isdir(tp):
+    if os.path.isdir(os.path.join(path, TOMBSTONES)):
         new = (
-            new.unionByName(spark.read.parquet(tp))
+            new.unionByName(read_sidecar(spark, path, TOMBSTONES))
             .distinct()
             .localCheckpoint(eager=True)
         )
-    shutil.rmtree(tp, ignore_errors=True)
-    new.write.parquet(tp)
+    write_sidecar(new, path, TOMBSTONES)
 
 
 def tombstoned_copy(
@@ -566,10 +568,10 @@ def compact_tombstones(spark: SparkSession, path: str, layout: Layout) -> None:
     (id, partition) semi-joined against the broadcast tombstones — the
     compaction job reads those partitions to rewrite them anyway. The
     live view is invariant across compaction (pinned)."""
-    tp = os.path.join(path, _TOMBSTONES)
+    tp = os.path.join(path, TOMBSTONES)
     if not os.path.isdir(tp):
         return
-    tomb = spark.read.parquet(tp).localCheckpoint(eager=True)
+    tomb = read_sidecar(spark, path, TOMBSTONES).localCheckpoint(eager=True)
     vic = tomb.select(F.col("victim_id").alias(layout.id_col))
     affected = (
         spark.read.parquet(path)
@@ -596,7 +598,7 @@ def tombstoned_artifact_paths(
             fam: tombstoned_copy(
                 spark,
                 f.build(spark, sf_dir),
-                session_tmp_dir(spark, f"quty_tomb_{fam}", sf_dir),
+                fresh_tmp_dir(spark, f"quty_tomb_{fam}", sf_dir),
                 victims[f.victim],
             )
             for fam, f in ARTIFACT_FAMILIES.items()
@@ -705,7 +707,7 @@ def apply_cluster_label_retraction(
        convention); buckets left empty are removed explicitly; the
        sidecar drops the retired labels and gains the new ones."""
     art = spark.read.parquet(path)
-    homes = spark.read.parquet(os.path.join(path, "_label_homes"))
+    homes = read_sidecar(spark, path, LABEL_HOMES)
     vic = victims.select(F.col(victims.columns[0]).alias("node"))
     aff_lbl = (
         art.join(broadcast(vic), "node", "leftsemi")
@@ -763,8 +765,7 @@ def apply_cluster_label_retraction(
         .unionByName(relabeled.select("lbl", "lbl_bucket").distinct())
         .localCheckpoint(eager=True)
     )
-    shutil.rmtree(os.path.join(path, "_label_homes"), ignore_errors=True)
-    new_homes.write.parquet(os.path.join(path, "_label_homes"))
+    write_sidecar(new_homes, path, LABEL_HOMES)
 
 
 def retracted_cluster_labels_artifact(

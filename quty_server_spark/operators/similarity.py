@@ -20,7 +20,6 @@ vec_id tiebreaks.
 
 from __future__ import annotations
 
-import os
 import random
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -34,7 +33,13 @@ from quty_server_spark.functions.vectors import (
     dot,
     norm,
 )
-from quty_server_spark.operators._helpers import Layout, load_table
+from quty_server_spark.operators._helpers import (
+    CENTROIDS,
+    Layout,
+    load_table,
+    read_sidecar,
+    write_sidecar,
+)
 from quty_server_spark.plans.registry import registry
 from quty_server_spark.session import session_artifact
 
@@ -1221,7 +1226,7 @@ def _write_ivf(points: DataFrame, cent: DataFrame, path: str) -> None:
     against THIS tiny table instead of re-deriving the stride sample
     from a corpus-sized posting scan."""
     IVF.write(_ivf_cells_plan(points, cent), path)
-    cent.write.parquet(os.path.join(path, "_centroids"))
+    write_sidecar(cent, path, CENTROIDS)
 
 
 def ivf_postings_artifact(
@@ -1402,7 +1407,7 @@ def embedding_gate_lake(
         .filter(F.col("vec_id") % 10 != 0)
         .withColumn("vn", norm(F.col("v")))
     )
-    return lake, spark.read.parquet(os.path.join(path, "_centroids"))
+    return lake, read_sidecar(spark, path, CENTROIDS)
 
 
 def embedding_gate_pairs(
@@ -1586,7 +1591,7 @@ def appended_ivf_artifact(
             F.col("vec_id") % 10 != IVF_APPEND_BATCH_MOD
         )
         _write_ivf(base, _ivf_centroids(base), path)
-        sidecar = spark.read.parquet(os.path.join(path, "_centroids"))
+        sidecar = read_sidecar(spark, path, CENTROIDS)
         IVF.write(
             admitted_ivf_postings(spark, sf_dir, sidecar), path, "append"
         )

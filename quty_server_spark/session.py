@@ -27,10 +27,10 @@ from pyspark.sql import SparkSession
 # Confs that are runtime-settable and required/valuable regardless of who
 # built the SparkSession.
 RUNTIME_CONFS: dict[str, str] = {
-    # Defensive: through round 3 events.parquet carried TIMESTAMP(NANOS),
-    # scanned as long (ns) and converted in load_table. The round-4 fixtures
-    # are timestamp[us], but the conf is kept so a future regeneration back
-    # to nanos degrades to the handled int64 path instead of erroring.
+    # Defensive: older fixtures stored events.ts as TIMESTAMP(NANOS),
+    # scanned as long (ns) and converted in load_table. The current
+    # fixtures are timestamp[us], but the conf is kept so a regeneration
+    # back to nanos degrades to the handled int64 path instead of erroring.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Adaptive execution: runtime partition coalescing + skew-join splitting.
     "spark.sql.adaptive.enabled": "true",
@@ -91,7 +91,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
-        # r17: long multi-query sessions (bench, gates) accumulate
+        # Long multi-query sessions (bench, gates) accumulate
         # dropped localCheckpoint blocks and broadcasts whose JVM-side
         # cleanup waits on a driver GC cycle; the ContextCleaner's
         # periodic System.gc() defaults to 30min — far longer than a
@@ -107,46 +107,39 @@ def get_spark(
     return configure(builder.getOrCreate())
 
 
-# Scratch dirs created by THIS process, reclaimed at interpreter exit —
-# plus a stale-sibling sweep at creation time. Together they bound the
-# accumulation the application-id keying introduced (r11 ADVICE: app-id
-# paths are never revisited, so crashed/killed runs leaked parquet under
-# $TMPDIR forever).
-_CREATED_TMP_DIRS: set[str] = set()
+# Every scratch directory of this process lives under one root per
+# application, $TMPDIR/quty/<application id>/: removed at interpreter
+# exit, with a sweep of stale sibling roots when it is first handed out.
+_SCRATCH_TOP = "quty"
+_APP_ROOTS: set[str] = set()
 # Crash-leftover window. Deliberately LONG (7 days, not hours): a
-# sibling app-id dir belongs to another PROCESS whose liveness this one
-# cannot check, and artifact paths are memoized per session without
-# existence re-checks — deleting a live session's dir breaks its
-# readers mid-run rather than "forcing a rebuild". Normal exits are
+# sibling application root belongs to another PROCESS whose liveness
+# this one cannot check, and artifact paths are memoized per session
+# without existence re-checks, so deleting a live session's root breaks
+# its readers mid-run rather than forcing a rebuild. Normal exits are
 # reclaimed by atexit; this sweep only exists for crashed/killed runs,
-# and a 7-day-old live local[] session is implausible (r12 review).
+# and a 7-day-old live local[] session is implausible.
 _STALE_SIBLING_SECONDS = 7 * 24 * 3600
 
 
-def _cleanup_session_tmp_dirs() -> None:
-    for d in _CREATED_TMP_DIRS:
+def _cleanup_app_roots() -> None:
+    for d in _APP_ROOTS:
         shutil.rmtree(d, ignore_errors=True)
 
 
-def _prune_stale_siblings(kind_root: str, own_app_dir: str) -> None:
-    """Delete sibling application-id directories older than
-    _STALE_SIBLING_SECONDS — crash leftovers only (normal exits clean
-    up via atexit). The window is a week, not hours, because a sibling
-    belongs to another process whose liveness cannot be checked here
-    and whose memoized artifact readers would NOT rebuild on deletion
-    (paths are cached per session) — deleting a live session's dir is
-    cross-process breakage, not a cheap rebuild. Never touches this
-    session's own directory."""
+def _prune_stale_siblings(top: str, own_root: str) -> None:
+    """Delete sibling application roots under ``top`` whose mtime is
+    older than _STALE_SIBLING_SECONDS. Never touches ``own_root``."""
     import time
 
     try:
-        entries = os.listdir(kind_root)
+        entries = os.listdir(top)
     except OSError:
         return
     now = time.time()
     for e in entries:
-        p = os.path.join(kind_root, e)
-        if p == own_app_dir:
+        p = os.path.join(top, e)
+        if p == own_root:
             continue
         try:
             if now - os.stat(p).st_mtime > _STALE_SIBLING_SECONDS:
@@ -155,47 +148,66 @@ def _prune_stale_siblings(kind_root: str, own_app_dir: str) -> None:
             pass
 
 
-def session_tmp_dir(spark: SparkSession, kind: str, sf_dir: str) -> str:
-    """Session-scoped scratch directory for on-disk artifacts:
-    ``$TMPDIR/<kind>/<spark application id>/<sf basename>``.
+def _app_root(spark: SparkSession) -> str:
+    """This application's scratch root, ``$TMPDIR/quty/<application id>``.
 
-    The application id isolates concurrent sessions (e.g. a bench loop
-    and an oracle gate on the same sf_dir): without it, a second
-    session's forced rebuild ``rmtree``'s a predictable shared path and
-    can delete parquet row groups out from under the first session's
-    memoized reader mid-scan (r10 ADVICE). The path is NOT unique per
-    session object: every ``spark.newSession()`` shares its parent's
-    application id, so a fresh session's artifact build (see
-    :func:`session_artifact`) rewrites the same directory in place.
-
-    Reclamation (r11 ADVICE): the per-session app-id dir is registered
-    for atexit removal (covers every normal exit — the accumulation
-    case), and week-stale sibling app-id dirs are pruned at creation
-    time (covers crashed runs; see _prune_stale_siblings for why the
-    window is deliberately long)."""
+    The first call registers the root for atexit removal and sweeps
+    stale siblings. Later calls touch the root: writes land in nested
+    directories and never refresh its own mtime, so without this
+    heartbeat a live week-old session would look stale to a newer
+    sibling's sweep."""
     import atexit
 
-    kind_root = os.path.join(tempfile.gettempdir(), kind)
-    app_dir = os.path.join(kind_root, spark.sparkContext.applicationId)
-    if app_dir not in _CREATED_TMP_DIRS:
-        if not _CREATED_TMP_DIRS:
-            atexit.register(_cleanup_session_tmp_dirs)
-        _CREATED_TMP_DIRS.add(app_dir)
-        _prune_stale_siblings(kind_root, app_dir)
+    top = os.path.join(tempfile.gettempdir(), _SCRATCH_TOP)
+    root = os.path.join(top, spark.sparkContext.applicationId)
+    if root not in _APP_ROOTS:
+        if not _APP_ROOTS:
+            atexit.register(_cleanup_app_roots)
+        _APP_ROOTS.add(root)
+        _prune_stale_siblings(top, root)
     else:
-        # Heartbeat (r12 ADVICE): writes land nested under per-sf
-        # subdirectories and never refresh app_dir's own mtime, so a
-        # genuinely live week-old session could look stale to a newer
-        # sibling's prune sweep. Touching our own dir on each call
-        # keeps a live session's artifacts safe from siblings.
         try:
-            os.utime(app_dir)
+            os.utime(root)
         except OSError:
             pass
+    return root
+
+
+def session_tmp_dir(spark: SparkSession, kind: str, sf_dir: str) -> str:
+    """Path of the session-scoped scratch directory for ``kind`` over
+    ``sf_dir``: ``$TMPDIR/quty/<spark application id>/<kind>/<sf
+    basename>``. Only the path: nothing is created or removed (queries
+    that write there start from :func:`fresh_tmp_dir`).
+
+    The application id isolates concurrent sessions (e.g. a bench loop
+    and an oracle gate on the same sf_dir): a second process's rebuild
+    never deletes files under the first one's readers. The path is NOT
+    unique per session object: every ``spark.newSession()`` shares its
+    parent's application id, so a second call in the same application
+    rewrites the same directory in place."""
     return os.path.join(
-        app_dir,
-        os.path.basename(sf_dir.rstrip("/")),
+        _app_root(spark), kind, os.path.basename(sf_dir.rstrip("/"))
     )
+
+
+def fresh_tmp_dir(spark: SparkSession, kind: str, sf_dir: str) -> str:
+    """:func:`session_tmp_dir`'s path with whatever it held removed, so
+    an errorifexists write or a ``copytree`` to it works and nothing an
+    earlier call left there is read back."""
+    path = session_tmp_dir(spark, kind, sf_dir)
+    shutil.rmtree(path, ignore_errors=True)
+    return path
+
+
+def ensure_checkpoint_dir(spark: SparkSession) -> None:
+    """Point reliable checkpoints (the BSP loops' ``checkpoint()``) at
+    ``checkpoint/`` under this application's scratch root, unless a
+    checkpoint dir is already set. Only the JVM SparkContext can say
+    whether one is (PySpark has no getter)."""
+    if not spark.sparkContext._jsc.sc().getCheckpointDir().isDefined():
+        spark.sparkContext.setCheckpointDir(
+            os.path.join(_app_root(spark), "checkpoint")
+        )
 
 
 def session_memo(
@@ -241,16 +253,14 @@ def session_artifact(
     """Path of the on-disk artifact ``kind`` for ``sf_dir``, written by
     ``write(path)`` once per session (or again when ``rebuild``).
 
-    A :func:`session_memo` keyed by ``(kind, sf_dir)``. The directory is
-    :func:`session_tmp_dir`'s application-id-keyed path, so a concurrent
+    A :func:`session_memo` keyed by ``(kind, sf_dir)``, written to
+    :func:`fresh_tmp_dir`'s application-id-keyed path: a concurrent
     session's forced rebuild never deletes files under this session's
-    memoized readers. Each build first removes whatever the directory
-    holds, so a build never reads leftover state. Staged variants pass
-    their own ``kind``."""
+    memoized readers, and a build never reads leftover state. Staged
+    variants pass their own ``kind``."""
 
     def _build() -> str:
-        path = session_tmp_dir(spark, kind, sf_dir)
-        shutil.rmtree(path, ignore_errors=True)
+        path = fresh_tmp_dir(spark, kind, sf_dir)
         write(path)
         return path
 

@@ -16,26 +16,13 @@ in the scan node).
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from quty_server_spark.operators._helpers import dsum, load_table, osum
 from quty_server_spark.plans.registry import registry
-from quty_server_spark.session import configure
-
-
-def _workdir(sf_dir: str, name: str) -> str:
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "quty_formats",
-        os.path.basename(sf_dir.rstrip("/")),
-        name,
-    )
-    shutil.rmtree(path, ignore_errors=True)
-    return path
+from quty_server_spark.session import configure, fresh_tmp_dir
 
 
 @registry.query(
@@ -46,7 +33,7 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """customer → CSV (header) → read back with an explicit schema.
     Schema-on-read, not inference: at scale, inference is a second full
     scan."""
-    out = _workdir(sf_dir, "csv")
+    out = fresh_tmp_dir(spark, "quty_formats_csv", sf_dir)
     c = load_table(spark, sf_dir, "customer")
     c.write.option("header", "true").csv(out)
     return spark.read.schema(c.schema).option("header", "true").csv(out)
@@ -59,7 +46,7 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """part → JSON lines → read back with explicit schema (line-delimited
     JSON stays splittable; multiline JSON would not be)."""
-    out = _workdir(sf_dir, "json")
+    out = fresh_tmp_dir(spark, "quty_formats_json", sf_dir)
     p = load_table(spark, sf_dir, "part")
     p.write.json(out)
     return spark.read.schema(p.schema).json(out)
@@ -71,7 +58,7 @@ def source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """nation → ORC → read back (second columnar format besides parquet)."""
-    out = _workdir(sf_dir, "orc")
+    out = fresh_tmp_dir(spark, "quty_formats_orc", sf_dir)
     n = load_table(spark, sf_dir, "nation")
     n.write.orc(out)
     return spark.read.orc(out)
@@ -89,7 +76,7 @@ def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition. The filter on the partition column prunes directories at
     planning time (PartitionFilters, zero data touched for other types) —
     the core 100 TB layout technique this engine assumes for fact tables."""
-    out = _workdir(sf_dir, "part_parquet")
+    out = fresh_tmp_dir(spark, "quty_formats_part_parquet", sf_dir)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "value", "ts", "event_type"
     )
@@ -114,9 +101,9 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan→SMJ→agg per bucket (asserted in tests/test_scale_plans.py). At
     100 TB this is THE technique for repeated fact-fact joins: pay the
     shuffle once at layout time, never per query. Tables are external
-    (explicit /tmp path) so the driver's session needs no warehouse."""
+    (a session scratch path) so the driver's session needs no warehouse."""
     suffix = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), "quty_bucketed", suffix)
+    base = fresh_tmp_dir(spark, "quty_bucketed", sf_dir)
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
     for df, tbl, key in [(o, f"qss_orders_{suffix}", "o_orderkey"),
@@ -163,7 +150,7 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     what this pins. Per-file pruning still applies — each generation's
     files carry only their own columns.
     """
-    out = _workdir(sf_dir, "evolve_parquet")
+    out = fresh_tmp_dir(spark, "quty_formats_evolve_parquet", sf_dir)
     n = load_table(spark, sf_dir, "nation")
     v1 = n.select("n_nationkey", "n_name", F.lit(1).alias("v"))
     v2 = n.select(
@@ -203,7 +190,7 @@ def source_json_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ``_corrupt_record`` column stays in the schema as the dead-letter
     branch a real pipeline would persist.
     """
-    out = _workdir(sf_dir, "corrupt_jsonl")
+    out = fresh_tmp_dir(spark, "quty_formats_corrupt_jsonl", sf_dir)
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type") == "click"
     )
@@ -280,7 +267,7 @@ def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-modify-write cycle localCheckpoints the kept rows first because
     Spark (correctly) refuses to overwrite a path it is still reading.
     """
-    out = _workdir(sf_dir, "merge_parquet")
+    out = fresh_tmp_dir(spark, "quty_formats_merge_parquet", sf_dir)
     cols = ["c_custkey", "c_name", "c_mktsegment", "c_acctbal"]
     c = load_table(spark, sf_dir, "customer").select(*cols)
     c.write.partitionBy("c_mktsegment").parquet(out)
@@ -353,8 +340,8 @@ def sink_compacted_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale: repartition(target_file_count, col)). Readback of the
     compacted layout is verified against the source aggregate; the
     file-count collapse itself is pinned in tests/test_scale_plans.py."""
-    frag = _workdir(sf_dir, "frag_parquet")
-    compact = _workdir(sf_dir, "compact_parquet")
+    frag = fresh_tmp_dir(spark, "quty_formats_frag_parquet", sf_dir)
+    compact = fresh_tmp_dir(spark, "quty_formats_compact_parquet", sf_dir)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "value", "event_type"
     )
@@ -420,7 +407,7 @@ def sink_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     representation-sensitivity class as DuckDB's HUGEINT promotion; the
     oracle value-range lint in tools/check_oracle.py keeps this class
     structurally dead."""
-    out = _workdir(sf_dir, "scd2_parquet")
+    out = fresh_tmp_dir(spark, "quty_formats_scd2_parquet", sf_dir)
     cols = ["c_custkey", "c_mktsegment", "c_acctbal"]
     lo = F.lit("1992-01-01").cast("timestamp")
     hi = F.lit("2261-12-31").cast("timestamp")
@@ -497,7 +484,7 @@ def sink_incremental_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-maintainable-aggregate pattern (COUNT/SUM merge; AVG derives at
     read) every 100 TB reporting layer runs instead of full refresh; the
     deterministic even/odd split stands in for arrival batches."""
-    out = _workdir(sf_dir, "matview_parquet")
+    out = fresh_tmp_dir(spark, "quty_formats_matview_parquet", sf_dir)
     ev = load_table(spark, sf_dir, "events").select(
         F.date_trunc("hour", "ts").alias("hour_start"),
         "event_type",
@@ -577,7 +564,7 @@ def sink_zorder_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     the read-back data, proving the sink round-trips; the clustering
     (disjoint per-file zval ranges) is pinned in
     tests/test_scale_plans.py."""
-    out = _workdir(sf_dir, "zorder")
+    out = fresh_tmp_dir(spark, "quty_formats_zorder", sf_dir)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice"
     )
@@ -620,7 +607,7 @@ def join_dpp_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     read. THE mechanism that lets a 100 TB star join touch 2 of 1000
     date/tenant partitions. Plan pinned in tests/test_scale_plans.py
     (dynamicpruningexpression on the scan)."""
-    out = _workdir(sf_dir, "dpp_parquet")
+    out = fresh_tmp_dir(spark, "quty_formats_dpp_parquet", sf_dir)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "value", "event_type"
     )
@@ -667,7 +654,7 @@ def sink_manifest_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import json as _json
 
-    out = _workdir(sf_dir, "manifest_tbl")
+    out = fresh_tmp_dir(spark, "quty_formats_manifest_tbl", sf_dir)
     os.makedirs(out, exist_ok=True)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
@@ -782,12 +769,7 @@ def sink_python_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFrame
     configure(spark)  # see source_python_datasource: pushFilters conf
     register_synth_source(spark)
     register_synth_sink(spark)
-    workdir = os.path.join(
-        tempfile.gettempdir(),
-        "quty_synth_sink",
-        os.path.basename(sf_dir.rstrip("/")),
-    )
-    shutil.rmtree(workdir, ignore_errors=True)
+    workdir = fresh_tmp_dir(spark, "quty_synth_sink", sf_dir)
     os.makedirs(workdir)
     df = (
         spark.read.format("quty_synth")

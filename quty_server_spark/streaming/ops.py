@@ -6,8 +6,8 @@ event-time windows / stateful subscription fold / stream-static routing
 joins → sinks.
 
 Verification strategy (SURVEY.md §5): every streaming query here runs the
-real streaming machinery — ``readStream`` file source, watermarks,
-``trigger(availableNow=True)``, memory or foreachBatch sink — then returns
+real streaming machinery — ``readStream`` file source, watermarks, an
+availableNow trigger, memory or foreachBatch sink — then returns
 the materialized result as a batch DataFrame so the driver's DuckDB oracle
 can check it exactly like any batch query. With availableNow over one
 input file the stream processes everything in one micro-batch, so
@@ -56,7 +56,11 @@ from quty_server_spark.operators.dedup import (
 from quty_server_spark.operators._helpers import load_table, overlap
 from quty_server_spark.operators.similarity import SQL_EMB_GATE
 from quty_server_spark.plans.registry import registry
-from quty_server_spark.session import configure, session_tmp_dir
+from quty_server_spark.session import (
+    configure,
+    fresh_tmp_dir,
+    session_tmp_dir,
+)
 
 EVENTS_RAW_SCHEMA = StructType(
     [
@@ -99,50 +103,54 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _run_available_now(
+    df: DataFrame,
+    sink: str | Callable[[DataFrame, int], None],
+    checkpoint: str | None = None,
+    output_mode: str = "append",
+    name: str | None = None,
+    **options: str,
+) -> None:
+    """Run the streaming ``df`` under the availableNow trigger: it
+    processes everything its source holds at start, in as many
+    micro-batches as the source's own limits make, then stops, and this
+    returns. ``sink`` is a foreachBatch body or a sink format name
+    (``options`` go to the writer; ``name`` is the query name a memory
+    sink registers its table under). A later run on the same
+    ``checkpoint`` resumes from its committed offsets; without one each
+    run starts from the beginning of the source."""
+    w = df.writeStream.outputMode(output_mode).options(**options)
+    w = w.foreachBatch(sink) if callable(sink) else w.format(sink)
+    if checkpoint is not None:
+        w = w.option("checkpointLocation", checkpoint)
+    if name is not None:
+        w = w.queryName(name)
+    w.trigger(availableNow=True).start().awaitTermination()
+
+
 def run_to_memory(df: DataFrame, name: str, output_mode: str) -> DataFrame:
     """Run a streaming DataFrame to completion (availableNow) into a memory
     sink and return the materialized table."""
-    spark = df.sparkSession
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    _run_available_now(df, "memory", output_mode=output_mode, name=name)
+    return df.sparkSession.table(name)
 
 
 def run_to_parquet(df: DataFrame, name: str, sf_dir: str) -> DataFrame:
     """Run an APPEND-mode streaming DataFrame to completion (availableNow)
     into a parquet file sink under the session scratch dir and return the
-    read-back frame — the large-output twin of :func:`run_to_memory`
-    (r17, guide §5 "the driver should do almost no data work"): a memory
-    sink serializes EVERY result row through the driver single-threaded,
-    which for a fan-out-shaped stream (10.3 M rows at sf0.1) cost ~90 s
-    of pure driver ingest; the file sink keeps rows executor-side and
-    the returned scan is a parallel parquet read. Rows are identical —
-    the sink only changes WHERE the materialization lives. Fresh dirs
-    per call, so every invocation re-runs the stream from the source
-    exactly like the memory sink (no cross-run reuse)."""
-    import shutil
-
-    from quty_server_spark.session import session_tmp_dir
-
+    read-back frame — the large-output twin of :func:`run_to_memory`,
+    so the driver does almost no data work: a memory sink serializes
+    EVERY result row through the driver single-threaded, which for a
+    fan-out-shaped stream (10.3 M rows at sf0.1) cost ~90 s of pure
+    driver ingest; the file sink keeps rows executor-side and the
+    returned scan is a parallel parquet read. Rows are identical — the
+    sink only changes WHERE the materialization lives. Fresh dirs per
+    call, so every invocation re-runs the stream from the source exactly
+    like the memory sink (no cross-run reuse)."""
     spark = df.sparkSession
-    root = os.path.join(session_tmp_dir(spark, "stream_sink", sf_dir), name)
-    shutil.rmtree(root, ignore_errors=True)
-    out, ckpt = os.path.join(root, "data"), os.path.join(root, "ckpt")
-    q = (
-        df.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    root = fresh_tmp_dir(spark, f"stream_sink_{name}", sf_dir)
+    out = os.path.join(root, "data")
+    _run_available_now(df, "parquet", os.path.join(root, "ckpt"), path=out)
     return spark.read.schema(df.schema).parquet(out)
 
 
@@ -562,16 +570,8 @@ def stream_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_deliveries",
         )
     )
-    outdir = session_tmp_dir(spark, "quty_stream_e2e", sf_dir)
-    shutil.rmtree(outdir, ignore_errors=True)
-    os.makedirs(outdir)
-    q = (
-        agg.writeStream.foreachBatch(_epoch_writer(outdir))
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    outdir = fresh_tmp_dir(spark, "quty_stream_e2e", sf_dir)
+    _run_available_now(agg, _epoch_writer(outdir), output_mode="update")
     upd = _read_epochs(spark, outdir)
     return upd.groupBy("hour_start", "channel", "member_id").agg(
         F.max_by("n_deliveries", "epoch").alias("n_deliveries")
@@ -606,9 +606,9 @@ def stream_route_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     routed = msgs.join(broadcast(subs), "channel").select(
         "event_id", "channel", "member_id"
     )
-    # r17: file sink, not memory — the fan-out output is |messages x
+    # File sink, not memory — the fan-out output is |messages x
     # subscribers| (10.3 M rows at sf0.1) and a memory sink ingests all
-    # of it through the driver (guide §5). See run_to_parquet.
+    # of it through the driver. See run_to_parquet.
     return run_to_parquet(routed, "routed", sf_dir)
 
 
@@ -1014,12 +1014,22 @@ def _as_ns_events(df: DataFrame) -> DataFrame:
     )
 
 
-def _stage_single_file(df: DataFrame, stage_root: str, name: str) -> str:
-    """Write ``df`` as exactly one parquet file; return that file's path."""
-    d = os.path.join(stage_root, f"stage_{name}")
-    df.coalesce(1).write.mode("overwrite").parquet(d)
-    part = next(p for p in os.listdir(d) if p.endswith(".parquet"))
-    return os.path.join(d, part)
+def _stage_ordered(frames: list[DataFrame], indir: str) -> None:
+    """Stage each of ``frames`` as ONE parquet file in ``indir``, after
+    the files already there, with modification times in that order. The
+    file source reads oldest first, so under ``maxFilesPerTrigger=1``
+    each frame is one micro-batch, in order, and a file staged by a later
+    call is what a resumed query reads next. An empty frame still stages
+    a schema-only file, so micro-batch numbering never shifts."""
+    os.makedirs(indir, exist_ok=True)
+    stage = f"{indir}_stage"
+    for i, df in enumerate(frames, len(os.listdir(indir))):
+        df.coalesce(1).write.mode("overwrite").parquet(stage)
+        part = next(p for p in os.listdir(stage) if p.endswith(".parquet"))
+        dst = os.path.join(indir, f"file{i}.parquet")
+        os.replace(os.path.join(stage, part), dst)
+        os.utime(dst, (1_700_000_000 + i * 1000,) * 2)
+    shutil.rmtree(stage, ignore_errors=True)
 
 
 def _epoch_writer(outdir: str):
@@ -1036,12 +1046,24 @@ def _epoch_writer(outdir: str):
     return write_epoch
 
 
+def _committed_epochs(outdir: str) -> list[int]:
+    """Sorted ids of the epochs the :func:`_epoch_writer` sink at
+    ``outdir`` has committed; empty before its first commit."""
+    if not os.path.isdir(outdir):
+        return []
+    return sorted(
+        int(d.split("=", 1)[1])
+        for d in os.listdir(outdir)
+        if d.startswith("epoch=")
+    )
+
+
 def _read_epochs(spark: SparkSession, outdir: str) -> DataFrame:
     """Every epoch the :func:`_epoch_writer` sink at ``outdir``
     committed, with its ``epoch`` partition column, eagerly
-    ``localCheckpoint``-ed: ``outdir`` is a session_tmp_dir that the
-    next call for the same sf_dir rmtree's, and the returned frame must
-    survive that."""
+    ``localCheckpoint``-ed: ``outdir`` is a :func:`fresh_tmp_dir` that
+    the next call for the same sf_dir clears, and the returned frame
+    must survive that."""
     return (
         spark.read.option("basePath", outdir)
         .parquet(os.path.join(outdir, "epoch=*"))
@@ -1082,12 +1104,9 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     late_cut = lo + dt.timedelta(hours=1)
     spacer_cut = hi - dt.timedelta(hours=2)
     hold_cut = hi - dt.timedelta(hours=1)
-    workdir = session_tmp_dir(spark, "quty_stream_late", sf_dir)
-    shutil.rmtree(workdir, ignore_errors=True)
+    workdir = fresh_tmp_dir(spark, "quty_stream_late", sf_dir)
     indir = os.path.join(workdir, "in")
     outdir = os.path.join(workdir, "out")
-    os.makedirs(indir)
-    os.makedirs(outdir)
     main = ev.filter(
         (F.col("ts") >= F.lit(late_cut)) & (F.col("ts") < F.lit(spacer_cut))
     )
@@ -1097,16 +1116,9 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     late_and_fresh = ev.filter(
         (F.col("ts") < F.lit(late_cut)) | (F.col("ts") >= F.lit(hold_cut))
     )
-    files = [
-        _stage_single_file(_as_ns_events(main), workdir, "b1"),
-        _stage_single_file(_as_ns_events(spacer), workdir, "b2"),
-        _stage_single_file(_as_ns_events(late_and_fresh), workdir, "b3"),
-    ]
-    # One file per micro-batch, ordered by modification time: b1 then b2.
-    for i, src in enumerate(files):
-        dst = os.path.join(indir, f"batch{i}.parquet")
-        shutil.copy(src, dst)
-        os.utime(dst, (1_700_000_000 + i * 1000, 1_700_000_000 + i * 1000))
+    _stage_ordered(
+        [_as_ns_events(f) for f in (main, spacer, late_and_fresh)], indir
+    )
     raw = (
         spark.readStream.schema(EVENTS_RAW_SCHEMA)
         .option("maxFilesPerTrigger", 1)
@@ -1120,15 +1132,43 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("hour_start"), "n")
     )
-    q = (
-        agg.writeStream.foreachBatch(_epoch_writer(outdir))
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_available_now(agg, _epoch_writer(outdir), output_mode="update")
     upd = _read_epochs(spark, outdir)
     return upd.groupBy("hour_start").agg(F.max_by("n", "epoch").alias("n"))
+
+
+def _stop_resume_run(
+    spark: SparkSession,
+    workdir: str,
+    schema: StructType,
+    halves: list[DataFrame],
+    project: Callable[[DataFrame], DataFrame],
+) -> dict:
+    """Stop-and-resume on one checkpoint: stage ``halves[0]`` under
+    ``workdir/in``, run ``project`` over a file stream of ``schema`` to
+    termination into the epoch-keyed sink at ``workdir/out`` (the
+    offsets and epochs commit, then the query stops), then stage
+    ``halves[1]`` and run a NEW query on the same ``workdir/ckpt``.
+    Returns the epochs committed after each run and the read-back of
+    every epoch (with its ``epoch`` column)."""
+    indir = os.path.join(workdir, "in")
+    outdir = os.path.join(workdir, "out")
+
+    def run_once(half: DataFrame) -> list[int]:
+        _stage_ordered([half], indir)
+        raw = spark.readStream.schema(schema).parquet(indir)
+        _run_available_now(
+            project(raw), _epoch_writer(outdir), os.path.join(workdir, "ckpt")
+        )
+        return _committed_epochs(outdir)
+
+    epochs_phase1 = run_once(halves[0])  # consume half 1, commit, stop
+    epochs_all = run_once(halves[1])  # NEW query, same checkpoint: resumes
+    return {
+        "result": _read_epochs(spark, outdir),
+        "epochs_phase1": epochs_phase1,
+        "epochs_all": epochs_all,
+    }
 
 
 def checkpoint_recovery_run(spark: SparkSession, sf_dir: str) -> dict:
@@ -1156,49 +1196,23 @@ def checkpoint_recovery_run(spark: SparkSession, sf_dir: str) -> dict:
     ev = load_table(spark, sf_dir, "events")
     lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
     cut = lo + (hi - lo) / 2
-    workdir = session_tmp_dir(spark, "quty_stream_ckpt", sf_dir)
-    shutil.rmtree(workdir, ignore_errors=True)
-    indir = os.path.join(workdir, "in")
-    outdir = os.path.join(workdir, "out")
-    ckpt = os.path.join(workdir, "ckpt")
-    os.makedirs(indir)
-    os.makedirs(outdir)
-    f1 = _stage_single_file(
-        _as_ns_events(ev.filter(F.col("ts") < F.lit(cut))), workdir, "b1"
-    )
-    f2 = _stage_single_file(
-        _as_ns_events(ev.filter(F.col("ts") >= F.lit(cut))), workdir, "b2"
-    )
-
-    def run_once() -> list[int]:
-        raw = spark.readStream.schema(EVENTS_RAW_SCHEMA).parquet(indir)
-        s = raw.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-        out = s.filter(F.col("event_type") == "purchase").select(
+    workdir = fresh_tmp_dir(spark, "quty_stream_ckpt", sf_dir)
+    run = _stop_resume_run(
+        spark,
+        workdir,
+        EVENTS_RAW_SCHEMA,
+        [
+            _as_ns_events(ev.filter(F.col("ts") < F.lit(cut))),
+            _as_ns_events(ev.filter(F.col("ts") >= F.lit(cut))),
+        ],
+        lambda raw: raw.filter(F.col("event_type") == "purchase").select(
             "event_id", "user_id", "value"
-        )
-        q = (
-            out.writeStream.foreachBatch(_epoch_writer(outdir))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(outdir)
-            if d.startswith("epoch=")
-        )
-
-    shutil.copy(f1, os.path.join(indir, "file0.parquet"))
-    epochs_phase1 = run_once()  # consume file 1, commit offsets, stop
-    shutil.copy(f2, os.path.join(indir, "file1.parquet"))
-    epochs_all = run_once()  # NEW query, same checkpoint: resumes
-    result = _read_epochs(spark, outdir).select("event_id", "user_id", "value")
+        ),
+    )
     return {
-        "result": result,
-        "epochs_phase1": epochs_phase1,
-        "epochs_all": epochs_all,
-        "outdir": outdir,
+        **run,
+        "result": run["result"].select("event_id", "user_id", "value"),
+        "outdir": os.path.join(workdir, "out"),
         "cut": cut,
     }
 
@@ -1232,17 +1246,11 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet, then read back. This is the pattern that replaces the
     reference's per-socket delivery loop with exactly-once batch writes."""
     configure(spark)
-    outdir = session_tmp_dir(spark, "quty_feb_sink", sf_dir)
-    shutil.rmtree(outdir, ignore_errors=True)
+    outdir = fresh_tmp_dir(spark, "quty_feb_sink", sf_dir)
     s = events_stream(spark, sf_dir).filter(F.col("event_type") == "purchase").select(
         "event_id", "event_type", "value"
     )
-    q = (
-        s.writeStream.foreachBatch(_epoch_writer(outdir))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_available_now(s, _epoch_writer(outdir))
     return _read_epochs(spark, outdir).select(
         "event_id", "event_type", "value"
     )
@@ -1356,48 +1364,19 @@ def kafka_replay_run(spark: SparkSession, sf_dir: str) -> dict:
         f"phase empty even at the median cut; regenerate fixtures or "
         f"adjust the cut strategy"
     )
-    workdir = session_tmp_dir(spark, "quty_kafka_replay", sf_dir)
-    shutil.rmtree(workdir, ignore_errors=True)
-    indir = os.path.join(workdir, "in")
-    outdir = os.path.join(workdir, "out")
-    ckpt = os.path.join(workdir, "ckpt")
-    os.makedirs(indir)
-    os.makedirs(outdir)
-    cols = ["event_id", "topic", "partition", "offset", "key", "value", "ts"]
-    f1 = _stage_single_file(
-        rec.filter(F.col("ts") < F.lit(cut)).select(*cols), workdir, "b1"
+    cols = [f.name for f in KAFKA_RECORD_SCHEMA.fields]
+    # Consumer-side envelope parse happens downstream (kafka_wire_decode
+    # covers it); the replay path forwards records as-is.
+    return _stop_resume_run(
+        spark,
+        fresh_tmp_dir(spark, "quty_kafka_replay", sf_dir),
+        KAFKA_RECORD_SCHEMA,
+        [
+            rec.filter(F.col("ts") < F.lit(cut)).select(*cols),
+            rec.filter(F.col("ts") >= F.lit(cut)).select(*cols),
+        ],
+        lambda raw: raw,
     )
-    f2 = _stage_single_file(
-        rec.filter(F.col("ts") >= F.lit(cut)).select(*cols), workdir, "b2"
-    )
-
-    def run_once() -> list[int]:
-        raw = spark.readStream.schema(KAFKA_RECORD_SCHEMA).parquet(indir)
-        # Consumer-side envelope parse happens downstream (kafka_wire_decode
-        # covers it); the replay path forwards records as-is.
-        q = (
-            raw.writeStream.foreachBatch(_epoch_writer(outdir))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(outdir)
-            if d.startswith("epoch=")
-        )
-
-    shutil.copy(f1, os.path.join(indir, "file0.parquet"))
-    epochs_phase1 = run_once()  # consume file 1, commit offsets, stop
-    shutil.copy(f2, os.path.join(indir, "file1.parquet"))
-    epochs_all = run_once()  # NEW query, same checkpoint: resume, file 2 only
-    result = _read_epochs(spark, outdir).select(*cols, "epoch")
-    return {
-        "result": result,
-        "epochs_phase1": epochs_phase1,
-        "epochs_all": epochs_all,
-    }
 
 
 @registry.query(
@@ -1668,23 +1647,17 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure(spark)
     register_synth_stream_source(spark)
     n_docs = 500
-    workdir = session_tmp_dir(spark, "quty_synth_stream", sf_dir)
-    shutil.rmtree(workdir, ignore_errors=True)
+    workdir = fresh_tmp_dir(spark, "quty_synth_stream", sf_dir)
     outdir = os.path.join(workdir, "out")
-    ckpt = os.path.join(workdir, "ckpt")
-    os.makedirs(outdir)
     # 500 docs / 200-doc batches -> 3 productive runs + 1 empty; the
     # bound is a guard, the loop exits on row-count convergence.
     for _ in range(6):
-        raw = spark.readStream.format("quty_synth_stream").load()
-        q = (
-            raw.writeStream.foreachBatch(_epoch_writer(outdir))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        _run_available_now(
+            spark.readStream.format("quty_synth_stream").load(),
+            _epoch_writer(outdir),
+            os.path.join(workdir, "ckpt"),
         )
-        q.awaitTermination()
-        if any(d.startswith("epoch=") for d in os.listdir(outdir)):
+        if _committed_epochs(outdir):
             got = (
                 spark.read.option("basePath", outdir)
                 .parquet(os.path.join(outdir, "epoch=*"))
@@ -1716,15 +1689,12 @@ def _drain(
     failed) instead of starting over. ``schema`` is the staged files'
     schema: passing it, rather than re-reading the staging dir, avoids
     a schema-inference job per drain."""
-    (
+    _run_available_now(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(indir)
-        .writeStream.foreachBatch(fn)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .parquet(indir),
+        fn,
+        ckpt,
     )
 
 
@@ -1753,14 +1723,13 @@ def _run_ingest_gate_stream(
 
     The ``epoch=*`` read-back has no ``basePath``, so it carries exactly
     the probe's columns (no ``epoch`` partition column). Scratch dirs
-    are session-keyed (session_tmp_dir) and the returned frame is
+    are session-keyed (:func:`fresh_tmp_dir`) and the returned frame is
     eagerly ``localCheckpoint``-ed, so a later call for the same sf_dir
-    — which rmtree's and restages — can never invalidate a frame this
-    call already handed out."""
-    base = session_tmp_dir(spark, kind, sf_dir)
+    — which clears and restages them — can never invalidate a frame
+    this call already handed out."""
+    base = fresh_tmp_dir(spark, kind, sf_dir)
     indir = os.path.join(base, "in")
     outdir = os.path.join(base, "out")
-    shutil.rmtree(base, ignore_errors=True)
     shard.repartition(4, id_col).write.parquet(indir)
     write = _epoch_writer(outdir)
     _drain(
@@ -2036,8 +2005,7 @@ def _label_maintenance_stream(
     )
 
     configure(spark)
-    base = session_tmp_dir(spark, kind, sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
+    base = fresh_tmp_dir(spark, kind, sf_dir)
     lbl_path = os.path.join(base, "labels")
     # Resolved before the fork: a memoized builder is not safe to
     # FIRST-build from two threads.
@@ -2353,13 +2321,10 @@ def stream_ingest_exact_dedup_sequential(
     hashes, 32 bytes each. This is the production shape of a streaming
     exactly-once admission ledger."""
     configure(spark)
-    base = session_tmp_dir(spark, "quty_stream_seq_dedup", sf_dir)
+    base = fresh_tmp_dir(spark, "quty_stream_seq_dedup", sf_dir)
     indir = os.path.join(base, "in")
     outdir = os.path.join(base, "out")
     seendir = os.path.join(base, "seen")
-    ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(indir)
 
     corpus = duped_corpus(spark, sf_dir)
     shard = corpus.filter(F.col("doc_id") % 10 == 0).select(
@@ -2371,24 +2336,15 @@ def stream_ingest_exact_dedup_sequential(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    # Stage one file per epoch, utime'd in epoch order so the file
-    # source's oldest-first ordering IS the oracle's epoch numbering.
-    # Empty epochs still stage a (schema-only) file so trigger indices
-    # never shift.
-    import glob as _glob
-    import time as _time
-
-    t0 = _time.time()
-    for k in range(4):
-        stage = os.path.join(base, f"stage{k}")
-        shard.filter(F.col("epoch") == k).select(
-            "doc_id", "text"
-        ).coalesce(1).write.parquet(stage)
-        part = _glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        dst = os.path.join(indir, f"e{k}.parquet")
-        os.replace(part, dst)
-        os.utime(dst, (t0 + k, t0 + k))
-        shutil.rmtree(stage, ignore_errors=True)
+    # One file per epoch, in epoch order: the file source's oldest-first
+    # ordering IS the oracle's epoch numbering.
+    _stage_ordered(
+        [
+            shard.filter(F.col("epoch") == k).select("doc_id", "text")
+            for k in range(4)
+        ],
+        indir,
+    )
     # Seen-state init: empty (h, epoch) ledger.
     spark.createDataFrame([], "h string, epoch long").write.parquet(seendir)
 
@@ -2423,7 +2379,10 @@ def stream_ingest_exact_dedup_sequential(
             F.col("text_md5").alias("h"), F.col("epoch")
         ).write.mode("append").parquet(seendir)
 
-    _drain(spark, "doc_id long, text string", indir, ckpt, gate_batch)
+    _drain(
+        spark, "doc_id long, text string", indir, os.path.join(base, "ckpt"),
+        gate_batch,
+    )
     return (
         spark.read.parquet(os.path.join(outdir, "e*"))
         .select("admitted_doc_id", "epoch", "text_md5")
@@ -2473,8 +2432,7 @@ def stream_lake_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     configure(spark)
-    base = session_tmp_dir(spark, "quty_stream_retract", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
+    base = fresh_tmp_dir(spark, "quty_stream_retract", sf_dir)
     indir = os.path.join(base, "in")
     ckpt = os.path.join(base, "ckpt")
 
@@ -2540,9 +2498,9 @@ _set_stream_retraction_oracle()
 )
 def stream_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONTINUOUS trainer handoff — the shard APPEND verb's streaming
-    twin, completing the lifecycle symmetry the round-14/15 tiers
-    built (ingest, maintenance, snapshot, retraction, and now the
-    trainer handoff each have batch + continuous forms): tonight's
+    twin, completing the lifecycle symmetry (ingest, maintenance,
+    snapshot, retraction and the trainer handoff each have batch +
+    continuous forms): tonight's
     admitted snapshot additions
     (:func:`~quty_server_spark.operators.pipeline.corpus_training_snapshot_incremental`'s
     output) arrive in micro-batches, and each epoch lands as ONE
@@ -2579,8 +2537,7 @@ def stream_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     configure(spark)
-    base = session_tmp_dir(spark, "quty_stream_train_shards", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
+    base = fresh_tmp_dir(spark, "quty_stream_train_shards", sf_dir)
     indir = os.path.join(base, "in")
     ckpt = os.path.join(base, "ckpt")
     outbase = os.path.join(base, "out", "base")

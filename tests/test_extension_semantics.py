@@ -297,12 +297,11 @@ def test_manifest_snapshot_time_travel_and_orphan_isolation(spark):
     # (never referenced by a manifest) is invisible to both snapshots.
     import json
     import os
-    import tempfile
+
+    from quty_server_spark.session import session_tmp_dir
 
     se.queries()["sink_manifest_snapshot"](spark, SF_DIR).collect()
-    base = os.path.join(
-        tempfile.gettempdir(), "quty_formats", os.path.basename(SF_DIR), "manifest_tbl"
-    )
+    base = session_tmp_dir(spark, "quty_formats_manifest_tbl", SF_DIR)
     assert os.path.isdir(os.path.join(base, "commit_orphan"))
     ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
     n_click = ev.filter("event_type = 'click'").count()

@@ -13,12 +13,18 @@ started only by ``operators/_helpers.overlap``, which joins every leg,
 re-raises worker failures and propagates Spark local properties. It also
 pins the one session-memo primitive: ``spark._quty_*`` state is touched
 only by ``session.py`` (``session_memo`` / ``session_artifact`` /
-``reset_memos``). And it pins the streams' scratch policy: every
+``reset_memos``). It pins the one scratch-directory policy: no module
+but ``session.py`` calls ``tempfile.gettempdir()`` or
+``tempfile.mkdtemp()`` (the rest ask ``session_tmp_dir`` /
+``fresh_tmp_dir``). It pins the streams' run and sink devices: every
 ``epoch=<id>`` sink path is built by ``streaming/ops._epoch_writer``, and
-no stream takes a fixed ``tempfile.gettempdir()`` dir (``session_tmp_dir``
-instead). Finally, every partitioned artifact write (a writer's
+every availableNow run in ``streaming/ops.py`` goes through
+``_run_available_now``. Every partitioned artifact write (a writer's
 ``.partitionBy(`` or a ``partitionOverwriteMode`` overwrite) under
 ``operators/`` and ``streaming/`` goes through ``_helpers.Layout``.
+Finally, the artifact sidecar names (``_tombstones``, ``_label_homes``,
+``_centroids``) are spelled only in ``operators/_helpers.py``, whose
+``read_sidecar`` / ``write_sidecar`` do every sidecar read and write.
 """
 
 from __future__ import annotations
@@ -217,10 +223,17 @@ def test_epoch_paths_only_in_epoch_writer():
     )
 
 
-def test_no_fixed_tmp_dirs_in_streaming():
+# The one scratch-directory policy: only session.py picks a temp root.
+SCRATCH_HOME = "quty_server_spark/session.py"
+TMP_ROOT_NAMES = {"gettempdir", "mkdtemp"}
+
+
+def test_scratch_dirs_only_in_session():
     hits = []
-    for path in sorted((ROOT / "streaming").rglob("*.py")):
+    for path in sorted(ROOT.rglob("*.py")):
         rel = str(path.relative_to(ROOT.parent))
+        if rel == SCRATCH_HOME:
+            continue
         tree = ast.parse(path.read_text(), filename=str(path))
         for node in ast.walk(tree):
             if isinstance(node, ast.Attribute):
@@ -231,10 +244,34 @@ def test_no_fixed_tmp_dirs_in_streaming():
                 name = node.name
             else:
                 continue
-            if name == "gettempdir":
-                hits.append(f"{rel}:{getattr(node, 'lineno', '?')}")
+            if name in TMP_ROOT_NAMES:
+                hits.append(f"{rel}:{getattr(node, 'lineno', '?')} {name}")
     assert not hits, (
-        "tempfile.gettempdir under streaming/ (use session_tmp_dir):\n"
+        "temp roots outside session.py (use session_tmp_dir / "
+        "fresh_tmp_dir):\n" + "\n".join(hits)
+    )
+
+
+# The one bounded-stream runner in streaming/ops.py.
+RUNNER_HOME = ("quty_server_spark/streaming/ops.py", "_run_available_now")
+
+
+def test_available_now_only_in_runner():
+    rel = RUNNER_HOME[0]
+    tree = ast.parse((ROOT.parent / rel).read_text(), filename=rel)
+    hits = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.keyword) and node.arg == "availableNow":
+            where = node.value.lineno
+        elif isinstance(node, ast.Attribute) and node.attr == "awaitTermination":
+            where = node.lineno
+        else:
+            continue
+        fn = _enclosing_function(tree, where)
+        if fn != RUNNER_HOME[1]:
+            hits.append(f"{rel}:{where} in {fn}()")
+    assert not hits, (
+        "availableNow runs outside streaming/ops._run_available_now:\n"
         + "\n".join(hits)
     )
 
@@ -281,4 +318,28 @@ def test_partitioned_writes_only_in_layout():
     assert not hits, (
         "partitioned artifact writes outside operators/_helpers.Layout:\n"
         + "\n".join(hits)
+    )
+
+
+# The sidecar names, spelled only where read_sidecar / write_sidecar live.
+SIDECAR_HOME = "quty_server_spark/operators/_helpers.py"
+SIDECAR_NAMES = ("_tombstones", "_label_homes", "_centroids")
+
+
+def test_sidecar_names_only_in_helpers():
+    hits = []
+    for path in sorted(ROOT.rglob("*.py")):
+        rel = str(path.relative_to(ROOT.parent))
+        if rel == SIDECAR_HOME:
+            continue
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.Constant) and isinstance(node.value, str)):
+                continue
+            parts = node.value.strip("/").split("/")
+            if any(n in parts for n in SIDECAR_NAMES):
+                hits.append(f"{rel}:{node.lineno} {node.value[:60]!r}")
+    assert not hits, (
+        "sidecar names outside operators/_helpers.py (use read_sidecar / "
+        "write_sidecar):\n" + "\n".join(hits)
     )

@@ -13,7 +13,12 @@ import os
 from pyspark.sql import functions as F
 
 from quty_server_spark.operators import dedup as D
-from quty_server_spark.operators._helpers import Layout
+from quty_server_spark.operators._helpers import (
+    TOMBSTONES,
+    Layout,
+    read_sidecar,
+    write_sidecar,
+)
 from quty_server_spark.operators import retract as R
 from quty_server_spark.operators import similarity as S
 
@@ -362,7 +367,7 @@ def test_compacted_sink_clears_every_family_sidecar(spark):
     R.sink_lake_artifacts_retract_compacted(spark, SF_DIR).collect()
     paths = R.tombstoned_artifact_paths(spark, SF_DIR)  # memo hit
     for fam, p in paths.items():
-        assert not os.path.isdir(os.path.join(p, R._TOMBSTONES)), fam
+        assert not os.path.isdir(os.path.join(p, TOMBSTONES)), fam
         def _norm(rows):
             return {
                 tuple(
@@ -392,16 +397,30 @@ def test_tombstone_write_is_idempotent(spark, tmp_path):
     R._write_tombstones(spark, p, vic)
     first = sorted(
         r.victim_id
-        for r in spark.read.parquet(os.path.join(p, R._TOMBSTONES)).collect()
+        for r in spark.read.parquet(os.path.join(p, TOMBSTONES)).collect()
     )
     R._write_tombstones(spark, p, vic)  # the replay
     second = sorted(
         r.victim_id
-        for r in spark.read.parquet(os.path.join(p, R._TOMBSTONES)).collect()
+        for r in spark.read.parquet(os.path.join(p, TOMBSTONES)).collect()
     )
     assert first == second == list(range(0, 100, 10))
     live = R.read_artifact_live(spark, p, "doc_id")
     assert live.count() == 90
+
+
+def test_sidecar_round_trip(spark, tmp_path):
+    # What write_sidecar writes, read_sidecar reads back row for row,
+    # and a second write replaces the first whole.
+    p = str(tmp_path / "art")
+    rows = [(i, i % 3) for i in range(7)]
+    first = spark.createDataFrame(rows, "lbl long, lbl_bucket int")
+    write_sidecar(first.repartition(3), p, "_label_homes")
+    back = read_sidecar(spark, p, "_label_homes")
+    assert back.columns == ["lbl", "lbl_bucket"]
+    assert sorted(tuple(r) for r in back.collect()) == rows
+    write_sidecar(first.limit(2).coalesce(1), p, "_label_homes")
+    assert read_sidecar(spark, p, "_label_homes").count() == 2
 
 
 def test_media_artifact_retraction_live_equals_compacted_equals_rebuilt(spark):

@@ -176,16 +176,18 @@ def test_compaction_collapses_files(spark):
     # partition directory; the compacted one exactly 1.
     import glob
     import os
-    import tempfile
+
+    from quty_server_spark.session import session_tmp_dir
 
     se.queries()["sink_compacted_parquet"](spark, SF_DIR).collect()
-    base = os.path.join(
-        tempfile.gettempdir(), "quty_formats", os.path.basename(SF_DIR.rstrip("/"))
-    )
-    frag = glob.glob(os.path.join(base, "frag_parquet", "event_type=click", "*.parquet"))
-    compact = glob.glob(
-        os.path.join(base, "compact_parquet", "event_type=click", "*.parquet")
-    )
+    frag = glob.glob(os.path.join(
+        session_tmp_dir(spark, "quty_formats_frag_parquet", SF_DIR),
+        "event_type=click", "*.parquet",
+    ))
+    compact = glob.glob(os.path.join(
+        session_tmp_dir(spark, "quty_formats_compact_parquet", SF_DIR),
+        "event_type=click", "*.parquet",
+    ))
     assert len(frag) > 1
     assert len(compact) == 1
 
@@ -362,15 +364,11 @@ def test_merge_upsert_rewrites_only_affected_partitions(spark):
     # rewrite would stamp every partition with the later time.
     import glob
     import os
-    import tempfile
+
+    from quty_server_spark.session import session_tmp_dir
 
     se.queries()["sink_merge_upsert"](spark, SF_DIR).collect()
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "quty_formats",
-        os.path.basename(SF_DIR),
-        "merge_parquet",
-    )
+    root = session_tmp_dir(spark, "quty_formats_merge_parquet", SF_DIR)
 
     def newest(seg):
         files = glob.glob(os.path.join(root, f"c_mktsegment={seg}", "*.parquet"))
@@ -547,10 +545,9 @@ def test_zorder_sink_files_are_disjoint_in_zval(spark):
     se.queries()["sink_zorder_clustered"](spark, SF_DIR)  # writes the files
     import glob
     import os
-    import tempfile
-    base = os.path.join(
-        tempfile.gettempdir(), "quty_formats", os.path.basename(SF_DIR), "zorder"
-    )
+
+    from quty_server_spark.session import session_tmp_dir
+    base = session_tmp_dir(spark, "quty_formats_zorder", SF_DIR)
     files = sorted(glob.glob(os.path.join(base, "part-*.parquet")))
     assert len(files) >= 2
     ranges = []

@@ -79,8 +79,8 @@ def test_liveness_expiry_and_revive(spark):
     # expiry emits per silent episode, not per member. Member 3 keeps
     # beating and is never expired.
     import datetime as dtm
-    import shutil
-    import tempfile
+
+    from quty_server_spark.session import fresh_tmp_dir
 
     t0 = dtm.datetime(2024, 1, 1, 0, 0, 0)
 
@@ -97,15 +97,10 @@ def test_liveness_expiry_and_revive(spark):
         beats((2, 240), (3, 240)),  # m2 revives with fresh state
         beats((3, 360)),  # watermark -> t0+5h45m: expires revived m2
     ]
-    workdir = os.path.join(tempfile.gettempdir(), "quty_liveness_test")
-    shutil.rmtree(workdir, ignore_errors=True)
-    indir = os.path.join(workdir, "in")
-    os.makedirs(indir)
-    for i, df in enumerate(files):
-        src = ops._stage_single_file(df, workdir, f"b{i}")
-        dst = os.path.join(indir, f"batch{i}.parquet")
-        shutil.copy(src, dst)
-        os.utime(dst, (1_700_000_000 + i * 1000,) * 2)
+    indir = os.path.join(
+        fresh_tmp_dir(spark, "quty_liveness_test", SF_DIR), "in"
+    )
+    ops._stage_ordered(files, indir)
 
     from pyspark.sql.streaming.state import GroupStateTimeout
     from pyspark.sql.types import (
