@@ -1,10 +1,10 @@
-"""Runnable CONTINUOUS-ingest run — the round-10 streaming gate composed
+"""Runnable CONTINUOUS-ingest run — the streaming ingest gate composed
 the way a deployment that cannot wait for a nightly window admits
 documents, end to end:
 
 1. **artifact refresh (write-once)** — same as the nightly example:
    the lake's banded SimHash signatures become a parquet artifact
-   partitioned by band_id (``lake_signature_artifact``).
+   partitioned by band_id (``SIG_FAMILY.build``).
 2. **the gate, as a stream** — ``stream_ingest_dedup_gate``: incoming
    docs arrive as a file stream; every micro-batch is signed, banded,
    and joined against the artifact inside ``foreachBatch``, landing in
@@ -38,9 +38,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 import quty_server_spark.operators  # noqa: F401,E402  (registers queries)
-from quty_server_spark.operators.dedup import (  # noqa: E402
-    lake_signature_artifact,
-)
+from quty_server_spark.operators.dedup import SIG_FAMILY  # noqa: E402
 from quty_server_spark.plans.registry import registry  # noqa: E402
 from quty_server_spark.session import (  # noqa: E402
     get_spark,
@@ -64,7 +62,7 @@ def main() -> None:
 
     # 1. write-once artifact (amortized — not on the per-batch path)
     t0 = time.time()
-    path = lake_signature_artifact(spark, sf_dir, rebuild=True)
+    path = SIG_FAMILY.build(spark, sf_dir, rebuild=True)
     print(f"lake-signature artifact rebuilt in {time.time() - t0:.1f}s "
           f"(amortized; each micro-batch below only SCANS it)")
 
@@ -87,7 +85,7 @@ def main() -> None:
         n = spark.read.parquet(os.path.join(outdir, e)).count()
         print(f"  {e}: {n} pairs")
 
-    # 2b. the embedding-family continuous gate (round 12): the same
+    # 2b. the embedding-family continuous gate: the same
     # per-epoch arrival for semantic near-dups — micro-batches of
     # vectors assigned against the IVF artifact's centroid sidecar and
     # probed cell-vs-cell against the lake postings. With this, all

@@ -1,14 +1,14 @@
-"""Runnable nightly-ingest run — the round-9/10 incremental dedup gate
-composed the way a production lake admits a day's shard, end to end:
+"""Runnable nightly-ingest run — the incremental dedup gate composed
+the way a production lake admits a day's shard, end to end:
 
 1. **artifact refresh (the write-once half)** — materialize the lake's
    banded SimHash signatures as a parquet artifact partitioned by
-   band_id (``lake_signature_artifact``). A real deployment runs this
+   band_id (``SIG_FAMILY.build``). A real deployment runs this
    once and appends; the nightly path below never re-signs the lake.
 2. **the gate (the read-nightly half)** — join the shard's fresh bands
    against the artifact (``dedup_incremental_simhash_artifact``): the
    lake branch of the plan is a bare artifact scan, the only
-   lake-sized aggregation happened in step 1. Round 11 adds step 2b:
+   lake-sized aggregation happened in step 1. Step 2b adds
    the MinHash-family gate (``dedup_incremental_minhash_artifact``)
    as a second opinion — content Jaccard catches rewrites the layout
    fingerprint misses — and the quarantine is the union of both.
@@ -54,15 +54,8 @@ from pyspark.sql import functions as F  # noqa: E402
 
 import quty_server_spark.operators  # noqa: F401,E402  (registers queries)
 from quty_server_spark.operators.dedup import (  # noqa: E402
-    MINHASH,
-    SIG,
-    doc_shingles,
-    lake_minhash_artifact,
-    lake_signature_artifact,
-    minhash_bands,
-    minhash_sigs,
-    simhash_bands,
-    simhash_sigs,
+    MINHASH_FAMILY,
+    SIG_FAMILY,
 )
 from quty_server_spark.plans.registry import registry  # noqa: E402
 from quty_server_spark.session import get_spark  # noqa: E402
@@ -85,7 +78,7 @@ def main() -> None:
     # 1. artifact refresh (write-once; timed so the amortized cost is
     # visible next to the nightly cost it buys down)
     t0 = time.time()
-    path = lake_signature_artifact(spark, sf_dir, rebuild=True)
+    path = SIG_FAMILY.build(spark, sf_dir, rebuild=True)
     n_sig = spark.read.parquet(path).count()
     print(f"lake-signature artifact: {n_sig} banded rows at {path} "
           f"(built in {time.time() - t0:.1f}s — amortized, not nightly)")
@@ -105,7 +98,7 @@ def main() -> None:
     # band artifact embeds per-doc shingle counts, so this gate also
     # runs zero lake-side aggregations per night.
     t0 = time.time()
-    mh_path = lake_minhash_artifact(spark, sf_dir, rebuild=True)
+    mh_path = MINHASH_FAMILY.build(spark, sf_dir, rebuild=True)
     mh_hits = q["dedup_incremental_minhash_artifact"](spark, sf_dir)
     mh_q = mh_hits.select("incoming_doc_id").distinct()
     n_mh = mh_q.count()
@@ -197,11 +190,14 @@ def main() -> None:
     # gate-after-append == gate-after-rebuild). A re-run of this
     # example rebuilds the artifact at step 1, so the append never
     # compounds across runs.
+    # The family's rows of tonight's shard (only the shard is signed),
+    # restricted to the admitted docs.
+    shard_ids = F.col("doc_id") % 10 == 0
     before = spark.read.parquet(path).count()
-    adm_sigs = simhash_bands(simhash_sigs(spark, sf_dir)).join(
+    adm_sigs = SIG_FAMILY.rows(spark, sf_dir, shard_ids).join(
         F.broadcast(final), "doc_id", "left_semi"
     )
-    SIG.write(adm_sigs, path, "append")
+    SIG_FAMILY.layout.write(adm_sigs, path, "append")
     after = spark.read.parquet(path).count()
     print(f"artifact append: {before} -> {after} banded rows "
           f"(+{after - before} = 4 bands x {n_final} admitted docs)")
@@ -214,14 +210,10 @@ def main() -> None:
     # (pinned in
     # tests/test_artifact_append.py::test_appended_minhash_gate_verifies_appended_docs).
     mh_before = spark.read.parquet(mh_path).count()
-    adm_sh = doc_shingles(spark, sf_dir).join(
+    adm_bands = MINHASH_FAMILY.rows(spark, sf_dir, shard_ids).join(
         F.broadcast(final), "doc_id", "left_semi"
     )
-    adm_sizes = adm_sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    adm_bands = minhash_bands(minhash_sigs(adm_sh)).join(
-        adm_sizes, "doc_id"
-    ).select("doc_id", "sig", "n_sh", "band_id")
-    MINHASH.write(adm_bands, mh_path, "append")
+    MINHASH_FAMILY.layout.write(adm_bands, mh_path, "append")
     mh_after = spark.read.parquet(mh_path).count()
     print(f"minhash artifact append: {mh_before} -> {mh_after} band rows "
           f"(8 bands per admitted doc with >= 3 tokens)")
@@ -251,7 +243,7 @@ def main() -> None:
           f"live view {live} of {full} rows — effective immediately")
     t0 = time.time()
     for fam, p in tpaths.items():
-        compact_tombstones(spark, p, ARTIFACT_FAMILIES[fam].layout)
+        compact_tombstones(spark, p, ARTIFACT_FAMILIES[fam].family.layout)
     compacted = spark.read.parquet(sig_p).count()
     assert compacted == live, (compacted, live)
     print(f"scheduled compaction: applied + sidecars cleared in "

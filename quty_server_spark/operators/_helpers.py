@@ -20,13 +20,15 @@ from pyspark import InheritableThread
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from quty_server_spark.plans.registry import registry
+from quty_server_spark.session import session_artifact
 from quty_server_spark.sources.tables import load_table  # noqa: F401  (re-export)
 
 DEC = "decimal(38,6)"
 
 
 def spread_probe(spark: SparkSession, df: DataFrame, *cols: str) -> DataFrame:
-    """Fan a small probe-side plan out to the core count (r17, guide
+    """Fan a small probe-side plan out to the core count (guide
     §2.5/§2.6): the fixture parquet files are ONE row group each, so
     their scan is a single partition and everything below the query's
     first exchange runs on one core. For plans whose downstream per-row
@@ -142,14 +144,15 @@ class Layout(NamedTuple):
     a standing artifact goes through one of these, so each artifact
     states its layout once.
 
-    Each family has a write-once build, an append twin and a retraction,
-    and all of them share one rows function that takes the id predicate
-    that selects the rows. The append twin writes yesterday's rows
-    (lake minus the admitted batch), then appends the batch's rows
-    computed from the batch alone; because base ∪ batch is the lake
-    exactly, the append sink reports under the write-once sink's oracle
-    SQL byte-for-byte, so a green row proves append ≡ rebuild. The
-    retraction sinks reuse that oracle scoped to the survivors."""
+    Each family (an :class:`ArtifactFamily`) has a write-once build, an
+    append twin and a retraction, and all of them share one rows
+    function that takes the id predicate that selects the rows. The
+    append twin writes yesterday's rows (lake minus the admitted
+    batch), then appends the batch's rows computed from the batch
+    alone; because base ∪ batch is the lake exactly, the append sink
+    reports under the write-once sink's oracle SQL byte-for-byte, so a
+    green row proves append ≡ rebuild. The retraction sinks reuse that
+    oracle scoped to the survivors."""
 
     part: str
     id_col: str
@@ -197,3 +200,102 @@ class Layout(NamedTuple):
                 shutil.rmtree(
                     os.path.join(path, f"{self.part}={v}"), ignore_errors=True
                 )
+
+
+# Fixture convention of the append exercise: yesterday's admitted batch
+# is id % 10 == APPEND_BATCH_MOD, inside the standing lake and disjoint
+# from tonight's shard (id % 10 == 0).
+APPEND_BATCH_MOD = 5
+
+
+def sql_where(*preds: str) -> str:
+    """A DuckDB ``WHERE`` clause ANDing the non-empty ``preds`` ('' when
+    none is)."""
+    preds = tuple(p for p in preds if p)
+    return f"WHERE {' AND '.join(preds)}" if preds else ""
+
+
+class ArtifactFamily(NamedTuple):
+    """One standing artifact family, declared once next to its rows
+    function: the write-once build, the append twin and both oracle
+    sinks all derive from it.
+
+    ``rows(spark, sf_dir, keep)`` builds the rows of the ids ``keep``
+    selects; ``summary(frame)`` is the sinks' per-partition summary of
+    a read-back, and ``summary_sql(pred)`` its DuckDB twin over the
+    lake ids that also pass the SQL predicate ``pred`` ('' for the
+    whole lake)."""
+
+    kind: str
+    layout: Layout
+    rows: Callable[[SparkSession, str, Column], DataFrame]
+    summary: Callable[[DataFrame], DataFrame]
+    summary_sql: Callable[[str], str]
+    # Tonight's shard residue, which the lake leaves out; None when the
+    # lake is every id.
+    shard_mod: int | None = 0
+    # The rows of lake-sized writes, where they differ from ``rows``.
+    lake_rows: (
+        Callable[[SparkSession, str, Column], DataFrame] | None
+    ) = None
+    # (rows, path, mode) -> None, where a write does more than
+    # ``layout.write``.
+    write: Callable[[DataFrame, str, str], None] | None = None
+
+    def lake(self) -> Column:
+        """The standing lake's ids."""
+        if self.shard_mod is None:
+            return F.lit(True)
+        return F.col(self.layout.id_col) % 10 != self.shard_mod
+
+    def admitted(self) -> Column:
+        """Yesterday's admitted batch."""
+        return F.col(self.layout.id_col) % 10 == APPEND_BATCH_MOD
+
+    def build(
+        self, spark: SparkSession, sf_dir: str, rebuild: bool = False
+    ) -> str:
+        """Path of the write-once build: the lake's rows."""
+        return self._artifact(spark, sf_dir, self.kind, self.lake(), rebuild)
+
+    def appended(
+        self, spark: SparkSession, sf_dir: str, rebuild: bool = False
+    ) -> str:
+        """Path of the append twin: yesterday's rows (lake minus the
+        admitted batch), then the batch's rows, computed from the batch
+        alone, appended."""
+        return self._artifact(
+            spark, sf_dir, f"{self.kind}_app",
+            self.lake() & ~self.admitted(), rebuild, self.admitted(),
+        )
+
+    def _artifact(
+        self, spark: SparkSession, sf_dir: str, kind: str, base: Column,
+        rebuild: bool, batch: Column | None = None,
+    ) -> str:
+        """A :func:`~quty_server_spark.session.session_artifact` holding
+        the ``base`` ids' rows, plus the ``batch`` ids' rows appended."""
+        put = self.write or self.layout.write
+        lake_rows = self.lake_rows or self.rows
+
+        def _write(path: str) -> None:
+            put(lake_rows(spark, sf_dir, base), path, "errorifexists")
+            if batch is not None:
+                put(self.rows(spark, sf_dir, batch), path, "append")
+
+        return session_artifact(spark, kind, sf_dir, _write, rebuild)
+
+
+def register_artifact_sinks(name: str, family: ArtifactFamily) -> None:
+    """Register the family's two oracle sinks: ``name`` summarizes a
+    forced write-once build and ``name_append`` a forced append twin,
+    both under the write-once oracle (the contract on :class:`Layout`)."""
+    oracle = family.summary_sql("")
+    for suffix, make in (("", family.build), ("_append", family.appended)):
+        registry.register(
+            name + suffix,
+            lambda spark, sf_dir, make=make: family.summary(
+                spark.read.parquet(make(spark, sf_dir, rebuild=True))
+            ),
+            oracle,
+        )

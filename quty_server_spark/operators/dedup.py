@@ -18,6 +18,8 @@ UDFs — so whole-stage codegen applies end-to-end.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -29,10 +31,13 @@ from quty_server_spark.functions.hashing import (
 )
 from quty_server_spark.operators._helpers import (
     LABEL_HOMES,
+    ArtifactFamily,
     Layout,
     load_table,
     overlap,
     read_sidecar,
+    register_artifact_sinks,
+    sql_where,
     write_sidecar,
 )
 from quty_server_spark.plans.registry import registry
@@ -529,7 +534,7 @@ def simhash_sigs_docs(d: DataFrame) -> DataFrame:
     its documents from somewhere other than the table scan (a streaming
     micro-batch, a quarantine re-check) signs them identically.
 
-    r17: the packed sums and the 48-term sig reconstruction are built as
+    The packed sums and the 48-term sig reconstruction are built as
     a handful of ``F.expr`` strings (one JVM-side parse each) instead of
     ~500 per-call Python column operations — the old construction spent
     ~0.9 s of DRIVER time in py4j round-trips building the expression
@@ -576,8 +581,8 @@ def simhash_sigs_docs(d: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 # The driver fixtures contain no standing-cluster merge (the relabel
-# queue's external CORRECTNESS row was a vacuous 0 == 0 — r12 VERDICT
-# "What's wrong" #4), and /root/testdata is read-only. So, exactly like
+# queue's external CORRECTNESS row was a vacuous 0 == 0), and
+# /root/testdata is read-only. So, exactly like
 # SQL_PII_STAGED stages synthetic PII for the scrub op, the relabel
 # lifecycle queries stage a deterministic bridge trio INSIDE the query on
 # BOTH engines: two 2-doc lake clusters whose SimHash signatures sit at
@@ -716,17 +721,17 @@ def min_label_components(
     superstep checkpoints reliably so an executor loss mid-loop replays
     at most k supersteps instead of the whole lineage.
 
-    r17 restructure (guide §2.4, measured 2.7 s → 2.1 s on the sf0.1 rep
-    graph, labels and round counts bit-identical incl. the line/empty
+    Restructured (guide §2.4, measured 2.7 s → 2.1 s on the sf0.1 rep
+    graph, labels and superstep counts bit-identical incl. the line/empty
     topologies):
 
-    - Round 1 from identity labels provably reduces to
+    - Superstep 1 from identity labels provably reduces to
       ``lbl = min(node, min-neighbor)`` (the shortcut chases through the
       identity are no-ops), so it is FOLDED INTO THE INIT as a single
       aggregation — the first superstep's three broadcast joins never
       run, and the same action also yields the node count for the
-      broadcast gate and round 1's convergence check.
-    - From round 2 on, the neighbor-min aggregation and the old-label
+      broadcast gate and superstep 1's convergence check.
+    - From superstep 2 on, the neighbor-min aggregation and the old-label
       re-attach join are MERGED: the edge list carries flagged
       self-loops (one per node, built once next to the durable edge
       checkpoint), so one ``groupBy(src)`` produces both ``min(lbl)``
@@ -1349,9 +1354,9 @@ def dedup_incremental_simhash_capped(spark: SparkSession, sf_dir: str) -> DataFr
     fixed nightly shard against a growing lake; the cap is what keeps
     the gate's cost a function of the shard, not of the lake's
     boilerplate — measured directly by the ladder's fixed-shard column
-    (SPARSITY.json ``fixed_shard_capped_pairs``, SCALING.md round-10
-    section): with the shard pinned at 1,250 docs and the lake doubling
-    12.5k -> 100k, capped per-run candidates go 36,661 -> 21,536
+    (SPARSITY.json ``fixed_shard_capped_pairs``, SCALING.md "FIXED
+    shard, growing lake"): with the shard pinned at 1,250 docs and the
+    lake doubling 12.5k -> 100k, capped per-run candidates go 36,661 -> 21,536
     (steps 1.09 / 0.82 / 0.66 — flat, then FALLING as saturated buckets
     retire from the universe), while the uncapped gate's double with
     every lake doubling (57,881 -> 504,929)."""
@@ -1480,7 +1485,7 @@ def lake_shingles_for_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify stage joins — a narrow scan+explode with no aggregation (the
     lake-sized aggregations live in the artifact build).
 
-    Deliberately carries NO lake-membership filter (r11 ADVICE): the
+    Deliberately carries NO lake-membership filter: the
     verify join restricts this side by the candidate's exact
     ``lake_doc_id``, and doc_ids are unique, so the rows that survive
     are precisely the candidates' own shingles — whatever convention
@@ -1544,20 +1549,20 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     row meets only its bucket's lake rows, never |lake|² — and the
     verify joins are candidate-restricted, so verification cost scales
     with LSH recall. Measured on both ladder axes (SPARSITY.json,
-    SCALING.md §r10/§r11): shard∝corpus gives 0.002 → 0.021
-    candidate pairs/doc across 12.5k → 100k docs (1,766× fewer than
-    the uncapped SimHash gate at n=100k); the fixed-shard-growing-lake
-    column (``fixed_shard_minhash_*``) shows per-run candidates still
-    GROW with the lake (29 → 695 across 16× lake growth, ~2×/doubling)
-    at minuscule absolute density. The 100 TB nightly contract is
-    therefore the CAPPED twin
+    SCALING.md, the MinHash ladder columns): shard∝corpus gives 0.002 →
+    0.021 candidate pairs/doc across 12.5k → 100k docs (1,766× fewer
+    than the uncapped SimHash gate at n=100k); the
+    fixed-shard-growing-lake column (``fixed_shard_minhash_*``) shows
+    per-run candidates still GROW with the lake (29 → 695 across 16×
+    lake growth, ~2×/doubling) at minuscule absolute density. The 100
+    TB nightly contract is therefore the CAPPED twin
     (:func:`dedup_incremental_minhash_capped`, bounded at
     |shard bands| × MINHASH_BUCKET_CAP, measured ~lake^0.5 — the trend
     dial beyond that is r); THIS op is the calibration/teaching variant whose
     uncapped density quantifies the cap's recall cost (zero on
     realistic vocabularies — only boilerplate-clone buckets saturate).
     The lake's band table and sizes are artifact-able
-    (:func:`lake_minhash_artifact`); the artifact-backed execution is
+    (``MINHASH_FAMILY``); the artifact-backed execution is
     :func:`dedup_incremental_minhash_artifact`."""
     sh = doc_shingles(spark, sf_dir).localCheckpoint(eager=False)
     bands = minhash_bands(minhash_sigs(sh))
@@ -1647,9 +1652,9 @@ def dedup_incremental_minhash_capped(
     shard doc against the 32x-grown lake; the TREND dial is r
     (rows/band), which shrinks collision probability exponentially
     where tightening the cap would only charge recall for sub-cap
-    buckets it cannot affect (SCALING.md §r12). The uncapped gate
-    climbs 29 → 742 on the same ladder. This is the gate a 100 TB
-    deployment runs nightly."""
+    buckets it cannot affect (SCALING.md, the 400k doubling). The
+    uncapped gate climbs 29 → 742 on the same ladder. This is the gate
+    a 100 TB deployment runs nightly."""
     sh = doc_shingles(spark, sf_dir).localCheckpoint(eager=False)
     bands = minhash_bands(minhash_sigs(sh))
     bands = bands.withColumn(
@@ -1691,59 +1696,9 @@ def minhash_artifact_rows(
     )
 
 
-def lake_minhash_artifact(
-    spark: SparkSession, sf_dir: str, rebuild: bool = False
-) -> str:
-    """Materialize the lake side's MinHash band table
-    ``(doc_id, sig, n_sh, band_id)`` as an on-disk parquet artifact
-    laid out as :data:`MINHASH` and return its path — the MinHash-family
-    twin of :func:`lake_signature_artifact` (SURVEY.md §7). A 100 TB
-    lake shingles and min-hashes its documents ONCE; each night's gate
-    joins the shard's fresh bands against this artifact instead of
-    re-aggregating the lake's 16-way signature min per run.
-
-    Each band row carries the doc's shingle count ``n_sh`` so the
-    gate's Jaccard denominator needs NO lake-side size aggregation
-    either — the band join itself delivers |B| for every surviving
-    candidate (n_sh is functionally dependent on doc_id, so the 8-way
-    duplication costs 8 bytes/row for removing a lake-sized groupBy
-    from every nightly run). Partitioned by band_id (8 directories)
-    and sorted by ``sig`` within files, so a point probe prunes
-    directories at planning time and row groups via min/max stats —
-    the same layout contract as the SimHash artifact, pinned in
-    tests/test_scale_plans.py. A :func:`session_artifact`."""
-
-    def _write(path: str) -> None:
-        MINHASH.write(
-            minhash_artifact_rows(spark, sf_dir, _lake(), checkpoint=True),
-            path,
-        )
-
-    return session_artifact(
-        spark, "quty_lake_minhash", sf_dir, _write, rebuild
-    )
-
-
-# Per-band summary of the lake MinHash-band artifact's full contract
-# (band rows AND the embedded Jaccard-denominator sizes), shared by the
-# write-once and append sinks (see :class:`Layout`).
-SQL_MINHASH_ARTIFACT_SUMMARY = f"""
-    WITH {SQL_SHINGLES}, {SQL_MINHASH}
-    SELECT CAST(b.band_id AS BIGINT) AS band_id,
-           CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(COUNT(DISTINCT b.sig) AS BIGINT) AS n_buckets,
-           CAST(COUNT(DISTINCT b.doc_id) AS BIGINT) AS n_docs,
-           CAST(SUM(s.n_sh) AS BIGINT) AS sum_nsh
-    FROM bands b JOIN doc_size s ON b.doc_id = s.doc_id
-    WHERE b.doc_id % 10 <> 0
-    GROUP BY b.band_id
-    """
-
-
 def _minhash_artifact_summary(art: DataFrame) -> DataFrame:
     """Per-band row/bucket/doc/size summary of a MinHash-band artifact
-    read-back — shared by the write-once and append sinks so both
-    report under the identical contract."""
+    read-back."""
     return art.groupBy(
         F.col("band_id").cast("bigint").alias("band_id")
     ).agg(
@@ -1754,27 +1709,38 @@ def _minhash_artifact_summary(art: DataFrame) -> DataFrame:
     )
 
 
-@registry.query(
-    "sink_lake_minhash_artifact",
-    oracle=SQL_MINHASH_ARTIFACT_SUMMARY,
-)
-def sink_lake_minhash_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Write the lake MinHash-band artifact (forced rebuild — this IS
-    the write-once job), then read it back and report per-band row /
-    bucket / doc counts plus the sum of the embedded shingle sizes.
-    The oracle recomputes the same summary from the documents table,
-    so the round trip proves the artifact holds exactly the lake's
-    band table AND the per-doc sizes the gate's Jaccard denominator
-    reads — the full contract
-    :func:`dedup_incremental_minhash_artifact` relies on.
+def _minhash_summary_sql(pred: str) -> str:
+    """DuckDB twin of :func:`_minhash_artifact_summary`: band rows AND
+    the embedded Jaccard-denominator sizes, so an append that wrote
+    wrong or missing ``n_sh`` goes red."""
+    return f"""
+    WITH {SQL_SHINGLES}, {SQL_MINHASH}
+    SELECT CAST(b.band_id AS BIGINT) AS band_id,
+           CAST(COUNT(*) AS BIGINT) AS n_rows,
+           CAST(COUNT(DISTINCT b.sig) AS BIGINT) AS n_buckets,
+           CAST(COUNT(DISTINCT b.doc_id) AS BIGINT) AS n_docs,
+           CAST(SUM(s.n_sh) AS BIGINT) AS sum_nsh
+    FROM (SELECT * FROM bands {sql_where("doc_id % 10 <> 0", pred)}) b
+    JOIN doc_size s ON b.doc_id = s.doc_id
+    GROUP BY b.band_id
+    """
 
-    Scale: one shingle explode + 16-way min aggregation over the lake
-    + a partitioned columnar write — the job a 100 TB deployment runs
-    once per corpus snapshot (then appends admitted docs to), not
-    nightly. The summary read-back aggregates only (band_id, sig,
-    doc_id, n_sh) out of the artifact."""
-    path = lake_minhash_artifact(spark, sf_dir, rebuild=True)
-    return _minhash_artifact_summary(spark.read.parquet(path))
+
+# The lake's MinHash band table ``(doc_id, sig, n_sh, band_id)`` — the
+# MinHash twin of SIG_FAMILY (SURVEY.md §7). A 100 TB lake shingles and
+# min-hashes its documents once; each night's gate joins the shard's
+# fresh bands against this artifact instead of re-aggregating the
+# lake's 16-way signature min. Each band row carries the doc's shingle
+# count ``n_sh``, so the gate's Jaccard denominator needs no lake-side
+# size aggregation either (8 bytes/row for a lake-sized groupBy per
+# run). Lake-sized writes pin the shingles; the admitted batch stays
+# lazy (the append plan pin).
+MINHASH_FAMILY = ArtifactFamily(
+    "quty_lake_minhash", MINHASH, minhash_artifact_rows,
+    _minhash_artifact_summary, _minhash_summary_sql,
+    lake_rows=partial(minhash_artifact_rows, checkpoint=True),
+)
+register_artifact_sinks("sink_lake_minhash_artifact", MINHASH_FAMILY)
 
 
 @registry.query(
@@ -1786,7 +1752,7 @@ def dedup_incremental_minhash_artifact(
 ) -> DataFrame:
     """The read-nightly half of the MinHash ingest gate: the lake's
     band table AND per-doc shingle sizes come from the precomputed
-    artifact (:func:`lake_minhash_artifact`), so the per-run plan
+    artifact (``MINHASH_FAMILY``), so the per-run plan
     aggregates ONLY the incoming shard — the lake-sized 16-way
     signature min and the lake-sized size count both left the nightly
     path (pinned in tests/test_scale_plans.py: strictly fewer
@@ -1808,7 +1774,7 @@ def dedup_incremental_minhash_artifact(
     gate-after-rebuild by set equality (tests/test_artifact_append.py);
     the registered query always reads the session-memoized build."""
     if path is None:
-        path = lake_minhash_artifact(spark, sf_dir)
+        path = MINHASH_FAMILY.build(spark, sf_dir)
     lake = spark.read.parquet(path).select("doc_id", "sig", "n_sh", "band_id")
     sh_shard = (
         doc_shingles(spark, sf_dir)
@@ -1835,73 +1801,19 @@ SIG = Layout("band_id", "doc_id", "band_val")
 
 
 def sig_artifact_rows(
-    spark: SparkSession, sf_dir: str, keep: Column, staged: bool = False
+    spark: SparkSession, sf_dir: str, keep: Column
 ) -> DataFrame:
     """``(doc_id, sig, band_id, band_val)`` SimHash band rows of the
     docs ``keep`` selects — the rows of every signature artifact build.
     The predicate is on the signature aggregation's grouping key
     (doc_id), so Catalyst pushes it onto the documents scan: a
     batch-only caller signs only the batch (plan-pinned)."""
-    return simhash_bands(simhash_sigs(spark, sf_dir, staged=staged)).filter(
-        keep
-    )
-
-
-def lake_signature_artifact(
-    spark: SparkSession, sf_dir: str, rebuild: bool = False,
-    staged: bool = False,
-) -> str:
-    """Materialize the lake side's banded SimHash signatures
-    ``(doc_id, sig, band_val)`` as an on-disk parquet artifact laid out
-    as :data:`SIG`, and return its path. This is the
-    write-once half of the production ingest gate: a 100 TB lake signs
-    its documents ONCE (amortized over every nightly shard), and each
-    night's gate joins the shard's fresh bands against this artifact
-    instead of re-aggregating the lake.
-
-    Partitioning by ``band_id`` makes the artifact's layout match the
-    gate's join key prefix: a probe that only needs band 2 (e.g. a
-    debugging re-check) prunes 3/4 of the files at planning time, and
-    the nightly append of newly-admitted docs goes to 4 directories
-    with no read-modify-write of existing files. A
-    :func:`session_artifact`, so a composed pipeline (writer query,
-    gate query, bench loop) writes once per session."""
-
-    def _write(path: str) -> None:
-        # Sorting within partitions by the probe key gives every parquet
-        # row group a tight band_val min/max: at real scale a point
-        # probe ("which lake docs sit in bucket X of band 2?") prunes
-        # first directories (partition column) then row groups
-        # (statistics) before touching a page. Cost at write time is one
-        # local per-task sort — no extra shuffle.
-        SIG.write(sig_artifact_rows(spark, sf_dir, _lake(), staged), path)
-
-    kind = "quty_lake_sig_stg" if staged else "quty_lake_sig"
-    return session_artifact(spark, kind, sf_dir, _write, rebuild)
-
-
-# Per-band summary of the banded lake-signature artifact, shared by the
-# write-once and append sinks (see :class:`Layout`).
-SQL_SIG_ARTIFACT_SUMMARY = f"""
-    WITH {SQL_SIMHASH},
-    bands AS (
-        SELECT doc_id, sig, b.band_id,
-               (sig >> (12 * b.band_id)) & 4095 AS band_val
-        FROM simhash, (SELECT unnest(range(0, 4)) AS band_id) b
-        WHERE doc_id % 10 <> 0
-    )
-    SELECT band_id,
-           COUNT(*) AS n_rows,
-           COUNT(DISTINCT band_val) AS n_buckets,
-           COUNT(DISTINCT doc_id) AS n_docs
-    FROM bands GROUP BY band_id
-    """
+    return simhash_bands(simhash_sigs(spark, sf_dir)).filter(keep)
 
 
 def _sig_artifact_summary(art: DataFrame) -> DataFrame:
     """Per-band row/bucket/doc summary of a banded-signature artifact
-    read-back (text or media) — shared by the write-once, append and
-    retraction sinks."""
+    read-back (text or media)."""
     return art.groupBy(
         F.col("band_id").cast("bigint").alias("band_id")
     ).agg(
@@ -1911,24 +1823,52 @@ def _sig_artifact_summary(art: DataFrame) -> DataFrame:
     )
 
 
-@registry.query(
-    "sink_lake_signature_artifact",
-    oracle=SQL_SIG_ARTIFACT_SUMMARY,
-)
-def sink_lake_signature_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Write the banded lake-signature artifact (forced rebuild — this
-    IS the write-once job), then read it back and report per-band row /
-    bucket / doc counts. The oracle recomputes the same summary from the
-    documents table, so the round trip proves the artifact holds exactly
-    the lake's banded signatures — the contract
-    :func:`dedup_incremental_simhash_artifact` relies on.
+def band_summary_sql(sig_ctes: str, sigs: str, pred: str) -> str:
+    """DuckDB twin of :func:`_sig_artifact_summary` over the lake ids
+    that also pass ``pred``; ``sig_ctes`` define the ``sigs`` relation
+    of ``(doc_id, sig)`` signatures (text or media)."""
+    return f"""
+    WITH {sig_ctes},
+    bands AS (
+        SELECT doc_id, sig, b.band_id,
+               (sig >> (12 * b.band_id)) & 4095 AS band_val
+        FROM {sigs}, (SELECT unnest(range(0, 4)) AS band_id) b
+        {sql_where("doc_id % 10 <> 0", pred)}
+    )
+    SELECT band_id,
+           COUNT(*) AS n_rows,
+           COUNT(DISTINCT band_val) AS n_buckets,
+           COUNT(DISTINCT doc_id) AS n_docs
+    FROM bands GROUP BY band_id
+    """
 
-    Scale: one signature aggregation over the lake + a partitioned
-    columnar write — the job a 100 TB deployment runs once (then
-    appends to), not nightly. The summary read-back aggregates only
-    (band_id, band_val, doc_id) columns out of the artifact."""
-    path = lake_signature_artifact(spark, sf_dir, rebuild=True)
-    return _sig_artifact_summary(spark.read.parquet(path))
+
+# The lake's banded SimHash signatures: the write-once half of the
+# production ingest gate. A 100 TB lake signs its documents once
+# (amortized over every nightly shard); each night's gate joins the
+# shard's fresh bands against this artifact instead of re-aggregating
+# the lake. band_id directories match the gate's join-key prefix, so a
+# one-band probe prunes 3/4 of the files at planning time, and the
+# band_val-sorted files give every row group a tight min/max, so a
+# point probe then prunes row groups too (one local sort per task at
+# write time, no extra shuffle). The nightly append of admitted docs
+# writes ≤4 new files, no read-modify-write and no lake-sized compute.
+SIG_FAMILY = ArtifactFamily(
+    "quty_lake_sig", SIG, sig_artifact_rows, _sig_artifact_summary,
+    partial(band_summary_sql, SQL_SIMHASH, "simhash"),
+)
+register_artifact_sinks("sink_lake_signature_artifact", SIG_FAMILY)
+
+# The same artifact over the bridge-staged corpus (STAGED_BRIDGE_ROWS),
+# the relabel lifecycle's non-vacuity device.
+SIG_STAGED_FAMILY = ArtifactFamily(
+    "quty_lake_sig_stg", SIG,
+    lambda spark, sf_dir, keep: simhash_bands(
+        simhash_sigs(spark, sf_dir, staged=True)
+    ).filter(keep),
+    _sig_artifact_summary,
+    partial(band_summary_sql, SQL_SIMHASH_STAGED, "simhash"),
+)
 
 
 @registry.query(
@@ -1941,7 +1881,7 @@ def dedup_incremental_simhash_artifact(
     """The read-nightly half of the production ingest gate — the shape
     :func:`dedup_incremental_simhash`'s docstring promises: the lake
     side's banded signatures come from the precomputed parquet artifact
-    (:func:`lake_signature_artifact`), NOT from re-signing the lake, so
+    (``SIG_FAMILY``), NOT from re-signing the lake, so
     the per-run plan aggregates ONLY the incoming shard. The optimized
     plan's lake branch is a bare parquet scan of the artifact — no
     Aggregate — pinned in tests/test_scale_plans.py; the oracle is the
@@ -1959,7 +1899,7 @@ def dedup_incremental_simhash_artifact(
     gate-after-rebuild by set equality (tests/test_artifact_append.py);
     the registered query always reads the session-memoized build."""
     if path is None:
-        path = lake_signature_artifact(spark, sf_dir)
+        path = SIG_FAMILY.build(spark, sf_dir)
     lake = spark.read.parquet(path).select(
         "doc_id", "sig", "band_id", "band_val"
     )
@@ -1967,136 +1907,6 @@ def dedup_incremental_simhash_artifact(
         F.col("doc_id") % 10 == 0
     )
     return simhash_gate_pairs(shard, lake).distinct()
-
-
-# ---------------------------------------------------------------------------
-# Artifact APPEND (closing the nightly lifecycle)
-# ---------------------------------------------------------------------------
-
-# Fixture convention for the append exercise: yesterday's ADMITTED batch
-# is doc_id % 10 == APPEND_BATCH_MOD — disjoint from tonight's shard
-# (% 10 == 0) and inside the canonical lake (% 10 != 0). The append job
-# never re-reads the lake (plan-pinned in tests/test_scale_plans.py).
-APPEND_BATCH_MOD = 5
-
-
-def _lake() -> Column:
-    """The standing lake: every doc outside tonight's shard."""
-    return F.col("doc_id") % 10 != 0
-
-
-def _yesterday() -> Column:
-    """The lake before the admitted batch was appended."""
-    return _lake() & (F.col("doc_id") % 10 != APPEND_BATCH_MOD)
-
-
-def _admitted() -> Column:
-    """Yesterday's admitted batch."""
-    return F.col("doc_id") % 10 == APPEND_BATCH_MOD
-
-
-def admitted_simhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Band rows for the admitted batch — the SimHash append job's
-    ENTIRE read set: it signs |batch| docs, never the lake."""
-    return sig_artifact_rows(spark, sf_dir, _admitted())
-
-
-def admitted_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, sig, n_sh, band_id) rows for the admitted batch — the
-    MinHash append job's entire read set, kept lazy (see
-    :func:`minhash_artifact_rows`)."""
-    return minhash_artifact_rows(spark, sf_dir, _admitted())
-
-
-def appended_signature_artifact(
-    spark: SparkSession, sf_dir: str, rebuild: bool = False
-) -> str:
-    """Yesterday's lake-signature artifact (lake minus the admitted
-    batch) with the batch's band rows APPENDED — the lifecycle step
-    ``examples/nightly_ingest.py`` runs, as a memoized callable shared
-    by the registered append sink and the gate-equality tests. The
-    resulting artifact's content equals a fresh full-lake build's, by
-    construction verified through the shared oracle SQL."""
-
-    def _write(path: str) -> None:
-        SIG.write(sig_artifact_rows(spark, sf_dir, _yesterday()), path)
-        SIG.write(admitted_simhash_bands(spark, sf_dir), path, "append")
-
-    return session_artifact(
-        spark, "quty_lake_sig_app", sf_dir, _write, rebuild
-    )
-
-
-def appended_minhash_artifact(
-    spark: SparkSession, sf_dir: str, rebuild: bool = False
-) -> str:
-    """MinHash-family twin of :func:`appended_signature_artifact`:
-    yesterday's band+sizes artifact with the admitted batch's rows
-    appended. Content equals a fresh :func:`lake_minhash_artifact`
-    build's — including the embedded per-doc shingle counts, so
-    tomorrow's gate Jaccard denominators are correct for appended docs
-    too (paired with the convention-free
-    :func:`lake_shingles_for_verify`, appended docs are verifiable by
-    tomorrow's exact-Jaccard stage)."""
-
-    def _write(path: str) -> None:
-        MINHASH.write(
-            minhash_artifact_rows(
-                spark, sf_dir, _yesterday(), checkpoint=True
-            ),
-            path,
-        )
-        MINHASH.write(admitted_minhash_bands(spark, sf_dir), path, "append")
-
-    return session_artifact(
-        spark, "quty_lake_minhash_app", sf_dir, _write, rebuild
-    )
-
-
-@registry.query(
-    "sink_lake_signature_artifact_append",
-    oracle=SQL_SIG_ARTIFACT_SUMMARY,
-)
-def sink_lake_signature_artifact_append(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The APPEND step of the SimHash artifact lifecycle, oracle-
-    verified: write yesterday's artifact (lake minus the admitted
-    batch), append the batch's band rows — computed from the batch
-    alone, never re-signing the lake — then read the result back and
-    report the per-band summary. The oracle is byte-identical to
-    :func:`sink_lake_signature_artifact`'s (it recomputes the summary
-    over the FULL lake from the documents table), so a green row
-    proves append ≡ rebuild: the appended artifact holds exactly what
-    a from-scratch build would.
-
-    Scale: the nightly append writes ≤4 new files into the band_id
-    directories (no read-modify-write, no lake-sized compute);
-    tomorrow's gate reads the grown artifact unchanged — set-equality
-    with a fresh rebuild is additionally pinned in
-    tests/test_artifact_append.py, and the append plan's
-    scans-only-the-batch shape in tests/test_scale_plans.py."""
-    path = appended_signature_artifact(spark, sf_dir, rebuild=True)
-    return _sig_artifact_summary(spark.read.parquet(path))
-
-
-@registry.query(
-    "sink_lake_minhash_artifact_append",
-    oracle=SQL_MINHASH_ARTIFACT_SUMMARY,
-)
-def sink_lake_minhash_artifact_append(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The APPEND step of the MinHash artifact lifecycle — same
-    append ≡ rebuild contract as
-    :func:`sink_lake_signature_artifact_append`, with the extra stake
-    this family carries: each appended row embeds the doc's shingle
-    count ``n_sh``, the gate's Jaccard denominator, so the oracle's
-    ``sum_nsh`` column verifies the appended SIZES as well as the
-    appended bands (an append that wrote bands with wrong or missing
-    n_sh would summarize differently and go red)."""
-    path = appended_minhash_artifact(spark, sf_dir, rebuild=True)
-    return _minhash_artifact_summary(spark.read.parquet(path))
 
 
 # ---------------------------------------------------------------------------
@@ -2303,7 +2113,7 @@ def dedup_cluster_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     their FINAL (full-corpus-equivalent) cluster labels without any
     lake-vs-lake mining or a lake-sized BSP. Inputs are the two
     standing artifacts — the banded lake signatures
-    (:func:`lake_signature_artifact`, for the shard-vs-lake gate join)
+    (``SIG_FAMILY``, for the shard-vs-lake gate join)
     and the lake cluster labels
     (:func:`lake_cluster_labels_artifact`) — plus a shard-internal
     band self-join; nothing lake-sized is recomputed.
@@ -2416,7 +2226,7 @@ def _incremental_cluster_graph(
         spark,
         shard_bands,
         spark.read.parquet(
-            lake_signature_artifact(spark, sf_dir, staged=staged)
+            (SIG_STAGED_FAMILY if staged else SIG_FAMILY).build(spark, sf_dir)
         ),
         labels_path
         if labels_path is not None
@@ -2510,8 +2320,8 @@ PASSAGE_W = 16
 PASSAGE_STRIDE = 8
 
 # The (doc_id, passage_md5) window table — ONE definition shared by the
-# corpus-level report and the per-doc scrub plan, on both engines (r12
-# review: four independent copies of the fence-post arithmetic would
+# corpus-level report and the per-doc scrub plan, on both engines
+# (four independent copies of the fence-post arithmetic would
 # let the two ops' window contracts drift apart without any oracle
 # going red).
 SQL_PASSAGE_WINDOWS = f"""passage_docs AS (
@@ -2686,8 +2496,7 @@ def dedup_cluster_relabel_queue(
     the CORRECTNESS row is a vacuous 0 == 0; the non-vacuous evidence
     is tests/test_dedup_semantics.py's crafted-merge corpus AND the
     staged twin :func:`dedup_cluster_relabel_queue_staged`, whose
-    external row checks the same machinery with rows > 0 (r12 VERDICT
-    "Next round" #4)."""
+    external row checks the same machinery with rows > 0."""
     return _relabel_queue_frame(spark, sf_dir, staged=False)
 
 
@@ -2721,13 +2530,13 @@ def dedup_cluster_relabel_queue_staged(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """:func:`dedup_cluster_relabel_queue` over the bridge-staged corpus
-    (STAGED_BRIDGE_ROWS) — the NON-VACUOUS external row the r12 verdict
-    asked for: the staged trio guarantees a standing-cluster merge on
-    any fixture corpus, so this query's driver CORRECTNESS row always
-    checks real rows (exactly cluster B's standing label, 9001003 →
-    9001001, n_docs 2 — plus whatever merges the fixture itself
-    contributes). Implementation and oracle are the SHARED raw
-    machinery with only the corpus CTE swapped, so a green row here is
+    (STAGED_BRIDGE_ROWS) — the NON-VACUOUS external row: the staged trio
+    guarantees a standing-cluster merge on any fixture corpus, so this
+    query's driver CORRECTNESS row always checks real rows (exactly
+    cluster B's standing label, 9001003 → 9001001, n_docs 2 — plus
+    whatever merges the fixture itself contributes). Implementation and
+    oracle are the SHARED raw machinery with only the corpus CTE
+    swapped, so a green row here is
     evidence about the same code path the raw query runs."""
     return _relabel_queue_frame(spark, sf_dir, staged=True)
 
@@ -2777,8 +2586,8 @@ def _write_home_bucket_layout(labels: DataFrame, path: str) -> None:
     of ``path``, like the IVF _centroids) records which home buckets
     currently hold rows of each label — one bucket per label at base
     time; rewrites fan labels out across their merged-in clusters' home
-    buckets, and the sidecar is what keeps round-N maintenance reads
-    exact."""
+    buckets, and the sidecar is what keeps every later night's
+    maintenance reads exact."""
     art0 = labels.withColumn(
         "lbl_bucket",
         F.pmod(F.col("lbl"), F.lit(LABEL_HOME_BUCKETS)).cast("int"),
@@ -2819,10 +2628,10 @@ def apply_cluster_label_maintenance(
     bucket is its INSERT-time label's bucket — cluster F's rows fan
     out across the home buckets of every cluster it absorbed — so the
     ``_label_homes`` sidecar tracks, per current label, the bucket set
-    holding its rows; round-N's affected-bucket discovery is a sidecar
-    lookup, never a lake scan and never an id-arithmetic guess (which
-    would silently miss absorbed buckets from round 2 on, and would
-    misclassify a standing label that happens to be a prior shard
+    holding its rows; each night's affected-bucket discovery is a
+    sidecar lookup, never a lake scan and never an id-arithmetic guess
+    (which would silently miss absorbed buckets from the second night
+    on, and would misclassify a standing label that happens to be a prior shard
     doc's id). The sidecar is cluster-count-sized metadata, rewritten
     whole each night like a parquet footer. Two-round equivalence to a
     fresh rebuild is pinned in tests/test_dedup_semantics.py;
@@ -2901,8 +2710,8 @@ def _run_cluster_label_maintenance(
 
     # -- tonight's append set (read-only on the artifact) ----------------
     # Tonight's shard = % 10 == 0 BSP nodes MINUS standing labels (from
-    # round 2 on, a standing label can be a prior shard doc's id — its
-    # rows are already stored and were handled by the rewrite).
+    # the second night on, a standing label can be a prior shard doc's
+    # id — its rows are already stored and were handled by the rewrite).
     def _build_new_nodes() -> DataFrame:
         new_nodes = (
             labels.filter(F.col("node") % 10 == 0)
@@ -2963,8 +2772,8 @@ def _run_cluster_label_maintenance(
         if q.isEmpty():
             return q, None
         # The queued labels' CURRENT bucket sets come from the sidecar —
-        # after round 1 a label's rows span every absorbed cluster's
-        # home bucket, so pmod(old_lbl) alone would under-read.
+        # after the first night a label's rows span every absorbed
+        # cluster's home bucket, so pmod(old_lbl) alone would under-read.
         affected = (
             homes.join(
                 F.broadcast(q.select("old_lbl")),
@@ -3224,40 +3033,6 @@ def passage_artifact_rows(
     )
 
 
-def lake_passage_artifact(
-    spark: SparkSession, sf_dir: str, rebuild: bool = False
-) -> str:
-    """The write-once PASSAGE-DIGEST artifact: every PASSAGE_W-token
-    window digest of every lake document, laid out as :data:`PASSAGE`
-    (digest-prefix directories, digest-sorted files) — the fourth
-    standing artifact family (after SimHash bands, MinHash bands, IVF
-    postings), giving the repeated-passage ops the same write-once /
-    gate-nightly lifecycle. A 100 TB lake windows its text ONCE; each
-    night's shard probes digest membership instead of re-windowing the
-    lake (the corpus-level ops re-derive all windows per run — fine for
-    a report, wrong as a nightly gate)."""
-
-    def _write(path: str) -> None:
-        PASSAGE.write(passage_artifact_rows(spark, sf_dir, _lake()), path)
-
-    return session_artifact(
-        spark, "quty_lake_passages", sf_dir, _write, rebuild
-    )
-
-
-# Per-prefix summary of the lake passage artifact, shared by the
-# write-once and append sinks (see :class:`Layout`).
-SQL_PASSAGE_ARTIFACT_SUMMARY = f"""
-    WITH {SQL_PASSAGE_WINDOWS}
-    SELECT substring(passage_md5, 1, 1) AS pfx,
-           CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(COUNT(DISTINCT passage_md5) AS BIGINT) AS n_digests,
-           CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs
-    FROM passage_windows WHERE doc_id % 10 <> 0
-    GROUP BY substring(passage_md5, 1, 1)
-    """
-
-
 def _passage_artifact_summary(art: DataFrame) -> DataFrame:
     return art.groupBy(F.col("pfx").cast("string").alias("pfx")).agg(
         F.count("*").alias("n_rows"),
@@ -3266,55 +3041,32 @@ def _passage_artifact_summary(art: DataFrame) -> DataFrame:
     )
 
 
-@registry.query(
-    "sink_lake_passage_artifact",
-    oracle=SQL_PASSAGE_ARTIFACT_SUMMARY,
+def _passage_summary_sql(pred: str) -> str:
+    """DuckDB twin of :func:`_passage_artifact_summary`."""
+    return f"""
+    WITH {SQL_PASSAGE_WINDOWS}
+    SELECT substring(passage_md5, 1, 1) AS pfx,
+           CAST(COUNT(*) AS BIGINT) AS n_rows,
+           CAST(COUNT(DISTINCT passage_md5) AS BIGINT) AS n_digests,
+           CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs
+    FROM passage_windows {sql_where("doc_id % 10 <> 0", pred)}
+    GROUP BY substring(passage_md5, 1, 1)
+    """
+
+
+# Every PASSAGE_W-token window digest of every lake document, giving
+# the repeated-passage ops the write-once / gate-nightly lifecycle. A
+# 100 TB lake windows its text once; each night's shard probes digest
+# membership instead of re-windowing the lake (the corpus-level ops
+# re-derive all windows per run — fine for a report, wrong as a nightly
+# gate). The admitted batch's windows land as new files in their
+# prefix directories: no read-modify-write, and the batch predicate
+# pushes onto the documents scan (plan-pinned).
+PASSAGE_FAMILY = ArtifactFamily(
+    "quty_lake_passages", PASSAGE, passage_artifact_rows,
+    _passage_artifact_summary, _passage_summary_sql,
 )
-def sink_lake_passage_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Write the lake passage-digest artifact (forced rebuild — this IS
-    the write-once job), read it back, report per-prefix row / digest /
-    doc counts. The oracle recomputes the summary from the documents
-    table, so the round trip proves the artifact holds exactly the
-    lake's windows — the contract :func:`dedup_incremental_passages`
-    relies on."""
-    path = lake_passage_artifact(spark, sf_dir, rebuild=True)
-    return _passage_artifact_summary(spark.read.parquet(path))
-
-
-def appended_passage_artifact(
-    spark: SparkSession, sf_dir: str, rebuild: bool = False
-) -> str:
-    """Yesterday's passage artifact (lake minus the admitted batch)
-    with the batch's window rows APPENDED — computed from the batch
-    alone, never re-windowing the lake; the passage twin of
-    :func:`appended_signature_artifact`."""
-
-    def _write(path: str) -> None:
-        PASSAGE.write(passage_artifact_rows(spark, sf_dir, _yesterday()), path)
-        PASSAGE.write(
-            passage_artifact_rows(spark, sf_dir, _admitted()), path, "append"
-        )
-
-    return session_artifact(
-        spark, "quty_lake_passages_app", sf_dir, _write, rebuild
-    )
-
-
-@registry.query(
-    "sink_lake_passage_artifact_append",
-    oracle=SQL_PASSAGE_ARTIFACT_SUMMARY,
-)
-def sink_lake_passage_artifact_append(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The APPEND step of the passage-artifact lifecycle: the admitted
-    batch's windows land as new files in their prefix directories —
-    zero read-modify-write, zero lake re-windowing (the batch predicate
-    pushes onto the documents scan; plan-pinned). The oracle is
-    byte-identical to :func:`sink_lake_passage_artifact`'s, so a green
-    row proves append ≡ rebuild for the fourth artifact family too."""
-    path = appended_passage_artifact(spark, sf_dir, rebuild=True)
-    return _passage_artifact_summary(spark.read.parquet(path))
+register_artifact_sinks("sink_lake_passage_artifact", PASSAGE_FAMILY)
 
 
 # The passage gate's oracle — shared byte-for-byte with the streaming
@@ -3389,7 +3141,7 @@ def dedup_incremental_passages(
     corpus-level :func:`doc_passage_dup_ratio` answers this for a
     snapshot by re-deriving every window; this gate windows ONLY the
     shard and probes the standing artifact
-    (:func:`lake_passage_artifact`) — per-night cost follows the
+    (``PASSAGE_FAMILY``) — per-night cost follows the
     shard, the lake is a presence probe.
 
     Plan shape (pinned in tests/test_scale_plans.py): the shard's
@@ -3409,7 +3161,7 @@ def dedup_incremental_passages(
     return passage_scrub(
         w,
         spark.read.parquet(
-            path if path is not None else lake_passage_artifact(spark, sf_dir)
+            path if path is not None else PASSAGE_FAMILY.build(spark, sf_dir)
         ),
     )
 

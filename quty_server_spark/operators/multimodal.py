@@ -36,13 +36,15 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from quty_server_spark.operators._helpers import load_table
+from quty_server_spark.operators._helpers import (
+    ArtifactFamily,
+    load_table,
+    register_artifact_sinks,
+)
 from quty_server_spark.operators.dedup import (
     SIG,
-    _admitted,
-    _lake,
     _sig_artifact_summary,
-    _yesterday,
+    band_summary_sql,
 )
 from quty_server_spark.plans.registry import registry
 
@@ -386,7 +388,7 @@ def mm_payload_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Perceptual (near-dup) media dedup — round 15
+# Perceptual (near-dup) media dedup
 # ---------------------------------------------------------------------------
 
 # Payloads below this size have sub-2-byte signature regions; they fall
@@ -616,7 +618,7 @@ def mm_payload_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join's own shuffle key (no extra exchange; plan pinned in
     tests/test_plan_audit.py); the Hamming verify touches candidate
     pairs only, and the modality decoration joins AFTER mining on the
-    id-keyed universe (the r14 split_leakage_near_dup hardening)."""
+    id-keyed universe (as split_leakage_near_dup does)."""
     from quty_server_spark.operators.dedup import (
         HAMMING_MAX,
         SIMHASH_BUCKET_CAP,
@@ -761,103 +763,19 @@ def media_artifact_rows(
     )
 
 
-def media_signature_artifact(
-    spark: SparkSession, sf_dir: str, rebuild: bool = False
-) -> str:
-    """Write-once banded perceptual-signature artifact over the LAKE
-    media (``doc_id % 10 <> 0`` of the staged universe), laid out as
-    the text family's :data:`~quty_server_spark.operators.dedup.SIG`
-    (band_id directories, band_val-sorted row groups) — the media twin of
-    :func:`~quty_server_spark.operators.dedup.lake_signature_artifact`:
-    a 100 TB media lake decodes and signs ONCE, and each night's gate
-    joins the shard's fresh signatures against this artifact instead of
-    re-decoding the lake (for real media the signing pass is the
-    expensive decode — amortizing it is the whole artifact story).
-    A :func:`~quty_server_spark.session.session_artifact`."""
-    from quty_server_spark.session import session_artifact
-
-    def _write(path: str) -> None:
-        SIG.write(media_artifact_rows(spark, sf_dir, _lake()), path)
-
-    return session_artifact(spark, "quty_media_sig", sf_dir, _write, rebuild)
-
-
-def appended_media_signature_artifact(
-    spark: SparkSession, sf_dir: str, rebuild: bool = False
-) -> str:
-    """Yesterday's media-signature artifact (lake minus the admitted
-    batch, ``doc_id % 10 == APPEND_BATCH_MOD``) with the batch's band
-    rows APPENDED — computed from the batch alone, never re-signing
-    (re-decoding) the lake. Content equals a fresh full-lake build's,
-    verified through the shared summary oracle and pinned set-equal in
-    tests/test_artifact_append.py."""
-    from quty_server_spark.session import session_artifact
-
-    def _write(path: str) -> None:
-        SIG.write(media_artifact_rows(spark, sf_dir, _yesterday()), path)
-        SIG.write(
-            media_artifact_rows(spark, sf_dir, _admitted()), path, "append"
-        )
-
-    return session_artifact(
-        spark, "quty_media_sig_app", sf_dir, _write, rebuild
-    )
-
-
-def _media_sig_summary_oracle() -> str:
-    """Per-band summary over the lake slice of the staged universe,
-    shared by the write-once and append sinks (see
-    :class:`~quty_server_spark.operators._helpers.Layout`)."""
-    return f"""
-    WITH {_percep_sig_ctes()},
-    bands AS (
-        SELECT doc_id, sig, b.band_id,
-               (sig >> (12 * b.band_id)) & 4095 AS band_val
-        FROM sigt, (SELECT unnest(range(0, 4)) AS band_id) b
-        WHERE doc_id % 10 <> 0
-    )
-    SELECT band_id,
-           COUNT(*) AS n_rows,
-           COUNT(DISTINCT band_val) AS n_buckets,
-           COUNT(DISTINCT doc_id) AS n_docs
-    FROM bands GROUP BY band_id
-    """
-
-
-_SQL_MEDIA_SIG_SUMMARY = _media_sig_summary_oracle()
-
-
-@registry.query(
-    "sink_media_signature_artifact", oracle=_SQL_MEDIA_SIG_SUMMARY
+# Banded perceptual signatures of the LAKE media (``doc_id % 10 <> 0``
+# of the staged universe), laid out as the text family's SIG (band_id
+# directories, band_val-sorted row groups). A 100 TB media lake decodes
+# and signs once; each night's gate joins the shard's fresh signatures
+# against this artifact instead of re-decoding the lake (for real
+# media the signing pass is the expensive decode, so amortizing it is
+# the whole artifact story). The append twin signs the admitted batch
+# alone, never re-decoding the lake.
+MEDIA_SIG_FAMILY = ArtifactFamily(
+    "quty_media_sig", SIG, media_artifact_rows, _sig_artifact_summary,
+    lambda pred: band_summary_sql(_percep_sig_ctes(), "sigt", pred),
 )
-def sink_media_signature_artifact(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The media family's WRITE-ONCE artifact step: build the banded
-    perceptual-signature artifact for the media lake, read it back, and
-    report the per-band summary — the lifecycle that earns the nightly
-    gate its 'never re-decode the lake' claim. Layout matches the gate's
-    join-key prefix (band_id directories, band_val-sorted row groups) so
-    probes prune directories then row groups before touching a page."""
-    path = media_signature_artifact(spark, sf_dir, rebuild=True)
-    return _sig_artifact_summary(spark.read.parquet(path))
-
-
-@registry.query(
-    "sink_media_signature_artifact_append", oracle=_SQL_MEDIA_SIG_SUMMARY
-)
-def sink_media_signature_artifact_append(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The APPEND step of the media-signature artifact lifecycle: write
-    yesterday's artifact (lake minus the admitted batch), append the
-    batch's band rows — signed from the batch alone, the lake neither
-    re-decoded nor re-signed — and summarize the read-back under the
-    oracle shared byte-for-byte with the write-once sink: a green row
-    proves append ≡ rebuild. Untouched-file byte-identity and content
-    set-equality are pinned in tests/test_artifact_append.py."""
-    path = appended_media_signature_artifact(spark, sf_dir, rebuild=True)
-    return _sig_artifact_summary(spark.read.parquet(path))
+register_artifact_sinks("sink_media_signature_artifact", MEDIA_SIG_FAMILY)
 
 
 def _mm_incremental_gate_oracle() -> str:
@@ -906,7 +824,7 @@ def mm_neardup_incremental_artifact(
     from quty_server_spark.operators.dedup import simhash_gate_pairs
 
     if art_path is None:
-        art_path = media_signature_artifact(spark, sf_dir)
+        art_path = MEDIA_SIG_FAMILY.build(spark, sf_dir)
     shard_uni = percep_media_universe(spark, sf_dir).filter(
         F.col("doc_id") % 10 == 0
     )
@@ -916,21 +834,14 @@ def mm_neardup_incremental_artifact(
     ).distinct()
 
 
-def _media_sig_survivor_summary_oracle() -> str:
-    """The write-once summary scoped to the retraction survivors — the
-    same single-predicate redirect device the snapshot oracles use: one
-    clause added to the shared SQL, everything else byte-identical, so
-    the retraction contract cannot drift from the write-once one."""
+def _survivors_oracle() -> str:
+    """The write-once oracle scoped to the retraction survivors."""
     from quty_server_spark.operators.retract import RETRACT_MOD
 
-    full = _SQL_MEDIA_SIG_SUMMARY
-    scoped = full.replace(
-        "WHERE doc_id % 10 <> 0",
-        f"WHERE doc_id % 10 <> 0 AND doc_id % 10 <> {RETRACT_MOD}",
-        1,
-    )
-    assert scoped != full
-    return scoped
+    return MEDIA_SIG_FAMILY.summary_sql(f"doc_id % 10 <> {RETRACT_MOD}")
+
+
+_SQL_MEDIA_SIG_SURVIVORS = _survivors_oracle()
 
 
 def _tombstoned_media_copy(spark: SparkSession, sf_dir: str, kind: str) -> str:
@@ -947,7 +858,7 @@ def _tombstoned_media_copy(spark: SparkSession, sf_dir: str, kind: str) -> str:
     ).select("doc_id")
     return tombstoned_copy(
         spark,
-        media_signature_artifact(spark, sf_dir),
+        MEDIA_SIG_FAMILY.build(spark, sf_dir),
         fresh_tmp_dir(spark, kind, sf_dir),
         victims,
     )
@@ -955,7 +866,7 @@ def _tombstoned_media_copy(spark: SparkSession, sf_dir: str, kind: str) -> str:
 
 @registry.query(
     "sink_media_signature_artifact_retract",
-    oracle=_media_sig_survivor_summary_oracle(),
+    oracle=_SQL_MEDIA_SIG_SURVIVORS,
 )
 def sink_media_signature_artifact_retract(
     spark: SparkSession, sf_dir: str
@@ -982,14 +893,14 @@ def sink_media_signature_artifact_retract(
     from quty_server_spark.operators.retract import read_artifact_live
 
     priv = _tombstoned_media_copy(spark, sf_dir, "quty_media_sig_rt")
-    return _sig_artifact_summary(
+    return MEDIA_SIG_FAMILY.summary(
         read_artifact_live(spark, priv, SIG.id_col)
     )
 
 
 @registry.query(
     "sink_media_signature_artifact_retract_compacted",
-    oracle=_media_sig_survivor_summary_oracle(),
+    oracle=_SQL_MEDIA_SIG_SURVIVORS,
 )
 def sink_media_signature_artifact_retract_compacted(
     spark: SparkSession, sf_dir: str
@@ -1018,4 +929,4 @@ def sink_media_signature_artifact_retract_compacted(
 
     priv = _tombstoned_media_copy(spark, sf_dir, "quty_media_sig_rtc")
     compact_tombstones(spark, priv, SIG)
-    return _sig_artifact_summary(spark.read.parquet(priv))
+    return MEDIA_SIG_FAMILY.summary(spark.read.parquet(priv))

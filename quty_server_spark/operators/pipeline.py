@@ -1052,7 +1052,7 @@ def corpus_training_snapshot_incremental(
         _incremental_cluster_labels,
         _passage_pfx,
         _passage_windows,
-        lake_passage_artifact,
+        PASSAGE_FAMILY,
         passage_scrub,
     )
 
@@ -1073,7 +1073,7 @@ def corpus_training_snapshot_incremental(
         "doc_id", "passage_md5", _passage_pfx()
     ).localCheckpoint(eager=False)
     scrub = passage_scrub(
-        w, spark.read.parquet(lake_passage_artifact(spark, sf_dir))
+        w, spark.read.parquet(PASSAGE_FAMILY.build(spark, sf_dir))
     ).select("doc_id", "dup_ppm")
     return (
         d.filter(quality_keep)
@@ -1509,8 +1509,8 @@ def _build_appended_training_shards(
 
     from quty_server_spark.operators.dedup import (
         lake_cluster_labels_artifact,
-        lake_passage_artifact,
-        lake_signature_artifact,
+        PASSAGE_FAMILY,
+        SIG_FAMILY,
     )
 
     shutil.rmtree(path, ignore_errors=True)
@@ -1522,8 +1522,8 @@ def _build_appended_training_shards(
     # fork race-free (a memoized builder is not safe to FIRST-build from
     # two threads — both would write the same session path).
     lab = spark.read.parquet(lake_cluster_labels_artifact(spark, sf_dir))
-    lake_signature_artifact(spark, sf_dir)
-    lake_passage_artifact(spark, sf_dir)
+    SIG_FAMILY.build(spark, sf_dir)
+    PASSAGE_FAMILY.build(spark, sf_dir)
     _, incr = overlap(
         lambda: _write_training_shards(
             scoped_training_snapshot(spark, lake_docs, labels=lab), path

@@ -67,6 +67,7 @@ from quty_server_spark.operators._helpers import (
     CENTROIDS,
     LABEL_HOMES,
     TOMBSTONES,
+    ArtifactFamily,
     Layout,
     load_table,
     overlap,
@@ -78,36 +79,23 @@ from quty_server_spark.operators.dedup import (
     _BRIDGE_WA,
     _BRIDGE_WB,
     _labels_from_sigs,
-    _passage_artifact_summary,
     _passage_pfx,
     _passage_windows,
-    _sig_artifact_summary,
-    _minhash_artifact_summary,
     _write_home_bucket_layout,
+    HAMMING_MAX,
     LABELS,
-    lake_minhash_artifact,
-    lake_passage_artifact,
-    lake_signature_artifact,
-    MINHASH,
+    MINHASH_FAMILY,
     N_BANDS,
-    PASSAGE,
-    SIG,
+    PASSAGE_FAMILY,
+    SIG_FAMILY,
     SIMHASH_BANDS,
     simhash_sigs_docs,
-    SQL_MINHASH,
-    SQL_PASSAGE_WINDOWS,
-    SQL_SHINGLES,
     SQL_SIMHASH,
 )
-from quty_server_spark.operators.dedup import HAMMING_MAX
 from quty_server_spark.operators.similarity import (
     _corpus,
-    _ivf_artifact_summary,
     _ivf_cells_plan,
-    IVF,
-    ivf_postings_artifact,
-    SQL_CORPUS,
-    SQL_IVF_CENT,
+    IVF_FAMILY,
 )
 from quty_server_spark.plans.registry import registry
 from quty_server_spark.session import (
@@ -261,44 +249,37 @@ def _victim_cells(
     )
 
 
-class ArtifactFamily(NamedTuple):
-    """One standing artifact family, as the retraction tier sees it."""
+class Retraction(NamedTuple):
+    """How the retraction tier removes victims from one standing
+    artifact family."""
 
-    layout: Layout
-    # (spark, sf_dir) -> path of the memoized write-once build.
-    build: Callable[[SparkSession, str], str]
+    family: ArtifactFamily
     # Which victim ids the family holds: "doc" or "vec".
     victim: str
     # (spark, sf_dir, path, victims) -> the partitions a retraction
     # must read and rewrite.
     affected: Callable[..., DataFrame]
-    # The write-once sink's per-partition summary of a read-back ...
-    summary: Callable[[DataFrame], DataFrame]
-    # ... and its columns feeding the tagged shape's (part_key, n_rows,
-    # n_keys, n_docs, extra); None means a NULL extra.
+    # The family summary's columns feeding the tagged shape's
+    # (part_key, n_rows, n_keys, n_docs, extra); None means a NULL extra.
     tags: tuple[str, str, str, str, str | None]
 
 
 # The four standing families, in the tagged summary's union order.
-ARTIFACT_FAMILIES: dict[str, ArtifactFamily] = {
-    "sig": ArtifactFamily(
-        SIG, lake_signature_artifact, "doc",
-        partial(_every_band, SIMHASH_BANDS), _sig_artifact_summary,
+ARTIFACT_FAMILIES: dict[str, Retraction] = {
+    "sig": Retraction(
+        SIG_FAMILY, "doc", partial(_every_band, SIMHASH_BANDS),
         ("band_id", "n_rows", "n_buckets", "n_docs", None),
     ),
-    "minhash": ArtifactFamily(
-        MINHASH, lake_minhash_artifact, "doc",
-        partial(_every_band, N_BANDS), _minhash_artifact_summary,
+    "minhash": Retraction(
+        MINHASH_FAMILY, "doc", partial(_every_band, N_BANDS),
         ("band_id", "n_rows", "n_buckets", "n_docs", "sum_nsh"),
     ),
-    "passage": ArtifactFamily(
-        PASSAGE, lake_passage_artifact, "doc",
-        _victim_prefixes, _passage_artifact_summary,
+    "passage": Retraction(
+        PASSAGE_FAMILY, "doc", _victim_prefixes,
         ("pfx", "n_rows", "n_digests", "n_docs", None),
     ),
-    "ivf": ArtifactFamily(
-        IVF, ivf_postings_artifact, "vec",
-        _victim_cells, _ivf_artifact_summary,
+    "ivf": Retraction(
+        IVF_FAMILY, "vec", _victim_cells,
         ("cell", "n_vecs", "n_vecs", "n_vecs", "n_queries"),
     ),
 }
@@ -342,7 +323,7 @@ def retracted_artifact_paths(
         # Base-artifact pre-warm (serial): memoized builders are not
         # safe to FIRST-build from two threads.
         base = {
-            fam: f.build(spark, sf_dir)
+            fam: f.family.build(spark, sf_dir)
             for fam, f in ARTIFACT_FAMILIES.items()
         }
 
@@ -352,7 +333,8 @@ def retracted_artifact_paths(
             p = fresh_tmp_dir(spark, f"quty_retract_{fam}", sf_dir)
             _copy_artifact(base[fam], p)
             _retract_rows(
-                spark, p, f.layout, f.affected(spark, sf_dir, p, vic), vic
+                spark, p, f.family.layout, f.affected(spark, sf_dir, p, vic),
+                vic,
             )
             if post is not None:
                 post(fam, p)
@@ -368,65 +350,30 @@ def retracted_artifact_paths(
     return paths
 
 
+def _tagged_summary_sql(fam: str, r: Retraction) -> str:
+    """ONE family's write-once oracle scoped to the survivors (id % 10
+    <> RETRACT_MOD), in the unified tagged shape."""
+    part, n_rows, n_keys, n_docs, extra = r.tags
+    pred = f"{r.family.layout.id_col} % 10 <> {RETRACT_MOD}"
+    return f"""
+    SELECT '{fam}' AS family,
+           CAST({part} AS VARCHAR) AS part_key,
+           CAST({n_rows} AS BIGINT) AS n_rows,
+           CAST({n_keys} AS BIGINT) AS n_keys,
+           CAST({n_docs} AS BIGINT) AS n_docs,
+           CAST({extra or "NULL"} AS BIGINT) AS extra
+    FROM ({r.family.summary_sql(pred)}) s"""
+
+
 # Combined per-partition summary of the four retracted artifacts, in one
 # unified (family, part_key, n_rows, n_keys, n_docs, extra) shape. Each
-# family's branch is its write-once sink's summary recomputed from the
-# base tables over the SURVIVORS (id % 10 <> RETRACT_MOD) — for IVF with
-# the centroid set of the ORIGINAL corpus (the frozen-quantizer
-# contract). A green row therefore proves retracted ≡ rebuilt-on-
-# survivors for every family at once.
-SQL_RETRACT_SUMMARY = f"""
-    WITH {SQL_SIMHASH.lstrip()},
-    sbands AS (
-        SELECT doc_id, b.band_id, (sig >> (12 * b.band_id)) & 4095 AS band_val
-        FROM simhash, (SELECT unnest(range(0, 4)) AS band_id) b
-        WHERE doc_id % 10 <> 0 AND doc_id % 10 <> {RETRACT_MOD}
-    ),
-    {SQL_SHINGLES.lstrip()},
-    {SQL_MINHASH.lstrip()},
-    {SQL_PASSAGE_WINDOWS},
-    c AS {SQL_CORPUS},
-    cent AS {SQL_IVF_CENT},
-    assigned AS (
-        SELECT vec_id, cid,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                   ORDER BY list_cosine_similarity(v, cv) DESC, cid) AS arn
-        FROM c CROSS JOIN cent
-        WHERE c.vec_id % 10 <> {RETRACT_MOD}),
-    cells AS (SELECT vec_id, cid AS cell FROM assigned WHERE arn = 1)
-    SELECT 'sig' AS family,
-           CAST(band_id AS VARCHAR) AS part_key,
-           CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(COUNT(DISTINCT band_val) AS BIGINT) AS n_keys,
-           CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
-           CAST(NULL AS BIGINT) AS extra
-    FROM sbands GROUP BY band_id
-    UNION ALL
-    SELECT 'minhash', CAST(b.band_id AS VARCHAR),
-           CAST(COUNT(*) AS BIGINT),
-           CAST(COUNT(DISTINCT b.sig) AS BIGINT),
-           CAST(COUNT(DISTINCT b.doc_id) AS BIGINT),
-           CAST(SUM(s.n_sh) AS BIGINT)
-    FROM bands b JOIN doc_size s ON b.doc_id = s.doc_id
-    WHERE b.doc_id % 10 <> 0 AND b.doc_id % 10 <> {RETRACT_MOD}
-    GROUP BY b.band_id
-    UNION ALL
-    SELECT 'passage', substring(passage_md5, 1, 1),
-           CAST(COUNT(*) AS BIGINT),
-           CAST(COUNT(DISTINCT passage_md5) AS BIGINT),
-           CAST(COUNT(DISTINCT doc_id) AS BIGINT),
-           CAST(NULL AS BIGINT)
-    FROM passage_windows
-    WHERE doc_id % 10 <> 0 AND doc_id % 10 <> {RETRACT_MOD}
-    GROUP BY substring(passage_md5, 1, 1)
-    UNION ALL
-    SELECT 'ivf', CAST(cell AS VARCHAR),
-           CAST(COUNT(*) AS BIGINT),
-           CAST(COUNT(DISTINCT vec_id) AS BIGINT),
-           CAST(COUNT(DISTINCT vec_id) AS BIGINT),
-           CAST(COUNT(*) FILTER (WHERE vec_id % 20 = 0) AS BIGINT)
-    FROM cells GROUP BY cell
-    """
+# family's branch is its write-once sink's oracle over the SURVIVORS —
+# for IVF with the centroid set of the ORIGINAL corpus (the frozen-
+# quantizer contract). A green row therefore proves retracted ≡
+# rebuilt-on-survivors for every family at once.
+SQL_RETRACT_SUMMARY = "\n    UNION ALL".join(
+    _tagged_summary_sql(fam, r) for fam, r in ARTIFACT_FAMILIES.items()
+)
 
 
 @registry.query(
@@ -476,7 +423,7 @@ def _tagged_family_summary(fam: str, frame: DataFrame) -> DataFrame:
     inside that family's rebuild leg."""
     f = ARTIFACT_FAMILIES[fam]
     part, n_rows, n_keys, n_docs, extra = f.tags
-    return f.summary(frame).select(
+    return f.family.summary(frame).select(
         F.lit(fam).alias("family"),
         F.col(part).cast("string").alias("part_key"),
         F.col(n_rows).cast("bigint").alias("n_rows"),
@@ -597,7 +544,7 @@ def tombstoned_artifact_paths(
         return {
             fam: tombstoned_copy(
                 spark,
-                f.build(spark, sf_dir),
+                f.family.build(spark, sf_dir),
                 fresh_tmp_dir(spark, f"quty_tomb_{fam}", sf_dir),
                 victims[f.victim],
             )
@@ -634,7 +581,7 @@ def sink_lake_artifacts_retract_tombstone(
     return _tagged_retract_summary(
         {
             fam: read_artifact_live(
-                spark, p, ARTIFACT_FAMILIES[fam].layout.id_col
+                spark, p, ARTIFACT_FAMILIES[fam].family.layout.id_col
             )
             for fam, p in paths.items()
         }
@@ -671,7 +618,7 @@ def sink_lake_artifacts_retract_compacted(
     one scheduled job whose cost follows the victims, not the lake."""
     paths = tombstoned_artifact_paths(spark, sf_dir, rebuild=True)
     for fam, p in paths.items():
-        compact_tombstones(spark, p, ARTIFACT_FAMILIES[fam].layout)
+        compact_tombstones(spark, p, ARTIFACT_FAMILIES[fam].family.layout)
     return _tagged_retract_summary(
         {fam: spark.read.parquet(p) for fam, p in paths.items()}
     )

@@ -34,10 +34,14 @@ from quty_server_spark.functions.vectors import (
     norm,
 )
 from quty_server_spark.operators._helpers import (
+    APPEND_BATCH_MOD,
     CENTROIDS,
+    ArtifactFamily,
     Layout,
     load_table,
     read_sidecar,
+    register_artifact_sinks,
+    sql_where,
     write_sidecar,
 )
 from quty_server_spark.plans.registry import registry
@@ -69,15 +73,14 @@ SQL_CORPUS = "(SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"
 # ~250x under dedup.BROADCAST_NODES_MAX (ordering pinned in
 # tests/test_similarity_semantics.py).
 IVF_K_MAX = 4096
-# Same fixture convention as the dedup families' append exercise
-# (operators/dedup.py APPEND_BATCH_MOD): yesterday's admitted batch is
-# vec_id % 10 == 5 — disjoint from tonight's shard (% 10 == 0). The
-# coarse quantizer trains on the complementary STABLE STRATUM
-# (vec_id % 10 != 5, see _ivf_centroids), so assigning the batch against
-# the base build's centroid sidecar yields byte-identical cells to a
-# full rebuild's, and the append sink can share the write-once sink's
+# The artifact families' admitted batch (``_helpers.APPEND_BATCH_MOD``):
+# yesterday's admitted vectors are vec_id % 10 == 5. The coarse
+# quantizer trains on the complementary STABLE STRATUM (vec_id % 10 !=
+# 5, see _ivf_centroids), so assigning the batch against the base
+# build's centroid sidecar yields byte-identical cells to a full
+# rebuild's, and the append sink can share the write-once sink's
 # oracle SQL.
-IVF_APPEND_BATCH_MOD = 5
+IVF_APPEND_BATCH_MOD = APPEND_BATCH_MOD
 
 # The quantizer's DuckDB twin, shared by every IVF-family oracle: the
 # stable stratum's count n_q picks K_target = min(IVF_K_MAX, ceil(sqrt(
@@ -95,7 +98,7 @@ SQL_IVF_CENT = f"""(
 
 # Fixed-count query sample for recall evaluation: the exact brute-force
 # arm costs |queries| x |corpus| cosines, so the query set must be a
-# CONSTANT, not a fraction of the corpus (r07 verdict, perf_weak #1).
+# CONSTANT, not a fraction of the corpus.
 # vec_id % 20 = 0 AND vec_id < 20 * N_EVAL_QUERIES selects exactly the
 # first N_EVAL_QUERIES members of the historical % 20 sample, keeping
 # sf0.001/sf0.01 results (500 vecs -> 25 queries) byte-identical.
@@ -135,7 +138,7 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     no shuffle of the corpus; top-k is a per-query window (partial top-k
     per partition under AQE). This is the exact baseline the LSH variant
     approximates."""
-    # r17: norms precomputed per side (see functions.vectors.cosine_norms
+    # Norms precomputed per side (see functions.vectors.cosine_norms
     # — bit-identical scores, one array fold per pair instead of three);
     # corpus probe side spread across cores (see _spread).
     q = _queries(spark, sf_dir).withColumn("qn", norm(F.col("qv")))
@@ -293,7 +296,7 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     window top-3. At scale the corpus is hash-partitioned by bucket, so a
     query touches ~1/256 of the data — this is the IVF-style recall/cost
     trade the brute-force baseline calibrates."""
-    # r17: per-side precomputed norms (cosine_norms — bit-identical);
+    # Per-side precomputed norms (cosine_norms — bit-identical);
     # corpus spread across cores before the derived columns (_spread).
     c = (
         _spread(spark, _corpus(spark, sf_dir), "vec_id")
@@ -367,7 +370,7 @@ def sim_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe explosion multiplies only the tiny broadcast query side by 9,
     never the corpus.
     """
-    # r17: per-side precomputed norms (cosine_norms — bit-identical);
+    # Per-side precomputed norms (cosine_norms — bit-identical);
     # corpus spread across cores before the derived columns (_spread).
     c = (
         _spread(spark, _corpus(spark, sf_dir), "vec_id")
@@ -404,12 +407,12 @@ def sim_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_centroids(c: DataFrame) -> DataFrame:
-    """Deterministic coarse quantizer, DECOUPLED from corpus size (r13
-    verdict "Next round" #1 — the old ``vec_id % 50`` rule made K = n/50,
-    turning the index build into n²/50 compute with an unbounded centroid
-    broadcast). K_target = min(IVF_K_MAX, ceil(sqrt(n_q))) — ⌈√n⌉ cells
-    while small (the classic IVF balance point: probe cost ≈ n/K ≈ √n),
-    a FIXED 4096 once the corpus outgrows it, so at 100 TB the assignment
+    """Deterministic coarse quantizer, DECOUPLED from corpus size (a
+    ``vec_id % 50`` rule would make K = n/50, turning the index build
+    into n²/50 compute with an unbounded centroid broadcast).
+    K_target = min(IVF_K_MAX, ceil(sqrt(n_q))) — ⌈√n⌉ cells while
+    small (the classic IVF balance point: probe cost ≈ n/K ≈ √n), a
+    FIXED 4096 once the corpus outgrows it, so at 100 TB the assignment
     pass is n × 4096 (linear in n) and ``broadcast(cent)`` is bounded by
     construction at IVF_K_MAX rows ≪ BROADCAST_NODES_MAX
     (tests/test_similarity_semantics.py pins both the bound and the
@@ -469,7 +472,7 @@ def _ivf_cells(c: DataFrame, cent: DataFrame) -> DataFrame:
 
 
 def _ivf_cells_plan(c: DataFrame, cent: DataFrame) -> DataFrame:
-    # r17: the n×K assignment pass evaluates ONE array fold per
+    # The n×K assignment pass evaluates ONE array fold per
     # (vector, centroid) pair instead of three — both norms are
     # attached once per side (K centroid norms inside the broadcast
     # build, one norm per corpus row) and cosine_norms reproduces
@@ -542,10 +545,10 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     one row per vector BEFORE the shuffle (map-side combine — a window
     argmin would ship the whole cross product); the posting lists are
     hash-partitioned by cell, and a query's scan is |corpus|/n_cells."""
-    # r17: corpus spread across cores (_spread) so the n×K assignment
+    # Corpus spread across cores (_spread) so the n×K assignment
     # and the cell-probe scoring parallelize off the one-row-group scan.
     c = _spread(spark, _corpus(spark, sf_dir), "vec_id")
-    # r17: per-side precomputed norms (cosine_norms — bit-identical).
+    # Per-side precomputed norms (cosine_norms — bit-identical).
     cells = _ivf_cells(c, _ivf_centroids(c)).withColumn(
         "vn", norm(F.col("v"))
     )
@@ -609,10 +612,10 @@ def sim_ann_ivf_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries-x-centroids frame only (never the corpus), and probing stays
     an equality hash join with the broadcast probe side doubled.
     """
-    # r17: corpus spread across cores (_spread; same as sim_ann_ivf).
+    # Corpus spread across cores (_spread; same as sim_ann_ivf).
     c = _spread(spark, _corpus(spark, sf_dir), "vec_id")
     cent = _ivf_centroids(c)
-    # r17: per-side precomputed norms (cosine_norms — bit-identical).
+    # Per-side precomputed norms (cosine_norms — bit-identical).
     cells = _ivf_cells(c, cent).withColumn("vn", norm(F.col("v")))
     qw = Window.partitionBy("query_id").orderBy(
         F.desc("qcent_cos"), F.asc("pcell")
@@ -677,7 +680,7 @@ def embed_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale is emitted as floor-micros so no float rounding is compared.
     The quantized vector is emitted comma-joined (scalar string): the
     driver's pandas canonicalizer cannot hash array-typed output
-    columns (r06 finding); elements are never NULL so concat_ws ==
+    columns; elements are never NULL so concat_ws ==
     array_to_string exactly."""
     c = _corpus(spark, sf_dir)
     amax = F.array_max(F.transform(F.col("v"), lambda x: F.abs(x)))
@@ -751,7 +754,7 @@ def sim_label_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id")
     )
     s = e.join(broadcast(sample_ids), "vec_id")
-    # r17: probe side spread across cores (_spread) — the bounded-sample
+    # Probe side spread across cores (_spread) — the bounded-sample
     # pair join otherwise scores every pair on the single scan partition.
     a = _spread(spark, s, "vec_id").select(
         F.col("vec_id").alias("ia"), "label", F.col("v").alias("va")
@@ -810,7 +813,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     all_pairs_cosine; the oracle replicates the banding bit-for-bit, so
     the query is deterministically exact for what it claims: the banded
     drop rule."""
-    # r17: per-side precomputed norms (cosine_norms — bit-identical);
+    # Per-side precomputed norms (cosine_norms — bit-identical);
     # probe side spread across cores (_spread — the ~2M candidate
     # cosines previously serialized on the single scan partition).
     c = _corpus(spark, sf_dir)
@@ -1077,12 +1080,12 @@ def sim_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the query sample is a FIXED COUNT (at most N_EVAL_QUERIES =
     25: ``vec_id % 20 = 0 AND vec_id < 20 * 25``), not a fraction of the
-    corpus — the r07 verdict flagged the proportional form (5% of the
-    corpus) as quadratic-at-scale, since the exact arm evaluates
+    corpus — the proportional form (5% of the corpus) is
+    quadratic-at-scale, since the exact arm evaluates
     |queries| × |corpus| cosines. With a constant query set the exact
     arm is ONE corpus scan against a tiny broadcast at any scale, and
     the approx arm stays the bucketed hash join."""
-    # r17: per-side precomputed norms (cosine_norms — bit-identical);
+    # Per-side precomputed norms (cosine_norms — bit-identical);
     # the exact arm is the |queries| × |corpus| pass that dominates this
     # gate, so the 3-fold → 1-fold cut lands almost fully on it. The
     # corpus is spread across cores BEFORE the derived columns
@@ -1217,58 +1220,47 @@ def sim_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVF = Layout("cell", "vec_id", "vec_id")
 
 
-def _write_ivf(points: DataFrame, cent: DataFrame, path: str) -> None:
-    """Write ``points`` assigned to their nearest centroid of ``cent`` as
-    IVF posting lists at ``path``, plus the centroid sidecar: the
-    coarse quantizer (K rows) under an underscore-prefixed name, which
-    parquet readers of the artifact root ignore (the _SUCCESS /
-    _metadata convention). A nightly probe or append assigns its batch
-    against THIS tiny table instead of re-deriving the stride sample
-    from a corpus-sized posting scan."""
-    IVF.write(_ivf_cells_plan(points, cent), path)
-    write_sidecar(cent, path, CENTROIDS)
+def _write_ivf(
+    points: DataFrame, path: str, mode: str = "errorifexists"
+) -> None:
+    """Write ``points`` as IVF posting lists at ``path``, each assigned
+    to its nearest centroid. A base write trains the coarse quantizer
+    on ``points`` and stores it as the centroid sidecar (K rows). An
+    append assigns against the sidecar already at ``path``, so its read
+    set is the batch plus K centroid rows, never the corpus-sized
+    posting files (plan-pinned); the quantizer stays frozen."""
+    append = mode == "append"
+    cent = (
+        read_sidecar(points.sparkSession, path, CENTROIDS)
+        if append
+        else _ivf_centroids(points)
+    )
+    IVF.write(_ivf_cells_plan(points, cent), path, mode)
+    if not append:
+        write_sidecar(cent, path, CENTROIDS)
 
 
-def ivf_postings_artifact(
-    spark: SparkSession, sf_dir: str, rebuild: bool = False
-) -> str:
-    """Materialize the IVF posting lists ``(vec_id, v, cell)`` as an
-    on-disk parquet artifact laid out as :data:`IVF` and return its
-    path. This is the index build a production ANN service runs ONCE
-    per corpus snapshot — every recomputing variant in this module
-    (:func:`sim_ann_ivf`, :func:`sim_ann_ivf_nprobe2`,
-    :func:`sim_ivf_cell_balance`) re-runs the corpus-x-centroids
-    assignment per query because their contract is self-contained; the
-    artifact path amortizes that assignment over every probe, exactly
-    as :func:`~quty_server_spark.operators.dedup.lake_signature_artifact`
-    amortizes the lake signing for the dedup ingest gate.
-
-    Partitioning by ``cell`` makes the on-disk layout the inverted
-    index itself: a probe that needs cells {3, 57} reads two
-    directories and prunes the rest at planning time (the artifact
-    probe's scan carries a dynamic-partition-pruning filter on
-    ``cell`` — pinned in tests/test_scale_plans.py). A
-    :func:`session_artifact`, like the lake-signature artifact."""
-
-    def _write(path: str) -> None:
-        c = _corpus(spark, sf_dir)
-        _write_ivf(c, _ivf_centroids(c), path)
-
-    return session_artifact(
-        spark, "quty_ivf_postings", sf_dir, _write, rebuild
+def _ivf_artifact_summary(art: DataFrame) -> DataFrame:
+    """Per-cell posting-size + query-landing summary of an IVF artifact
+    read-back."""
+    return art.groupBy(F.col("cell").cast("bigint").alias("cell")).agg(
+        F.count("*").alias("n_vecs"),
+        F.count(F.when(F.col("vec_id") % 20 == 0, 1)).alias("n_queries"),
     )
 
 
-# Per-cell summary of the IVF posting-list artifact, shared by the
-# write-once, append and re-cluster sinks (see :class:`Layout`).
-SQL_IVF_ARTIFACT_SUMMARY = f"""
+def _ivf_summary_sql(pred: str) -> str:
+    """DuckDB twin of :func:`_ivf_artifact_summary`: the nearest-centroid
+    assignment of the corpus vectors that pass ``pred``, against the
+    quantizer of the whole corpus (the frozen-quantizer contract)."""
+    return f"""
     WITH c AS {SQL_CORPUS},
     cent AS {SQL_IVF_CENT},
     assigned AS (
         SELECT vec_id, cid,
                ROW_NUMBER() OVER (PARTITION BY vec_id
                    ORDER BY list_cosine_similarity(v, cv) DESC, cid) AS arn
-        FROM c CROSS JOIN cent),
+        FROM c CROSS JOIN cent {sql_where(pred)}),
     cells AS (SELECT vec_id, cid AS cell FROM assigned WHERE arn = 1)
     SELECT cell,
            CAST(COUNT(*) AS BIGINT) AS n_vecs,
@@ -1278,35 +1270,25 @@ SQL_IVF_ARTIFACT_SUMMARY = f"""
     """
 
 
-def _ivf_artifact_summary(art: DataFrame) -> DataFrame:
-    """Per-cell posting-size + query-landing summary of an IVF artifact
-    read-back — shared by the write-once and append sinks."""
-    return art.groupBy(F.col("cell").cast("bigint").alias("cell")).agg(
-        F.count("*").alias("n_vecs"),
-        F.count(F.when(F.col("vec_id") % 20 == 0, 1)).alias("n_queries"),
-    )
-
-
-@registry.query(
-    "sink_ivf_postings_artifact",
-    oracle=SQL_IVF_ARTIFACT_SUMMARY,
+# The IVF posting lists ``(vec_id, v, cell)`` of every corpus vector:
+# the index build a production ANN service runs once per corpus
+# snapshot. The recomputing variants (sim_ann_ivf, sim_ann_ivf_nprobe2,
+# sim_ivf_cell_balance) re-run the corpus-x-centroids assignment per
+# query because their contract is self-contained; the artifact
+# amortizes it over every probe. Partitioning by ``cell`` makes the
+# layout the inverted index itself: a probe of cells {3, 57} reads two
+# directories (the probe's scan carries a dynamic-partition-pruning
+# filter on ``cell``, plan-pinned). The admitted batch's quantizer
+# stays the base build's, because the quantizer trains on the stable
+# stratum only (see IVF_APPEND_BATCH_MOD), so the nightly append costs
+# |batch| x K broadcast assignment plus new files in the batch's cells.
+IVF_FAMILY = ArtifactFamily(
+    "quty_ivf_postings", IVF,
+    lambda spark, sf_dir, keep: _corpus(spark, sf_dir).filter(keep),
+    _ivf_artifact_summary, _ivf_summary_sql,
+    shard_mod=None, write=_write_ivf,
 )
-def sink_ivf_postings_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Write the IVF posting-list artifact (forced rebuild — this IS
-    the index build), then read it back and report per-cell posting
-    sizes plus how many of the standing query sample land in each
-    cell. The oracle recomputes the same summary from the embeddings
-    table, so the round trip proves the artifact holds exactly the
-    corpus's nearest-centroid assignment — the contract
-    :func:`sim_ann_ivf_artifact` relies on.
-
-    Scale: one broadcast corpus-x-centroids assignment pass (map-side
-    combined, as :func:`_ivf_cells_plan`) + a partitioned columnar
-    write — run once per corpus snapshot, then probed nightly. The
-    summary read-back aggregates only (cell, vec_id) out of the
-    artifact."""
-    path = ivf_postings_artifact(spark, sf_dir, rebuild=True)
-    return _ivf_artifact_summary(spark.read.parquet(path))
+register_artifact_sinks("sink_ivf_postings_artifact", IVF_FAMILY)
 
 
 @registry.query(
@@ -1317,7 +1299,7 @@ def sim_ann_ivf_artifact(
     spark: SparkSession, sf_dir: str, path: str | None = None
 ) -> DataFrame:
     """IVF ANN probing the precomputed posting-list artifact
-    (:func:`ivf_postings_artifact`) instead of re-running the
+    (``IVF_FAMILY``) instead of re-running the
     corpus-x-centroids assignment: the query sample and the probed
     posting lists BOTH come from the artifact, so the per-probe plan
     contains no centroid join and no assignment aggregate at all —
@@ -1336,8 +1318,8 @@ def sim_ann_ivf_artifact(
     appended one — proving probe-after-append ≡ probe-after-rebuild by
     set equality (tests/test_artifact_append.py)."""
     if path is None:
-        path = ivf_postings_artifact(spark, sf_dir)
-    # r17: per-side precomputed norms (cosine_norms — bit-identical).
+        path = IVF_FAMILY.build(spark, sf_dir)
+    # Per-side precomputed norms (cosine_norms — bit-identical).
     art = spark.read.parquet(path).select(
         "vec_id", "v", F.col("cell").cast("bigint").alias("cell")
     ).withColumn("vn", norm(F.col("v")))
@@ -1474,7 +1456,7 @@ def dedup_incremental_embedding_artifact(
     ``path`` (tests only) probes an alternative artifact — e.g. the
     appended one (tests/test_artifact_append.py)."""
     if path is None:
-        path = ivf_postings_artifact(spark, sf_dir)
+        path = IVF_FAMILY.build(spark, sf_dir)
     lake, cent = embedding_gate_lake(spark, path)
     return embedding_gate_pairs(
         _corpus(spark, sf_dir).filter(F.col("vec_id") % 10 == 0), lake, cent
@@ -1519,7 +1501,7 @@ def dedup_decontaminate_embedding(
     (:func:`dedup_incremental_embedding_artifact`'s shape) is the
     approximate fallback. The broadcast cross join is allowlisted in
     test_plan_audit with this justification."""
-    # r17: per-side precomputed norms (cosine_norms — bit-identical);
+    # Per-side precomputed norms (cosine_norms — bit-identical);
     # train probe side spread across cores (_spread).
     c = _corpus(spark, sf_dir).withColumn("vn", norm(F.col("v")))
     bench = c.filter(F.col("vec_id") % 5 == 0).select(
@@ -1554,79 +1536,6 @@ def dedup_decontaminate_embedding(
 # of this module): the admitted batch is vec_id % 10 == 5, and the
 # quantizer trains on the complementary stable stratum, so the append
 # path provably shares the write-once build's centroid set.
-
-
-def admitted_ivf_postings(
-    spark: SparkSession, sf_dir: str, cent: DataFrame
-) -> DataFrame:
-    """(vec_id, v, cell) rows for the admitted batch, assigned against
-    ``cent`` — at append time that is the artifact's K-row centroid
-    SIDECAR, so the append job's read set is the batch's embeddings
-    plus K centroid rows: the corpus-sized posting scan is never
-    touched (plan-pinned in tests/test_scale_plans.py)."""
-    batch = _corpus(spark, sf_dir).filter(
-        F.col("vec_id") % 10 == IVF_APPEND_BATCH_MOD
-    )
-    return _ivf_cells_plan(batch, cent)
-
-
-def appended_ivf_artifact(
-    spark: SparkSession, sf_dir: str, rebuild: bool = False
-) -> str:
-    """Yesterday's IVF posting-list artifact (corpus minus the admitted
-    batch) with the batch's postings APPENDED to their cell
-    directories — the index-maintenance lifecycle a production ANN
-    service runs nightly instead of a full rebuild: admitted vectors
-    are assigned against the centroid sidecar (K rows, read back off
-    the artifact — exactly what a nightly job has in hand) and written
-    as new files under their cells' partitions, zero read-modify-write.
-    Content equals a fresh :func:`ivf_postings_artifact` build's
-    because the quantizer is identical (see IVF_APPEND_BATCH_MOD note);
-    verified through the shared oracle SQL and the set-equality tests.
-    A :func:`session_artifact` on its own path — the write-once
-    artifact's memo stays untouched."""
-
-    def _write(path: str) -> None:
-        base = _corpus(spark, sf_dir).filter(
-            F.col("vec_id") % 10 != IVF_APPEND_BATCH_MOD
-        )
-        _write_ivf(base, _ivf_centroids(base), path)
-        sidecar = read_sidecar(spark, path, CENTROIDS)
-        IVF.write(
-            admitted_ivf_postings(spark, sf_dir, sidecar), path, "append"
-        )
-
-    return session_artifact(
-        spark, "quty_ivf_postings_app", sf_dir, _write, rebuild
-    )
-
-
-@registry.query(
-    "sink_ivf_postings_artifact_append",
-    oracle=SQL_IVF_ARTIFACT_SUMMARY,
-)
-def sink_ivf_postings_artifact_append(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The APPEND step of the IVF index lifecycle, oracle-verified:
-    build yesterday's posting-list artifact (corpus minus the admitted
-    batch), assign the batch against the centroid SIDECAR and append
-    its postings to their cell directories, then read the result back
-    and report the per-cell summary. The oracle is byte-identical to
-    :func:`sink_ivf_postings_artifact`'s (it recomputes the full
-    corpus's nearest-centroid assignment), so a green row proves
-    append ≡ rebuild — tonight's admissions become visible to
-    :func:`sim_ann_ivf_artifact` and
-    :func:`dedup_incremental_embedding_artifact` without an index
-    rebuild (probe-equality additionally pinned in
-    tests/test_artifact_append.py).
-
-    Scale: the nightly append's compute is |batch| × K broadcast
-    assignment (map-side combined) + new files in the ≤|batch cells|
-    partitions; the corpus-sized assignment ran once at index-build
-    time and never again."""
-    path = appended_ivf_artifact(spark, sf_dir, rebuild=True)
-    return _ivf_artifact_summary(spark.read.parquet(path))
 
 
 @registry.query(
@@ -1673,7 +1582,7 @@ def sim_ivf_cell_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     split a grouping flag on it, one aggregate. Integer-ppm output so
     both engines agree bit-for-bit (floor division, positive
     operands)."""
-    path = appended_ivf_artifact(spark, sf_dir)
+    path = IVF_FAMILY.appended(spark, sf_dir)
     art = spark.read.parquet(path).select(
         "vec_id", F.col("cell").cast("bigint").alias("cell")
     )
@@ -1722,9 +1631,9 @@ def reclustered_ivf_artifact(
 
     def _write(path: str) -> None:
         standing = spark.read.parquet(
-            appended_ivf_artifact(spark, sf_dir)
+            IVF_FAMILY.appended(spark, sf_dir)
         ).select("vec_id", "v")
-        _write_ivf(standing, _ivf_centroids(standing), path)
+        _write_ivf(standing, path)
 
     return session_artifact(
         spark, "quty_ivf_postings_recl", sf_dir, _write, rebuild
@@ -1733,7 +1642,7 @@ def reclustered_ivf_artifact(
 
 @registry.query(
     "sink_ivf_postings_artifact_recluster",
-    oracle=SQL_IVF_ARTIFACT_SUMMARY,
+    oracle=IVF_FAMILY.summary_sql(""),
 )
 def sink_ivf_postings_artifact_recluster(
     spark: SparkSession, sf_dir: str
@@ -1748,7 +1657,7 @@ def sink_ivf_postings_artifact_recluster(
     the frozen-K contract, reassign ALL postings, write the fresh
     cell-partitioned layout + centroid sidecar, read it back and
     summarize per cell under the write-once sink's oracle SQL —
-    byte-for-byte :func:`sink_ivf_postings_artifact`'s. A green row
+    byte-for-byte ``sink_ivf_postings_artifact``'s. A green row
     proves reclustered ≡ a fresh full build: the repair leaves the
     index exactly where a from-scratch rebuild would (probe equality
     additionally pinned in tests/test_artifact_append.py — the relabel
@@ -1765,4 +1674,4 @@ def sink_ivf_postings_artifact_recluster(
     (weekly/monthly), never nightly (the append + gate path stays
     batch-sized)."""
     path = reclustered_ivf_artifact(spark, sf_dir, rebuild=True)
-    return _ivf_artifact_summary(spark.read.parquet(path))
+    return IVF_FAMILY.summary(spark.read.parquet(path))

@@ -1046,16 +1046,24 @@ def _epoch_writer(outdir: str):
     return write_epoch
 
 
-def _committed_epochs(outdir: str) -> list[int]:
-    """Sorted ids of the epochs the :func:`_epoch_writer` sink at
-    ``outdir`` has committed; empty before its first commit."""
+def _epoch_dirs(outdir: str) -> list[str]:
+    """The epoch directories the :func:`_epoch_writer` sink at
+    ``outdir`` has committed; empty before its first commit. Readers
+    pass this explicit list: a glob read logs a false "Assume no
+    metadata directory" warning with a stack trace, although it reads
+    every epoch."""
     if not os.path.isdir(outdir):
         return []
     return sorted(
-        int(d.split("=", 1)[1])
+        os.path.join(outdir, d)
         for d in os.listdir(outdir)
         if d.startswith("epoch=")
     )
+
+
+def _committed_epochs(outdir: str) -> list[int]:
+    """Sorted ids of the epochs committed at ``outdir``."""
+    return sorted(int(d.rsplit("=", 1)[1]) for d in _epoch_dirs(outdir))
 
 
 def _read_epochs(spark: SparkSession, outdir: str) -> DataFrame:
@@ -1066,7 +1074,7 @@ def _read_epochs(spark: SparkSession, outdir: str) -> DataFrame:
     must survive that."""
     return (
         spark.read.option("basePath", outdir)
-        .parquet(os.path.join(outdir, "epoch=*"))
+        .parquet(*_epoch_dirs(outdir))
         .localCheckpoint(eager=True)
     )
 
@@ -1657,14 +1665,9 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             _epoch_writer(outdir),
             os.path.join(workdir, "ckpt"),
         )
-        if _committed_epochs(outdir):
-            got = (
-                spark.read.option("basePath", outdir)
-                .parquet(os.path.join(outdir, "epoch=*"))
-                .count()
-            )
-            if got >= n_docs:
-                break
+        dirs = _epoch_dirs(outdir)
+        if dirs and spark.read.parquet(*dirs).count() >= n_docs:
+            break
     return _read_epochs(spark, outdir).groupBy("shard").agg(
         F.count("*").cast("bigint").alias("n_docs"),
         F.min("doc_id").cast("bigint").alias("min_doc"),
@@ -1721,12 +1724,12 @@ def _run_ingest_gate_stream(
     pairs. Nothing crosses epochs, so no cross-epoch state or dedup is
     needed (set-equality tested in tests/test_streaming_recovery.py).
 
-    The ``epoch=*`` read-back has no ``basePath``, so it carries exactly
-    the probe's columns (no ``epoch`` partition column). Scratch dirs
-    are session-keyed (:func:`fresh_tmp_dir`) and the returned frame is
-    eagerly ``localCheckpoint``-ed, so a later call for the same sf_dir
-    — which clears and restages them — can never invalidate a frame
-    this call already handed out."""
+    The read-back of the epoch directories has no ``basePath``, so it
+    carries exactly the probe's columns (no ``epoch`` partition
+    column). Scratch dirs are session-keyed (:func:`fresh_tmp_dir`) and
+    the returned frame is eagerly ``localCheckpoint``-ed, so a later
+    call for the same sf_dir — which clears and restages them — can
+    never invalidate a frame this call already handed out."""
     base = fresh_tmp_dir(spark, kind, sf_dir)
     indir = os.path.join(base, "in")
     outdir = os.path.join(base, "out")
@@ -1736,7 +1739,7 @@ def _run_ingest_gate_stream(
         spark, shard.schema, indir, os.path.join(base, "ckpt"),
         lambda batch_df, epoch_id: write(probe(batch_df), epoch_id),
     )
-    return spark.read.parquet(os.path.join(outdir, "epoch=*")).localCheckpoint(
+    return spark.read.parquet(*_epoch_dirs(outdir)).localCheckpoint(
         eager=True
     )
 
@@ -1766,14 +1769,14 @@ def stream_ingest_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     signing job is amortized into the artifact on both the nightly and
     the continuous path."""
     from quty_server_spark.operators.dedup import (
-        lake_signature_artifact,
+        SIG_FAMILY,
         simhash_bands,
         simhash_gate_pairs,
         simhash_sigs_docs,
     )
 
     configure(spark)
-    lake = spark.read.parquet(lake_signature_artifact(spark, sf_dir)).select(
+    lake = spark.read.parquet(SIG_FAMILY.build(spark, sf_dir)).select(
         "doc_id", "sig", "band_id", "band_val"
     )
     return _run_ingest_gate_stream(
@@ -1812,7 +1815,7 @@ def stream_ingest_dedup_gate_minhash(
     from quty_server_spark.operators.dedup import (
         _minhash_gate_verify_nb,
         doc_shingles_docs,
-        lake_minhash_artifact,
+        MINHASH_FAMILY,
         lake_shingles_for_verify,
         minhash_bands,
         minhash_gate_candidates,
@@ -1820,7 +1823,7 @@ def stream_ingest_dedup_gate_minhash(
     )
 
     configure(spark)
-    lake = spark.read.parquet(lake_minhash_artifact(spark, sf_dir)).select(
+    lake = spark.read.parquet(MINHASH_FAMILY.build(spark, sf_dir)).select(
         "doc_id", "sig", "n_sh", "band_id"
     )
     # Lazy-checkpointed once: every micro-batch's verify joins the lake
@@ -1873,12 +1876,12 @@ def stream_ingest_dedup_gate_embedding(
     from quty_server_spark.operators.similarity import (
         embedding_gate_lake,
         embedding_gate_pairs,
-        ivf_postings_artifact,
+        IVF_FAMILY,
     )
 
     configure(spark)
     lake, cent = embedding_gate_lake(
-        spark, ivf_postings_artifact(spark, sf_dir)
+        spark, IVF_FAMILY.build(spark, sf_dir)
     )
     return _run_ingest_gate_stream(
         spark,
@@ -1912,12 +1915,12 @@ def stream_ingest_passage_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quty_server_spark.operators.dedup import (
         _passage_pfx,
         _passage_windows,
-        lake_passage_artifact,
+        PASSAGE_FAMILY,
         passage_scrub,
     )
 
     configure(spark)
-    art = spark.read.parquet(lake_passage_artifact(spark, sf_dir))
+    art = spark.read.parquet(PASSAGE_FAMILY.build(spark, sf_dir))
 
     def probe(batch_df: DataFrame) -> DataFrame:
         w = _passage_windows(batch_df).select(
@@ -1965,12 +1968,12 @@ def stream_ingest_media_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quty_server_spark.operators.dedup import simhash_gate_pairs
     from quty_server_spark.operators.multimodal import (
         media_sig_bands,
-        media_signature_artifact,
+        MEDIA_SIG_FAMILY,
         percep_media_universe,
     )
 
     configure(spark)
-    lake = spark.read.parquet(media_signature_artifact(spark, sf_dir)).select(
+    lake = spark.read.parquet(MEDIA_SIG_FAMILY.build(spark, sf_dir)).select(
         "doc_id", "sig", "band_id", "band_val"
     )
     shard = percep_media_universe(spark, sf_dir).filter(
@@ -2041,13 +2044,13 @@ def _maintain_labels(
     from quty_server_spark.operators.dedup import (
         _apply_maintenance_for_state,
         _cluster_graph_for_bands,
-        lake_signature_artifact,
+        SIG_FAMILY,
         min_label_components,
         simhash_bands,
         simhash_sigs_docs,
     )
 
-    lake_sig = spark.read.parquet(lake_signature_artifact(spark, sf_dir))
+    lake_sig = spark.read.parquet(SIG_FAMILY.build(spark, sf_dir))
     lbl_path = os.path.join(base, "labels")
     bands_dir = os.path.join(base, "bands")
     write_bands = _epoch_writer(bands_dir)
@@ -2203,7 +2206,7 @@ def stream_corpus_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quty_server_spark.operators.dedup import (
         _passage_pfx,
         _passage_windows,
-        lake_passage_artifact,
+        PASSAGE_FAMILY,
         passage_scrub,
     )
     from quty_server_spark.operators.pipeline import snapshot_quality_keep
@@ -2211,7 +2214,7 @@ def stream_corpus_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     kind = "quty_stream_snapshot"
     outdir = os.path.join(session_tmp_dir(spark, kind, sf_dir), "out")
     write = _epoch_writer(outdir)
-    pw_art = spark.read.parquet(lake_passage_artifact(spark, sf_dir))
+    pw_art = spark.read.parquet(PASSAGE_FAMILY.build(spark, sf_dir))
     docs = _shard(spark, sf_dir, "documents", "doc_id").select(
         "doc_id", "text", "lang", "source"
     )
@@ -2383,8 +2386,11 @@ def stream_ingest_exact_dedup_sequential(
         spark, "doc_id long, text string", indir, os.path.join(base, "ckpt"),
         gate_batch,
     )
+    # Every e<epoch> directory, listed (see _epoch_dirs on globs).
     return (
-        spark.read.parquet(os.path.join(outdir, "e*"))
+        spark.read.parquet(
+            *(os.path.join(outdir, d) for d in sorted(os.listdir(outdir)))
+        )
         .select("admitted_doc_id", "epoch", "text_md5")
         .localCheckpoint(eager=True)
     )
@@ -2438,7 +2444,7 @@ def stream_lake_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     paths = {
         fam: tombstoned_copy(
-            spark, f.build(spark, sf_dir), os.path.join(base, fam)
+            spark, f.family.build(spark, sf_dir), os.path.join(base, fam)
         )
         for fam, f in ARTIFACT_FAMILIES.items()
     }
@@ -2474,7 +2480,7 @@ def stream_lake_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _tagged_retract_summary(
         {
             fam: read_artifact_live(
-                spark, p, ARTIFACT_FAMILIES[fam].layout.id_col
+                spark, p, ARTIFACT_FAMILIES[fam].family.layout.id_col
             )
             for fam, p in paths.items()
         }

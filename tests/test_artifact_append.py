@@ -12,6 +12,15 @@ artifact or a from-scratch rebuild.
 
 from __future__ import annotations
 
+import pytest
+
+from quty_server_spark.operators.dedup import (
+    MINHASH_FAMILY,
+    PASSAGE_FAMILY,
+    SIG_FAMILY,
+)
+from quty_server_spark.operators.multimodal import MEDIA_SIG_FAMILY
+from quty_server_spark.operators.similarity import IVF_FAMILY
 from tests.conftest import SF_DIR
 
 
@@ -19,15 +28,33 @@ def _rows(df, cols):
     return sorted(tuple(r) for r in df.select(*cols).collect())
 
 
+@pytest.mark.parametrize(
+    "family",
+    [SIG_FAMILY, MINHASH_FAMILY, PASSAGE_FAMILY, MEDIA_SIG_FAMILY, IVF_FAMILY],
+    ids=["sig", "minhash", "passage", "media_sig", "ivf"],
+)
+def test_appended_holds_exactly_the_built_rows(spark, family):
+    """Append ≡ rebuild at artifact grain, for every family record:
+    the append twin holds the write-once build's rows as a multiset,
+    over every column, the partition column included."""
+    app = spark.read.parquet(family.appended(spark, SF_DIR))
+    full = spark.read.parquet(family.build(spark, SF_DIR))
+    assert family.layout.part in full.columns
+    assert sorted(app.columns) == sorted(full.columns)
+    app = app.select(*full.columns)
+    assert app.count() == full.count() > 0
+    assert app.exceptAll(full).count() == 0
+    assert full.exceptAll(app).count() == 0
+
+
 def test_simhash_gate_after_append_equals_after_rebuild(spark):
     from quty_server_spark.operators.dedup import (
-        appended_signature_artifact,
+        SIG_FAMILY,
         dedup_incremental_simhash_artifact,
-        lake_signature_artifact,
     )
 
-    app = appended_signature_artifact(spark, SF_DIR, rebuild=True)
-    full = lake_signature_artifact(spark, SF_DIR, rebuild=True)
+    app = SIG_FAMILY.appended(spark, SF_DIR, rebuild=True)
+    full = SIG_FAMILY.build(spark, SF_DIR, rebuild=True)
     cols = ["incoming_doc_id", "lake_doc_id", "hamming"]
     got = _rows(dedup_incremental_simhash_artifact(spark, SF_DIR, app), cols)
     want = _rows(
@@ -43,13 +70,12 @@ def test_simhash_gate_after_append_equals_after_rebuild(spark):
 
 def test_minhash_gate_after_append_equals_after_rebuild(spark):
     from quty_server_spark.operators.dedup import (
-        appended_minhash_artifact,
+        MINHASH_FAMILY,
         dedup_incremental_minhash_artifact,
-        lake_minhash_artifact,
     )
 
-    app = appended_minhash_artifact(spark, SF_DIR, rebuild=True)
-    full = lake_minhash_artifact(spark, SF_DIR, rebuild=True)
+    app = MINHASH_FAMILY.appended(spark, SF_DIR, rebuild=True)
+    full = MINHASH_FAMILY.build(spark, SF_DIR, rebuild=True)
     cols = ["incoming_doc_id", "lake_doc_id", "jaccard"]
     got = _rows(dedup_incremental_minhash_artifact(spark, SF_DIR, app), cols)
     want = _rows(
@@ -73,11 +99,11 @@ def test_appended_minhash_gate_verifies_appended_docs(spark):
     from pyspark.sql import functions as F
 
     from quty_server_spark.operators.dedup import (
-        appended_minhash_artifact,
+        MINHASH_FAMILY,
         dedup_incremental_minhash_artifact,
     )
 
-    app = appended_minhash_artifact(spark, SF_DIR)
+    app = MINHASH_FAMILY.appended(spark, SF_DIR)
     out = dedup_incremental_minhash_artifact(spark, SF_DIR, app)
     # At sf0.001 the fixture corpus yields at least one gate pair whose
     # lake doc is in the admitted batch; if the fixtures ever change,
@@ -97,13 +123,12 @@ def test_appended_minhash_gate_verifies_appended_docs(spark):
 
 def test_ivf_probe_after_append_equals_after_rebuild(spark):
     from quty_server_spark.operators.similarity import (
-        appended_ivf_artifact,
-        ivf_postings_artifact,
+        IVF_FAMILY,
         sim_ann_ivf_artifact,
     )
 
-    app = appended_ivf_artifact(spark, SF_DIR, rebuild=True)
-    full = ivf_postings_artifact(spark, SF_DIR, rebuild=True)
+    app = IVF_FAMILY.appended(spark, SF_DIR, rebuild=True)
+    full = IVF_FAMILY.build(spark, SF_DIR, rebuild=True)
     cols = ["query_id", "neighbor_id", "cell", "cos_sim", "rn"]
     got = _rows(sim_ann_ivf_artifact(spark, SF_DIR, app), cols)
     want = _rows(sim_ann_ivf_artifact(spark, SF_DIR, full), cols)
@@ -122,13 +147,13 @@ def test_ivf_probe_after_recluster_equals_after_fresh_build(spark):
     # probe-after-recluster ≡ probe-after-fresh-build by set equality
     # (the relabel verb's pattern).
     from quty_server_spark.operators.similarity import (
-        ivf_postings_artifact,
+        IVF_FAMILY,
         reclustered_ivf_artifact,
         sim_ann_ivf_artifact,
     )
 
     recl = reclustered_ivf_artifact(spark, SF_DIR, rebuild=True)
-    full = ivf_postings_artifact(spark, SF_DIR, rebuild=True)
+    full = IVF_FAMILY.build(spark, SF_DIR, rebuild=True)
     cols = ["query_id", "neighbor_id", "cell", "cos_sim", "rn"]
     got = _rows(sim_ann_ivf_artifact(spark, SF_DIR, recl), cols)
     want = _rows(sim_ann_ivf_artifact(spark, SF_DIR, full), cols)
@@ -150,13 +175,12 @@ def test_ivf_probe_after_recluster_equals_after_fresh_build(spark):
 
 def test_embedding_gate_after_append_equals_after_rebuild(spark):
     from quty_server_spark.operators.similarity import (
-        appended_ivf_artifact,
+        IVF_FAMILY,
         dedup_incremental_embedding_artifact,
-        ivf_postings_artifact,
     )
 
-    app = appended_ivf_artifact(spark, SF_DIR)
-    full = ivf_postings_artifact(spark, SF_DIR)
+    app = IVF_FAMILY.appended(spark, SF_DIR)
+    full = IVF_FAMILY.build(spark, SF_DIR)
     cols = ["incoming_vec_id", "lake_vec_id", "cos_sim"]
     got = _rows(
         dedup_incremental_embedding_artifact(spark, SF_DIR, app), cols
@@ -175,10 +199,10 @@ def test_append_adds_files_never_rewrites(spark):
     import glob
     import os
 
+    from quty_server_spark.operators._helpers import APPEND_BATCH_MOD
     from quty_server_spark.operators.dedup import (
-        APPEND_BATCH_MOD,
         SIG,
-        admitted_simhash_bands,
+        SIG_FAMILY,
         simhash_bands,
         simhash_sigs,
     )
@@ -206,7 +230,9 @@ def test_append_adds_files_never_rewrites(spark):
         }
 
     before = snapshot()
-    SIG.write(admitted_simhash_bands(spark, SF_DIR), path, "append")
+    SIG.write(
+        SIG_FAMILY.rows(spark, SF_DIR, SIG_FAMILY.admitted()), path, "append"
+    )
     after = snapshot()
     assert set(before) <= set(after), "append removed base files"
     for f, meta in before.items():
@@ -217,13 +243,12 @@ def test_append_adds_files_never_rewrites(spark):
 
 def test_passage_gate_after_append_equals_after_rebuild(spark):
     from quty_server_spark.operators.dedup import (
-        appended_passage_artifact,
+        PASSAGE_FAMILY,
         dedup_incremental_passages,
-        lake_passage_artifact,
     )
 
-    app = appended_passage_artifact(spark, SF_DIR, rebuild=True)
-    full = lake_passage_artifact(spark, SF_DIR, rebuild=True)
+    app = PASSAGE_FAMILY.appended(spark, SF_DIR, rebuild=True)
+    full = PASSAGE_FAMILY.build(spark, SF_DIR, rebuild=True)
     cols = ["doc_id", "n_windows", "n_lake_dup_windows", "dup_ppm"]
     got = _rows(dedup_incremental_passages(spark, SF_DIR, app), cols)
     want = _rows(dedup_incremental_passages(spark, SF_DIR, full), cols)
@@ -372,13 +397,12 @@ def test_media_gate_after_append_equals_after_rebuild(spark):
     returns the identical row set against the appended artifact and a
     from-scratch rebuild, and the artifact CONTENT is set-equal too."""
     from quty_server_spark.operators.multimodal import (
-        appended_media_signature_artifact,
-        media_signature_artifact,
+        MEDIA_SIG_FAMILY,
         mm_neardup_incremental_artifact,
     )
 
-    app = appended_media_signature_artifact(spark, SF_DIR, rebuild=True)
-    full = media_signature_artifact(spark, SF_DIR, rebuild=True)
+    app = MEDIA_SIG_FAMILY.appended(spark, SF_DIR, rebuild=True)
+    full = MEDIA_SIG_FAMILY.build(spark, SF_DIR, rebuild=True)
     cols = ["incoming_doc_id", "lake_doc_id", "hamming"]
     got = _rows(mm_neardup_incremental_artifact(spark, SF_DIR, app), cols)
     want = _rows(mm_neardup_incremental_artifact(spark, SF_DIR, full), cols)

@@ -39,3 +39,9 @@ def test_cluster_precedes_stats_in_headline():
     assert bench.HEADLINE.index("dedup_cluster") < bench.HEADLINE.index(
         "dedup_cluster_stats"
     )
+
+
+def test_cold_memos_name_headline_queries():
+    # Every cold-timed query must be in HEADLINE, or its reset is dead.
+    missing = [n for n in bench.COLD_MEMOS if n not in bench.HEADLINE]
+    assert not missing, f"bench.COLD_MEMOS names not in HEADLINE: {missing}"

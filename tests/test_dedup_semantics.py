@@ -13,6 +13,7 @@ import pathlib
 import pytest
 
 from quty_server_spark.operators import dedup as D
+from quty_server_spark.plans.registry import registry
 from quty_server_spark.session import reset_memos, session_memo
 
 
@@ -199,11 +200,11 @@ def test_component_labels_memoized_per_session_and_sf(spark):
     def _files(path):
         return sorted(str(p) for p in pathlib.Path(path).rglob("*.parquet"))
 
-    path = D.lake_passage_artifact(spark, sf)
+    path = D.PASSAGE_FAMILY.build(spark, sf)
     before = _files(path)
-    assert D.lake_passage_artifact(spark, sf) == path
+    assert D.PASSAGE_FAMILY.build(spark, sf) == path
     assert _files(path) == before
-    assert D.lake_passage_artifact(spark, sf, rebuild=True) == path
+    assert D.PASSAGE_FAMILY.build(spark, sf, rebuild=True) == path
     after = _files(path)
     assert after and not set(after) & set(before)
 
@@ -356,14 +357,18 @@ def test_minhash_artifact_rebuild_is_idempotent(spark):
 
     first = {
         (r.band_id, r.n_rows, r.n_buckets, r.n_docs, r.sum_nsh)
-        for r in D.sink_lake_minhash_artifact(spark, SF_DIR).collect()
+        for r in registry.queries["sink_lake_minhash_artifact"](
+            spark, SF_DIR
+        ).collect()
     }
-    p1 = D.lake_minhash_artifact(spark, SF_DIR)
+    p1 = D.MINHASH_FAMILY.build(spark, SF_DIR)
     second = {
         (r.band_id, r.n_rows, r.n_buckets, r.n_docs, r.sum_nsh)
-        for r in D.sink_lake_minhash_artifact(spark, SF_DIR).collect()
+        for r in registry.queries["sink_lake_minhash_artifact"](
+            spark, SF_DIR
+        ).collect()
     }
-    p2 = D.lake_minhash_artifact(spark, SF_DIR)
+    p2 = D.MINHASH_FAMILY.build(spark, SF_DIR)
     assert first == second
     assert p1 == p2
     assert spark.sparkContext.applicationId in p1
@@ -396,7 +401,7 @@ def test_incremental_cluster_equals_full_recompute_including_bridges(spark):
         D.lake_cluster_labels_artifact(spark, sf)
     ).select(F.col("node").alias("lake_doc_id"), "lbl")
     lake_sig = spark.read.parquet(
-        D.lake_signature_artifact(spark, sf)
+        D.SIG_FAMILY.build(spark, sf)
     ).alias("o")
     shard = (
         D.simhash_bands(D.simhash_sigs(spark, sf))
@@ -494,7 +499,7 @@ def test_relabel_queue_on_crafted_bridge_merge(spark, tmp_path):
 
     # Incremental assignment merges everything into label 1001 — and
     # equals the full recompute.
-    D.lake_signature_artifact(spark, sf, rebuild=True)
+    D.SIG_FAMILY.build(spark, sf, rebuild=True)
     inc = {
         (r.doc_id, r.cluster_id)
         for r in D.dedup_cluster_incremental(spark, sf).collect()
@@ -543,7 +548,7 @@ def test_relabel_apply_maintained_equals_rebuilt_and_touches_only_queued(
 
     # Yesterday's state in home-bucket layout, built by hand so the
     # maintenance step can be snapshotted in between.
-    D.lake_signature_artifact(spark, sf, rebuild=True)
+    D.SIG_FAMILY.build(spark, sf, rebuild=True)
     art0 = spark.read.parquet(
         D.lake_cluster_labels_artifact(spark, sf, rebuild=True)
     )
@@ -629,7 +634,7 @@ def test_tomorrow_gate_against_maintained_artifact_equals_full_recompute(
         dirs[name] = sf
 
     # Day-1 maintenance (the bridge merge applied).
-    D.lake_signature_artifact(spark, dirs["day1"], rebuild=True)
+    D.SIG_FAMILY.build(spark, dirs["day1"], rebuild=True)
     stale = D.lake_cluster_labels_artifact(
         spark, dirs["day1"], rebuild=True
     )
@@ -638,7 +643,7 @@ def test_tomorrow_gate_against_maintained_artifact_equals_full_recompute(
     )
 
     # Day-2 gate, standing labels = the MAINTAINED artifact.
-    D.lake_signature_artifact(spark, dirs["day2"], rebuild=True)
+    D.SIG_FAMILY.build(spark, dirs["day2"], rebuild=True)
     got = {
         (r.node, r.lbl)
         for r in D._incremental_cluster_labels(
@@ -698,7 +703,7 @@ def test_two_round_maintenance_equals_rebuild_via_sidecar(spark, tmp_path):
         dirs[name] = sf
 
     # Round 1: base build + bridge merge applied.
-    D.lake_signature_artifact(spark, dirs["day1"], rebuild=True)
+    D.SIG_FAMILY.build(spark, dirs["day1"], rebuild=True)
     path = D.maintained_cluster_labels_artifact(
         spark, dirs["day1"], rebuild=True, staged=False
     )
@@ -719,7 +724,7 @@ def test_two_round_maintenance_equals_rebuild_via_sidecar(spark, tmp_path):
 
     # Round 2: doc 200 near A -> min of the merged component is 200.
     # The sidecar must route the rewrite to BOTH buckets 9 and 11.
-    D.lake_signature_artifact(spark, dirs["day2"], rebuild=True)
+    D.SIG_FAMILY.build(spark, dirs["day2"], rebuild=True)
     D.apply_cluster_label_maintenance(spark, dirs["day2"], path)
     assert content() == {
         (1001, 200), (1011, 200), (1003, 200), (1013, 200),
@@ -732,7 +737,7 @@ def test_two_round_maintenance_equals_rebuild_via_sidecar(spark, tmp_path):
     # Round 3: the standing label is now a SHARD-id doc (200). The
     # membership-based queue must still rewrite it (id arithmetic
     # would filter it out), and 200 must NOT be re-appended.
-    D.lake_signature_artifact(spark, dirs["day3"], rebuild=True)
+    D.SIG_FAMILY.build(spark, dirs["day3"], rebuild=True)
     D.apply_cluster_label_maintenance(spark, dirs["day3"], path)
     got = content()
     assert got == {
@@ -758,7 +763,7 @@ def test_maintenance_apply_is_idempotent(spark, tmp_path):
     spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
         f"{sf}/documents.parquet"
     )
-    D.lake_signature_artifact(spark, sf, rebuild=True)
+    D.SIG_FAMILY.build(spark, sf, rebuild=True)
     path = D.maintained_cluster_labels_artifact(
         spark, sf, rebuild=True, staged=False
     )

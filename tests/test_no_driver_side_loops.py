@@ -22,9 +22,12 @@ every availableNow run in ``streaming/ops.py`` goes through
 ``_run_available_now``. Every partitioned artifact write (a writer's
 ``.partitionBy(`` or a ``partitionOverwriteMode`` overwrite) under
 ``operators/`` and ``streaming/`` goes through ``_helpers.Layout``.
-Finally, the artifact sidecar names (``_tombstones``, ``_label_homes``,
+The artifact sidecar names (``_tombstones``, ``_label_homes``,
 ``_centroids``) are spelled only in ``operators/_helpers.py``, whose
 ``read_sidecar`` / ``write_sidecar`` do every sidecar read and write.
+Finally, no batch ``.parquet(`` read is handed a glob: a glob read logs
+a false "Assume no metadata directory" warning with a stack trace, so
+readers list the directories they read.
 """
 
 from __future__ import annotations
@@ -342,4 +345,47 @@ def test_sidecar_names_only_in_helpers():
     assert not hits, (
         "sidecar names outside operators/_helpers.py (use read_sidecar / "
         "write_sidecar):\n" + "\n".join(hits)
+    )
+
+
+def _reads_batch(node: ast.AST) -> bool:
+    """Whether the receiver chain of a call reaches ``.read`` (a batch
+    DataFrameReader; ``readStream``'s file source lists its own glob)."""
+    while isinstance(node, (ast.Attribute, ast.Call)):
+        if isinstance(node, ast.Attribute):
+            if node.attr == "read":
+                return True
+            node = node.value
+        else:
+            node = node.func
+    return False
+
+
+def test_no_glob_parquet_reads():
+    hits = []
+    for path in sorted(ROOT.rglob("*.py")):
+        rel = str(path.relative_to(ROOT.parent))
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "parquet"
+                and _reads_batch(node.func.value)
+            ):
+                continue
+            for arg in node.args:
+                for sub in ast.walk(arg):
+                    if (
+                        isinstance(sub, ast.Constant)
+                        and isinstance(sub.value, str)
+                        and "*" in sub.value
+                    ):
+                        fn = _enclosing_function(tree, node.lineno)
+                        hits.append(
+                            f"{rel}:{node.lineno} {sub.value!r} in {fn}()"
+                        )
+    assert not hits, (
+        "glob parquet reads (list the directories instead):\n"
+        + "\n".join(hits)
     )

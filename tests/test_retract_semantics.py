@@ -78,7 +78,7 @@ def test_retract_rows_scopes_preserves_and_cleans(spark, tmp_path):
 def test_retracted_artifacts_untouched_ivf_cells_byte_identical(spark):
     # On the real fixture: IVF cell dirs holding no victim keep the
     # write-once build's exact bytes (the retraction never read them).
-    base = S.ivf_postings_artifact(spark, SF_DIR)
+    base = S.IVF_FAMILY.build(spark, SF_DIR)
     paths = R.retracted_artifact_paths(spark, SF_DIR, rebuild=True)
     cent = spark.read.parquet(os.path.join(base, "_centroids"))
     vvec = S._corpus(spark, SF_DIR).filter(
@@ -168,7 +168,7 @@ def test_passage_gate_probe_equals_survivor_rebuild(spark, tmp_path):
 def test_embedding_gate_probe_equals_survivor_rebuild(spark, tmp_path):
     import shutil
 
-    base = S.ivf_postings_artifact(spark, SF_DIR)
+    base = S.IVF_FAMILY.build(spark, SF_DIR)
     paths = R.retracted_artifact_paths(spark, SF_DIR)
     reb = str(tmp_path / "ivf")
     cent = spark.read.parquet(os.path.join(base, "_centroids"))
@@ -290,10 +290,10 @@ def test_tombstone_touches_no_data_files(spark):
     # sidecar — every data file stays byte-identical to the base
     # build's, in every family.
     bases = {
-        "sig": D.lake_signature_artifact(spark, SF_DIR),
-        "minhash": D.lake_minhash_artifact(spark, SF_DIR),
-        "passage": D.lake_passage_artifact(spark, SF_DIR),
-        "ivf": S.ivf_postings_artifact(spark, SF_DIR),
+        "sig": D.SIG_FAMILY.build(spark, SF_DIR),
+        "minhash": D.MINHASH_FAMILY.build(spark, SF_DIR),
+        "passage": D.PASSAGE_FAMILY.build(spark, SF_DIR),
+        "ivf": S.IVF_FAMILY.build(spark, SF_DIR),
     }
     paths = R.tombstoned_artifact_paths(spark, SF_DIR, rebuild=True)
     for fam, p in paths.items():
@@ -315,7 +315,7 @@ def test_tombstone_live_view_equals_physical_retract(spark):
     tomb = R.tombstoned_artifact_paths(spark, SF_DIR)
     phys = R.retracted_artifact_paths(spark, SF_DIR)
     for fam, f in R.ARTIFACT_FAMILIES.items():
-        part, id_col, _ = f.layout
+        part, id_col, _ = f.family.layout
         got = sorted(
             tuple(r)
             for r in R.read_artifact_live(spark, tomb[fam], id_col)
@@ -341,7 +341,7 @@ def test_compaction_preserves_live_view_and_clears_sidecar(spark, tmp_path):
     src = R.tombstoned_artifact_paths(spark, SF_DIR)["passage"]
     p = str(tmp_path / "pw")
     sh.copytree(src, p)
-    layout = R.ARTIFACT_FAMILIES["passage"].layout
+    layout = R.ARTIFACT_FAMILIES["passage"].family.layout
     id_col = layout.id_col
     before = sorted(
         tuple(r)
@@ -379,7 +379,7 @@ def test_compacted_sink_clears_every_family_sidecar(spark):
         plain = _norm(spark.read.parquet(p).collect())
         live = _norm(
             R.read_artifact_live(
-                spark, p, R.ARTIFACT_FAMILIES[fam].layout.id_col
+                spark, p, R.ARTIFACT_FAMILIES[fam].family.layout.id_col
             ).collect()
         )
         assert plain == live, fam
@@ -435,7 +435,7 @@ def test_media_artifact_retraction_live_equals_compacted_equals_rebuilt(spark):
 
     from quty_server_spark.operators.multimodal import (
         media_sig_bands,
-        media_signature_artifact,
+        MEDIA_SIG_FAMILY,
         percep_media_universe,
     )
     from quty_server_spark.operators.retract import (
@@ -448,7 +448,7 @@ def test_media_artifact_retraction_live_equals_compacted_equals_rebuilt(spark):
     from quty_server_spark.session import session_tmp_dir
     from tests.conftest import SF_DIR
 
-    src = media_signature_artifact(spark, SF_DIR, rebuild=True)
+    src = MEDIA_SIG_FAMILY.build(spark, SF_DIR, rebuild=True)
     priv = session_tmp_dir(spark, "quty_media_sig_rt_test", SF_DIR)
     shutil.rmtree(priv, ignore_errors=True)
     _copy_artifact(src, priv)

@@ -34,9 +34,9 @@ def ivf_artifact(spark) -> str:
     session /tmp state and test ordering. The fixture makes the write
     a visible, declared dependency; plan_of below is then a pure read
     of the memoized path."""
-    from quty_server_spark.operators.similarity import ivf_postings_artifact
+    from quty_server_spark.operators.similarity import IVF_FAMILY
 
-    return ivf_postings_artifact(spark, SF_DIR)
+    return IVF_FAMILY.build(spark, SF_DIR)
 
 
 def test_filter_pushdown_reaches_scan(spark):
@@ -1037,9 +1037,9 @@ def test_signature_append_job_scans_only_the_batch(spark):
     # admitted batch. The batch predicate is on the signature
     # aggregation's grouping key, so it sits below the aggregate on the
     # single documents scan.
-    from quty_server_spark.operators.dedup import admitted_simhash_bands
+    from quty_server_spark.operators.dedup import SIG_FAMILY
 
-    df = admitted_simhash_bands(spark, SF_DIR)
+    df = SIG_FAMILY.rows(spark, SF_DIR, SIG_FAMILY.admitted())
     plan = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
@@ -1058,9 +1058,9 @@ def test_minhash_append_job_scans_only_the_batch(spark):
     # from the batch's documents alone (two filtered scans — the sizes
     # branch and the bands branch; deliberately unheckpointed so the
     # filters stay visible). Never the artifact, never the lake.
-    from quty_server_spark.operators.dedup import admitted_minhash_bands
+    from quty_server_spark.operators.dedup import MINHASH_FAMILY
 
-    df = admitted_minhash_bands(spark, SF_DIR)
+    df = MINHASH_FAMILY.rows(spark, SF_DIR, MINHASH_FAMILY.admitted())
     plan = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
@@ -1081,14 +1081,15 @@ def test_ivf_append_assigns_against_sidecar_not_postings(spark):
     import re
 
     from quty_server_spark.operators.similarity import (
-        admitted_ivf_postings,
-        appended_ivf_artifact,
+        IVF_FAMILY,
+        _ivf_cells_plan,
     )
     import os as _os
 
-    root = appended_ivf_artifact(spark, SF_DIR)
+    root = IVF_FAMILY.appended(spark, SF_DIR)
     sidecar = spark.read.parquet(_os.path.join(root, "_centroids"))
-    df = admitted_ivf_postings(spark, SF_DIR, sidecar)
+    batch = IVF_FAMILY.rows(spark, SF_DIR, IVF_FAMILY.admitted())
+    df = _ivf_cells_plan(batch, sidecar)
     plan = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
@@ -1122,10 +1123,10 @@ def test_ivf_recluster_reads_artifact_not_lake(spark):
     from quty_server_spark.operators.similarity import (
         _ivf_cells_plan,
         _ivf_centroids,
-        appended_ivf_artifact,
+        IVF_FAMILY,
     )
 
-    standing = spark.read.parquet(appended_ivf_artifact(spark, SF_DIR)).select(
+    standing = spark.read.parquet(IVF_FAMILY.appended(spark, SF_DIR)).select(
         "vec_id", "v"
     )
     df = _ivf_cells_plan(standing, _ivf_centroids(standing))
@@ -1150,10 +1151,10 @@ def test_incremental_cluster_pairs_read_artifacts_not_lake(spark):
     from quty_server_spark.operators.dedup import (
         _incremental_cluster_pairs,
         lake_cluster_labels_artifact,
-        lake_signature_artifact,
+        SIG_FAMILY,
     )
 
-    lake_signature_artifact(spark, SF_DIR)  # declared builds
+    SIG_FAMILY.build(spark, SF_DIR)  # declared builds
     lake_cluster_labels_artifact(spark, SF_DIR)
     df = _incremental_cluster_pairs(spark, SF_DIR, materialize_shard=False)
     plan = df._jdf.queryExecution().explainString(
@@ -1212,21 +1213,22 @@ def test_artifact_files_sorted_by_probe_key(spark):
 
     retracted = R.retracted_artifact_paths(spark, SF_DIR)
     cases = [
-        (D.lake_signature_artifact(spark, SF_DIR), D.SIG),
-        (D.appended_signature_artifact(spark, SF_DIR), D.SIG),
-        (D.lake_minhash_artifact(spark, SF_DIR), D.MINHASH),
-        (D.appended_minhash_artifact(spark, SF_DIR), D.MINHASH),
-        (D.lake_passage_artifact(spark, SF_DIR), D.PASSAGE),
-        (D.appended_passage_artifact(spark, SF_DIR), D.PASSAGE),
-        (S.ivf_postings_artifact(spark, SF_DIR), S.IVF),
-        (S.appended_ivf_artifact(spark, SF_DIR), S.IVF),
-        (M.media_signature_artifact(spark, SF_DIR), D.SIG),
-        (M.appended_media_signature_artifact(spark, SF_DIR), D.SIG),
+        (D.SIG_FAMILY.build(spark, SF_DIR), D.SIG),
+        (D.SIG_FAMILY.appended(spark, SF_DIR), D.SIG),
+        (D.MINHASH_FAMILY.build(spark, SF_DIR), D.MINHASH),
+        (D.MINHASH_FAMILY.appended(spark, SF_DIR), D.MINHASH),
+        (D.PASSAGE_FAMILY.build(spark, SF_DIR), D.PASSAGE),
+        (D.PASSAGE_FAMILY.appended(spark, SF_DIR), D.PASSAGE),
+        (S.IVF_FAMILY.build(spark, SF_DIR), S.IVF),
+        (S.IVF_FAMILY.appended(spark, SF_DIR), S.IVF),
+        (M.MEDIA_SIG_FAMILY.build(spark, SF_DIR), D.SIG),
+        (M.MEDIA_SIG_FAMILY.appended(spark, SF_DIR), D.SIG),
         (D.maintained_cluster_labels_artifact(spark, SF_DIR), D.LABELS),
         (R.retracted_cluster_labels_artifact(spark, SF_DIR), D.LABELS),
         (P.appended_training_shards(spark, SF_DIR), P.TRAIN_SHARDS),
     ] + [
-        (retracted[fam], f.layout) for fam, f in R.ARTIFACT_FAMILIES.items()
+        (retracted[fam], f.family.layout)
+        for fam, f in R.ARTIFACT_FAMILIES.items()
     ]
     for root, layout in cases:
         key = layout.sort_key
@@ -1333,10 +1335,10 @@ def test_staged_corpus_adds_no_plan_weight(spark):
     from quty_server_spark.operators.dedup import (
         _incremental_cluster_pairs,
         lake_cluster_labels_artifact,
-        lake_signature_artifact,
+        SIG_STAGED_FAMILY,
     )
 
-    lake_signature_artifact(spark, SF_DIR, staged=True)  # declared builds
+    SIG_STAGED_FAMILY.build(spark, SF_DIR)  # declared builds
     lake_cluster_labels_artifact(spark, SF_DIR, staged=True)
     df = _incremental_cluster_pairs(
         spark, SF_DIR, materialize_shard=False, staged=True
@@ -1363,10 +1365,10 @@ def test_passage_gate_windows_shard_only_no_lake_aggregation(spark):
 
     from quty_server_spark.operators.dedup import (
         dedup_incremental_passages,
-        lake_passage_artifact,
+        PASSAGE_FAMILY,
     )
 
-    lake_passage_artifact(spark, SF_DIR)  # declared build
+    PASSAGE_FAMILY.build(spark, SF_DIR)  # declared build
     df = dedup_incremental_passages(spark, SF_DIR, materialize_shard=False)
     plan = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -1403,11 +1405,13 @@ def test_passage_append_job_scans_only_the_batch(spark):
     from pyspark.sql import functions as F
 
     from quty_server_spark.operators.dedup import (
-        APPEND_BATCH_MOD,
         _passage_pfx,
         _passage_windows,
     )
-    from quty_server_spark.operators._helpers import load_table
+    from quty_server_spark.operators._helpers import (
+        APPEND_BATCH_MOD,
+        load_table,
+    )
 
     batch = _passage_windows(
         load_table(spark, SF_DIR, "documents").filter(
@@ -1435,9 +1439,9 @@ def test_incremental_snapshot_zero_lake_compute(spark):
     # the visible plan: shard-filtered scans + artifact scan only.
     import re
 
-    from quty_server_spark.operators.dedup import lake_passage_artifact
+    from quty_server_spark.operators.dedup import PASSAGE_FAMILY
 
-    lake_passage_artifact(spark, SF_DIR)  # declared build
+    PASSAGE_FAMILY.build(spark, SF_DIR)  # declared build
     plan = plan_of(spark, "corpus_training_snapshot_incremental")
     tree = plan.split("\n\n")[0]
     assert "CartesianProduct" not in tree

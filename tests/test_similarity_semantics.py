@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from quty_server_spark.functions.vectors import cosine
 from quty_server_spark.operators import similarity as S
+from quty_server_spark.plans.registry import registry
 from tests.conftest import SF_DIR
 
 
@@ -223,14 +224,18 @@ def test_ivf_artifact_rebuild_is_idempotent(spark):
     # memoized path stable within a session.
     first = {
         (r.cell, r.n_vecs, r.n_queries)
-        for r in S.sink_ivf_postings_artifact(spark, SF_DIR).collect()
+        for r in registry.queries["sink_ivf_postings_artifact"](
+            spark, SF_DIR
+        ).collect()
     }
-    p1 = S.ivf_postings_artifact(spark, SF_DIR)
+    p1 = S.IVF_FAMILY.build(spark, SF_DIR)
     second = {
         (r.cell, r.n_vecs, r.n_queries)
-        for r in S.sink_ivf_postings_artifact(spark, SF_DIR).collect()
+        for r in registry.queries["sink_ivf_postings_artifact"](
+            spark, SF_DIR
+        ).collect()
     }
-    p2 = S.ivf_postings_artifact(spark, SF_DIR)
+    p2 = S.IVF_FAMILY.build(spark, SF_DIR)
     assert first == second
     assert p1 == p2
 

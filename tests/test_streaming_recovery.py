@@ -382,7 +382,7 @@ def test_stream_cluster_maintenance_replay_after_apply_failure(
         )
 
     def gate_rows():
-        lake = spark.read.parquet(D.lake_signature_artifact(spark, SF_DIR))
+        lake = spark.read.parquet(D.SIG_FAMILY.build(spark, SF_DIR))
         sig = ops._gate_signatures(
             spark, lake, os.path.join(base, "bands"), 1 << 30
         )
