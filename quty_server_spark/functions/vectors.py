@@ -42,8 +42,8 @@ def norm(v: Column) -> Column:
 
 def cosine_norms(u: Column, v: Column, nu: Column, nv: Column) -> Column:
     """:func:`cosine` with both norms precomputed per side — the
-    broadcast/cross-join hot-path form (r17, guide §1.2 "don't compute
-    things you throw away"): higher-order array folds are
+    broadcast/cross-join hot-path form (don't compute things you throw
+    away): higher-order array folds are
     codegen-fallback expressions, and ``cosine`` re-folds BOTH
     self-dots for every pair, so an n×K assignment pays 3·n·K folds.
     Attaching ``norm`` once per row on each side and evaluating

@@ -477,10 +477,32 @@ _SQL_SIM_BITS = " + ".join(
     for j in range(SIMHASH_BITS)
 )
 
-SQL_SIMHASH = f"""
+# Saturated band buckets are the SimHash analog of stop-shingles: a
+# bucket holding b docs contributes C(b, 2) candidate rows, and on a
+# realistic Zipf-vocabulary corpus the 4 x 4096-bucket space saturates —
+# tools/diverse_corpus.py measures the uncapped candidate join growing
+# ~3.9x per corpus doubling (quadratic) while MinHash-LSH and df-capped
+# shingle blocks stay ~2x (linear). Dropping buckets larger than the cap
+# bounds the join at CAP * n_buckets rows. The cap is visible in the
+# results (pairs whose only shared intact band is saturated are not
+# proposed), so the oracle applies the IDENTICAL cap (QUALIFY) — this is
+# the documented candidate-generation contract at scale, not a silent
+# approximation. Fixture sf0.01: 494 buckets, median size 1, head ~167;
+# cap 32 keeps the discriminative tail and drops the degenerate head.
+SIMHASH_BUCKET_CAP = 32
+
+
+# DuckDB fragments of the SimHash family. Every oracle that signs, bands
+# or labels a corpus is assembled from these builders; pointing one at
+# another corpus (a staged, scoped or retracted CTE) is an argument.
+def simhash_sig_ctes(corpus: str = "documents") -> str:
+    """The ``tok`` -> ``tok_hashed`` -> ``simhash(doc_id, sig)`` CTEs
+    signing the ``(doc_id, text)`` relation named ``corpus`` — the
+    DuckDB twin of :func:`simhash_sigs_docs`."""
+    return f"""
 tok AS (
     SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS token
-    FROM documents
+    FROM {corpus}
 ),
 tok_hashed AS (
     SELECT doc_id, {sql_hash60('token')} AS h FROM tok
@@ -489,6 +511,112 @@ simhash AS (
     SELECT doc_id, {_SQL_SIM_BITS} AS sig
     FROM tok_hashed GROUP BY doc_id
 )"""
+
+
+SQL_SIMHASH = simhash_sig_ctes()
+
+
+def simhash_band_cte(
+    sigs: str = "simhash", *preds: str, capped: bool = False
+) -> str:
+    """The ``bands(doc_id, sig, band_id, band_val)`` CTE — the DuckDB
+    twin of :func:`simhash_bands` over the ``(doc_id, sig)`` relation
+    ``sigs`` (text or media), restricted to the rows ``preds`` keep.
+    ``capped`` then drops buckets larger than SIMHASH_BUCKET_CAP
+    (QUALIFY, :func:`dedup_simhash_capped`'s contract)."""
+    cap = (
+        "\n        QUALIFY COUNT(*) OVER (PARTITION BY b.band_id,"
+        "\n                               (sig >> (12 * b.band_id)) & 4095)"
+        f"\n                <= {SIMHASH_BUCKET_CAP}"
+        if capped
+        else ""
+    )
+    return f"""bands AS (
+        SELECT doc_id, sig, b.band_id,
+               (sig >> (12 * b.band_id)) & 4095 AS band_val
+        FROM {sigs}, (SELECT unnest(range(0, {SIMHASH_BANDS})) AS band_id) b
+        {sql_where(*preds)}{cap}
+    )"""
+
+
+def simhash_near_ctes(
+    sigs: str = "simhash", *preds: str, capped: bool = False
+) -> str:
+    """:func:`simhash_band_cte` plus ``near(doc_a, doc_b, hamming)``:
+    the distinct band-sharing pairs (``doc_a < doc_b``) within
+    HAMMING_MAX — :func:`dedup_simhash`'s relation."""
+    return f"""{simhash_band_cte(sigs, *preds, capped=capped)},
+    near AS (
+        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
+               bit_count(xor(a.sig, b.sig)) AS hamming
+        FROM bands a JOIN bands b
+          ON a.band_id = b.band_id AND a.band_val = b.band_val
+         AND a.doc_id < b.doc_id
+        WHERE bit_count(xor(a.sig, b.sig)) <= {HAMMING_MAX}
+    )"""
+
+
+def component_label_ctes(pairs: str = "near", prefix: str = "") -> str:
+    """``{prefix}labels(node, lbl)``: every node of the undirected pair
+    relation ``pairs(doc_a, doc_b)`` labeled with the min node id of its
+    connected component, through ``{prefix}edges`` and the recursive
+    ``{prefix}reach`` (the query needs ``WITH RECURSIVE``). The DuckDB
+    twin of :func:`min_label_components`; the prefix lets one query
+    hold two chains."""
+    p = prefix
+    return f"""{p}edges AS (
+        SELECT doc_a AS src, doc_b AS dst FROM {pairs}
+        UNION ALL SELECT doc_b, doc_a FROM {pairs}
+    ),
+    {p}reach(node, lbl) AS (
+        SELECT src, src FROM {p}edges
+        UNION
+        SELECT e.dst, r.lbl FROM {p}reach r JOIN {p}edges e ON e.src = r.node
+    ),
+    {p}labels AS (SELECT node, MIN(lbl) AS lbl FROM {p}reach GROUP BY node)"""
+
+
+def simhash_label_ctes(sig_ctes: str = SQL_SIMHASH, *preds: str) -> str:
+    """The SimHash component labels ``labels(node, lbl)`` of the corpus
+    ``sig_ctes`` signs, over the docs ``preds`` keep: signatures, bands,
+    verified near pairs and the component chain — the DuckDB twin of
+    :func:`component_labels`. Follows ``WITH RECURSIVE``."""
+    return (
+        f"{sig_ctes.lstrip()},\n    {simhash_near_ctes('simhash', *preds)},"
+        f"\n    {component_label_ctes()}"
+    )
+
+
+def simhash_gate_sql(
+    sig_ctes: str = SQL_SIMHASH, sigs: str = "simhash", capped: bool = False
+) -> str:
+    """The ingest gate's truth: ``(incoming_doc_id, lake_doc_id,
+    hamming)`` for every shard doc (``doc_id % 10 = 0``) within
+    HAMMING_MAX of a lake doc it shares a band bucket with — the DuckDB
+    twin of :func:`simhash_gate_pairs` (text or media signatures)."""
+    return f"""
+    WITH {sig_ctes}, {simhash_band_cte(sigs, capped=capped)}
+    SELECT DISTINCT n.doc_id AS incoming_doc_id, o.doc_id AS lake_doc_id,
+           bit_count(xor(n.sig, o.sig)) AS hamming
+    FROM bands n JOIN bands o
+      ON n.band_id = o.band_id AND n.band_val = o.band_val
+    WHERE n.doc_id % 10 = 0 AND o.doc_id % 10 <> 0
+      AND bit_count(xor(n.sig, o.sig)) <= {HAMMING_MAX}
+    """
+
+
+def labels_summary_sql(sig_ctes: str = SQL_SIMHASH, *preds: str) -> str:
+    """Per-cluster ``(cluster_id, n_docs, max_doc_id)`` of the
+    from-scratch components :func:`simhash_label_ctes` computes — the
+    oracle of every cluster-label artifact sink, whose artifact must
+    hold exactly a rebuild's labels."""
+    return f"""
+    WITH RECURSIVE {simhash_label_ctes(sig_ctes, *preds)}
+    SELECT lbl AS cluster_id,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(MAX(node) AS BIGINT) AS max_doc_id
+    FROM labels GROUP BY lbl
+    """
 
 
 # Two 31-bit lane counters per packed 64-bit sum. Lane carry needs a
@@ -612,13 +740,9 @@ SQL_DOCS_STAGED = (
     + ") t(doc_id, text)\n    )"
 )
 
-# SQL_SIMHASH reading the staged relation: the single `FROM documents`
-# occurrence (the tok CTE) is redirected; everything downstream is
-# byte-identical, so staged and raw signatures can never drift.
+# The SimHash signatures of the staged relation.
 SQL_SIMHASH_STAGED = (
-    SQL_DOCS_STAGED
-    + ",\n    "
-    + SQL_SIMHASH.lstrip().replace("FROM documents\n", "FROM documents_staged\n")
+    SQL_DOCS_STAGED + ",\n    " + simhash_sig_ctes("documents_staged").lstrip()
 )
 
 
@@ -638,35 +762,8 @@ def staged_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 @registry.query(
     "dedup_cluster",
     oracle=f"""
-    WITH RECURSIVE {SQL_SIMHASH.lstrip()},
-    bands AS (
-        SELECT doc_id, b.band_id, (sig >> (12 * b.band_id)) & 4095 AS band_val
-        FROM simhash, (SELECT unnest(range(0, 4)) AS band_id) b
-    ),
-    pairs AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b
-          ON a.band_id = b.band_id AND a.band_val = b.band_val
-         AND a.doc_id < b.doc_id
-    ),
-    near AS (
-        SELECT p.doc_a, p.doc_b
-        FROM pairs p
-        JOIN simhash sa ON p.doc_a = sa.doc_id
-        JOIN simhash sb ON p.doc_b = sb.doc_id
-        WHERE bit_count(xor(sa.sig, sb.sig)) <= {HAMMING_MAX}
-    ),
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM near
-        UNION ALL SELECT doc_b, doc_a FROM near
-    ),
-    reach(node, lbl) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
-    )
-    SELECT node AS doc_id, MIN(lbl) AS cluster_id
-    FROM reach GROUP BY node
+    WITH RECURSIVE {simhash_label_ctes()}
+    SELECT node AS doc_id, lbl AS cluster_id FROM labels
     """,
 )
 def dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -876,11 +973,10 @@ def simhash_component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the doc-grain path is pinned in tests/test_dedup_semantics.py
     and by the recursive-CTE oracles of all three consumers."""
 
-    def _build() -> DataFrame:
-        sigs = simhash_sigs(spark, sf_dir).localCheckpoint(eager=False)
-        return _labels_from_sigs(spark, sigs).localCheckpoint(eager=True)
-
-    return session_memo(spark, "cluster_labels", sf_dir, _build)
+    return session_memo(
+        spark, "cluster_labels", sf_dir,
+        lambda: component_labels(spark, simhash_sigs(spark, sf_dir)),
+    )
 
 
 def simhash_bands(sigs: DataFrame) -> DataFrame:
@@ -909,23 +1005,8 @@ def simhash_bands(sigs: DataFrame) -> DataFrame:
 @registry.query(
     "dedup_simhash",
     oracle=f"""
-    WITH {SQL_SIMHASH},
-    bands AS (
-        SELECT doc_id, b.band_id, (sig >> (12 * b.band_id)) & 4095 AS band_val
-        FROM simhash, (SELECT unnest(range(0, 4)) AS band_id) b
-    ),
-    cands AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b
-          ON a.band_id = b.band_id AND a.band_val = b.band_val
-         AND a.doc_id < b.doc_id
-    )
-    SELECT c.doc_a, c.doc_b,
-           bit_count(xor(sa.sig, sb.sig)) AS hamming
-    FROM cands c
-    JOIN simhash sa ON c.doc_a = sa.doc_id
-    JOIN simhash sb ON c.doc_b = sb.doc_id
-    WHERE bit_count(xor(sa.sig, sb.sig)) <= {HAMMING_MAX}
+    WITH {SQL_SIMHASH}, {simhash_near_ctes()}
+    SELECT doc_a, doc_b, hamming FROM near
     """,
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1007,40 +1088,11 @@ def dedup_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
 @registry.query(
     "dedup_keep_canonical",
     oracle=f"""
-    WITH RECURSIVE {SQL_SIMHASH.lstrip()},
-    bands AS (
-        SELECT doc_id, b.band_id, (sig >> (12 * b.band_id)) & 4095 AS band_val
-        FROM simhash, (SELECT unnest(range(0, 4)) AS band_id) b
-    ),
-    pairs AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b
-          ON a.band_id = b.band_id AND a.band_val = b.band_val
-         AND a.doc_id < b.doc_id
-    ),
-    near AS (
-        SELECT p.doc_a, p.doc_b
-        FROM pairs p
-        JOIN simhash sa ON p.doc_a = sa.doc_id
-        JOIN simhash sb ON p.doc_b = sb.doc_id
-        WHERE bit_count(xor(sa.sig, sb.sig)) <= {HAMMING_MAX}
-    ),
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM near
-        UNION ALL SELECT doc_b, doc_a FROM near
-    ),
-    reach(node, lbl) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
-    ),
-    lab AS (
-        SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY node
-    )
+    WITH RECURSIVE {simhash_label_ctes()}
     SELECT d.doc_id,
-           COALESCE(l.cluster_id, d.doc_id) AS cluster_id,
-           COALESCE(l.cluster_id, d.doc_id) = d.doc_id AS keep
-    FROM documents d LEFT JOIN lab l ON d.doc_id = l.doc_id
+           COALESCE(l.lbl, d.doc_id) AS cluster_id,
+           COALESCE(l.lbl, d.doc_id) = d.doc_id AS keep
+    FROM documents d LEFT JOIN labels l ON d.doc_id = l.node
     """,
 )
 def dedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1163,39 +1215,11 @@ def dedup_fuzzy_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.filter(F.col("edit_dist") <= 16)
 
 
-# Saturated band buckets are the SimHash analog of stop-shingles: a
-# bucket holding b docs contributes C(b, 2) candidate rows, and on a
-# realistic Zipf-vocabulary corpus the 4 x 4096-bucket space saturates —
-# tools/diverse_corpus.py measures the uncapped candidate join growing
-# ~3.9x per corpus doubling (quadratic) while MinHash-LSH and df-capped
-# shingle blocks stay ~2x (linear). Dropping buckets larger than the cap
-# bounds the join at CAP * n_buckets rows. The cap is visible in the
-# results (pairs whose only shared intact band is saturated are not
-# proposed), so the oracle applies the IDENTICAL cap (QUALIFY) — this is
-# the documented candidate-generation contract at scale, not a silent
-# approximation. Fixture sf0.01: 494 buckets, median size 1, head ~167;
-# cap 32 keeps the discriminative tail and drops the degenerate head.
-SIMHASH_BUCKET_CAP = 32
-
-
 @registry.query(
     "dedup_simhash_capped",
     oracle=f"""
-    WITH {SQL_SIMHASH},
-    bands AS (
-        SELECT doc_id, sig, b.band_id,
-               (sig >> (12 * b.band_id)) & 4095 AS band_val
-        FROM simhash, (SELECT unnest(range(0, 4)) AS band_id) b
-        QUALIFY COUNT(*) OVER (PARTITION BY b.band_id,
-                               (sig >> (12 * b.band_id)) & 4095)
-                <= {SIMHASH_BUCKET_CAP}
-    )
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           bit_count(xor(a.sig, b.sig)) AS hamming
-    FROM bands a JOIN bands b
-      ON a.band_id = b.band_id AND a.band_val = b.band_val
-     AND a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.sig, b.sig)) <= {HAMMING_MAX}
+    WITH {SQL_SIMHASH}, {simhash_near_ctes(capped=True)}
+    SELECT doc_a, doc_b, hamming FROM near
     """,
 )
 def dedup_simhash_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1238,25 +1262,7 @@ def dedup_simhash_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 # both compute the same (shard-vs-lake near-pair) relation, so they are
 # oracled by the same SQL — the variant differs only in WHERE the lake
 # side's banded signatures come from (recomputed vs a parquet artifact).
-SQL_INCREMENTAL_GATE = f"""
-    WITH {SQL_SIMHASH},
-    bands AS (
-        SELECT doc_id, b.band_id, (sig >> (12 * b.band_id)) & 4095 AS band_val
-        FROM simhash, (SELECT unnest(range(0, 4)) AS band_id) b
-    ),
-    cands AS (
-        SELECT DISTINCT n.doc_id AS incoming_doc_id, o.doc_id AS lake_doc_id
-        FROM bands n JOIN bands o
-          ON n.band_id = o.band_id AND n.band_val = o.band_val
-        WHERE n.doc_id % 10 = 0 AND o.doc_id % 10 <> 0
-    )
-    SELECT c.incoming_doc_id, c.lake_doc_id,
-           bit_count(xor(sn.sig, so.sig)) AS hamming
-    FROM cands c
-    JOIN simhash sn ON c.incoming_doc_id = sn.doc_id
-    JOIN simhash so ON c.lake_doc_id = so.doc_id
-    WHERE bit_count(xor(sn.sig, so.sig)) <= {HAMMING_MAX}
-    """
+SQL_INCREMENTAL_GATE = simhash_gate_sql()
 
 
 def simhash_gate_pairs(
@@ -1321,23 +1327,7 @@ def dedup_incremental_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @registry.query(
     "dedup_incremental_simhash_capped",
-    oracle=f"""
-    WITH {SQL_SIMHASH},
-    bands AS (
-        SELECT doc_id, sig, b.band_id,
-               (sig >> (12 * b.band_id)) & 4095 AS band_val
-        FROM simhash, (SELECT unnest(range(0, 4)) AS band_id) b
-        QUALIFY COUNT(*) OVER (PARTITION BY b.band_id,
-                               (sig >> (12 * b.band_id)) & 4095)
-                <= {SIMHASH_BUCKET_CAP}
-    )
-    SELECT DISTINCT n.doc_id AS incoming_doc_id, o.doc_id AS lake_doc_id,
-           bit_count(xor(n.sig, o.sig)) AS hamming
-    FROM bands n JOIN bands o
-      ON n.band_id = o.band_id AND n.band_val = o.band_val
-    WHERE n.doc_id % 10 = 0 AND o.doc_id % 10 <> 0
-      AND bit_count(xor(n.sig, o.sig)) <= {HAMMING_MAX}
-    """,
+    oracle=simhash_gate_sql(capped=True),
 )
 def dedup_incremental_simhash_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The incremental ingest gate's 100 TB candidate-generation
@@ -1828,13 +1818,7 @@ def band_summary_sql(sig_ctes: str, sigs: str, pred: str) -> str:
     that also pass ``pred``; ``sig_ctes`` define the ``sigs`` relation
     of ``(doc_id, sig)`` signatures (text or media)."""
     return f"""
-    WITH {sig_ctes},
-    bands AS (
-        SELECT doc_id, sig, b.band_id,
-               (sig >> (12 * b.band_id)) & 4095 AS band_val
-        FROM {sigs}, (SELECT unnest(range(0, 4)) AS band_id) b
-        {sql_where("doc_id % 10 <> 0", pred)}
-    )
+    WITH {sig_ctes}, {simhash_band_cte(sigs, "doc_id % 10 <> 0", pred)}
     SELECT band_id,
            COUNT(*) AS n_rows,
            COUNT(DISTINCT band_val) AS n_buckets,
@@ -1918,12 +1902,9 @@ def dedup_incremental_simhash_artifact(
 def _labels_from_sigs(spark: SparkSession, sigs: DataFrame) -> DataFrame:
     """Near-dup component labels ``(node, lbl)`` from a ``(doc_id,
     sig)`` signature frame — the signature-grain pre-collapse, banded
-    rep-pair mining, min-label BSP, and clique expansion that every
-    labeling consumer shares (:func:`simhash_component_labels` at full
-    grain, :func:`lake_cluster_labels_artifact` for the standing lake,
-    and the retraction re-cluster in operators/retract.py, which feeds
-    it ONLY the affected clusters' surviving members). Identical-sig
-    groups of >= 2 docs are clusters even without a banded rep pair."""
+    rep-pair mining, min-label BSP, and clique expansion, reached
+    through :func:`component_labels`. Identical-sig groups of >= 2 docs
+    are clusters even without a banded rep pair."""
     grp = sigs.groupBy("sig").agg(
         F.min("doc_id").alias("rep"), F.count("*").alias("gsz")
     )
@@ -1971,6 +1952,18 @@ def _labels_from_sigs(spark: SparkSession, sigs: DataFrame) -> DataFrame:
     )
 
 
+def component_labels(spark: SparkSession, sigs: DataFrame) -> DataFrame:
+    """The near-dup component labels ``(node, lbl)`` of a ``(doc_id,
+    sig)`` signature frame, materialized once — every labeling site's
+    one call. The signatures are lazily checkpointed, so the labeling
+    core's jobs (rep grouping, pair mining, expansion) sign the corpus
+    once; the labels are eagerly checkpointed, so a consumer's count,
+    join and write read blocks instead of re-running the signing, the
+    mining and the BSP. The DuckDB twin is :func:`simhash_label_ctes`."""
+    sigs = sigs.localCheckpoint(eager=False)
+    return _labels_from_sigs(spark, sigs).localCheckpoint(eager=True)
+
+
 def lake_cluster_labels_artifact(
     spark: SparkSession, sf_dir: str, rebuild: bool = False,
     staged: bool = False,
@@ -1988,12 +1981,10 @@ def lake_cluster_labels_artifact(
     lookups prune row groups via min/max stats."""
 
     def _write(path: str) -> None:
-        sigs = (
-            simhash_sigs(spark, sf_dir, staged=staged)
-            .filter(F.col("doc_id") % 10 != 0)
-            .localCheckpoint(eager=False)
+        sigs = simhash_sigs(spark, sf_dir, staged=staged).filter(
+            F.col("doc_id") % 10 != 0
         )
-        labels = _labels_from_sigs(spark, sigs)
+        labels = component_labels(spark, sigs)
         labels.sortWithinPartitions("node").write.parquet(path)
 
     kind = "quty_lake_clabels_stg" if staged else "quty_lake_clabels"
@@ -2002,43 +1993,7 @@ def lake_cluster_labels_artifact(
 
 @registry.query(
     "sink_lake_cluster_labels_artifact",
-    oracle=f"""
-    WITH RECURSIVE {SQL_SIMHASH.lstrip()},
-    bands AS (
-        SELECT doc_id, b.band_id, (sig >> (12 * b.band_id)) & 4095 AS band_val
-        FROM simhash, (SELECT unnest(range(0, 4)) AS band_id) b
-        WHERE doc_id % 10 <> 0
-    ),
-    pairs AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b
-          ON a.band_id = b.band_id AND a.band_val = b.band_val
-         AND a.doc_id < b.doc_id
-    ),
-    near AS (
-        SELECT p.doc_a, p.doc_b
-        FROM pairs p
-        JOIN simhash sa ON p.doc_a = sa.doc_id
-        JOIN simhash sb ON p.doc_b = sb.doc_id
-        WHERE bit_count(xor(sa.sig, sb.sig)) <= {HAMMING_MAX}
-    ),
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM near
-        UNION ALL SELECT doc_b, doc_a FROM near
-    ),
-    reach(node, lbl) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
-    ),
-    labels AS (
-        SELECT node, MIN(lbl) AS lbl FROM reach GROUP BY node
-    )
-    SELECT lbl AS cluster_id,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(MAX(node) AS BIGINT) AS max_doc_id
-    FROM labels GROUP BY lbl
-    """,
+    oracle=labels_summary_sql(SQL_SIMHASH, "doc_id % 10 <> 0"),
 )
 def sink_lake_cluster_labels_artifact(
     spark: SparkSession, sf_dir: str
@@ -2064,42 +2019,16 @@ def sink_lake_cluster_labels_artifact(
     )
 
 
-# Same reach CTE as dedup_cluster's oracle, restricted to shard nodes:
+# dedup_cluster's oracle restricted to shard nodes:
 # the incremental op must agree with the FULL-corpus recompute on every
 # shard doc's final label — the strongest possible contract (a shard
 # doc bridging two lake clusters must get the merged component's min
 # label, which neither lake cluster's standing label alone provides).
 SQL_INCREMENTAL_CLUSTER = f"""
-    WITH RECURSIVE {{sim}},
-    bands AS (
-        SELECT doc_id, b.band_id, (sig >> (12 * b.band_id)) & 4095 AS band_val
-        FROM simhash, (SELECT unnest(range(0, 4)) AS band_id) b
-    ),
-    pairs AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b
-          ON a.band_id = b.band_id AND a.band_val = b.band_val
-         AND a.doc_id < b.doc_id
-    ),
-    near AS (
-        SELECT p.doc_a, p.doc_b
-        FROM pairs p
-        JOIN simhash sa ON p.doc_a = sa.doc_id
-        JOIN simhash sb ON p.doc_b = sb.doc_id
-        WHERE bit_count(xor(sa.sig, sb.sig)) <= {HAMMING_MAX}
-    ),
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM near
-        UNION ALL SELECT doc_b, doc_a FROM near
-    ),
-    reach(node, lbl) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
-    )
-    SELECT node AS doc_id, MIN(lbl) AS cluster_id
-    FROM reach WHERE node % 10 = 0 GROUP BY node
-    """.format(sim=SQL_SIMHASH.lstrip())
+    WITH RECURSIVE {simhash_label_ctes()}
+    SELECT node AS doc_id, lbl AS cluster_id
+    FROM labels WHERE node % 10 = 0
+    """
 
 
 @registry.query(
@@ -2324,8 +2253,11 @@ PASSAGE_STRIDE = 8
 # (four independent copies of the fence-post arithmetic would
 # let the two ops' window contracts drift apart without any oracle
 # going red).
-SQL_PASSAGE_WINDOWS = f"""passage_docs AS (
-        SELECT doc_id, string_split(text, ' ') AS toks FROM documents
+def passage_window_ctes(corpus: str = "documents") -> str:
+    """``passage_windows(doc_id, passage_md5)`` over the ``(doc_id,
+    text)`` relation named ``corpus``."""
+    return f"""passage_docs AS (
+        SELECT doc_id, string_split(text, ' ') AS toks FROM {corpus}
     ),
     passage_windows AS (
         SELECT doc_id,
@@ -2335,6 +2267,9 @@ SQL_PASSAGE_WINDOWS = f"""passage_docs AS (
                              {PASSAGE_STRIDE})) AS u(i)
         WHERE len(toks) >= {PASSAGE_W}
     )"""
+
+
+SQL_PASSAGE_WINDOWS = passage_window_ctes()
 
 
 def _passage_windows(d: DataFrame) -> DataFrame:
@@ -2403,63 +2338,29 @@ def dedup_repeated_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Relabel-queue oracle over a pluggable simhash CTE ({sim}): the raw
-# query binds SQL_SIMHASH, the staged twin binds SQL_SIMHASH_STAGED —
-# identical derivation, so the two registered rows verify the same
-# machinery on two corpora (one of which is guaranteed non-vacuous).
-SQL_RELABEL_QUEUE_TMPL = f"""
-    WITH RECURSIVE {{sim}},
-    bands AS (
-        SELECT doc_id, b.band_id, (sig >> (12 * b.band_id)) & 4095 AS band_val
-        FROM simhash, (SELECT unnest(range(0, 4)) AS band_id) b
+def _relabel_queue_oracle(sig_ctes: str) -> str:
+    """Relabel-queue oracle over the corpus ``sig_ctes`` signs: the raw
+    query binds SQL_SIMHASH, the staged twin SQL_SIMHASH_STAGED, so the
+    two registered rows verify the same machinery on two corpora (one
+    of which is guaranteed non-vacuous). Tonight's labels and the
+    lake-only standing labels are two component chains side by side."""
+    return f"""
+    WITH RECURSIVE {simhash_label_ctes(sig_ctes)},
+    lake_near AS (
+        SELECT doc_a, doc_b FROM near
+        WHERE doc_a % 10 <> 0 AND doc_b % 10 <> 0
     ),
-    pairs AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b
-          ON a.band_id = b.band_id AND a.band_val = b.band_val
-         AND a.doc_id < b.doc_id
-    ),
-    near AS (
-        SELECT p.doc_a, p.doc_b
-        FROM pairs p
-        JOIN simhash sa ON p.doc_a = sa.doc_id
-        JOIN simhash sb ON p.doc_b = sb.doc_id
-        WHERE bit_count(xor(sa.sig, sb.sig)) <= {HAMMING_MAX}
-    ),
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM near
-        UNION ALL SELECT doc_b, doc_a FROM near
-    ),
-    lake_edges AS (
-        SELECT src, dst FROM edges WHERE src % 10 <> 0 AND dst % 10 <> 0
-    ),
-    reach(node, lbl) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
-    ),
-    lake_reach(node, lbl) AS (
-        SELECT src, src FROM lake_edges
-        UNION
-        SELECT e.dst, r.lbl
-        FROM lake_reach r JOIN lake_edges e ON e.src = r.node
-    ),
-    full_labels AS (
-        SELECT node, MIN(lbl) AS flbl FROM reach GROUP BY node
-    ),
-    lake_labels AS (
-        SELECT node, MIN(lbl) AS llbl FROM lake_reach GROUP BY node
-    )
-    SELECT l.llbl AS old_lbl, MIN(f.flbl) AS new_lbl,
+    {component_label_ctes("lake_near", "lake_")}
+    SELECT l.lbl AS old_lbl, MIN(f.lbl) AS new_lbl,
            CAST(COUNT(*) AS BIGINT) AS n_docs
-    FROM lake_labels l JOIN full_labels f ON l.node = f.node
-    GROUP BY l.llbl HAVING MIN(f.flbl) <> l.llbl
+    FROM lake_labels l JOIN labels f ON l.node = f.node
+    GROUP BY l.lbl HAVING MIN(f.lbl) <> l.lbl
     """
 
 
 @registry.query(
     "dedup_cluster_relabel_queue",
-    oracle=SQL_RELABEL_QUEUE_TMPL.format(sim=SQL_SIMHASH.lstrip()),
+    oracle=_relabel_queue_oracle(SQL_SIMHASH),
 )
 def dedup_cluster_relabel_queue(
     spark: SparkSession, sf_dir: str
@@ -2524,7 +2425,7 @@ def _relabel_queue_frame(
 
 @registry.query(
     "dedup_cluster_relabel_queue_staged",
-    oracle=SQL_RELABEL_QUEUE_TMPL.format(sim=SQL_SIMHASH_STAGED),
+    oracle=_relabel_queue_oracle(SQL_SIMHASH_STAGED),
 )
 def dedup_cluster_relabel_queue_staged(
     spark: SparkSession, sf_dir: str
@@ -2846,58 +2747,12 @@ def _append_label_rows(rows: DataFrame, path: str) -> None:
     LABELS.write(rows, path, "append")
 
 
-# Full-corpus component summary over a pluggable simhash CTE ({sim}) —
-# byte-for-byte the write-once sink's oracle with (a) the corpus CTE
-# swappable and (b) the lake restriction dropped: a maintained artifact
-# must hold ALL of tonight's truth (lake rewrites + shard and singleton
-# appends), i.e. exactly what a full rebuild would hold. The relabel
-# sink binds the bridge-staged corpus; the continuous maintenance
-# stream binds the raw corpus.
-SQL_FULL_LABELS_SUMMARY_TMPL = f"""
-    WITH RECURSIVE {{sim}},
-    bands AS (
-        SELECT doc_id, b.band_id, (sig >> (12 * b.band_id)) & 4095 AS band_val
-        FROM simhash, (SELECT unnest(range(0, 4)) AS band_id) b
-    ),
-    pairs AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b
-          ON a.band_id = b.band_id AND a.band_val = b.band_val
-         AND a.doc_id < b.doc_id
-    ),
-    near AS (
-        SELECT p.doc_a, p.doc_b
-        FROM pairs p
-        JOIN simhash sa ON p.doc_a = sa.doc_id
-        JOIN simhash sb ON p.doc_b = sb.doc_id
-        WHERE bit_count(xor(sa.sig, sb.sig)) <= {HAMMING_MAX}
-    ),
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM near
-        UNION ALL SELECT doc_b, doc_a FROM near
-    ),
-    reach(node, lbl) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
-    ),
-    labels AS (
-        SELECT node, MIN(lbl) AS lbl FROM reach GROUP BY node
-    )
-    SELECT lbl AS cluster_id,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(MAX(node) AS BIGINT) AS max_doc_id
-    FROM labels GROUP BY lbl
-    """
-
-SQL_MAINTAINED_LABELS_SUMMARY = SQL_FULL_LABELS_SUMMARY_TMPL.format(
-    sim=SQL_SIMHASH_STAGED
-)
-
-
+# A maintained artifact must hold ALL of tonight's truth (lake rewrites +
+# shard and singleton appends), i.e. exactly what a full rebuild over the
+# bridge-staged corpus would hold.
 @registry.query(
     "sink_lake_cluster_labels_artifact_relabel",
-    oracle=SQL_MAINTAINED_LABELS_SUMMARY,
+    oracle=labels_summary_sql(SQL_SIMHASH_STAGED),
 )
 def sink_lake_cluster_labels_artifact_relabel(
     spark: SparkSession, sf_dir: str
@@ -3375,39 +3230,10 @@ def dedup_minhash_error_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 @registry.query(
     "dedup_cluster_stats",
     oracle=f"""
-    WITH RECURSIVE {SQL_SIMHASH.lstrip()},
-    bands AS (
-        SELECT doc_id, b.band_id, (sig >> (12 * b.band_id)) & 4095 AS band_val
-        FROM simhash, (SELECT unnest(range(0, 4)) AS band_id) b
-    ),
-    pairs AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b
-          ON a.band_id = b.band_id AND a.band_val = b.band_val
-         AND a.doc_id < b.doc_id
-    ),
-    near AS (
-        SELECT p.doc_a, p.doc_b
-        FROM pairs p
-        JOIN simhash sa ON p.doc_a = sa.doc_id
-        JOIN simhash sb ON p.doc_b = sb.doc_id
-        WHERE bit_count(xor(sa.sig, sb.sig)) <= {HAMMING_MAX}
-    ),
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM near
-        UNION ALL SELECT doc_b, doc_a FROM near
-    ),
-    reach(node, lbl) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
-    ),
-    lab AS (
-        SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY node
-    ),
+    WITH RECURSIVE {simhash_label_ctes()},
     assigned AS (
-        SELECT d.doc_id, COALESCE(l.cluster_id, d.doc_id) AS cluster_id
-        FROM documents d LEFT JOIN lab l ON d.doc_id = l.doc_id
+        SELECT d.doc_id, COALESCE(l.lbl, d.doc_id) AS cluster_id
+        FROM documents d LEFT JOIN labels l ON d.doc_id = l.node
     ),
     csize AS (
         SELECT cluster_id, COUNT(*) AS csz FROM assigned GROUP BY cluster_id

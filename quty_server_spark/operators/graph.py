@@ -37,7 +37,7 @@ TELE = PPB - PPB * 85 // 100  # undamped teleport mass, precomputed (int32-safe)
 def _edge_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct purchase-flow key pairs (o_custkey, l_suppkey) from
     orders ⋈ lineitem — the de-dup runs on the two raw integer keys
-    (r17, guide §2.3 narrower types: the exchange carries 16 bytes/row
+    (narrower types: the exchange carries 16 bytes/row
     instead of two ~8-char strings; measured 1.2 s → 0.9 s for the edge
     materialization at sf0.1) and the namespaced presentation is derived
     AFTER, so every consumer's output is byte-identical."""
@@ -63,7 +63,7 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _edges_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The purchase graph with LONG node ids — customers at 2k, suppliers
     at 2k+1 (disjoint by parity, bijective with the string namespace).
-    The PageRank internals ride these (r17, guide §2.3): every
+    The PageRank internals ride these (narrower types): every
     per-superstep exchange and hash probe works on an 8-byte long
     instead of a ~8-char string; :func:`_decode_node` reproduces the
     exact public string ids in the final projection only."""
@@ -95,7 +95,7 @@ def _superstep(
     them. ``side`` is the broadcast gate (F.broadcast below
     BROADCAST_NODES_MAX, identity above). ``edges_deg`` carries the
     static out-degree on each edge row (pre-joined once in the preamble
-    — r17, guide §2.4: deg is per-src constant, so attaching it per
+    — deg is per-src constant, so attaching it per
     superstep was a repeated join of the same two tables; now each
     superstep is exactly one join + one map-side-combined aggregation)."""
     contrib = (
@@ -165,12 +165,12 @@ def graph_pagerank_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CacheManager entries outlive the query and pin executor memory for
     # the whole session — localCheckpointed blocks are GC-cleanable once
     # the returned DataFrame is dropped (the repo-wide pattern for
-    # multi-consumer intermediates). LAZY checkpoints (r17, guide §1.2
-    # "remove unnecessary passes"): the single n_nodes count below
+    # multi-consumer intermediates). LAZY checkpoints (no unnecessary
+    # passes): the single n_nodes count below
     # materializes edges AND nodes in one job, and edges_deg materializes
     # inside the first action that reads it — the preamble runs 1 job
     # instead of 4, saving three cluster-wide job launches per call.
-    # r17: internals on LONG node ids (see _edges_long) and the node set
+    # Internals on LONG node ids (see _edges_long) and the node set
     # assembled from the two degree aggregations — the parity namespaces
     # are disjoint by construction, so distinct-src ∪ distinct-dst needs
     # no cross-side dedup and the 2|E|-row union+distinct exchange of
@@ -288,7 +288,7 @@ def pagerank_converged(
     one driver-side scalar per superstep); every PAGERANK_CKPT_EVERY-th
     iteration checkpoints reliably. Returns ``(ranks, iterations)``."""
     ensure_checkpoint_dir(spark)
-    # Lazy preamble (r17, guide §1.2): one count materializes edges AND
+    # Lazy preamble: one count materializes edges AND
     # nodes; outdeg and the initial rank vector materialize inside the
     # first superstep's single action — 1 preamble job instead of 5.
     edges = edges.select("src", "dst").localCheckpoint(eager=False)
@@ -366,7 +366,7 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no rank floor), so the two registered outputs differ.
     Non-bipartite convergence (more supersteps) is exercised in
     tests/test_graph_semantics.py against an independent reference."""
-    # r17: long node ids internally (bijective with the public strings,
+    # Long node ids internally (bijective with the public strings,
     # decoded in the final projection only) and the disjoint-namespace
     # node set — see graph_pagerank_2iter's preamble notes.
     ranks, _ = pagerank_converged(

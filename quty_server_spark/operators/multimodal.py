@@ -45,6 +45,9 @@ from quty_server_spark.operators.dedup import (
     SIG,
     _sig_artifact_summary,
     band_summary_sql,
+    component_label_ctes,
+    simhash_gate_sql,
+    simhash_near_ctes,
 )
 from quty_server_spark.plans.registry import registry
 
@@ -549,32 +552,11 @@ def _percep_sig_ctes() -> str:
 
 
 def _mm_neardup_ctes() -> str:
-    """Signature CTEs + the capped banding + the candidate-pair
-    relation ``pr`` — shared verbatim by the pair oracle
-    (mm_payload_neardup) and the cluster collapse oracle
-    (mm_payload_neardup_keep)."""
-    from quty_server_spark.operators.dedup import (
-        HAMMING_MAX,
-        SIMHASH_BUCKET_CAP,
-    )
-
-    return f"""{_percep_sig_ctes()},
-    bands AS (
-        SELECT doc_id, sig, b.band_id,
-               (sig >> (12 * b.band_id)) & 4095 AS band_val
-        FROM sigt, (SELECT unnest(range(0, 4)) AS band_id) b
-        QUALIFY COUNT(*) OVER (PARTITION BY b.band_id,
-                               (sig >> (12 * b.band_id)) & 4095)
-                <= {SIMHASH_BUCKET_CAP}
-    ),
-    pr AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-               bit_count(xor(a.sig, b.sig)) AS hamming
-        FROM bands a JOIN bands b
-          ON a.band_id = b.band_id AND a.band_val = b.band_val
-         AND a.doc_id < b.doc_id
-        WHERE bit_count(xor(a.sig, b.sig)) <= {HAMMING_MAX}
-    )"""
+    """Signature CTEs + the capped banding + the verified pair relation
+    ``near`` — shared verbatim by the pair oracle (mm_payload_neardup),
+    the cluster collapse oracle (mm_payload_neardup_keep) and the
+    multimodal snapshot's."""
+    return f"{_percep_sig_ctes()},\n    {simhash_near_ctes('sigt', capped=True)}"
 
 
 def _mm_neardup_oracle() -> str:
@@ -582,7 +564,7 @@ def _mm_neardup_oracle() -> str:
     WITH {_mm_neardup_ctes()}
     SELECT p.doc_a, p.doc_b, p.hamming,
            ma.modality <> mb.modality AS cross_modality
-    FROM pr p
+    FROM near p
     JOIN media ma ON p.doc_a = ma.doc_id
     JOIN media mb ON p.doc_b = mb.doc_id
     """
@@ -674,21 +656,12 @@ def mm_payload_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _mm_neardup_keep_oracle() -> str:
     return f"""
     WITH RECURSIVE {_mm_neardup_ctes()},
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pr
-        UNION ALL SELECT doc_b, doc_a FROM pr
-    ),
-    reach(node, lbl) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
-    ),
-    flab AS (SELECT node, MIN(lbl) AS lbl FROM reach GROUP BY node)
+    {component_label_ctes()}
     SELECT f.lbl AS cluster_id,
            COUNT(*) AS n_members,
            COUNT(DISTINCT m.modality) AS n_modalities,
            COUNT(DISTINCT md5(m.pt)) AS n_byte_variants
-    FROM flab f JOIN media m ON f.node = m.doc_id
+    FROM labels f JOIN media m ON f.node = m.doc_id
     GROUP BY 1
     """
 
@@ -778,28 +751,11 @@ MEDIA_SIG_FAMILY = ArtifactFamily(
 register_artifact_sinks("sink_media_signature_artifact", MEDIA_SIG_FAMILY)
 
 
-def _mm_incremental_gate_oracle() -> str:
-    from quty_server_spark.operators.dedup import HAMMING_MAX
-
-    return f"""
-    WITH {_percep_sig_ctes()},
-    bands AS (
-        SELECT doc_id, sig, b.band_id,
-               (sig >> (12 * b.band_id)) & 4095 AS band_val
-        FROM sigt, (SELECT unnest(range(0, 4)) AS band_id) b
-    )
-    SELECT DISTINCT n.doc_id AS incoming_doc_id, o.doc_id AS lake_doc_id,
-           bit_count(xor(n.sig, o.sig)) AS hamming
-    FROM bands n JOIN bands o
-      ON n.band_id = o.band_id AND n.band_val = o.band_val
-    WHERE n.doc_id % 10 = 0 AND o.doc_id % 10 <> 0
-      AND bit_count(xor(n.sig, o.sig)) <= {HAMMING_MAX}
-    """
+# Shared with the continuous media gate (streaming/ops.py).
+SQL_MM_GATE = simhash_gate_sql(_percep_sig_ctes(), "sigt")
 
 
-@registry.query(
-    "mm_neardup_incremental_artifact", oracle=_mm_incremental_gate_oracle()
-)
+@registry.query("mm_neardup_incremental_artifact", oracle=SQL_MM_GATE)
 def mm_neardup_incremental_artifact(
     spark: SparkSession, sf_dir: str, art_path: str | None = None
 ) -> DataFrame:

@@ -302,7 +302,7 @@ def _pack_sequences_bpe_oracle() -> str:
 @registry.query("doc_pack_sequences_bpe", oracle=_pack_sequences_bpe_oracle())
 def doc_pack_sequences_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy sequence packing under the TRAINED TOKENIZER — the
-    consumer chain the r15 verdict motivated text_bpe_encode with:
+    consumer chain that motivated text_bpe_encode:
     :func:`doc_pack_sequences` lays documents into SEQ_LEN bins by
     WHITESPACE token counts, but a trainer's data loader packs by what
     its tokenizer actually emits. Same sharded cumulative-sum plan,
@@ -315,7 +315,7 @@ def doc_pack_sequences_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per-doc counts come from the VOCABULARY-GRAIN encode
     (:func:`~quty_server_spark.operators.textops.text_bpe_encode_vocab`
-    — r17 optimization: the merge scan runs per DISTINCT word, not per
+    — the merge scan runs per DISTINCT word, not per
     occurrence; the narrow-map teaching op text_bpe_encode prices the
     per-occurrence alternative and is pinned row-equal in pytest, so
     the packer's rows are unchanged); packing adds one window over each
@@ -781,52 +781,45 @@ def snapshot_quality_keep():
     )
 
 
-def _snapshot_oracle() -> str:
-    """Composed-snapshot oracle — assembled from the SAME fragments the
-    constituent ops' oracles use (SQL_SIMHASH reach CTE for the keeper,
-    SQL_PASSAGE_WINDOWS for the scrub ratio), so the composition cannot
-    drift from its parts."""
+def _snapshot_oracle(scope: str = "", nightly: bool = False) -> str:
+    """The training snapshot's truth, assembled from the SAME fragments
+    the constituent ops' oracles use (the SimHash component labels for
+    the keeper, the passage windows for the scrub ratio), so the
+    composition cannot drift from its parts.
+
+    ``scope`` restricts the corpus to the documents it keeps (the
+    retraction survivors, the lake): the signing, the passage windows
+    and the output all read the scoped relation. ``nightly`` is the
+    incremental snapshot: tonight's shard only (``doc_id % 10 = 0``),
+    keepers elected over the full corpus's components, scrubbed against
+    lake passage presence instead of corpus-wide repeats."""
     from quty_server_spark.operators.dedup import (
-        HAMMING_MAX,
-        SQL_PASSAGE_WINDOWS,
-        SQL_SIMHASH,
+        passage_window_ctes,
+        simhash_label_ctes,
+        simhash_sig_ctes,
     )
 
+    corpus = "scoped_docs" if scope else "documents"
+    scoped = (
+        f"scoped_docs AS (SELECT * FROM documents WHERE {scope}),\n    "
+        if scope
+        else ""
+    )
+    # The scrub's duplicated passages: repeated across the corpus, or
+    # (nightly) present in the lake.
+    dup = (
+        "SELECT DISTINCT passage_md5 FROM passage_windows"
+        " WHERE doc_id % 10 <> 0"
+        if nightly
+        else "SELECT passage_md5 FROM passage_windows GROUP BY passage_md5"
+        " HAVING COUNT(DISTINCT doc_id) >= 2"
+    )
+    shard = "d.doc_id % 10 = 0 AND " if nightly else ""
     return f"""
-    WITH RECURSIVE {SQL_SIMHASH.lstrip()},
-    bands AS (
-        SELECT doc_id, b.band_id, (sig >> (12 * b.band_id)) & 4095 AS band_val
-        FROM simhash, (SELECT unnest(range(0, 4)) AS band_id) b
-    ),
-    pairs AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b
-          ON a.band_id = b.band_id AND a.band_val = b.band_val
-         AND a.doc_id < b.doc_id
-    ),
-    near AS (
-        SELECT p.doc_a, p.doc_b
-        FROM pairs p
-        JOIN simhash sa ON p.doc_a = sa.doc_id
-        JOIN simhash sb ON p.doc_b = sb.doc_id
-        WHERE bit_count(xor(sa.sig, sb.sig)) <= {HAMMING_MAX}
-    ),
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM near
-        UNION ALL SELECT doc_b, doc_a FROM near
-    ),
-    reach(node, lbl) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
-    ),
-    lab AS (
-        SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY node
-    ),
-    {SQL_PASSAGE_WINDOWS},
+    WITH RECURSIVE {scoped}{simhash_label_ctes(simhash_sig_ctes(corpus))},
+    {passage_window_ctes(corpus)},
     dup AS (
-        SELECT passage_md5 FROM passage_windows GROUP BY passage_md5
-        HAVING COUNT(DISTINCT doc_id) >= 2
+        {dup}
     ),
     scrub AS (
         SELECT w.doc_id,
@@ -839,16 +832,16 @@ def _snapshot_oracle() -> str:
     )
     SELECT d.doc_id, d.lang, d.source,
            CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tokens,
-           COALESCE(l.cluster_id, d.doc_id) AS cluster_id,
+           COALESCE(l.lbl, d.doc_id) AS cluster_id,
            CAST(COALESCE(s.dup_ppm, 0) AS BIGINT) AS dup_ppm
-    FROM documents d
-    LEFT JOIN lab l ON d.doc_id = l.doc_id
+    FROM {corpus} d
+    LEFT JOIN labels l ON d.doc_id = l.node
     LEFT JOIN scrub s ON d.doc_id = s.doc_id
-    WHERE len(string_split(d.text, ' ')) >= 40
+    WHERE {shard}len(string_split(d.text, ' ')) >= 40
       AND d.lang IN ('en', 'de', 'fr')
       AND len(list_distinct(string_split(d.text, ' '))) * 3
           >= len(string_split(d.text, ' '))
-      AND COALESCE(l.cluster_id, d.doc_id) = d.doc_id
+      AND COALESCE(l.lbl, d.doc_id) = d.doc_id
       AND COALESCE(s.dup_ppm, 0) < 500000
     """
 
@@ -880,48 +873,41 @@ def corpus_training_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     beyond what the standalone ops pay; WHERE keep composition happens
     in the same plan, so Catalyst prunes rejected rows before the
     output projection."""
-    from quty_server_spark.operators.dedup import (
-        BROADCAST_NODES_MAX,
-        _passage_windows,
-        simhash_component_labels,
+    from quty_server_spark.operators.dedup import simhash_component_labels
+
+    return scoped_training_snapshot(
+        spark,
+        load_table(spark, sf_dir, "documents"),
+        simhash_component_labels(spark, sf_dir),
     )
 
-    d = load_table(spark, sf_dir, "documents")
+
+def snapshot_gates(
+    docs: DataFrame, labels: DataFrame, scrub: DataFrame
+) -> DataFrame:
+    """The snapshot's three gates over ``docs``, stated once for the
+    batch, scoped and nightly snapshots: the quality predicate
+    (:func:`snapshot_quality_keep`), the canonical keeper over the
+    component ``labels`` ``(node, lbl)`` (a doc without a label is its
+    own cluster), and the boilerplate ceiling over ``scrub``'s
+    ``(doc_id, dup_ppm)``. Output carries the audit columns."""
+    from quty_server_spark.operators.dedup import BROADCAST_NODES_MAX
+
     n_tok = F.size(F.split("text", " "))
-    quality_keep = snapshot_quality_keep()
-    labels = simhash_component_labels(spark, sf_dir)
     lab = labels.select(
         F.col("node").alias("doc_id"), F.col("lbl").alias("cluster_id")
     )
-    w = _passage_windows(d).localCheckpoint(eager=False)
-    dup = (
-        w.groupBy("passage_md5")
-        .agg(F.count_distinct("doc_id").alias("pd"))
-        .filter(F.col("pd") >= 2)
-        .select("passage_md5", F.lit(1).alias("is_dup"))
-    )
-    scrub = (
-        w.join(dup, "passage_md5", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.expr(
-                "(1000000 * count(is_dup)) DIV count(*)"
-            ).alias("dup_ppm")
-        )
-    )
     # The label table is the near-dup doc set — unbounded at corpus
-    # scale, so the broadcast must be gated exactly like every other
-    # simhash_component_labels consumer (dedup.py BROADCAST_NODES_MAX
-    # pattern); labels are already materialized by the BSP loop, so the
-    # count is a cheap memoized scan. A bare broadcast() hint has no
-    # size-based fallback and would OOM at 100 TB.
+    # scale, so the broadcast is gated like every other label consumer
+    # (a bare broadcast() hint has no size-based fallback and would OOM
+    # at 100 TB); labels arrive materialized, so the count is cheap.
     small = lab.count() <= BROADCAST_NODES_MAX
     # quality_keep filters the same projection that feeds the output —
-    # scan-side predicate, no self-join. The scrub/dup windows above
-    # still run over the FULL corpus (a low-quality doc's passages
-    # still mark duplicates), matching the oracle's CTE scoping.
+    # scan-side predicate, no self-join. The scrub is built by the
+    # caller over its own corpus (a low-quality doc's passages still
+    # mark duplicates).
     return (
-        d.filter(quality_keep)
+        docs.filter(snapshot_quality_keep())
         .select("doc_id", "lang", "source", n_tok.alias("n_tokens"))
         .join(F.broadcast(lab) if small else lab, "doc_id", "left")
         .join(scrub, "doc_id", "left")
@@ -940,83 +926,9 @@ def corpus_training_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _incremental_snapshot_oracle() -> str:
-    """Oracle for the nightly snapshot: full-corpus component labels
-    (the same recursive CTE dedup_cluster_incremental's oracle uses —
-    tonight's truth, recomputed from scratch) + lake-presence passage
-    scrub (SQL_PASSAGE_GATE's shape) + the quality predicates, all
-    restricted to tonight's shard."""
-    from quty_server_spark.operators.dedup import (
-        HAMMING_MAX,
-        SQL_PASSAGE_WINDOWS,
-        SQL_SIMHASH,
-    )
-
-    return f"""
-    WITH RECURSIVE {SQL_SIMHASH.lstrip()},
-    bands AS (
-        SELECT doc_id, b.band_id, (sig >> (12 * b.band_id)) & 4095 AS band_val
-        FROM simhash, (SELECT unnest(range(0, 4)) AS band_id) b
-    ),
-    pairs AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b
-          ON a.band_id = b.band_id AND a.band_val = b.band_val
-         AND a.doc_id < b.doc_id
-    ),
-    near AS (
-        SELECT p.doc_a, p.doc_b
-        FROM pairs p
-        JOIN simhash sa ON p.doc_a = sa.doc_id
-        JOIN simhash sb ON p.doc_b = sb.doc_id
-        WHERE bit_count(xor(sa.sig, sb.sig)) <= {HAMMING_MAX}
-    ),
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM near
-        UNION ALL SELECT doc_b, doc_a FROM near
-    ),
-    reach(node, lbl) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
-    ),
-    flabels AS (
-        SELECT node, MIN(lbl) AS lbl FROM reach GROUP BY node
-    ),
-    {SQL_PASSAGE_WINDOWS},
-    lake_pw AS (
-        SELECT DISTINCT passage_md5 FROM passage_windows
-        WHERE doc_id % 10 <> 0
-    ),
-    scrub AS (
-        SELECT w.doc_id,
-               (1000000 * COUNT(*) FILTER (
-                    WHERE l.passage_md5 IS NOT NULL)) // COUNT(*) AS dup_ppm
-        FROM passage_windows w
-        LEFT JOIN lake_pw l ON w.passage_md5 = l.passage_md5
-        WHERE w.doc_id % 10 = 0
-        GROUP BY w.doc_id
-    )
-    SELECT d.doc_id, d.lang, d.source,
-           CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tokens,
-           COALESCE(f.lbl, d.doc_id) AS cluster_id,
-           CAST(COALESCE(s.dup_ppm, 0) AS BIGINT) AS dup_ppm
-    FROM documents d
-    LEFT JOIN flabels f ON d.doc_id = f.node
-    LEFT JOIN scrub s ON d.doc_id = s.doc_id
-    WHERE d.doc_id % 10 = 0
-      AND len(string_split(d.text, ' ')) >= 40
-      AND d.lang IN ('en', 'de', 'fr')
-      AND len(list_distinct(string_split(d.text, ' '))) * 3
-          >= len(string_split(d.text, ' '))
-      AND COALESCE(f.lbl, d.doc_id) = d.doc_id
-      AND COALESCE(s.dup_ppm, 0) < 500000
-    """
-
-
 @registry.query(
     "corpus_training_snapshot_incremental",
-    oracle=_incremental_snapshot_oracle(),
+    oracle=_snapshot_oracle(nightly=True),
 )
 def corpus_training_snapshot_incremental(
     spark: SparkSession, sf_dir: str
@@ -1048,7 +960,6 @@ def corpus_training_snapshot_incremental(
     of the write-once digest artifact. The shard-label join is
     broadcast-gated at BROADCAST_NODES_MAX with shuffle fallback."""
     from quty_server_spark.operators.dedup import (
-        BROADCAST_NODES_MAX,
         _incremental_cluster_labels,
         _passage_pfx,
         _passage_windows,
@@ -1059,40 +970,16 @@ def corpus_training_snapshot_incremental(
     d = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 10 == 0
     )
-    n_tok = F.size(F.split("text", " "))
-    quality_keep = snapshot_quality_keep()
-    lab = (
-        _incremental_cluster_labels(spark, sf_dir)
-        .filter(F.col("node") % 10 == 0)
-        .select(F.col("node").alias("doc_id"), F.col("lbl").alias("cluster_id"))
+    labels = _incremental_cluster_labels(spark, sf_dir).filter(
+        F.col("node") % 10 == 0
     )
-    # Shard-bounded but not small-bounded: gate like every other label
-    # consumer (the labels are already materialized, the count is cheap).
-    small = lab.count() <= BROADCAST_NODES_MAX
     w = _passage_windows(d).select(
         "doc_id", "passage_md5", _passage_pfx()
     ).localCheckpoint(eager=False)
     scrub = passage_scrub(
         w, spark.read.parquet(PASSAGE_FAMILY.build(spark, sf_dir))
     ).select("doc_id", "dup_ppm")
-    return (
-        d.filter(quality_keep)
-        .select("doc_id", "lang", "source", n_tok.alias("n_tokens"))
-        .join(F.broadcast(lab) if small else lab, "doc_id", "left")
-        .join(scrub, "doc_id", "left")
-        .select(
-            "doc_id",
-            "lang",
-            "source",
-            F.col("n_tokens").cast("bigint").alias("n_tokens"),
-            F.coalesce("cluster_id", "doc_id").alias("cluster_id"),
-            F.coalesce("dup_ppm", F.lit(0)).cast("bigint").alias("dup_ppm"),
-        )
-        .filter(
-            (F.col("cluster_id") == F.col("doc_id"))
-            & (F.col("dup_ppm") < 500000)
-        )
-    )
+    return snapshot_gates(d, labels, scrub)
 
 
 def _snapshot_mm_oracle() -> str:
@@ -1103,26 +990,18 @@ def _snapshot_mm_oracle() -> str:
     component fold and per-cluster audit — joined onto the full text
     snapshot, nested as its own recursive chain so neither side's CTE
     names can collide with the other's."""
+    from quty_server_spark.operators.dedup import component_label_ctes
     from quty_server_spark.operators.multimodal import _mm_neardup_ctes
 
     return f"""
     WITH RECURSIVE {_mm_neardup_ctes()},
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pr
-        UNION ALL SELECT doc_b, doc_a FROM pr
-    ),
-    reach(node, lbl) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
-    ),
-    flab AS (SELECT node, MIN(lbl) AS lbl FROM reach GROUP BY node),
+    {component_label_ctes()},
     maudit AS (
         SELECT f.lbl AS media_cluster_id,
                COUNT(*) AS n_members,
                COUNT(DISTINCT m.modality) AS n_modalities,
                COUNT(DISTINCT md5(m.pt)) AS n_byte_variants
-        FROM flab f JOIN media m ON f.node = m.doc_id
+        FROM labels f JOIN media m ON f.node = m.doc_id
         GROUP BY 1),
     snap AS ({_snapshot_oracle()})
     SELECT s.doc_id, s.lang, s.source, s.n_tokens, s.cluster_id, s.dup_ppm,
@@ -1132,7 +1011,7 @@ def _snapshot_mm_oracle() -> str:
            CAST(COALESCE(a.n_modalities, 1) AS BIGINT) AS n_modalities,
            CAST(COALESCE(a.n_byte_variants, 1) AS BIGINT) AS n_byte_variants
     FROM snap s
-    LEFT JOIN flab f ON s.doc_id = f.node
+    LEFT JOIN labels f ON s.doc_id = f.node
     LEFT JOIN maudit a ON COALESCE(f.lbl, s.doc_id) = a.media_cluster_id
     WHERE COALESCE(f.lbl, s.doc_id) = s.doc_id
     """
@@ -1141,7 +1020,7 @@ def _snapshot_mm_oracle() -> str:
 @registry.query("corpus_training_snapshot_mm", oracle=_snapshot_mm_oracle())
 def corpus_training_snapshot_mm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE PRODUCT, COVERING THE MULTIMODAL COLUMN — the consumer the
-    media keep/drop decision was missing (r16 VERDICT "Next round" #3):
+    media keep/drop decision was missing:
     :func:`corpus_training_snapshot` admits documents through the text
     gates but says nothing about their media payloads, while
     :func:`~quty_server_spark.operators.multimodal.mm_payload_neardup_keep`
@@ -1234,86 +1113,33 @@ def corpus_training_snapshot_mm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _redirected_snapshot_oracle(cte: str, where_sql: str) -> str:
-    """The snapshot oracle re-scoped to a filtered corpus — the
-    SQL_SIMHASH_STAGED redirect device (dedup.py): every corpus read
-    inside the assembled oracle is pointed at a scoped CTE, everything
-    downstream byte-identical, so a scoped snapshot can never drift
-    from the real one. Used by the retraction-impact audit (survivor
-    scope) and the trainer-shard append twin (lake scope)."""
-    full = _snapshot_oracle()
-    scoped = full.replace("FROM documents\n", f"FROM {cte}\n").replace(
-        "FROM documents d", f"FROM {cte} d"
-    )
-    scoped = scoped.replace(
-        "WITH RECURSIVE ",
-        f"WITH RECURSIVE {cte} AS (\n"
-        f"        SELECT * FROM documents WHERE {where_sql}),\n"
-        "    ",
-        1,
-    )
-    # Loud failure if the assembled fragments ever change shape: the
-    # CTE definition plus exactly three redirected corpus reads.
-    assert scoped.count(cte) == 4, scoped.count(cte)
-    return scoped
-
-
-def _survivor_snapshot_oracle() -> str:
-    """Retraction-survivor scope (``doc_id % 10 <> RETRACT_MOD``)."""
-    from quty_server_spark.operators.retract import RETRACT_MOD
-
-    return _redirected_snapshot_oracle(
-        "documents_surv", f"doc_id % 10 <> {RETRACT_MOD}"
-    )
-
-
 def scoped_training_snapshot(
     spark: SparkSession, docs: DataFrame, labels: DataFrame | None = None
 ) -> DataFrame:
     """:func:`corpus_training_snapshot`'s three gates applied to an
     ARBITRARY documents frame — the Spark twin of
-    :func:`_redirected_snapshot_oracle`: same quality predicate
-    (:func:`snapshot_quality_keep`), same canonical-keeper election
-    over component labels for the scoped corpus, same scoped-corpus
-    passage scrub. One implementation shared by the retraction-impact
-    audit (survivor scope) and the trainer-shard append twin's base
-    build (lake scope), so "the snapshot over corpus X" means exactly
-    one thing everywhere.
+    ``_snapshot_oracle(scope)``: keepers over the scope's own component
+    labels, the scrub over the scope's own passage repeats. Shared by
+    the full corpus, the retraction-impact audit (survivor scope) and
+    the trainer-shard base build (lake scope), so "the snapshot over
+    corpus X" means exactly one thing everywhere.
 
-    ``labels`` (optional, r17 optimization): a precomputed ``(node,
-    lbl)`` component-label frame for EXACTLY this scope — callers whose
-    scope has a standing materialization (the lake scope's
-    :func:`~quty_server_spark.operators.dedup.lake_cluster_labels_artifact`)
-    pass it instead of re-mining + re-BSP-ing the scope on every call
-    (guide §2.4: don't recompute standing state; the label VALUES are
-    identical by construction — same signature builder, same
-    ``_labels_from_sigs`` core — so the snapshot is unchanged
-    row-for-row). Default (None) keeps the self-contained fresh
-    labeling pass for scopes with no standing table (retraction
-    survivors).
-
-    Scale: one labeling pass through the signature-grain BSP core
-    (:func:`~quty_server_spark.operators.dedup._labels_from_sigs`) —
-    or a read of the standing label artifact — and one passage-window
-    aggregation pair over the scoped corpus; the keeper join is
-    broadcast-gated at BROADCAST_NODES_MAX with shuffle fallback.
-    Callers that want the memoized full-corpus labels use
-    :func:`corpus_training_snapshot` itself — this helper is for scopes
-    the session cache cannot serve."""
+    ``labels``: the ``(node, lbl)`` component labels of EXACTLY this
+    scope, when the scope has a standing materialization (the
+    session-memoized full-corpus labels, the lake's
+    :func:`~quty_server_spark.operators.dedup.lake_cluster_labels_artifact`).
+    Otherwise (None) the scope is labeled once through
+    :func:`~quty_server_spark.operators.dedup.component_labels`, so the
+    keeper join and the broadcast-gate count read materialized labels
+    instead of re-signing the scope."""
     from quty_server_spark.operators.dedup import (
-        BROADCAST_NODES_MAX,
-        _labels_from_sigs,
         _passage_windows,
+        component_labels,
         simhash_sigs_docs,
     )
 
-    n_tok = F.size(F.split("text", " "))
     if labels is None:
-        labels = _labels_from_sigs(spark, simhash_sigs_docs(docs))
-    lab = labels.select(
-        F.col("node").alias("doc_id"), F.col("lbl").alias("cluster_id")
-    )
-    small = lab.count() <= BROADCAST_NODES_MAX
+        labels = component_labels(spark, simhash_sigs_docs(docs))
     w = _passage_windows(docs).localCheckpoint(eager=False)
     dup = (
         w.groupBy("passage_md5")
@@ -1326,24 +1152,7 @@ def scoped_training_snapshot(
         .groupBy("doc_id")
         .agg(F.expr("(1000000 * count(is_dup)) DIV count(*)").alias("dup_ppm"))
     )
-    return (
-        docs.filter(snapshot_quality_keep())
-        .select("doc_id", "lang", "source", n_tok.alias("n_tokens"))
-        .join(F.broadcast(lab) if small else lab, "doc_id", "left")
-        .join(scrub, "doc_id", "left")
-        .select(
-            "doc_id",
-            "lang",
-            "source",
-            F.col("n_tokens").cast("bigint").alias("n_tokens"),
-            F.coalesce("cluster_id", "doc_id").alias("cluster_id"),
-            F.coalesce("dup_ppm", F.lit(0)).cast("bigint").alias("dup_ppm"),
-        )
-        .filter(
-            (F.col("cluster_id") == F.col("doc_id"))
-            & (F.col("dup_ppm") < 500000)
-        )
-    )
+    return snapshot_gates(docs, labels, scrub)
 
 
 # Number of output shards for the trainer handoff. A real run sizes
@@ -1537,11 +1346,11 @@ def _build_appended_training_shards(
 
 def _training_shards_append_oracle() -> str:
     """The append twin's truth: yesterday's shards hold the snapshot
-    over the lake corpus (the redirect device, lake scope), tonight
+    over the lake corpus (the lake-scoped snapshot oracle), tonight
     adds exactly the incremental snapshot's rows — summarized per shard
     under the byte-shared :func:`_shard_summary_oracle` block."""
-    lake = _redirected_snapshot_oracle("documents_lake", "doc_id % 10 <> 0")
-    incr = _incremental_snapshot_oracle()
+    lake = _snapshot_oracle("doc_id % 10 <> 0")
+    incr = _snapshot_oracle(nightly=True)
     union = f"""
         SELECT doc_id, lang, source, n_tokens, cluster_id, dup_ppm
         FROM ({lake})
@@ -1625,7 +1434,7 @@ def _training_shards_bpe_oracle() -> str:
 )
 def sink_training_shards_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trainer handoff DENOMINATED IN TRAINED TOKENS — the BPE
-    encoder's third consumer (r16 VERDICT "Next round" #4):
+    encoder's third consumer:
     :func:`sink_training_shards` sizes and audits shards in whitespace
     ``n_tokens``, but a trainer's data loader budgets steps in what the
     tokenizer actually emits. This twin joins each admitted snapshot
@@ -1641,11 +1450,10 @@ def sink_training_shards_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per-doc counts come from the VOCABULARY-GRAIN encode
     (:func:`~quty_server_spark.operators.textops.text_bpe_encode_vocab`
-    — r17 optimization, guide §1.2 "don't compute things you throw
-    away at occurrence grain": the merge scan runs once per DISTINCT
-    word, pinned row-equal to the narrow-map encoder in pytest, so the
-    shard rows and the audit are unchanged; measured at sf0.1 the swap
-    cut this sink ~7.5 s → see OPTIMIZATION_r17.md), the join is
+    — the merge scan runs once per DISTINCT word, not per occurrence,
+    pinned row-equal to the narrow-map encoder in pytest, so the shard
+    rows and the audit are unchanged; measured at sf0.1 the swap cut
+    this sink by ~7.5 s), the join is
     doc-keyed against the snapshot (snapshot-sized, not corpus-sized,
     after Catalyst pushes the join below the audit agg), and the
     write/read-back is the shared (shard, doc_id) repartition device —
@@ -1774,15 +1582,19 @@ def sink_training_shards_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _shard_summary(spark.read.parquet(path))
 
 
-@registry.query(
-    "snapshot_retraction_impact",
-    oracle=f"""
+def _retraction_impact_oracle() -> str:
+    """Both snapshots from scratch: the full corpus's and the
+    survivors' (``doc_id % 10 <> RETRACT_MOD``), per language."""
+    from quty_server_spark.operators.retract import RETRACT_MOD
+
+    return f"""
     WITH before AS (
         SELECT lang, COUNT(*) AS n, SUM(n_tokens) AS t
-        FROM ({{full}}) GROUP BY lang),
+        FROM ({_snapshot_oracle()}) GROUP BY lang),
     after AS (
         SELECT lang, COUNT(*) AS n, SUM(n_tokens) AS t
-        FROM ({{surv}}) GROUP BY lang)
+        FROM ({_snapshot_oracle(f"doc_id % 10 <> {RETRACT_MOD}")})
+        GROUP BY lang)
     SELECT COALESCE(b.lang, a.lang) AS lang,
            CAST(COALESCE(b.n, 0) AS BIGINT) AS docs_before,
            CAST(COALESCE(a.n, 0) AS BIGINT) AS docs_after,
@@ -1791,11 +1603,15 @@ def sink_training_shards_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COALESCE(a.n, 0) - COALESCE(b.n, 0) AS BIGINT) AS docs_delta,
            CAST(COALESCE(a.t, 0) - COALESCE(b.t, 0) AS BIGINT) AS tokens_delta
     FROM before b FULL JOIN after a ON b.lang = a.lang
-    """.format(full="PLACEHOLDER_FULL", surv="PLACEHOLDER_SURV"),
+    """
+
+
+@registry.query(
+    "snapshot_retraction_impact", oracle=_retraction_impact_oracle()
 )
 def snapshot_retraction_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """What the takedown costs THE PRODUCT — the audit that ties the
-    round-14 retraction verb to the table a trainer reads: per
+    retraction verb to the table a trainer reads: per
     language, the training snapshot's doc/token counts BEFORE the
     victim removal vs AFTER (the snapshot recomputed over the
     survivors), with signed deltas. The after side is NOT simply
@@ -1804,16 +1620,16 @@ def snapshot_retraction_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     can drop a surviving doc's dup_ppm below the scrub ceiling, and
     removing a bridge victim can split a cluster into two keepers — so
     docs_delta can be positive for a language. The oracle computes both
-    sides from scratch (the survivors side through the
-    SQL_SIMHASH_STAGED redirect device), so a green row proves the
-    engine's survivors snapshot equals tonight's post-takedown truth.
+    sides from scratch (the survivors side over the scoped corpus), so
+    a green row proves the engine's survivors snapshot equals tonight's
+    post-takedown truth.
 
     Scale: the before side rides the session-memoized component labels
     (shared with every snapshot consumer); the after side is the
     takedown audit's stated one-off — survivor signing + ONE
-    survivor-corpus labeling pass through the signature-grain core
-    (:func:`~quty_server_spark.operators.dedup._labels_from_sigs`, the
-    same core the label-retraction sink uses) + survivor passage
+    survivor-corpus labeling pass through
+    (:func:`~quty_server_spark.operators.dedup.component_labels`, the
+    same call the label-retraction sink makes) + survivor passage
     windows; both keeper joins broadcast-gated at BROADCAST_NODES_MAX.
     Takedowns are rare events, and the audit's value IS the from-scratch
     proof; the O(victims) standing-state path (home-bucket rewrites, no
@@ -1850,13 +1666,3 @@ def snapshot_retraction_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("bigint").alias("tokens_delta"),
         )
     )
-
-
-# The oracle above needs the two assembled snapshot SQLs spliced in
-# AFTER both builder functions exist (registration order: the decorator
-# ran with placeholders).
-registry.oracles["snapshot_retraction_impact"] = registry.oracles[
-    "snapshot_retraction_impact"
-].replace("PLACEHOLDER_FULL", _snapshot_oracle()).replace(
-    "PLACEHOLDER_SURV", _survivor_snapshot_oracle()
-)

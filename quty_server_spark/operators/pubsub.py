@@ -179,7 +179,7 @@ def messages(spark: SparkSession, sf_dir: str, spread: bool = False) -> DataFram
     """The message stream to route: click events addressed to a channel.
 
     ``spread=True`` fans the one-row-group events scan out to the core
-    count before the JSON parse (r17, _helpers.spread_probe — gated
+    count before the JSON parse (_helpers.spread_probe — gated
     no-op at scale). Opt-in because only the fan-out join's 10M-row
     probe amortizes the extra exchange (A/B: route_fanout 0.60x); the
     small pubsub consumers measured SLOWER with it (the blanket-spread
@@ -379,9 +379,9 @@ def _events_rows_upper_bound(sf_dir: str) -> int | None:
     broadcast). Returns ``None`` when the path is not a local
     filesystem (hdfs://, s3a:// — pyarrow/os cannot see it); the caller
     treats unknown as over-bound for the same conservative reason. This
-    replaced the r10 localCheckpoint+count construction-time gate (r10
-    VERDICT "What's wrong" #2): plan-only consumers (explain, registry
-    sweeps) now pay zero jobs to build the DataFrame. On a production
+    replaced a localCheckpoint+count construction-time gate, so
+    plan-only consumers (explain, registry sweeps) pay zero jobs to
+    build the DataFrame. On a production
     catalog the same gate reads table statistics (ANALYZE/row_count)
     instead of footers."""
     import pyarrow.parquet as pq
@@ -399,7 +399,7 @@ def _events_rows_upper_bound(sf_dir: str) -> int | None:
                 # table — and an UNDER-bound flips the gate to
                 # broadcast for arbitrarily large state, violating the
                 # "can only err toward the salted plan" invariant
-                # (r11 ADVICE; mixed-layout case r12 ADVICE). Unknown,
+                # (mixed layouts included). Unknown,
                 # never a partial sum.
                 return None
             parts = [f for f in entries if f.endswith(".parquet")]
@@ -468,7 +468,7 @@ def route_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     A loose or unknown bound (non-local filesystem) can only flip
     toward the salted plan, which stays correct at any state size.
     """
-    # r17: spread=True parallelizes the JSON parse + the 10M-row join
+    # spread=True parallelizes the JSON parse + the 10M-row join
     # probe off the single-row-group events scan (A/B 0.60x).
     msgs = messages(spark, sf_dir, spread=True)
     subs = current_subs(spark, sf_dir)

@@ -544,7 +544,7 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     countDistinct here is the verification harness, not the scale path.)
     """
     li = load_table(spark, sf_dir, "lineitem")
-    # r17 (guide §2.3 "aggregate before you shuffle"): the exact and the
+    # Aggregate before you shuffle: the exact and the
     # HLL aggregates are computed in SEPARATE passes and joined on the
     # 3-row group key. Mixed distinct + non-distinct aggregates make
     # Spark's first-phase groups PER DISTINCT VALUE (expand → group by
@@ -1901,7 +1901,7 @@ def window_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
 # builds the query against it. Because a Dataset plans and re-plans in
 # its OWN session, the bloom shape survives every consumer — collect,
 # DataFrameWriter (the noop-write benches), .cache() — not just the
-# first memoized QueryExecution (the pre-round-7 caveat), and the
+# first memoized QueryExecution, and the
 # caller's session confs are untouched by construction.
 _BLOOM_CONFS = {
     "spark.sql.autoBroadcastJoinThreshold": "-1",
@@ -2029,7 +2029,7 @@ def scalar_variant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     # Bind the variant ONCE, then extract both paths from the bound
     # column in a second projection — the plan must show a single
-    # parse_json (r07 verdict #6: the previous form built it 3x).
+    # parse_json (binding it per path built it 3x).
     parsed = e.select(
         "event_type", F.expr("parse_json(props)").alias("v")
     )

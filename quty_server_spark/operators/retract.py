@@ -40,7 +40,7 @@ it), the affected labels' home buckets come from the ``_label_homes``
 sidecar (a DPP-pruned read, never a lake scan), and the surviving
 members are re-clustered from their OWN signatures through the exact
 labeling core every other consumer shares
-(:func:`~quty_server_spark.operators.dedup._labels_from_sigs`).
+(:func:`~quty_server_spark.operators.dedup.component_labels`).
 Removing nodes only removes edges, so affected clusters can only stay,
 split, or dissolve — no new cross-cluster edge can appear, which is
 what makes the affected-clusters-only recompute equal to a full one
@@ -78,19 +78,19 @@ from quty_server_spark.operators.dedup import (
     _BRIDGE_FILL,
     _BRIDGE_WA,
     _BRIDGE_WB,
-    _labels_from_sigs,
     _passage_pfx,
     _passage_windows,
     _write_home_bucket_layout,
-    HAMMING_MAX,
     LABELS,
     MINHASH_FAMILY,
     N_BANDS,
     PASSAGE_FAMILY,
     SIG_FAMILY,
     SIMHASH_BANDS,
+    component_labels,
+    labels_summary_sql,
+    simhash_sig_ctes,
     simhash_sigs_docs,
-    SQL_SIMHASH,
 )
 from quty_server_spark.operators.similarity import (
     _corpus,
@@ -644,7 +644,7 @@ def apply_cluster_label_retraction(
        directories, never a lake scan.
     3. RE-CLUSTER: the affected clusters' surviving members are
        re-signed from their own text and re-labeled through the shared
-       labeling core (dedup._labels_from_sigs). Removing nodes only
+       labeling core (dedup.component_labels). Removing nodes only
        removes edges, so clusters can only stay, SPLIT, or dissolve —
        no new cross-cluster edge can appear, which makes this
        affected-only recompute equal to a full one.
@@ -685,7 +685,7 @@ def apply_cluster_label_retraction(
         "doc_id",
         "leftsemi",
     )
-    new_labels = _labels_from_sigs(spark, simhash_sigs_docs(mem_docs))
+    new_labels = component_labels(spark, simhash_sigs_docs(mem_docs))
     relabeled = (
         remaining.join(
             new_labels.withColumnRenamed("lbl", "new_lbl"), "node", "inner"
@@ -726,12 +726,8 @@ def retracted_cluster_labels_artifact(
 
     def _write(path: str) -> None:
         docs = retract_staged_documents(spark, sf_dir)
-        sigs = (
-            simhash_sigs_docs(docs)
-            .filter(F.col("doc_id") % 10 != 0)
-            .localCheckpoint(eager=False)
-        )
-        _write_home_bucket_layout(_labels_from_sigs(spark, sigs), path)
+        sigs = simhash_sigs_docs(docs).filter(F.col("doc_id") % 10 != 0)
+        _write_home_bucket_layout(component_labels(spark, sigs), path)
         victims = docs.filter(
             F.col("doc_id") % 10 == RETRACT_MOD
         ).select("doc_id").localCheckpoint(eager=True)
@@ -755,57 +751,15 @@ SQL_DOCS_RSTAGED = (
     "    )"
 )
 
-# SQL_SIMHASH reading the staged-then-retracted relation: victims leave
-# BEFORE signing, matching the artifact state where their rows are
-# physically gone.
-SQL_SIMHASH_RETRACTED = (
-    SQL_DOCS_RSTAGED
-    + ",\n    "
-    + SQL_SIMHASH.lstrip().replace("FROM documents\n", "FROM docs_live\n")
-)
 
-SQL_RETRACTED_LABELS_SUMMARY = f"""
-    WITH RECURSIVE {SQL_SIMHASH_RETRACTED},
-    bands AS (
-        SELECT doc_id, b.band_id, (sig >> (12 * b.band_id)) & 4095 AS band_val
-        FROM simhash, (SELECT unnest(range(0, 4)) AS band_id) b
-        WHERE doc_id % 10 <> 0
-    ),
-    pairs AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b
-          ON a.band_id = b.band_id AND a.band_val = b.band_val
-         AND a.doc_id < b.doc_id
-    ),
-    near AS (
-        SELECT p.doc_a, p.doc_b
-        FROM pairs p
-        JOIN simhash sa ON p.doc_a = sa.doc_id
-        JOIN simhash sb ON p.doc_b = sb.doc_id
-        WHERE bit_count(xor(sa.sig, sb.sig)) <= {HAMMING_MAX}
-    ),
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM near
-        UNION ALL SELECT doc_b, doc_a FROM near
-    ),
-    reach(node, lbl) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
-    ),
-    labels AS (
-        SELECT node, MIN(lbl) AS lbl FROM reach GROUP BY node
-    )
-    SELECT lbl AS cluster_id,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(MAX(node) AS BIGINT) AS max_doc_id
-    FROM labels GROUP BY lbl
-    """
-
-
+# The survivors' labels: victims leave BEFORE signing, matching the
+# artifact state where their rows are physically gone.
 @registry.query(
     "sink_lake_cluster_labels_artifact_retract",
-    oracle=SQL_RETRACTED_LABELS_SUMMARY,
+    oracle=labels_summary_sql(
+        SQL_DOCS_RSTAGED + ",\n    " + simhash_sig_ctes("docs_live").lstrip(),
+        "doc_id % 10 <> 0",
+    ),
 )
 def sink_lake_cluster_labels_artifact_retract(
     spark: SparkSession, sf_dir: str

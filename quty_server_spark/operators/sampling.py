@@ -385,7 +385,7 @@ def _token_budget_bpe_oracle() -> str:
 @registry.query("sample_token_budget_bpe", oracle=_token_budget_bpe_oracle())
 def sample_token_budget_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budget sampling under the TRAINED TOKENIZER — the second
-    consumer the r15 verdict motivated text_bpe_encode with: a
+    consumer that motivated text_bpe_encode: a
     curriculum budget is spent in the tokens a trainer actually pays
     for, not whitespace splits. Same deterministic hash-order greedy
     fill, same distributed prefix sum (:func:`_token_budget_fill`,
@@ -397,7 +397,7 @@ def sample_token_budget_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per-doc counts come from the VOCABULARY-GRAIN encode
     (:func:`~quty_server_spark.operators.textops.text_bpe_encode_vocab`
-    — r17 optimization: the merge scan runs per DISTINCT word, pinned
+    — the merge scan runs per DISTINCT word, pinned
     row-equal to the narrow-map encoder in pytest, so the fill's rows
     are unchanged); the fill adds the 160-way bucketed cumsum and a
     stratum-grain aggregate — the whitespace sampler's exchange profile
@@ -419,38 +419,20 @@ def sample_token_budget_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _near_dup_leakage_oracle() -> str:
     from quty_server_spark.operators.dedup import (
-        HAMMING_MAX,
-        SIMHASH_BUCKET_CAP,
         SQL_SIMHASH,
+        simhash_near_ctes,
     )
 
     return f"""
-    WITH {SQL_SIMHASH.lstrip()},
-    bands AS (
-        SELECT doc_id, sig, b.band_id,
-               (sig >> (12 * b.band_id)) & 4095 AS band_val
-        FROM simhash, (SELECT unnest(range(0, 4)) AS band_id) b
-        QUALIFY COUNT(*) OVER (PARTITION BY b.band_id,
-                               (sig >> (12 * b.band_id)) & 4095)
-                <= {SIMHASH_BUCKET_CAP}),
-    pairs AS (
-        SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-        FROM bands a JOIN bands b
-          ON a.band_id = b.band_id AND a.band_val = b.band_val
-         AND a.doc_id < b.doc_id),
-    near AS (
-        SELECT p.da, p.db FROM pairs p
-        JOIN simhash sa ON p.da = sa.doc_id
-        JOIN simhash sb ON p.db = sb.doc_id
-        WHERE bit_count(xor(sa.sig, sb.sig)) <= {HAMMING_MAX}),
+    WITH {SQL_SIMHASH.lstrip()}, {simhash_near_ctes(capped=True)},
     sp AS (SELECT doc_id, {SQL_SPLIT_CASE} AS s FROM documents),
     tagged AS (
         SELECT LEAST(x.s, y.s) AS split_a, GREATEST(x.s, y.s) AS split_b,
-               CASE WHEN x.s < y.s THEN n.da ELSE n.db END AS doc_a,
-               CASE WHEN x.s < y.s THEN n.db ELSE n.da END AS doc_b
+               CASE WHEN x.s < y.s THEN n.doc_a ELSE n.doc_b END AS doc_a,
+               CASE WHEN x.s < y.s THEN n.doc_b ELSE n.doc_a END AS doc_b
         FROM near n
-        JOIN sp x ON n.da = x.doc_id
-        JOIN sp y ON n.db = y.doc_id
+        JOIN sp x ON n.doc_a = x.doc_id
+        JOIN sp y ON n.doc_b = y.doc_id
         WHERE x.s <> y.s)
     SELECT split_a, split_b,
            COUNT(*) AS n_pairs,

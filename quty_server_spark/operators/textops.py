@@ -212,7 +212,7 @@ def text_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     join key for plagiarism-style containment detection at scale.
     The fingerprint list is emitted comma-joined (scalar string): the
     driver's pandas canonicalizer cannot hash array-typed output
-    columns (r06 finding), and no element is NULL so concat_ws ==
+    columns, and no element is NULL so concat_ws ==
     array_to_string exactly."""
     d = load_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
@@ -671,7 +671,7 @@ BPE_TRAIN_MERGES = 6
 # splits runs as 'aa a a'; pinned in tests/test_dedup_properties.py's
 # BPE block). Pure higher-order JVM expression — no UDF.
 #
-# r17 (guide §1.2 per-task work): the scan is guarded by a native
+# Per-task work: the scan is guarded by a native
 # substring test — the merge is a provable NO-OP unless ``s`` contains
 # '|l|r|'. Proof: a merge fires only when the accumulator's last symbol
 # equals l and the incoming ORIGINAL symbol is r; the accumulator's last
@@ -685,7 +685,7 @@ BPE_TRAIN_MERGES = 6
 # lambda runs INTERPRETED per symbol (higher-order exprs don't codegen),
 # so skipping it for the overwhelming share of (string, pair) combos
 # that don't contain the pair is the dominant per-token cost cut —
-# measured at sf0.1 across the BPE family in OPTIMIZATION_r17.md. The
+# measured at sf0.1 across the BPE family. The
 # DuckDB oracle keeps the unguarded scan: same value, hash-verified.
 _SQL_BPE_APPLY = """
     CASE WHEN NOT contains(s, concat('|', l, '|', r, '|')) THEN s
@@ -809,7 +809,7 @@ def text_bpe_train_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lazy localCheckpoint per round truncating lineage, ZERO driver
     actions inside the loop; the merge table materializes everything in
     one job at the end). A production run sizes rounds to the target
-    vocab; per-merge cost is measured flat in SCALING.md §r15."""
+    vocab; per-merge cost is measured flat in SCALING.md."""
     _, tops = _bpe_train_state(spark, sf_dir)
     rounds = [
         top1.select(
@@ -848,8 +848,7 @@ def _bpe_train_state(
     checkpoint-truncated). A production-length run (10^4+ merges)
     should write the merge table incrementally (append each round's
     argmax row to a sink) instead of unioning N frames at the close —
-    the r15 judge's standing note, recorded here so whoever grows
-    BPE_TRAIN_MERGES sees it."""
+    recorded here so whoever grows BPE_TRAIN_MERGES sees it."""
     return session_memo(
         spark, "bpe_state", sf_dir, lambda: _bpe_train_loop(spark, sf_dir)
     )
@@ -1000,8 +999,8 @@ def _bpe_encode_oracle(n: int = BPE_TRAIN_MERGES) -> str:
 
 @registry.query("text_bpe_encode", oracle=_bpe_encode_oracle())
 def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """APPLY the trained tokenizer — the consumer the r15 verdict named
-    missing: :func:`text_bpe_train_n` produces the merge table, and
+    """APPLY the trained tokenizer — the merge table's consumer:
+    :func:`text_bpe_train_n` produces the merge table, and
     this op tokenizes the corpus under it, reporting each document's
     BPE token count (the number a packer or token-budget sampler would
     use instead of whitespace counts). Each document's words are
@@ -1075,7 +1074,7 @@ def text_bpe_encode_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     above the vocabulary floor — Heaps' law) at the cost of two extra
     exchanges: the (doc_id, word) occurrence count and the word-keyed
     count join (the occurrence side arrives pre-aggregated, one row
-    per (doc, word)). SCALING.md's r17 ladder shows exactly that
+    per (doc, word)). SCALING.md's BPE ladder shows exactly that
     crossover signature: the vocab arm's per-doubling step stays under
     the narrow map's once corpus growth outruns vocabulary growth."""
     _, tops = _bpe_train_state(spark, sf_dir)
@@ -1114,8 +1113,8 @@ def _write_bpe_merges(
     spark: SparkSession, sf_dir: str, path: str, n: int = BPE_TRAIN_MERGES
 ) -> str:
     """Write the first ``n`` merge rules ITERATIVELY — one 1-row parquet
-    append per training round — the incremental merge-table write the
-    r15/r16 verdicts' standing note asks of a production-length run:
+    append per training round — the incremental merge-table write a
+    production-length run needs:
     the artifact on disk is always a valid (shorter) tokenizer, so an
     interrupted 10^4-merge training job resumes from its last appended
     round instead of losing the union-at-the-close. The prefix property
@@ -1162,8 +1161,7 @@ def sink_bpe_merges_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     holds exactly the ordered merge rules the in-session trainer
     derives — the contract :func:`text_bpe_encode_artifact` relies on.
     The 7th artifact family (after signature/minhash/IVF/passage/media/
-    trainer-shards), closing the r15 judge's standing note: the merge
-    table is now written incrementally per round
+    trainer-shards): the merge table is written incrementally per round
     (:func:`_write_bpe_merges`), not unioned from N driver frames at
     the close.
 

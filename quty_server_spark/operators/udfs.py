@@ -151,7 +151,7 @@ def _asof_pair(clicks: pd.DataFrame, purchases: pd.DataFrame) -> pd.DataFrame:
     """Bucket-level as-of: each purchase matched to ITS USER's latest
     click at or before it (pandas merge_asof, backward, ``by=user_id``).
 
-    r17 (guide §4.5 "amortise per-task work"): the cogroup key is a hash
+    Amortise per-task work: the cogroup key is a hash
     BUCKET of users, not the user itself — cogrouped applyInPandas pays
     Arrow-slice + pandas-construction overhead PER GROUP, and ~50k
     single-user groups cost ~11 s at sf0.1 while the actual asof work is
@@ -228,8 +228,8 @@ def udf_cogrouped_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     c.ts DESC, c.event_id DESC.
     """
     ev = load_table(spark, sf_dir, "events")
-    # r17: cogroup on a deterministic hash bucket of the user (guide
-    # §2.5: derive synthetic keys deterministically), not the raw user
+    # Cogroup on a deterministic hash bucket of the user (synthetic
+    # keys are derived deterministically), not the raw user
     # id — see _asof_pair's bucket note. Same shuffle (one exchange per
     # side, now on the bucket), ~ASOF_BUCKETS pandas invocations
     # instead of one per user. Measured 11.1 s → 1.3 s at sf0.1.

@@ -49,7 +49,7 @@ TABLES = [
 # building — zero jobs (pinned for route_fanout in
 # tests/test_pubsub_semantics.py). Keyed by (path, mtime): the mtime
 # tag invalidates the entry if a path is ever REWRITTEN with a
-# different schema (r11 ADVICE — the bare-path key silently served the
+# different schema (a bare-path key would silently serve the
 # stale schema, reading nulls/mis-typed columns), while costing one
 # os.stat per construction — still zero Spark jobs. Bounded FIFO so
 # tmp-dir corpora churned across a long test session cannot grow the
@@ -66,7 +66,7 @@ def _path_mtime(path: str) -> int | None:
         # removed (the Spark rewrite patterns: overwrite, append) —
         # exactly the invalidation signal needed; for a single file it
         # changes on rewrite. Nanosecond precision so two rewrites in
-        # the same second still produce distinct keys (r12 review).
+        # the same second still produce distinct keys.
         # Known limits, documented not defended: in-place content
         # mutation without a metadata change, and rewrites confined to
         # key=value/ SUBdirectories of a partitioned layout (top-level

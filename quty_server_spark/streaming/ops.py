@@ -46,14 +46,19 @@ from pyspark.sql.types import (
 from quty_server_spark.operators import pubsub
 from quty_server_spark.operators.dedup import (
     SQL_DUPED,
-    SQL_FULL_LABELS_SUMMARY_TMPL,
     SQL_INCREMENTAL_GATE,
     SQL_MINHASH_GATE,
     SQL_PASSAGE_GATE,
-    SQL_SIMHASH,
     duped_corpus,
+    labels_summary_sql,
 )
 from quty_server_spark.operators._helpers import load_table, overlap
+from quty_server_spark.operators.multimodal import SQL_MM_GATE
+from quty_server_spark.operators.pipeline import (
+    _snapshot_oracle,
+    _training_shards_append_oracle,
+)
+from quty_server_spark.operators.retract import SQL_RETRACT_SUMMARY
 from quty_server_spark.operators.similarity import SQL_EMB_GATE
 from quty_server_spark.plans.registry import registry
 from quty_server_spark.session import (
@@ -1938,17 +1943,7 @@ def stream_ingest_passage_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _media_gate_oracle() -> str:
-    """The batch media gate's oracle, shared byte-for-byte — the same
-    one-definition device every other continuous gate twin uses."""
-    from quty_server_spark.operators.multimodal import (
-        _mm_incremental_gate_oracle,
-    )
-
-    return _mm_incremental_gate_oracle()
-
-
-@registry.query("stream_ingest_media_gate", oracle=_media_gate_oracle())
+@registry.query("stream_ingest_media_gate", oracle=SQL_MM_GATE)
 def stream_ingest_media_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The media ingest gate run continuously — the streaming twin of
     :func:`~quty_server_spark.operators.multimodal.mm_neardup_incremental_artifact`,
@@ -2109,7 +2104,7 @@ def _gate_signatures(
 
 @registry.query(
     "stream_cluster_maintenance",
-    oracle=SQL_FULL_LABELS_SUMMARY_TMPL.format(sim=SQL_SIMHASH.lstrip()),
+    oracle=labels_summary_sql(),
 )
 def stream_cluster_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONTINUOUS clustering maintenance — the full label lifecycle run
@@ -2157,17 +2152,9 @@ def stream_cluster_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_corpus_snapshot_oracle() -> str:
-    from quty_server_spark.operators.pipeline import (
-        _incremental_snapshot_oracle,
-    )
-
-    return _incremental_snapshot_oracle()
-
-
 @registry.query(
     "stream_corpus_snapshot",
-    oracle=_stream_corpus_snapshot_oracle(),
+    oracle=_snapshot_oracle(nightly=True),
 )
 def stream_corpus_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE CONTINUOUS PRODUCT — the streaming twin of
@@ -2398,7 +2385,9 @@ def stream_ingest_exact_dedup_sequential(
 
 @registry.query(
     "stream_lake_retraction",
-    oracle=None,  # set below — shares the batch retraction oracle
+    # Shares the batch retraction oracle byte-for-byte: stream-of-epochs
+    # tombstoning must converge to the one-shot retract.
+    oracle=SQL_RETRACT_SUMMARY,
 )
 def stream_lake_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONTINUOUS takedown — the retraction verb's streaming twin,
@@ -2487,20 +2476,13 @@ def stream_lake_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)
 
 
-# Shares the batch retraction oracle byte-for-byte: stream-of-epochs
-# tombstoning must converge to the one-shot retract.
-def _set_stream_retraction_oracle() -> None:
-    from quty_server_spark.operators.retract import SQL_RETRACT_SUMMARY
-
-    registry.oracles["stream_lake_retraction"] = SQL_RETRACT_SUMMARY
-
-
-_set_stream_retraction_oracle()
-
 
 @registry.query(
     "stream_training_shards",
-    oracle=None,  # set below — shares the batch append twin's oracle
+    # Shares the batch append twin's oracle byte-for-byte: the
+    # epoch-split continuous append must converge to the one-shot
+    # nightly append.
+    oracle=_training_shards_append_oracle(),
 )
 def stream_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONTINUOUS trainer handoff — the shard APPEND verb's streaming
@@ -2522,9 +2504,9 @@ def stream_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout.
 
     At close the grown dataset is read back and summarized under the
-    oracle shared BYTE-FOR-BYTE with ``sink_training_shards_append``
-    (set below): epoch-split append converges to exactly the one-shot
-    batch append, which holds by construction — the written ROW SET is
+    oracle shared BYTE-FOR-BYTE with ``sink_training_shards_append``:
+    epoch-split append converges to exactly the one-shot batch append,
+    which holds by construction — the written ROW SET is
     the union of the epoch row sets, and row-set union is associative
     and commutative regardless of the epoch partitioning.
 
@@ -2590,18 +2572,3 @@ def stream_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     for p in outs[1:]:
         back = back.unionByName(spark.read.parquet(p))
     return _shard_summary(back).localCheckpoint(eager=True)
-
-
-# Shares the batch append twin's oracle byte-for-byte: the epoch-split
-# continuous append must converge to the one-shot nightly append.
-def _set_stream_training_shards_oracle() -> None:
-    from quty_server_spark.operators.pipeline import (
-        _training_shards_append_oracle,
-    )
-
-    registry.oracles["stream_training_shards"] = (
-        _training_shards_append_oracle()
-    )
-
-
-_set_stream_training_shards_oracle()

@@ -25,15 +25,21 @@ every availableNow run in ``streaming/ops.py`` goes through
 The artifact sidecar names (``_tombstones``, ``_label_homes``,
 ``_centroids``) are spelled only in ``operators/_helpers.py``, whose
 ``read_sidecar`` / ``write_sidecar`` do every sidecar read and write.
-Finally, no batch ``.parquet(`` read is handed a glob: a glob read logs
-a false "Assume no metadata directory" warning with a stack trace, so
-readers list the directories they read.
+No batch ``.parquet(`` read is handed a glob: a glob read logs a false
+"Assume no metadata directory" warning with a stack trace, so readers
+list the directories they read. Every oracle is passed where its query
+is registered: nothing but ``plans/registry.py`` assigns to
+``registry.oracles[...]``. Finally, the SimHash band CTE and the
+recursive ``reach`` component chain are spelled only in their DuckDB
+fragment builders in ``operators/dedup.py``, and no oracle is pointed at
+another corpus by a ``.replace(`` of a ``FROM documents`` string.
 """
 
 from __future__ import annotations
 
 import ast
 import pathlib
+import re
 
 ROOT = pathlib.Path(__file__).resolve().parents[1] / "quty_server_spark"
 
@@ -388,4 +394,77 @@ def test_no_glob_parquet_reads():
     assert not hits, (
         "glob parquet reads (list the directories instead):\n"
         + "\n".join(hits)
+    )
+
+
+REGISTRY_HOME = "quty_server_spark/plans/registry.py"
+
+
+def test_oracles_passed_at_registration():
+    hits = []
+    for path in sorted(ROOT.rglob("*.py")):
+        rel = str(path.relative_to(ROOT.parent))
+        if rel == REGISTRY_HOME:
+            continue
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Assign):
+                targets = node.targets
+            elif isinstance(node, (ast.AugAssign, ast.AnnAssign)):
+                targets = [node.target]
+            else:
+                continue
+            for t in targets:
+                if (
+                    isinstance(t, ast.Subscript)
+                    and isinstance(t.value, ast.Attribute)
+                    and t.value.attr == "oracles"
+                ):
+                    fn = _enclosing_function(tree, node.lineno)
+                    hits.append(f"{rel}:{node.lineno} in {fn}()")
+    assert not hits, (
+        "oracles assigned after registration (pass oracle= to "
+        "registry.query):\n" + "\n".join(hits)
+    )
+
+
+# The DuckDB SimHash fragment builders, and what only they may spell.
+FRAGMENT_HOME = "quty_server_spark/operators/dedup.py"
+FRAGMENT_PATTERNS = {
+    "simhash_band_cte": re.compile(r"AS band_id\)\s*b\b"),
+    "component_label_ctes": re.compile(r"reach\s*\(\s*node\s*,\s*lbl\s*\)"),
+}
+
+
+def test_simhash_fragments_only_in_builders():
+    hits = []
+    for path in sorted(ROOT.rglob("*.py")):
+        rel = str(path.relative_to(ROOT.parent))
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                for home, pat in FRAGMENT_PATTERNS.items():
+                    if not pat.search(node.value):
+                        continue
+                    fn = _enclosing_function(tree, node.lineno)
+                    if (rel, fn) != (FRAGMENT_HOME, home):
+                        hits.append(f"{rel}:{node.lineno} {home} text in {fn}()")
+            elif (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "replace"
+                and any(
+                    isinstance(sub, ast.Constant)
+                    and isinstance(sub.value, str)
+                    and "FROM documents" in sub.value
+                    for arg in node.args
+                    for sub in ast.walk(arg)
+                )
+            ):
+                fn = _enclosing_function(tree, node.lineno)
+                hits.append(f"{rel}:{node.lineno} FROM documents redirect in {fn}()")
+    assert not hits, (
+        "SimHash SQL fragments outside their builders (call "
+        "simhash_band_cte / component_label_ctes, and pass the corpus "
+        "name to simhash_sig_ctes):\n" + "\n".join(hits)
     )

@@ -1456,6 +1456,28 @@ def test_incremental_snapshot_zero_lake_compute(spark):
             assert "% 10) = 0" in plan
 
 
+def test_scoped_snapshot_labels_arrive_checkpointed(spark):
+    # A scope with no standing labels (the lake docs here, the
+    # retraction survivors in snapshot_retraction_impact) is labeled
+    # once through dedup.component_labels: the returned plan reads the
+    # labels as a checkpoint and holds no SimHash signature aggregate
+    # (the md5 token hash). Signatures left in the plan were re-signed
+    # by the broadcast-gate count and again by the keeper join, and
+    # shipped as multi-MiB task binaries by stream_training_shards.
+    from pyspark.sql import functions as F
+
+    from quty_server_spark.operators._helpers import load_table
+    from quty_server_spark.operators.pipeline import scoped_training_snapshot
+
+    lake_docs = load_table(spark, SF_DIR, "documents").filter(
+        F.col("doc_id") % 10 != 0
+    )
+    snap = scoped_training_snapshot(spark, lake_docs)
+    plan = snap._jdf.queryExecution().optimizedPlan().toString()
+    assert "conv(substring(md5(" not in plan
+    assert "LogicalRDD" in plan
+
+
 def test_retract_read_prunes_to_affected_partitions(spark, tmp_path):
     # The retraction's artifact read must carry a dynamic-pruning
     # expression on the partition column: at 100 TB the passage / IVF
